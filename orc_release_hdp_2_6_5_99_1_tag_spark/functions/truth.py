@@ -378,42 +378,60 @@ def pick_row_groups(path: str, tree: Any, use_bloom: bool = True) -> list[list[d
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.bloom import parse_bloom_index
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
         parse_row_index,
+        parse_stripe_footers,
         parse_tail_of_file,
     )
 
     meta = parse_tail_of_file(path)
-    ids = {c["name"]: c["col_id"] for c in meta["columns"]}
-    kinds = {c["name"]: c["kind"] for c in meta["columns"]}
-    orc135 = meta.get("writer_version", 0) >= 6  # see explain_file_pruning
-    cols = sorted(_tree_columns(tree))
-    # dotted SArg leaves ("st.a"): every column id — nested included —
-    # has its own ROW_INDEX (and bloom, when written), so nested
-    # predicates prune row groups exactly like top-level ones
-    for c in cols:
-        if "." in c and c not in ids:
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-                _resolve_dotted,
-            )
-
-            cid = _resolve_dotted(meta, c)[-1]
-            ids[c] = cid
-            kinds[c] = meta["types"][cid]["kind"]
-    row_index = {c: parse_row_index(path, ids[c]) for c in cols}
+    stripes = parse_stripe_footers(path)
+    cids = set(_predicate_ids(meta, tree).values())
+    row_index = {cid: parse_row_index(path, cid, stripes) for cid in cids}
     blooms = (
-        {c: parse_bloom_index(path, ids[c]) for c in cols} if use_bloom else {}
+        {cid: parse_bloom_index(path, cid, stripes) for cid in cids}
+        if use_bloom
+        else {}
     )
-    n_stripes = len(next(iter(row_index.values())))
+    return _pick_groups(meta, tree, row_index, blooms)
+
+
+def _predicate_ids(meta: dict, tree: Any) -> dict[str, int]:
+    """SArg leaf column -> column id. Dotted leaves ("st.a") resolve to
+    their nested id: every column id — nested included — has its own
+    ROW_INDEX (and bloom, when written), so nested predicates prune
+    row groups exactly like top-level ones."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import _resolve_dotted
+
+    ids = {c["name"]: c["col_id"] for c in meta["columns"]}
+    return {
+        c: ids[c] if c in ids or "." not in c else _resolve_dotted(meta, c)[-1]
+        for c in sorted(_tree_columns(tree))
+    }
+
+
+def _pick_groups(
+    meta: dict, tree: Any, row_index: dict[int, list], blooms: dict[int, list]
+) -> list[list[dict]]:
+    """pickRowGroups over already-parsed index streams: `row_index` and
+    `blooms` map column id -> per-stripe entries (footer_tail /
+    bloom parses) and must cover every predicate column (blooms may be
+    empty — bloom refinement off)."""
+    ids = _predicate_ids(meta, tree)
+    kinds = {c["name"]: c["kind"] for c in meta["columns"]}
+    kinds.update({c: meta["types"][cid]["kind"] for c, cid in ids.items()})
+    orc135 = meta.get("writer_version", 0) >= 6  # see explain_file_pruning
+    cols = list(ids)
+    n_stripes = len(row_index[ids[cols[0]]])
     out: list[list[dict]] = []
     for si in range(n_stripes):
-        n_rg = len(row_index[cols[0]][si])
+        n_rg = len(row_index[ids[cols[0]]][si])
         decisions = []
         for g in range(n_rg):
             stats_by_col = {}
             rg_blooms = {}
             for c in cols:
-                e = row_index[c][si][g]
+                e = row_index[ids[c]][si][g]
                 stats_by_col[c] = stats_to_domain(kinds[c], e)
-                per_stripe = blooms.get(c, [])
+                per_stripe = blooms.get(ids[c], [])
                 if per_stripe and si < len(per_stripe) and g < len(per_stripe[si]):
                     rg_blooms[c] = per_stripe[si][g]
             tv = evaluate_tree(

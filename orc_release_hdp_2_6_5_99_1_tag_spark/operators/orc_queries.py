@@ -1103,9 +1103,12 @@ def s22_partial_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row groups and the partial read is genuinely partial
     (tests/test_stream_decode.py asserts the byte fraction).
 
-    Scale: one Spark task per stripe (mapInPandas); each task plans
-    and decodes its own stripe from ranged reads — the driver parses
-    one file tail and never touches data bytes. The residual
+    Scale: `read_planned` runs the file's FileScanPlan in one Spark
+    task (mapInPandas): the task reads the file's metadata once, then
+    decodes only the kept stripes from ranged reads — the driver
+    parses one file tail and never touches data bytes. The kept
+    groups sit at the start of the key-sorted file, so they fall in
+    one stripe (sf0.001: 2 of 6 groups, 1 stripe). The residual
     row-level filter runs in Spark above the decoded batches, the
     same division of labor as the reference's SArg row-group skips
     under a row-level filter."""

@@ -203,41 +203,26 @@ def _parse_bloom_filter(buf: bytes) -> dict:
     return {"num_hash": num_hash, "bits": bits}
 
 
-def parse_bloom_index(path: str, column_id: int) -> list[list[dict]]:
+def parse_bloom_index(
+    path: str, column_id: int, stripes: list[dict] | None = None
+) -> list[list[dict]]:
     """Parse a column's bloom-filter index streams out of a real ORC
     file: per stripe, the list of per-row-group blooms. Ranged reads
-    only — the index region of each stripe, located via the stream
-    directory in the StripeFooter (index-region streams precede data
-    streams in listing order, offsets are cumulative lengths)."""
+    only — the index region of each stripe (see
+    `footer_tail._index_streams`); `stripes` reuses an earlier
+    parse_stripe_footers."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-        _decompress_tail,
         _fields,
-        _parse_postscript,
-        parse_stripe_footers,
+        _index_streams,
     )
 
-    with open(path, "rb") as fh:
-        fh.seek(-1, 2)
-        ps_len = fh.read(1)[0]
-        fh.seek(-(1 + ps_len), 2)
-        ps = _parse_postscript(fh.read(ps_len))
-        out: list[list[dict]] = []
-        for st in parse_stripe_footers(path):
-            pos = st["offset"]
-            blooms: list[dict] = []
-            for s in st["streams"]:
-                if s["kind"] in ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8"):
-                    if (
-                        s["kind"] in ("BLOOM_FILTER", "BLOOM_FILTER_UTF8")
-                        and s["column"] == column_id
-                    ):
-                        fh.seek(pos)
-                        raw = _decompress_tail(
-                            fh.read(s["length"]), ps["compression"]
-                        )
-                        for f, _w, v in _fields(raw):
-                            if f == 1:  # repeated BloomFilter
-                                blooms.append(_parse_bloom_filter(v))
-                    pos += s["length"]
-            out.append(blooms)
-    return out
+    kinds = ("BLOOM_FILTER", "BLOOM_FILTER_UTF8")
+    return [
+        [
+            _parse_bloom_filter(v)
+            for raw in raws
+            for f, _w, v in _fields(raw)
+            if f == 1  # repeated BloomFilter
+        ]
+        for raws in _index_streams(path, column_id, kinds, stripes)
+    ]

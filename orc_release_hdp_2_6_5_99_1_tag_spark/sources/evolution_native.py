@@ -33,7 +33,7 @@ pure-Python decode tier:
 - **positional mapping** (`is_positional`, `positional_name_map`):
   pre-HIVE-4243 `_col<N>` files pair top-level columns with the
   reader's by position, one level deep.
-- **PPD safety** (`ppd_safe`, `tree_prunable`): reference parity —
+- **PPD safety** (`ppd_safe`, `keep_all_reason`): reference parity —
   identity (decimal: exact precision+scale equality), tinyint→
   {smallint,int,bigint}, smallint→{int,bigint}, int→bigint,
   string↔varchar. float→double is NOT safe (the reference's index
@@ -156,7 +156,7 @@ def tree_rename(tree: Any, mapping: dict[str, str]) -> Any:
     """Rewrite a SArg tree's column names through `mapping` (used to
     translate reader-name predicates into a positional file's _colN
     namespace). Names not in the mapping pass through unchanged —
-    tree_prunable then degrades them to keep-all."""
+    keep_all_reason then degrades them to keep-all."""
     if tree is None:
         return None
     head = tree[0]
@@ -414,22 +414,22 @@ def ppd_safe(f_types: list, f_cid: int, r_types: list, r_cid: int) -> bool:
     return (fk, rk) in {("string", "varchar"), ("varchar", "string")}
 
 
-def tree_prunable(
+def keep_all_reason(
     file_meta: dict,
     reader_meta: dict,
     tree: Any,
     file_names: dict[str, str] | None = None,
-) -> bool:
-    """May `tree` prune THIS file at all? False when any predicate
-    column is missing from the file (its domain here is all-NULL —
-    pruning on it would be wrong), fails to resolve (a literal-dot /
-    unknown-name leaf must degrade to non-pruning, never a scan-time
-    KeyError — r11 ADVICE), or reads through a PPD-unsafe conversion.
-    The caller then falls back to a keep-all scan for the file and
-    the residual row filter keeps results exact — the same
-    conservative unit the reference applies per-column
-    (`isPPDSafeConversion`), taken per-file here because the SArg
-    tree is evaluated whole."""
+) -> str | None:
+    """Why `tree` may NOT prune this file, or None when it may:
+    "missing column" when a predicate column is missing from the file
+    (its domain here is all-NULL — pruning on it would be wrong) or
+    fails to resolve (a literal-dot / unknown-name leaf must degrade to
+    non-pruning, never a scan-time KeyError — r11 ADVICE); "ppd-unsafe
+    conversion" when it reads through a PPD-unsafe conversion. The
+    caller then falls back to a keep-all scan for the file and the
+    residual row filter keeps results exact — the same conservative
+    unit the reference applies per-column (`isPPDSafeConversion`),
+    taken per-file here because the SArg tree is evaluated whole."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
         _tree_columns,
     )
@@ -443,15 +443,15 @@ def tree_prunable(
             f_chain, f_full = _resolve_partial(file_meta, fc)
             r_chain, r_full = _resolve_partial(reader_meta, c)
         except KeyError:
-            return False
+            return "missing column"
         if not (f_full and r_full):
-            return False
+            return "missing column"
         if not ppd_safe(
             file_meta["types"], f_chain[-1],
             reader_meta["types"], r_chain[-1],
         ):
-            return False
-    return True
+            return "ppd-unsafe conversion"
+    return None
 
 
 def make_converter(

@@ -662,38 +662,64 @@ def _parse_stream(buf: bytes) -> dict:
     return s
 
 
-def parse_row_index(path: str, column_id: int) -> list[list[dict]]:
+# the index region of a stripe: these streams precede its data streams
+_INDEX_AREA = ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8")
+
+
+def _index_streams(
+    path: str, column_id: int, kinds: tuple[str, ...],
+    stripes: list[dict] | None = None,
+) -> list[list[bytes]]:
+    """Per stripe, the decompressed `kinds` streams of `column_id` —
+    ranged reads of the index region only (its streams come first in
+    the StripeFooter directory; offsets are cumulative lengths).
+    `stripes` reuses an earlier parse_stripe_footers."""
+    if stripes is None:
+        stripes = parse_stripe_footers(path)
+    with open(path, "rb") as fh:
+        fh.seek(-1, 2)
+        ps_len = fh.read(1)[0]
+        fh.seek(-(1 + ps_len), 2)
+        ps = _parse_postscript(fh.read(ps_len))
+        out: list[list[bytes]] = []
+        for st in stripes:
+            pos = st["offset"]
+            raws: list[bytes] = []
+            for s in st["streams"]:
+                if s["kind"] in _INDEX_AREA:
+                    if s["kind"] in kinds and s["column"] == column_id:
+                        fh.seek(pos)
+                        raws.append(
+                            _decompress_tail(fh.read(s["length"]), ps["compression"])
+                        )
+                    pos += s["length"]
+            out.append(raws)
+    return out
+
+
+def parse_row_index(
+    path: str, column_id: int, stripes: list[dict] | None = None
+) -> list[list[dict]]:
     """Parse a column's ROW_INDEX streams: per stripe, the list of
     per-row-group entries ({positions, n_values, has_null, typed
     min/max/sum}) — the reference's RowIndex/RowIndexEntry
     (`OrcProto.RowIndexEntry`: positions=1 packed, statistics=2), the
     granularity `pickRowGroups` actually prunes at. Ranged reads of
     each stripe's index region only."""
-    with open(path, "rb") as fh:
-        fh.seek(-1, 2)
-        ps_len = fh.read(1)[0]
-        fh.seek(-(1 + ps_len), 2)
-        ps = _parse_postscript(fh.read(ps_len))
-        out: list[list[dict]] = []
-        for st in parse_stripe_footers(path):
-            pos = st["offset"]
-            entries: list[dict] = []
-            for s in st["streams"]:
-                if s["kind"] in ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8"):
-                    if s["kind"] == "ROW_INDEX" and s["column"] == column_id:
-                        fh.seek(pos)
-                        raw = _decompress_tail(fh.read(s["length"]), ps["compression"])
-                        for f, _w, v in _fields(raw):
-                            if f == 1:  # RowIndexEntry
-                                entry: dict = {"positions": []}
-                                for ef, _ew, ev in _fields(v):
-                                    if ef == 1:
-                                        entry["positions"] = _packed_varints(ev)
-                                    elif ef == 2:
-                                        entry.update(_parse_column_statistics(ev))
-                                entries.append(entry)
-                    pos += s["length"]
-            out.append(entries)
+    out: list[list[dict]] = []
+    for raws in _index_streams(path, column_id, ("ROW_INDEX",), stripes):
+        entries: list[dict] = []
+        for raw in raws:
+            for f, _w, v in _fields(raw):
+                if f == 1:  # RowIndexEntry
+                    entry: dict = {"positions": []}
+                    for ef, _ew, ev in _fields(v):
+                        if ef == 1:
+                            entry["positions"] = _packed_varints(ev)
+                        elif ef == 2:
+                            entry.update(_parse_column_statistics(ev))
+                    entries.append(entry)
+        out.append(entries)
     return out
 
 

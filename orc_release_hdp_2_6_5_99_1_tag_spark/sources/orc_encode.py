@@ -1474,7 +1474,7 @@ def rewrite_orc_native(src: str, dst: str, **write_opts: Any) -> dict:
     names = [n for n, _t in top]
     cols: dict[str, list] = {n: [] for n in names}
     if meta["n_rows"]:
-        for batch in scan_file(src, None, names, meta=meta):
+        for batch in scan_file(src, None, names):
             for k, v in batch["columns"].items():
                 cols[k].extend(v)
     return write_orc_native(dst, cols, top, **write_opts)

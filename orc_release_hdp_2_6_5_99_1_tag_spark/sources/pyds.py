@@ -589,6 +589,8 @@ def _build_orc_native_class():
         Not,
     )
 
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import _column_ids
+
     def _pa_type(types, cid, included=None):
         """ORC type-tree node -> arrow type, recursively — the full
         include-tree mapping (nested projection is P2, reference
@@ -648,23 +650,12 @@ def _build_orc_native_class():
             f"orc_native: ORC kind {k!r} has no arrow mapping"
         )
 
-    def _top_ids(meta):
-        """name -> column id for top-level columns — the shared
-        tools._column_ids (imported at call time: the package ships to
-        workers whole, so there is no pickling reason to duplicate the
-        _root convention here)."""
-        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-            _column_ids,
-        )
-
-        return _column_ids(meta)
-
     def _default_columns(meta):
         """columns option omitted: every top-level column whose type
         tree the arrow exchange maps (since the nested mapping this
         is everything except unknown future kinds)."""
         cols = []
-        for name, cid in _top_ids(meta).items():
+        for name, cid in _column_ids(meta).items():
             try:
                 _pa_type(meta["types"], cid)
             except ValueError:
@@ -672,7 +663,7 @@ def _build_orc_native_class():
             cols.append(name)
         if not cols:
             kinds = [
-                meta["types"][cid]["kind"] for cid in _top_ids(meta).values()
+                meta["types"][cid]["kind"] for cid in _column_ids(meta).values()
             ]
             raise ValueError(
                 "orc_native: no arrow-mappable top-level columns "
@@ -920,7 +911,7 @@ def _build_orc_native_class():
                 output_columns,
             )
 
-            ids = _top_ids(meta)
+            ids = _column_ids(meta)
             # dotted sub-paths (nested projection P2): the schema is
             # the PRUNED struct per top-level name; _included_ids
             # raises the clear unknown-column/field error

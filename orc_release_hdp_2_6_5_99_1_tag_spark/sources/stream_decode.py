@@ -44,19 +44,26 @@ timestamp (incl. non-UTC writer-timezone rebase), decimal,
 list/struct/map composites, and union (tagged-struct surface) — in
 both encoding versions (v0.11 RLEv1 and v0.12 RLEv2 files).
 
-Scale: one `decode_stripe` call is the per-task unit —
-`read_planned` fans out one Spark task per stripe (mapInPandas), the
-same topology as `sources/pyds.py` (one task per file) but at stripe
-granularity, so a 100-TB lake decodes planned ranges with
-cluster-wide parallelism while the driver never touches data bytes.
+Plan once per file: `plan_file_scan` reads a file's tail, stripe
+footers and the needed row indexes/blooms ONCE and resolves the whole
+scan into a `FileScanPlan` (namespace map, effective SArg, level-1/2
+decisions, level-3 byte ranges, converters); scanning executes that
+plan and `explain_lake_scan` reports its summary. Scale: one file is
+the per-task unit — `read_planned_lake` (and `read_planned`, its
+one-file case) fans out one Spark task per file (mapInPandas), the
+same topology as `sources/pyds.py`, so a 100-TB lake decodes planned
+ranges with cluster-wide parallelism while the driver never touches
+data bytes.
 """
 
 from __future__ import annotations
 
 import struct
-from typing import Any
+from dataclasses import dataclass, field
+from typing import Any, Callable
 
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+    _INDEX_AREA,
     _decompress_chunk,
     get_index_position,
     parse_row_index,
@@ -513,7 +520,6 @@ class BitFieldReader:
 # column decoders (TreeReaderFactory analogs, data streams only)
 # ---------------------------------------------------------------------------
 
-_INDEX_AREA = ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8")
 _RLE_INT_KINDS = ("smallint", "int", "bigint")
 
 
@@ -1018,6 +1024,154 @@ def _stream_directory(stripe: dict) -> dict[int, dict[str, tuple[int, int]]]:
     return out
 
 
+@dataclass
+class FileScanPlan:
+    """One file's scan, resolved ONCE from its metadata — the
+    reference's per-file RecordReader plan (`pickRowGroups` →
+    `planReadPartialDataStreams` → `readPartialDataStreams`,
+    RecordReaderImpl.java:1027-1089). Built by `plan_file_scan`;
+    `execute` runs it, `decode` runs one stripe of it, and `summary`
+    is what `explain_lake_scan` reports, so a scan and its explanation
+    cannot drift apart.
+
+    `file_columns`, `tree` and every index below live in THIS file's
+    namespace; `sources` maps each reader output name to the file's
+    top-level column it reads (positionally reconciled `_colN` files
+    rename here), `missing` outputs NULL-fill and `converters` apply
+    the schema-evolution fixups."""
+
+    path: str
+    meta: dict                  # the file's tail parse
+    file_columns: list[str]     # requested paths present in the file
+    included: set[int]          # their include-tree closure
+    stripes: list[dict]         # stripe footers ([] when level 1 skips)
+    picks: list[list[dict]]     # level 2: keep bits per stripe per group
+    ranges: list[dict]          # level 3: plan_read_ranges per stripe
+    row_index: dict[int, list]  # parsed ROW_INDEX per included column id
+    sources: dict[str, str] = field(default_factory=dict)
+    missing: list[str] = field(default_factory=list)
+    converters: dict[str, Callable] = field(default_factory=dict)
+    tree: Any = None            # effective SArg; None = keep everything
+    keep_all_reason: str | None = None
+    positional_levels: int = 0
+    truth: str = "YES_NO_NULL"  # level 1: the footer-stats verdict
+    file_kept: bool = True
+
+    def summary(self) -> dict:
+        """The per-file accounting explain_lake_scan reports: level-1
+        verdict, stripes/groups kept, planned vs total data bytes."""
+        d = {
+            "path": self.path, "truth": self.truth, "keep": self.file_kept,
+            "keep_all_reason": self.keep_all_reason,
+        }  # fmt: skip
+        if self.file_kept:
+            kept = [sum(x["keep"] for x in per) for per in self.picks]
+            d.update(
+                stripes_total=len(kept),
+                stripes_kept=sum(1 for k in kept if k),
+                groups_total=sum(len(per) for per in self.picks),
+                groups_kept=sum(kept),
+                bytes_planned=sum(p["bytes_planned"] for p in self.ranges),
+                bytes_total_data=sum(
+                    p["bytes_total_data"] for p in self.ranges
+                ),
+            )
+        return d
+
+    def decode(self, stripe_idx: int) -> dict:
+        """Decode one stripe's KEPT row groups from the planned byte
+        ranges only (see decode_stripe); result keys are the file's
+        own top-level names."""
+        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
+            _column_ids,
+            output_columns,
+        )
+
+        meta = self.meta
+        stride = meta["row_index_stride"]
+        st = self.stripes[stripe_idx]
+        p = self.ranges[stripe_idx]
+        keep = [d["keep"] for d in self.picks[stripe_idx]]
+        rr = RangeReader(self.path, st["offset"], p["ranges"])
+        # row indexes for the whole subtree closure (nested columns seek
+        # their element/field/key/value streams by their own entries)
+        row_index = {
+            cid: self.row_index[cid][stripe_idx] for cid in self.included
+        }
+        ctx = _DecodeContext(st, row_index, meta["compression"] != "NONE")
+        # dotted sub-paths group under their top-level name and prune the
+        # struct decode to the included subtree (subtree id sets of
+        # distinct top columns are disjoint, so the global include set is
+        # each decoder's include set)
+        ids = _column_ids(meta)
+        outs = output_columns(self.file_columns, meta)
+        decoders = {
+            c: _build_decoder(
+                ids[c], meta["types"], st, rr, meta["compression"],
+                self.included,
+            )
+            for c in outs
+        }
+        out_cols: dict[str, list[Any]] = {c: [] for c in outs}
+        n_rows = 0
+        for g, keep_g in enumerate(keep):
+            if not keep_g:
+                continue
+            n = min(stride, st["numberOfRows"] - g * stride)
+            ctx.group = g
+            for c in outs:
+                dec = decoders[c]
+                dec.seek_group(ctx)
+                out_cols[c].extend(dec.next(n))
+            n_rows += n
+        return {
+            "columns": out_cols,
+            "n_rows": n_rows,
+            "row_groups_decoded": sum(keep),
+            "row_groups_total": len(keep),
+            "bytes_fetched": rr.bytes_fetched,
+            "bytes_total_data": p["bytes_total_data"],
+        }
+
+    def execute(self, audit: dict | None = None):
+        """Run the plan: yield one decode result per stripe with a kept
+        row group, its columns under the reader's output names. `audit`,
+        when given, is filled with the per-file accounting (file_kept,
+        stripes_decoded, groups_decoded/total, bytes_fetched, and the
+        evolution_* markers when evolution applied)."""
+        if audit is None:
+            audit = {}
+        if self.positional_levels:
+            audit["evolution_positional"] = self.positional_levels
+        if self.keep_all_reason:
+            audit["evolution_keep_all"] = True
+        if self.converters:
+            audit["evolution_converted"] = sorted(self.converters)
+        audit.setdefault("file_kept", True)
+        for k in ("stripes_decoded", "groups_decoded", "groups_total",
+                  "bytes_fetched"):
+            audit.setdefault(k, 0)
+        if not self.file_kept:
+            audit["file_kept"] = False
+            return
+        audit["groups_total"] = sum(len(per) for per in self.picks)
+        for si, per_stripe in enumerate(self.picks):
+            if not any(d["keep"] for d in per_stripe):
+                continue
+            res = self.decode(si)
+            audit["stripes_decoded"] += 1
+            audit["groups_decoded"] += res["row_groups_decoded"]
+            audit["bytes_fetched"] += res["bytes_fetched"]
+            cols = res["columns"]
+            res["columns"] = {
+                o: cols[f] if f in cols else [None] * res["n_rows"]
+                for o, f in self.sources.items()
+            }
+            for o, conv in self.converters.items():
+                res["columns"][o] = [conv(v) for v in res["columns"][o]]
+            yield res
+
+
 def decode_stripe(
     path: str,
     stripe_idx: int,
@@ -1025,14 +1179,13 @@ def decode_stripe(
     columns: list[str],
     picks: list[list[dict]] | None = None,
     plan: list[dict] | None = None,
-    shared: dict | None = None,
-    partial: bool = False,
 ) -> dict:
     """Decode one stripe's KEPT row groups from the planned byte
     ranges only. Returns {"columns": {name: [values]}, "n_rows",
     "row_groups_decoded", "row_groups_total", "bytes_fetched",
     "bytes_total_data"} — the bytes accounting proves the partial
-    read really was partial.
+    read really was partial. `picks` / `plan` (pick_row_groups /
+    plan_read_ranges output) default to this predicate's own.
 
     The residual predicate still applies to the returned rows (group
     pruning is conservative — same contract as the reference, where
@@ -1042,88 +1195,32 @@ def decode_stripe(
         pick_row_groups,
     )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        _column_ids,
         _included_ids,
-        plan_read_ranges,
+        _plan_ranges,
     )
 
-    # `shared` lets a per-file caller (scan_file) parse the tail,
-    # stripe footers, and row indexes ONCE and decode many stripes —
-    # without it each call re-parses, which is O(stripes^2) metadata
-    # IO over a whole file (the hazard read_planned's docstring names)
-    shared = shared if shared is not None else {}
-    meta = shared.get("meta") or parse_tail_of_file(path)
-    stride = meta["row_index_stride"]
-    if not stride:
+    meta = parse_tail_of_file(path)
+    if not meta["row_index_stride"]:
         raise ValueError(f"{path}: no row index; cannot plan a partial read")
-    ids = _column_ids(meta)
-    types = meta["types"]
-    is_compressed = meta["compression"] != "NONE"
     if picks is None:
         picks = pick_row_groups(path, tree)
+    stripes = parse_stripe_footers(path)
+    included = _included_ids(meta, columns)
+    row_index = {cid: parse_row_index(path, cid, stripes) for cid in included}
     if plan is None:
-        plan = plan_read_ranges(
-            path, tree, columns=columns, picks=picks, partial=partial
-        )
-    sts = shared.get("sts") or parse_stripe_footers(path)
-    st = sts[stripe_idx]
-    p = plan[stripe_idx]
-    keep = [d["keep"] for d in picks[stripe_idx]]
-    rr = RangeReader(path, st["offset"], p["ranges"])
-    # row indexes for the whole subtree closure (nested columns seek
-    # their element/field/key/value streams by their own entries)
-    included = _included_ids(meta, columns, partial=partial)
-    full_index = shared.get("row_index") or {
-        cid: parse_row_index(path, cid) for cid in included
-    }
-    row_index = {cid: full_index[cid][stripe_idx] for cid in included}
-    ctx = _DecodeContext(st, row_index, is_compressed)
-    # dotted sub-paths group under their top-level name and prune the
-    # struct decode to the included subtree (subtree id sets of
-    # distinct top columns are disjoint, so the global include set is
-    # each decoder's include set)
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        output_columns,
-    )
-
-    outs = output_columns(columns, meta)
-    decoders = {
-        c: _build_decoder(
-            ids[c], types, st, rr, meta["compression"], included
-        )
-        for c in outs
-    }
-
-    out_cols: dict[str, list[Any]] = {c: [] for c in outs}
-    n_rows = 0
-    for g, keep_g in enumerate(keep):
-        if not keep_g:
-            continue
-        n = min(stride, st["numberOfRows"] - g * stride)
-        ctx.group = g
-        for c in outs:
-            dec = decoders[c]
-            dec.seek_group(ctx)
-            out_cols[c].extend(dec.next(n))
-        n_rows += n
-    return {
-        "columns": out_cols,
-        "n_rows": n_rows,
-        "row_groups_decoded": sum(keep),
-        "row_groups_total": len(keep),
-        "bytes_fetched": rr.bytes_fetched,
-        "bytes_total_data": p["bytes_total_data"],
-    }
+        plan = _plan_ranges(meta, stripes, included, picks, row_index)
+    return FileScanPlan(
+        path, meta, columns, included, stripes, picks, plan, row_index
+    ).decode(stripe_idx)
 
 
 def _ship_package(spark) -> None:
     """Ship the whole engine package to the workers as one zip (an
     addPyFile re-add of the same path is a no-op, and the zip is
-    cached until any source file changes). decode_stripe runs PER
-    TASK (the plan itself ships in the closure — see read_planned),
-    so workers need the package importable by its real name — the
-    flat single-module trick pyds/footer_stats use doesn't cover a
-    module graph."""
+    cached until any source file changes). Each task builds and runs
+    its file's FileScanPlan (see read_planned_lake), so workers need
+    the package importable by its real name — the flat single-module
+    trick pyds/footer_stats use doesn't cover a module graph."""
     import os
     import zipfile
 
@@ -1157,15 +1254,19 @@ def keep_all_picks(path: str) -> list[list[dict]]:
     row group per stripe, from the root column's row index) — the
     no-predicate scan's picks, shared by decode callers that have no
     SArg (golden-corpus sweep, orc_native full scans)."""
-    out = []
-    for per_stripe in parse_row_index(path, 0):
-        out.append(
-            [
-                {"row_group": g, "truth": "YES", "keep": True}
-                for g in range(len(per_stripe))
-            ]
-        )
-    return out
+    return _keep_all(parse_row_index(path, 0))
+
+
+def _keep_all(row_index: list[list[dict]]) -> list[list[dict]]:
+    """keep_all_picks from any one column's parsed row index (every
+    column has one entry per row group)."""
+    return [
+        [
+            {"row_group": g, "truth": "YES", "keep": True}
+            for g in range(len(per_stripe))
+        ]
+        for per_stripe in row_index
+    ]
 
 
 def orc_schema_ddl(path: str, columns: list[str]) -> str:
@@ -1254,42 +1355,34 @@ def _file_prunes_from_meta(meta: dict, tree: Any) -> dict:
         keeps_unit,
         stats_to_domain,
     )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
+        _resolve_dotted,
+    )
 
     kinds = {c["name"]: c["kind"] for c in meta["columns"]}
-    stats = {}
-    for c in meta["columns"]:
-        if c.get("n_values") is None:
-            # footer carries NO statistics for this column (legal per
-            # the proto; minimal writers) — indistinguishable stats
-            # must evaluate YES_NO_NULL and KEEP, never read as
-            # "all-null" and skip
-            stats[c["name"]] = {
-                "min": UNKNOWN_VALUE, "max": UNKNOWN_VALUE,
-                "has_null": None, "n_values": None,
-            }  # fmt: skip
-        else:
-            stats[c["name"]] = stats_to_domain(c["kind"], c)
+    entries = {c["name"]: c for c in meta["columns"]}
     # dotted SArg leaves ("st.a"): Footer.statistics is per column id
     # INCLUDING nested fields, so nested predicates prune whole files
     # exactly like top-level ones
+    fs = meta.get("footer_stats") or []
     for name in _tree_columns(tree):
         if "." not in name or name in kinds:
             continue  # top-level (incl. literal-dot names): covered above
-        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-            _resolve_dotted,
-        )
-
         cid = _resolve_dotted(meta, name)[-1]
         kinds[name] = meta["types"][cid]["kind"]
-        fs = meta.get("footer_stats") or []
-        entry = fs[cid] if cid < len(fs) else {}
-        if entry.get("n_values") is None:
-            stats[name] = {
-                "min": UNKNOWN_VALUE, "max": UNKNOWN_VALUE,
-                "has_null": None, "n_values": None,
-            }  # fmt: skip
-        else:
-            stats[name] = stats_to_domain(kinds[name], entry)
+        entries[name] = fs[cid] if cid < len(fs) else {}
+    # a column the footer carries NO statistics for (legal per the
+    # proto; minimal writers) — indistinguishable stats must evaluate
+    # YES_NO_NULL and KEEP, never read as "all-null" and skip
+    unknown = {
+        "min": UNKNOWN_VALUE, "max": UNKNOWN_VALUE,
+        "has_null": None, "n_values": None,
+    }  # fmt: skip
+    stats = {
+        name: dict(unknown) if e.get("n_values") is None
+        else stats_to_domain(kinds[name], e)
+        for name, e in entries.items()
+    }
     tv = evaluate_tree(
         tree, stats, col_types=kinds,
         writer_has_orc135=meta.get("writer_version", 0) >= 6,
@@ -1298,73 +1391,22 @@ def _file_prunes_from_meta(meta: dict, tree: Any) -> dict:
 
 
 def scan_file(path: str, tree: Any, columns: list[str],
-              audit: dict | None = None, meta: dict | None = None,
-              partial: bool = False):
-    """The shared per-file three-level scan (one place to keep the
-    pruning pipeline honest — read_planned_lake and the orc_native
-    DataSource both drive it): level-1 file-stats keep/skip, level-2
-    pickRowGroups, level-3 planned ranged decode. Yields the
-    decode_stripe result dict per kept stripe. Index-less files RAISE
-    ("no row index") instead of silently scanning zero rows — the
-    partial-read surfaces never fall back to a full scan behind the
-    caller's back. `audit`, when given, is filled with the per-file
-    accounting (file_kept, stripes_decoded, groups_decoded/total,
-    bytes_fetched)."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
-        pick_row_groups,
-    )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        plan_read_ranges,
-    )
-
-    if audit is None:
-        audit = {}
-    audit.setdefault("file_kept", True)
-    audit.setdefault("stripes_decoded", 0)
-    audit.setdefault("groups_decoded", 0)
-    audit.setdefault("groups_total", 0)
-    audit.setdefault("bytes_fetched", 0)
-    if meta is None:
-        meta = parse_tail_of_file(path)
-    if not meta["row_index_stride"]:
-        raise ValueError(
-            f"{path}: no row index; cannot plan a partial read"
+              audit: dict | None = None):
+    """The per-file three-level scan of one file in its own schema:
+    level-1 file-stats keep/skip, level-2 pickRowGroups, level-3
+    planned ranged decode (see plan_file_scan / FileScanPlan.execute).
+    Yields the decode_stripe result dict per kept stripe. Index-less
+    files RAISE ("no row index"), and so does a requested or predicate
+    column the file does not have. `audit`, when given, is filled with
+    the per-file accounting (file_kept, stripes_decoded,
+    groups_decoded/total, bytes_fetched)."""
+    plan = plan_file_scan(path, tree, columns)
+    if plan.missing or plan.keep_all_reason:
+        raise KeyError(
+            f"{path}: unknown column in {columns} / {tree!r}; file has "
+            f"{[c['name'] for c in plan.meta['columns']]}"
         )
-    if tree is not None:
-        if not _file_prunes_from_meta(meta, tree)["keep"]:
-            audit["file_kept"] = False
-            return
-        picks = pick_row_groups(path, tree)
-    else:
-        picks = keep_all_picks(path)
-    plan = plan_read_ranges(
-        path, tree, columns=columns, picks=picks, partial=partial
-    )
-    audit["groups_total"] = sum(len(per) for per in picks)
-    # parse the per-file metadata ONCE; decode_stripe slices per stripe
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        _included_ids,
-    )
-
-    shared = {
-        "meta": meta,
-        "sts": parse_stripe_footers(path),
-        "row_index": {
-            cid: parse_row_index(path, cid)
-            for cid in _included_ids(meta, columns, partial=partial)
-        },
-    }
-    for si, per_stripe in enumerate(picks):
-        if not any(d["keep"] for d in per_stripe):
-            continue
-        res = decode_stripe(
-            path, si, tree, columns, picks=picks, plan=plan,
-            shared=shared, partial=partial,
-        )
-        audit["stripes_decoded"] += 1
-        audit["groups_decoded"] += res["row_groups_decoded"]
-        audit["bytes_fetched"] += res["bytes_fetched"]
-        yield res
+    yield from plan.execute(audit)
 
 
 def scan_file_evolved(path: str, tree: Any, columns: list[str],
@@ -1377,16 +1419,33 @@ def scan_file_evolved(path: str, tree: Any, columns: list[str],
     null-fill): a requested top-level column absent from THIS file's
     schema — the classic added-a-column-later lake — yields typed
     NULLs instead of a KeyError, so one reader schema scans a mixed
-    lake. Semantics per the reference:
+    lake. The rules are plan_file_scan's. Output keys are
+    output_columns(columns) — identical to scan_file."""
+    yield from plan_file_scan(
+        path, tree, columns, reader_meta=reader_meta,
+        force_positional=force_positional,
+        tolerate_missing_schema=tolerate_missing_schema,
+    ).execute(audit)
+
+
+def plan_file_scan(path: str, tree: Any, columns: list[str],
+                   reader_meta: dict | None = None,
+                   force_positional: bool = False,
+                   tolerate_missing_schema: bool = True) -> FileScanPlan:
+    """Build one file's FileScanPlan, reading its metadata exactly
+    once: the tail, the stripe footers, and the row index (plus, for
+    predicate columns, the bloom index) of every column the plan
+    needs. Evolution semantics, per the reference:
 
     - missing columns read as all-NULL for that file;
     - a predicate that references a missing column — or one that this
       file stores under a PPD-UNSAFE type conversion
       (`SchemaEvolution.isPPDSafeConversion:222-260`: only identity,
       int-family widening and string↔varchar may prune) — cannot
-      prune this file; it falls back to a keep-all scan and the
-      caller's RESIDUAL row filter does the dropping (NULL
-      comparisons are never true), so results stay exact;
+      prune this file; it falls back to a keep-all scan
+      (`keep_all_reason` says why) and the caller's RESIDUAL row
+      filter does the dropping (NULL comparisons are never true), so
+      results stay exact;
     - with `reader_meta` (the elected reader schema's tail parse —
       `evolution_native.elect_reader_path`), evolution goes
       FIELD-LEVEL and TYPE-LEVEL (r11 verdict #3): a present struct
@@ -1400,21 +1459,30 @@ def scan_file_evolved(path: str, tree: Any, columns: list[str],
       applies the wider type);
     - without `reader_meta`, a present top with a missing FIELD stays
       a loud error (the legacy contract — callers that never elected
-      a reader schema must not get silently reshaped structs).
-
-    Output keys are output_columns(columns) — identical to scan_file."""
+      a reader schema must not get silently reshaped structs)."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
+        _pick_groups,
+        _predicate_ids,
+    )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
         evolution_native as evo,
+    )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.bloom import (
+        parse_bloom_index,
     )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
         _column_ids,
         _included_ids,
+        _plan_ranges,
         _resolve_partial,
         _top_name,
         output_columns,
     )
 
     meta = parse_tail_of_file(path)
+    if not meta["row_index_stride"]:
+        # never a silent full (or empty) scan behind the caller's back
+        raise ValueError(f"{path}: no row index; cannot plan a partial read")
     fids = _column_ids(meta)
     ref = reader_meta if reader_meta is not None else meta
     outs = output_columns(columns, ref)
@@ -1446,19 +1514,16 @@ def scan_file_evolved(path: str, tree: Any, columns: list[str],
             "reconcile schemas by position"
         )
     pos_levels = 0
-    pos_map: dict[str, str] = {}
+    rename: dict[str, str] = {}
     if reader_meta is not None and not evo.is_positional(reader_meta):
         pos_levels = evo.positional_levels(meta, force=force_positional)
     if pos_levels:
-        pos_map = evo.positional_name_map(reader_meta, meta, levels=pos_levels)
-        if audit is not None:
-            audit["evolution_positional"] = pos_levels
-    to_file = (lambda c: evo.rename_path(c, pos_map)) if pos_map else (lambda c: c)
-    present: list[str] = []   # reader-side paths present in this file
+        rename = evo.positional_name_map(reader_meta, meta, levels=pos_levels)
+    present: list[str] = []   # file-side paths of the requested columns
     for c in columns:
-        fc = to_file(c)
+        fc = evo.rename_path(c, rename)
         if _top_name(fids, fc) not in fids:
-            continue  # whole top-level column missing: NULL-fill below
+            continue  # whole top-level column missing: NULL-fill
         chain, full = _resolve_partial(meta, fc)
         if not full and reader_meta is None:
             t = meta["types"][chain[-1]]
@@ -1467,43 +1532,32 @@ def scan_file_evolved(path: str, tree: Any, columns: list[str],
                 "field-level evolution needs an elected reader schema "
                 "(pass reader_meta)"
             )
-        present.append(c)
-    missing = [
-        o for o in outs if _top_name(fids, to_file(o)) not in fids
-    ]
+        present.append(fc)
+    # reader output name -> the file's top-level column it reads
+    sources = {o: _top_name(fids, evo.rename_path(o, rename)) for o in outs}
+    missing = [o for o, f in sources.items() if f not in fids]
     if not present:
         raise ValueError(
             f"{path}: none of the requested columns {outs} exist in "
             f"this file (has {sorted(fids)}) — not an evolution of the "
             "reader schema"
         )
-    eff_tree = tree
-    if tree is not None and not evo.tree_prunable(
-        meta, ref, tree, file_names=pos_map or None
-    ):
-        # cannot prune: missing/unresolvable predicate column (all-NULL
-        # domain here) or a PPD-unsafe conversion — keep all, exact via
-        # the caller's residual filter
-        eff_tree = None
-        if audit is not None:
-            audit["evolution_keep_all"] = True
-    if eff_tree is not None and pos_map:
-        eff_tree = evo.tree_rename(eff_tree, pos_map)
-    file_req = [to_file(c) for c in present]
+    included = _included_ids(meta, present, partial=reader_meta is not None)
+    reason = None
+    if tree is not None:
+        reason = evo.keep_all_reason(meta, ref, tree, file_names=rename or None)
+        tree = None if reason else evo.tree_rename(tree, rename)
     # per-column value fixups (struct-field NULL-fill, decimal
     # rescale); None for the identity fast path
     convs = {}
     if reader_meta is not None:
         rids = _column_ids(reader_meta)
         r_inc = _included_ids(reader_meta, columns)
-        f_inc = _included_ids(meta, file_req, partial=True)
-        for o in outs:
-            fo = to_file(o)
-            if _top_name(fids, fo) in fids and o in rids:
+        for o, fo in sources.items():
+            if fo in fids and o in rids:
                 conv = evo.make_converter(
                     reader_meta["types"], rids[o],
-                    meta["types"], fids[_top_name(fids, fo)],
-                    r_inc, f_inc,
+                    meta["types"], fids[fo], r_inc, included,
                     # the top level consumed one positional level via
                     # the name map; deeper struct levels (the ACID
                     # `row` case) pair by index inside the converter
@@ -1511,25 +1565,30 @@ def scan_file_evolved(path: str, tree: Any, columns: list[str],
                 )
                 if conv is not None:
                     convs[o] = conv
-    if convs and audit is not None:
-        audit["evolution_converted"] = sorted(convs)
-    # reuse the tail parse above — one metadata read per file, not two
-    for res in scan_file(path, eff_tree, file_req, audit, meta=meta,
-                         partial=reader_meta is not None):
-        if pos_map:
-            # decode keys are the file's _col names — surface the
-            # reader's (the positional rename, one level deep)
-            cols_out = {}
-            for o in outs:
-                fo = _top_name(fids, to_file(o))
-                if fo in res["columns"]:
-                    cols_out[o] = res["columns"][fo]
-            res["columns"] = cols_out
-        for c in missing:
-            res["columns"][c] = [None] * res["n_rows"]
-        for o, conv in convs.items():
-            res["columns"][o] = [conv(v) for v in res["columns"][o]]
-        yield res
+    plan = FileScanPlan(
+        path, meta, present, included, [], [], [], {}, sources=sources,
+        missing=missing, converters=convs, tree=tree,
+        keep_all_reason=reason, positional_levels=pos_levels,
+    )
+    if tree is not None:
+        level1 = _file_prunes_from_meta(meta, tree)
+        plan.truth, plan.file_kept = level1["truth"], level1["keep"]
+        if not plan.file_kept:
+            return plan  # skipped on footer stats: no index bytes read
+    pred = set(_predicate_ids(meta, tree).values()) if tree is not None else set()
+    plan.stripes = parse_stripe_footers(path)
+    plan.row_index = {
+        cid: parse_row_index(path, cid, plan.stripes) for cid in included | pred
+    }
+    if tree is None:
+        plan.picks = _keep_all(plan.row_index[min(included)])
+    else:
+        blooms = {cid: parse_bloom_index(path, cid, plan.stripes) for cid in pred}
+        plan.picks = _pick_groups(meta, tree, plan.row_index, blooms)
+    plan.ranges = _plan_ranges(
+        meta, plan.stripes, included, plan.picks, plan.row_index
+    )
+    return plan
 
 
 def read_planned_lake(spark, paths: list[str], tree: Any, columns: list[str],
@@ -1537,8 +1596,8 @@ def read_planned_lake(spark, paths: list[str], tree: Any, columns: list[str],
                       force_positional: bool = False):
     """Lake-scale planned partial read: ONE Spark task per FILE — the
     unit the reference plans at (one RecordReader per file/split) and
-    the same topology as `sources/pyds.py`. Each task runs the full
-    three-level pruning chain on ITS file, metadata first:
+    the same topology as `sources/pyds.py`. Each task builds and
+    executes ITS file's FileScanPlan, metadata first:
 
     1. file footer stats -> skip the whole file without reading any
        index bytes (split elimination — the orc_split_elim goldens'
@@ -1546,20 +1605,16 @@ def read_planned_lake(spark, paths: list[str], tree: Any, columns: list[str],
     2. pickRowGroups over ROW_INDEX stats (+ blooms) -> keep/skip bits
        per row group; stripes with no kept groups are skipped;
     3. plan_read_ranges -> ranged reads -> decode of ONLY the kept
-       groups (readPartialDataStreams parity, via decode_stripe).
+       groups (readPartialDataStreams parity).
 
     The driver touches only the FILE LIST plus one tail parse for the
     schema — O(1) metadata, no per-file driver loop — so the shape
     holds at a million files: pruning work is distributed WITH the
     data IO, and a file skipped at level 1 costs its task one tail
     read. Returns the decoded rows; the caller applies the residual
-    row-level predicate (pruning is conservative), exactly like
-    read_planned."""
+    row-level predicate (pruning is conservative)."""
     import pandas as pd
 
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.evolution_native import (
-        elect_reader_meta,
-    )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
         output_columns,
     )
@@ -1567,25 +1622,9 @@ def read_planned_lake(spark, paths: list[str], tree: Any, columns: list[str],
     if not paths:
         raise ValueError("read_planned_lake: empty file list")
     _ship_package(spark)
-    # reader schema ELECTION (r11 verdict #2 — no caller hint): the
-    # file whose schema is a widening-supertype of every other file's
-    # becomes the reader schema; every other file reads through the
-    # per-file evolution mapping (missing columns/fields NULL-fill,
-    # safe widenings convert, PPD-unsafe predicate columns fall back
-    # to keep-all for that file only). Past 64 files the tail parses
-    # run as a Spark job and only DISTINCT schema signatures reach
-    # the driver — O(generations), not O(files). An explicit
-    # `reader_path` (the table-catalog case — the reference always
-    # reads against the declared table schema) skips the election;
-    # `force_positional` (orc.force.positional.evolution) makes every
-    # file reconcile by index, named or not, and is honored by the
-    # election's covers() too.
-    if reader_path is not None:
-        reader_meta = parse_tail_of_file(reader_path)
-    else:
-        reader_path, reader_meta = elect_reader_meta(
-            paths, spark=spark, force_positional=force_positional
-        )
+    reader_path, reader_meta = _reader_schema(
+        paths, reader_path, force_positional, spark
+    )
     outs = output_columns(columns, reader_meta)
     schema = orc_schema_ddl(reader_path, columns)
     files_df = spark.createDataFrame(
@@ -1613,150 +1652,53 @@ def read_planned_lake(spark, paths: list[str], tree: Any, columns: list[str],
     return files_df.mapInPandas(_scan, schema=schema)
 
 
+def _reader_schema(paths: list[str], reader_path: str | None,
+                   force_positional: bool, spark=None) -> tuple[str, dict]:
+    """(path, tail parse) of the lake's reader schema. ELECTION (r11
+    verdict #2 — no caller hint): the file whose schema is a
+    widening-supertype of every other file's becomes the reader
+    schema; every other file reads through the per-file evolution
+    mapping (missing columns/fields NULL-fill, safe widenings convert,
+    PPD-unsafe predicate columns fall back to keep-all for that file
+    only). Past 64 files and given `spark`, the tail parses run as a
+    Spark job and only DISTINCT schema signatures reach the driver —
+    O(generations), not O(files). An explicit `reader_path` (the
+    table-catalog case — the reference always reads against the
+    declared table schema) skips the election; `force_positional`
+    (orc.force.positional.evolution) makes every file reconcile by
+    index, named or not, and is honored by the election's covers()
+    too."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.evolution_native import (
+        elect_reader_meta,
+    )
+
+    if reader_path is not None:
+        return reader_path, parse_tail_of_file(reader_path)
+    return elect_reader_meta(
+        paths, spark=spark, force_positional=force_positional
+    )
+
+
 def explain_lake_scan(paths: list[str], tree: Any, columns: list[str],
                       force_positional: bool = False) -> list[dict]:
     """Driver-side (diagnostic) accounting of what read_planned_lake
-    will do per file: level-1 keep/skip, stripes/groups kept, and the
-    planned byte fraction. Metadata reads only. Evolution-aware the
-    same way the scan is: a file where the predicate cannot prune
-    (missing/unsafely-converted column) reports keep-all, columns
-    resolve per file (missing ones cost no plan bytes), and a
-    positionally-reconciled file (pre-HIVE-4243 `_colN` names, or any
-    file under `force_positional`) gets the reader predicate and
-    columns TRANSLATED into its own namespace first — so the
-    diagnostic reports the pruning the scan actually does instead of
-    a false keep-all (r12 ADVICE: this function used to skip the
-    positional map that scan_file_evolved applies)."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
-        pick_row_groups,
-    )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
-        evolution_native as evo,
-    )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        _top_name,
-        plan_read_ranges,
-    )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        _column_ids,
-    )
-
-    reader_meta = None
-    if len(paths) > 1:
-        _, reader_meta = evo.elect_reader_path(
-            paths, force_positional=force_positional
-        )
-    out = []
-    for path in paths:
-        meta = parse_tail_of_file(path)
-        ref = reader_meta if reader_meta is not None else meta
-        # mirror scan_file_evolved's positional reconciliation
-        pos_map: dict[str, str] = {}
-        if reader_meta is not None and not evo.is_positional(reader_meta):
-            lv = evo.positional_levels(meta, force=force_positional)
-            if lv:
-                pos_map = evo.positional_name_map(ref, meta, levels=lv)
-        to_file = (
-            (lambda c: evo.rename_path(c, pos_map)) if pos_map else (lambda c: c)
-        )
-        eff_tree = tree
-        if tree is not None and not evo.tree_prunable(
-            meta, ref, tree, file_names=pos_map or None
-        ):
-            eff_tree = None
-        if eff_tree is not None and pos_map:
-            eff_tree = evo.tree_rename(eff_tree, pos_map)
-        fids = _column_ids(meta)
-        file_cols = [
-            fc for fc in (to_file(c) for c in columns)
-            if _top_name(fids, fc) in fids
-        ]
-        if eff_tree is None:
-            d = {"path": path, "truth": "YES_NO_NULL", "keep": True}
-        else:
-            d = {"path": path, **_file_prunes_from_meta(meta, eff_tree)}
-        if d["keep"]:
-            picks = (
-                pick_row_groups(path, eff_tree)
-                if eff_tree is not None
-                else keep_all_picks(path)
-            )
-            plan = plan_read_ranges(
-                path, eff_tree, columns=file_cols, picks=picks, partial=True
-            )
-            d["stripes_total"] = len(picks)
-            d["stripes_kept"] = sum(
-                1 for per in picks if any(x["keep"] for x in per)
-            )
-            d["groups_total"] = sum(len(per) for per in picks)
-            d["groups_kept"] = sum(
-                sum(1 for x in per if x["keep"]) for per in picks
-            )
-            d["bytes_planned"] = sum(p["bytes_planned"] for p in plan)
-            d["bytes_total_data"] = sum(p["bytes_total_data"] for p in plan)
-        out.append(d)
-    return out
+    will do per file: the summary of each file's FileScanPlan under
+    the same reader-schema election — level-1 keep/skip, stripes and
+    groups kept, the planned byte fraction, and why a file keeps
+    everything. Metadata reads only."""
+    _, reader_meta = _reader_schema(paths, None, force_positional)
+    return [
+        plan_file_scan(
+            path, tree, columns, reader_meta=reader_meta,
+            force_positional=force_positional,
+        ).summary()
+        for path in paths
+    ]
 
 
 def read_planned(spark, path: str, tree: Any, columns: list[str]):
-    """Distributed planned partial read: one Spark task per stripe
-    (mapInPandas over a stripe listing built from ONE driver-side tail
-    parse — metadata only, no data bytes on the driver), each task
-    ranged-reading + decoding its own stripe. Returns a DataFrame with
-    `columns` in declared order; the caller applies the residual
-    row-level predicate (group pruning is conservative).
-
-    Planning happens ONCE on the driver (pickRowGroups +
-    plan_read_ranges — a tail read plus the predicate columns' index
-    regions, no data bytes) and ships to the tasks in the closure,
-    the same division the reference uses: one RecordReader plans per
-    FILE, then seeks per stripe/group. Per-task planning would re-read
-    the predicate columns' indexes for every stripe of the file —
-    O(stripes²) metadata IO. Across a million-file lake the unit of
-    fan-out is the file (pyds topology), and within a file the plan is
-    shared. Skipped stripes (no kept groups) are dropped from the task
-    list entirely."""
-    import pandas as pd
-
-    from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
-        pick_row_groups,
-    )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        plan_read_ranges,
-    )
-
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        output_columns,
-    )
-
-    _ship_package(spark)
-    outs = output_columns(columns, parse_tail_of_file(path))
-    picks = pick_row_groups(path, tree)
-    plan = plan_read_ranges(path, tree, columns=columns, picks=picks)
-    schema = orc_schema_ddl(path, columns)
-    kept_stripes = [
-        si for si, per_stripe in enumerate(picks)
-        if any(d["keep"] for d in per_stripe)
-    ]
-    if not kept_stripes:
-        return spark.createDataFrame([], schema)
-    stripes_df = spark.createDataFrame(
-        [(path, i) for i in kept_stripes], "path string, stripe_idx int"
-    ).repartition(len(kept_stripes))
-
-    def _decode(batches):
-        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-            decode_stripe,
-        )
-
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                res = decode_stripe(
-                    row["path"], int(row["stripe_idx"]), tree, columns,
-                    picks=picks, plan=plan,
-                )
-                yield pd.DataFrame(
-                    {c: res["columns"][c] for c in outs}
-                )
-
-    return stripes_df.mapInPandas(_decode, schema=schema)
+    """Distributed planned partial read of ONE file: read_planned_lake
+    over `[path]` (one Spark task runs the file's FileScanPlan). Returns
+    a DataFrame with `columns` in declared order; the caller applies the
+    residual row-level predicate (group pruning is conservative)."""
+    return read_planned_lake(spark, [path], tree, columns)

@@ -8,6 +8,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+    _INDEX_AREA,
+    get_index_position,
+)
+
 
 def orc_data(spark: SparkSession, path: str, limit: int | None = None) -> DataFrame:
     """`orc-tools data`: each row rendered as a JSON document
@@ -39,7 +44,7 @@ def orc_scan_explain(path: str, tree) -> dict:
 
     stripes = explain_file_pruning(path, tree)
     row_groups = pick_row_groups(path, tree)
-    io_plan = plan_read_ranges(path, tree)
+    io_plan = plan_read_ranges(path, tree, picks=row_groups)
     return {
         "stripes": stripes,
         "row_groups": row_groups,
@@ -142,7 +147,6 @@ def orc_seek_explain(path: str, row: int, columns: list[str] | None = None) -> d
     raise AssertionError("stripe row counts do not cover the footer's n_rows")
 
 
-_INDEX_AREA = ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8")
 _HEADER_SIZE = 3                      # OutStream.HEADER_SIZE
 _WORST_UNCOMPRESSED_SLOP = 2 + 8 * 512  # RecordReaderUtils
 
@@ -296,24 +300,18 @@ def plan_read_ranges(
     relative to the stripe start, bytes_planned, bytes_total_data} —
     bytes_planned / bytes_total_data is the fraction of the data
     section a pruned scan actually touches."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import pick_row_groups
+    from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
+        _tree_columns,
+        pick_row_groups,
+    )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-        get_index_position,
         parse_row_index,
         parse_stripe_footers,
         parse_tail_of_file,
     )
 
     meta = parse_tail_of_file(path)
-    types = meta["types"]
-    is_compressed = meta["compression"] != "NONE"
-    buf = meta["compression_block_size"]
-    slop = (
-        2 * (_HEADER_SIZE + buf) if is_compressed else _WORST_UNCOMPRESSED_SLOP
-    )
     if columns is None:
-        from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import _tree_columns
-
         columns = sorted(_tree_columns(tree))
     # a nested column's data lives in its SUBTREE's streams (list
     # element / struct field / map key+value column ids), so the plan
@@ -323,10 +321,26 @@ def plan_read_ranges(
     if picks is None:  # callers that already decided pass them through,
         # so plan and decode are guaranteed to agree (stream_decode)
         picks = pick_row_groups(path, tree)
-    row_index = {cid: parse_row_index(path, cid) for cid in included}
+    stripes = parse_stripe_footers(path)
+    row_index = {cid: parse_row_index(path, cid, stripes) for cid in included}
+    return _plan_ranges(meta, stripes, included, picks, row_index)
 
+
+def _plan_ranges(
+    meta: dict, stripes: list[dict], included: set[int],
+    picks: list[list[dict]], row_index: dict[int, list],
+) -> list[dict]:
+    """plan_read_ranges over an already-parsed file: `stripes` from
+    parse_stripe_footers, `row_index` mapping every `included` column
+    id to its parse_row_index entries."""
+    types = meta["types"]
+    is_compressed = meta["compression"] != "NONE"
+    buf = meta["compression_block_size"]
+    slop = (
+        2 * (_HEADER_SIZE + buf) if is_compressed else _WORST_UNCOMPRESSED_SLOP
+    )
     out = []
-    for si, st in enumerate(parse_stripe_footers(path)):
+    for si, st in enumerate(stripes):
         keep = [d["keep"] for d in picks[si]]
         present_cols = {
             s["column"] for s in st["streams"] if s["kind"] == "PRESENT"

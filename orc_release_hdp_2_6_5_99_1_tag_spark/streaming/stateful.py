@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import (
+    _await,
     _events_stream,
     _state_sized_shuffle,
 )
@@ -76,7 +77,7 @@ def r3_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await(q, 300)
     # update mode appends one row per key per batch: keep the final row
     latest = spark.table(name).groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -192,7 +193,7 @@ def r9_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await(q, 300)
     finally:
         if saved is None:
             spark.conf.unset(conf_key)

@@ -31,3 +31,37 @@ def sargs_fuzz_df(spark):
     df = spark.createDataFrame(rows, "id int, n int").cache()
     df.count()
     return df
+
+
+@pytest.fixture(scope="session")
+def range_lake(spark, tmp_path_factory):
+    """A range-partitioned 4-file lake (ids 0..39999, sorted within each
+    file, stride 1000, 4 KiB zlib chunks so the planned IO is
+    sub-stream): columns id, v = id % 97, s = md5(id)."""
+    import glob
+
+    import pyspark.sql.functions as F
+
+    out = str(tmp_path_factory.mktemp("range_lake") / "lake")
+    df = (
+        spark.range(40000)
+        .select(
+            "id",
+            (F.col("id") % 97).cast("int").alias("v"),
+            # high-entropy payload so streams span many chunks and
+            # partial IO is visible at this scale
+            F.md5(F.col("id").cast("string")).alias("s"),
+        )
+        .repartitionByRange(4, "id")
+        .sortWithinPartitions("id")
+    )
+    (
+        df.write.mode("overwrite")
+        .option("orc.row.index.stride", "1000")
+        .option("compression", "zlib")
+        # small chunks so the plan is sub-stream (256 KiB default would
+        # make every stream one chunk -> chunk-granular whole-stream IO)
+        .option("orc.compress.size", "4096")
+        .orc(out)
+    )
+    return {"lake": out, "files": sorted(glob.glob(os.path.join(out, "*.orc")))}

@@ -24,6 +24,7 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
+from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import _await
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import TABLE_NAMES, load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -158,7 +159,7 @@ def test_stream_matches_batch_on_ts(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await(q, 300)
     stream = (
         spark.read.parquet(out)
         .agg(
@@ -228,7 +229,7 @@ def test_loader_handles_nanos_generation(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await(q, 300)
     sgot = [r["ts"] for r in spark.read.parquet(out).orderBy("event_id").collect()]
     assert sgot == got, "stream nanos branch disagrees with batch"
     shutil.rmtree(os.path.join("/root/repo/.scratch", "sfnanos"), ignore_errors=True)

@@ -369,8 +369,8 @@ def test_orc_native_literal_dot_filter_attr_degrades(spark, tmp_path):
 
 
 def test_tree_prunable_literal_dot_and_unknown():
-    """Unresolvable SArg columns degrade to non-prunable (False),
-    never raise."""
+    """Unresolvable SArg columns degrade to non-prunable (a
+    keep-all reason), never raise."""
     def t(kind, subtypes=(), field_names=()):
         return {
             "kind": kind, "subtypes": list(subtypes),
@@ -382,9 +382,9 @@ def test_tree_prunable_literal_dot_and_unknown():
         "types": [t("struct", [1], ["x"]), t("int")],
         "columns": [{"name": "x", "col_id": 1, "kind": "int"}],
     }
-    assert evo.tree_prunable(meta, meta, ("equals", "x", 1))
-    assert not evo.tree_prunable(meta, meta, ("equals", "nope", 1))
-    assert not evo.tree_prunable(meta, meta, ("equals", "x.deep", 1))
+    assert evo.keep_all_reason(meta, meta, ("equals", "x", 1)) is None
+    assert evo.keep_all_reason(meta, meta, ("equals", "nope", 1)) == "missing column"
+    assert evo.keep_all_reason(meta, meta, ("equals", "x.deep", 1)) == "missing column"
 
 
 # ---------------------------------------------------------------------------
@@ -1450,3 +1450,76 @@ def test_bloom_pruning_through_positional_translation(spark, tmp_path):
     # min/max cannot prune the uniform layout; the bloom must
     assert audit["groups_decoded"] < audit["groups_total"]
     assert probe in got  # zero false negatives through the rename
+
+
+# ---------------------------------------------------------------------------
+# explain == scan: both run off one FileScanPlan per file
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def s29_acid_lake(spark):
+    """s29's graded ACID lake: an old `_colN` delta, a named new delta
+    and a delete delta, staged at sf0.01."""
+    import glob as g
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.operators.orc_queries import (
+        _s29_stage,
+    )
+
+    dest = _s29_stage(spark, "/root/testdata/sf0.01")
+    return {"files": sorted(g.glob(os.path.join(dest, "*.orc")))}
+
+
+_ACID_COLS = ["operation", "rowId", "currentTransaction", "row"]
+_EXPLAIN_CASES = [
+    ("evolved_lake", ("equals", "w", "w6100"), ["id", "w"], False),
+    ("evolved_lake", ("less_than", "id", 1000), ["id", "st"], False),
+    ("evolved_lake", ("equals", "v", 5.0), ["id", "v"], False),
+    ("positional_lake", ("less_than", "id", 1000),
+     ["id", "name", "extra"], False),
+    ("legacy_named_lake", ("less_than", "id", 1000), ["id", "name"], True),
+    ("acid_positional_lake", ("less_than", "row.id", 1000), _ACID_COLS,
+     False),
+    ("s29_acid_lake", ("between", "row.o_orderkey", [400, 1100]),
+     _ACID_COLS, False),
+    ("range_lake", ("between", "id", [12000, 13999]), ["id", "v", "s"],
+     False),
+]  # fmt: skip
+
+
+@pytest.mark.parametrize("lake,tree,cols,force", _EXPLAIN_CASES)
+def test_explain_equals_scan(request, lake, tree, cols, force):
+    """explain_lake_scan reports exactly the plan each file's scan
+    executes: its summary equals the per-file scan plan field for
+    field, the scan decodes exactly the groups the plan keeps, and it
+    fetches no more bytes than the plan planned."""
+    files = request.getfixturevalue(lake)["files"]
+    rep = sd.explain_lake_scan(files, tree, cols, force_positional=force)
+    _, reader_meta = evo.elect_reader_meta(files, force_positional=force)
+    assert [r["path"] for r in rep] == files
+    for r in rep:
+        plan = sd.plan_file_scan(
+            r["path"], tree, cols, reader_meta=reader_meta,
+            force_positional=force,
+        )
+        assert r == plan.summary()
+        audit: dict = {}
+        for _ in sd.scan_file_evolved(
+            r["path"], tree, cols, audit, reader_meta=reader_meta,
+            force_positional=force,
+        ):
+            pass
+        assert audit["file_kept"] is r["keep"]
+        assert audit.get("evolution_keep_all", False) is (
+            r["keep_all_reason"] is not None
+        )
+        if r["keep"]:
+            assert audit["groups_decoded"] == r["groups_kept"]
+            assert audit["groups_total"] == r["groups_total"]
+            assert audit["bytes_fetched"] <= r["bytes_planned"]
+    if tree == ("equals", "v", 5.0):
+        # float->double is PPD-unsafe: the older generations keep all
+        reasons = {os.path.basename(r["path"]): r["keep_all_reason"] for r in rep}
+        assert reasons["c_gen0.orc"] == "ppd-unsafe conversion"
+        assert reasons["a_gen2.orc"] is None

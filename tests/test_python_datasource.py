@@ -16,6 +16,7 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import (
     register_synthetic_events,
 )
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import write_orc
+from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import _await
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -113,7 +114,7 @@ def test_stream_source_offset_idempotency(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await(q, 120)
         counts.append(spark.read.parquet(sink).count())
     expect = [
         min((i + 1) * SYNTH_BATCH, SYNTH_N)

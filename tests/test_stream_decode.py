@@ -217,8 +217,9 @@ def test_codecs_roundtrip(spark, tmp_path, codec):
 
 
 def test_read_planned_distributed_multi_stripe(spark, tmp_path):
-    """read_planned fans out one task per stripe and the union of the
-    decoded stripes + residual filter equals Spark's own ORC scan."""
+    """read_planned runs one file's scan plan across its stripes and
+    the union of the decoded stripes + residual filter equals Spark's
+    own ORC scan."""
     import pyspark.sql.functions as F
 
     df = (
@@ -580,7 +581,46 @@ def test_rlev1_decode_v011_golden_vs_reference_dump():
                 assert norm(v) == norm_exp(ev), (c, v, ev)
 
 
-def test_read_planned_lake_three_level_pruning(spark, tmp_path):
+def test_scan_file_reads_metadata_once(typed_file, monkeypatch):
+    """One scan_file plans its file once: the tail and the stripe
+    footers are parsed once, and each included column's row index at
+    most once (the predicate column's included), however many stripes
+    and columns the scan decodes."""
+    import sys
+    from collections import Counter
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
+
+    calls: Counter = Counter()
+    index_reads: Counter = Counter()
+    for name in ("parse_tail_of_file", "parse_stripe_footers", "parse_row_index"):
+        real = getattr(ft, name)
+
+        def counting(*a, _real=real, _name=name, **k):
+            calls[_name] += 1
+            if _name == "parse_row_index":
+                index_reads[a[1]] += 1
+            return _real(*a, **k)
+
+        # every engine module that bound the function by name
+        for mod in list(sys.modules.values()):
+            if (
+                getattr(mod, "__name__", "").startswith(
+                    "orc_release_hdp_2_6_5_99_1_tag_spark"
+                )
+                and vars(mod).get(name) is real
+            ):
+                monkeypatch.setattr(mod, name, counting)
+    tree = ("between", "id", [1000, 2999])
+    rows = sum(r["n_rows"] for r in sd.scan_file(typed_file, tree, ALL_COLS))
+    assert rows == 2000
+    assert calls["parse_tail_of_file"] == 1
+    assert calls["parse_stripe_footers"] == 1
+    assert index_reads and max(index_reads.values()) == 1
+    assert len(index_reads) == len(ALL_COLS)
+
+
+def test_read_planned_lake_three_level_pruning(spark, range_lake):
     """read_planned_lake: one task per FILE, three pruning levels.
     A range-partitioned 4-file lake + a predicate inside one file's
     keyspace must (1) skip whole files on footer stats alone, (2) skip
@@ -588,30 +628,7 @@ def test_read_planned_lake_three_level_pruning(spark, tmp_path):
     to Spark's own reader + filter over the whole directory."""
     import pyspark.sql.functions as F
 
-    out = str(tmp_path / "lake")
-    n = 40000
-    df = (
-        spark.range(n)
-        .select(
-            "id",
-            (F.col("id") % 97).cast("int").alias("v"),
-            # high-entropy payload so streams span many chunks and
-            # partial IO is visible at this scale
-            F.md5(F.col("id").cast("string")).alias("s"),
-        )
-        .repartitionByRange(4, "id")
-        .sortWithinPartitions("id")
-    )
-    (
-        df.write.mode("overwrite")
-        .option("orc.row.index.stride", "1000")
-        .option("compression", "zlib")
-        # small chunks so the plan is sub-stream (256 KiB default would
-        # make every stream one chunk -> chunk-granular whole-stream IO)
-        .option("orc.compress.size", "4096")
-        .orc(out)
-    )
-    paths = sorted(glob.glob(os.path.join(out, "*.orc")))
+    out, paths = range_lake["lake"], range_lake["files"]
     assert len(paths) == 4
     lo, hi = 12000, 13999  # inside one range partition
     tree = ("between", "id", [lo, hi])

@@ -7,6 +7,8 @@ import os
 
 import pyspark.sql.functions as F
 
+from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import _await
+
 
 def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
     """Streaming exact-dedup (the ingest-side analog of d1): batch 2
@@ -48,7 +50,7 @@ def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await(q, 300)
     out = spark.table(out_name)
     assert out.count() == n_events, "replayed duplicates must be dropped"
     assert out.select("event_id").distinct().count() == n_events
@@ -89,7 +91,7 @@ def test_watermark_append_flushes_closed_windows(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await(q, 300)
     emitted = spark.table(out_name).count()
     # every batch-1 day-window is strictly before the batch-2 watermark,
     # so at least those windows must have been emitted
@@ -134,7 +136,7 @@ def test_stream_static_broadcast_enrichment(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await(q, 300)
     out = spark.table(out_name)
     assert out.count() == n_events, "every event must be enriched (inner join, total dim)"
     expected = events.withColumn("tier_key", F.col("user_id") % 3).join(
@@ -294,7 +296,7 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300)
+        _await(q, 300)
 
     stage(0); stage(1)
     run()
