@@ -35,19 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
-    _epoch_micros_expr,
-    _epoch_units_per_second,
-    _explicit_ddl,
-    events_ts_parquet_type,
     marker_valid,
+    read_spec,
     scratch_dir,
     source_fingerprint,
     write_marker,
-)
-
-_EVENTS_NANOS_SCHEMA = (
-    "event_id bigint, ts bigint, user_id bigint, event_type string,"
-    " value double, props string"
 )
 
 _SENTINEL_TYPE = "__watermark_sentinel__"
@@ -59,12 +51,10 @@ _SENTINEL_TYPE = "__watermark_sentinel__"
 # partition per side) — so this is sized to the stream, not to the
 # CPU count — a deployment would raise it with stream
 # key-cardinality/throughput. Round-7 measurement (r11, sf0.1):
-# 32 → 8 partitions alone was 13.8s → 4.7s on the cold join.
-_STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
-# back-compat alias (r11 landed the knob first)
-_R11_STATE_PARTITIONS = _STREAM_STATE_PARTITIONS
+# 32 → 8 partitions alone was 13.8s → 4.7s on the cold join. A
+# constant, not a knob: the count is pinned into each checkpoint at
+# its first run, so changing it later would not reach existing ones.
+_STREAM_STATE_PARTITIONS = 8
 
 
 @contextmanager
@@ -117,36 +107,34 @@ def _events_stream(
     only_type: str | None = None,
     single_batch: bool = False,
 ) -> DataFrame:
-    """File-source stream over the events parquet, dtype-dispatched on
-    the parquet footer exactly like the batch loader (`tables.py`):
-    nanos files are read through an explicit long schema and converted;
-    micros files reuse the batch-inferred schema (TIMESTAMP_NTZ → cast
-    to session-tz timestamp); raw-integer files convert via the
-    footer-stat unit inference. Every caller — including the dedup and
-    pipeline variants — goes through THIS function, so the dispatch
-    lives in exactly one place. All paths return ts TIMESTAMP, and the
-    schema-contract test asserts stream min/max(ts) == batch min/max.
+    """File-source stream over the events parquet, read through the
+    same footer-derived `tables.read_spec` as the batch loader: its
+    explicit schema, then its fix-ups, so ts is session-tz TIMESTAMP
+    for every testdata generation (nanos, micros, raw integer epochs).
+    Every caller — including the dedup and pipeline variants — goes
+    through THIS function, and the schema-contract tests assert stream
+    min/max(ts) == batch min/max for each generation.
 
-    The file source requires a directory, so the parquet file is staged
-    as `copies` symlinks under scratch (testdata untouched; copies > 1
-    models at-least-once redelivery). With `with_sentinel`, TWO one-row
-    parquets whose ts sit two and four days past the real max are
-    staged next to it, with staggered mtimes and `maxFilesPerTrigger=1`
-    so the availableNow run processes [events…, sentinel-1, sentinel-2]
-    as ordered micro-batches. Spark finalizes append-mode windows using
-    the watermark computed from PRIOR batches, so sentinel-1's batch
-    emits every window the real data closed, and sentinel-2's batch
-    emits the horizon windows sentinel-1 unlocked — after which every
-    real window has been emitted. Callers must NOT filter sentinel rows
-    inside the streaming plan — Catalyst pushes deterministic filters
-    below the EventTimeWatermark node, which would hide the sentinels
-    from the watermark collector entirely. Sentinels carry a reserved
+    The file source requires a directory of files, so each parquet file
+    of the source (the file itself, or every part of a directory-shaped
+    source) is staged as `copies` symlinks under scratch (testdata
+    untouched; copies > 1 models at-least-once redelivery). With
+    `with_sentinel`, TWO one-row parquets whose ts sit two and four
+    days past the real max are staged next to them, with staggered
+    mtimes and `maxFilesPerTrigger=1` so the availableNow run processes
+    [events…, sentinel-1, sentinel-2] as ordered micro-batches. Spark
+    finalizes append-mode windows using the watermark computed from
+    PRIOR batches, so sentinel-1's batch emits every window the real
+    data closed, and sentinel-2's batch emits the horizon windows
+    sentinel-1 unlocked — after which every real window has been
+    emitted. Callers must NOT filter sentinel rows inside the streaming
+    plan — Catalyst pushes deterministic filters below the
+    EventTimeWatermark node, which would hide the sentinels from the
+    watermark collector entirely. Sentinels carry a reserved
     event_type/user_id, so they aggregate into their own groups (whose
     windows never finalize) and are filtered at sink read-back via
     `_not_sentinel`.
     """
-    import pyarrow as pa
-
     if sub is None and (splits > 1 or copies > 1 or only_type is not None):
         # the default dirs hold the plain single-file staging; slicing
         # or duplicating INTO them would silently double every other
@@ -158,6 +146,7 @@ def _events_stream(
     src_dir = os.path.join(scratch_dir(sf_dir), "stream", sub)
     os.makedirs(src_dir, exist_ok=True)
     path = os.path.join(sf_dir, "events.parquet")
+    spec = read_spec(path, "ts")
     if only_type is not None:
         # type-filtered SOURCE staging for per-entity streams (e.g. a
         # clicks topic and a purchases topic). The filter must happen at
@@ -174,11 +163,11 @@ def _events_stream(
     else:
         for i in range(copies):
             suffix = "" if copies == 1 else f"_{chr(97 + i)}"
-            link = os.path.join(src_dir, f"events{suffix}.parquet")
-            if not os.path.exists(link):
-                os.symlink(path, link)
-    t = events_ts_parquet_type(path)
-    nanos = pa.types.is_timestamp(t) and t.unit == "ns"
+            for part in spec.parts:
+                tail = ".parquet" if part == path else "_" + os.path.basename(part)
+                link = os.path.join(src_dir, f"events{suffix}{tail}")
+                if not os.path.exists(link):
+                    os.symlink(part, link)
     if with_sentinel:
         _stage_sentinel(spark, sf_dir, src_dir)
     # single_batch: deliver data + sentinels in ONE micro-batch and let
@@ -191,32 +180,14 @@ def _events_stream(
     # keep the staged two-sentinel delivery (r2/r10), which is the
     # pattern their finalization was validated against.
     multi_batch = (with_sentinel and not single_batch) or copies > 1 or splits > 1
-    if nanos:
-        reader = spark.readStream.schema(_EVENTS_NANOS_SCHEMA)
-        if multi_batch:
-            reader = reader.option("maxFilesPerTrigger", "1")
-        raw = reader.parquet(src_dir)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # reader schema from the parquet FOOTER (~1 ms, cached) instead of
     # `spark.read.parquet(path).schema` — the JVM inference costs
     # 150-180 ms PER STREAM CONSTRUCTION and the r* tier constructs
-    # ~14 streams per cold pass (r13's tables.py change, extended to
-    # the streaming reader in r14; same `_explicit_ddl` + fallback)
-    ddl, _ = _explicit_ddl(path)
-    schema = ddl if ddl else spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
+    # ~14 streams per cold pass
+    reader = spark.readStream.schema(spec.ddl or spark.read.parquet(path).schema)
     if multi_batch:
         reader = reader.option("maxFilesPerTrigger", "1")
-    raw = reader.parquet(src_dir)
-    # dispatch mirrors the previous Spark-inferred-schema branches:
-    # timestamp[us] no-tz ⇒ Spark TIMESTAMP_NTZ ⇒ cast (identity under
-    # the pinned UTC session tz); integer ⇒ footer-stat unit inference;
-    # tz-adjusted timestamp ⇒ already session-tz TIMESTAMP, untouched
-    if pa.types.is_timestamp(t) and t.tz is None:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    elif pa.types.is_integer(t):
-        raw = raw.withColumn("ts", F.timestamp_micros(_epoch_micros_expr(path)))
-    return raw
+    return spec.fix(reader.parquet(src_dir))
 
 
 def _stage_filtered(sf_dir: str, src_dir: str, only_type: str) -> None:
@@ -330,50 +301,6 @@ def _stage_splits(sf_dir: str, src_dir: str, splits: int, copies: int = 1) -> No
 _SENTINEL_DAYS_CACHE: dict[str, tuple[str, str]] = {}
 
 
-def _footer_max_day(path: str):
-    """date(max ts) read from the parquet FOOTER column statistics —
-    no table scan. Returns None when stats are missing or the layout
-    is unrecognized (caller falls back to a Spark agg). Date-level
-    precision is all the sentinel needs (it sits 2/4 DAYS past max,
-    against a 1-hour watermark delay), so unit/timezone rounding at
-    the day boundary is immaterial."""
-    import datetime
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import _epoch_units_per_second
-
-    try:
-        pf = pq.ParquetFile(path)
-        idx = pf.schema_arrow.names.index("ts")
-        md = pf.metadata
-        mx = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max or st.max is None:
-                return None
-            mx = st.max if mx is None else max(mx, st.max)
-        if mx is None:
-            return None
-        t = events_ts_parquet_type(path)
-        if isinstance(mx, datetime.datetime):
-            return mx.date()
-        if isinstance(mx, int):
-            if pa.types.is_timestamp(t):
-                ups = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[t.unit]
-            elif pa.types.is_integer(t):
-                ups = _epoch_units_per_second(path)
-            else:
-                return None
-            return datetime.datetime.fromtimestamp(
-                mx // ups, datetime.timezone.utc
-            ).date()
-        return None
-    except Exception:
-        return None
-
-
 def _sentinel_days(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """The two sentinel days (date(max ts) + 2 and + 4). Sourced from
     the parquet footer stats when present — the r7 profile showed the
@@ -388,8 +315,13 @@ def _sentinel_days(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     key = f"{path}:{os.path.getmtime(path)}"
     if key in _SENTINEL_DAYS_CACHE:
         return _SENTINEL_DAYS_CACHE[key]
-    day = _footer_max_day(path)
-    if day is not None:
+    spec = read_spec(path, "ts")
+    if spec.ts_max is not None:
+        # day-level precision is all the sentinel needs (it sits 2/4
+        # DAYS past max, against a 1-hour watermark delay)
+        day = datetime.datetime.fromtimestamp(
+            spec.ts_max // spec.ts_units_per_second, datetime.timezone.utc
+        ).date()
         days = (
             str(day + datetime.timedelta(days=2)),
             str(day + datetime.timedelta(days=4)),
@@ -411,10 +343,11 @@ def _sentinel_days(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 def _stage_sentinel(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
     """Write the two one-row watermark-advancing sentinel files with
     staggered mtimes (keyed on the source fingerprint so they restage
-    when testdata changes). The sentinel ts column mirrors the SOURCE
-    file's physical layout — raw nanos long for the nanos generation,
-    raw unit-faithful long for the integer generation, NTZ micros
-    otherwise — so the stream's one reader schema fits every file.
+    when testdata changes). The sentinel ts column follows the source's
+    read spec — an integer epoch at the source unit when the stream
+    reads ts as an integer (the nanos and raw-integer generations), NTZ
+    micros otherwise — so the stream's one reader schema fits every
+    file.
 
     Written directly with pyarrow: the previous Spark route
     (createDataFrame of one Python row → coalesce(1) write) planned a
@@ -428,16 +361,11 @@ def _stage_sentinel(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import _epoch_units_per_second
-
     marker = os.path.join(src_dir, "_sentinel_done")
     fp = source_fingerprint(sf_dir, "events")
     if marker_valid(marker, fp):
         return
-    path = os.path.join(sf_dir, "events.parquet")
-    t = events_ts_parquet_type(path)
-    nanos = pa.types.is_timestamp(t) and t.unit == "ns"
-    integer = pa.types.is_integer(t)
+    spec = read_spec(os.path.join(sf_dir, "events.parquet"), "ts")
     d1, d2 = _sentinel_days(spark, sf_dir)
     # batches are mtime-ordered; anchor on max(source mtimes, now) so a
     # source file with a FUTURE mtime (clock skew, copied testdata)
@@ -467,11 +395,10 @@ def _stage_sentinel(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
     for i, day in enumerate([d1, d2]):
         dt = datetime.datetime.strptime(str(day), "%Y-%m-%d")
         epoch_s = int(dt.replace(tzinfo=datetime.timezone.utc).timestamp())
-        if nanos:
-            # mirror the nanos layout: ts as raw epoch-nanos long
-            ts_arr = pa.array([epoch_s * 1_000_000_000], type=pa.int64())
-        elif integer:
-            ts_arr = pa.array([epoch_s * _epoch_units_per_second(path)], type=t)
+        if spec.ts_epoch_type is not None:
+            ts_arr = pa.array(
+                [epoch_s * spec.ts_units_per_second], type=spec.ts_epoch_type
+            )
         else:
             # timestamp_ntz micros — what the Spark writer produced for
             # both NTZ and tz-adjusted sources (physical int64 micros)
@@ -1126,9 +1053,9 @@ def r11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     eligibility point, which the engine's no-data finalization batch
     provides after the sentinels advance it, so the staged per-file
     delivery (8 batches) buys nothing here; (3) state partitions
-    sized to the stream (`_R11_STATE_PARTITIONS`, default 8 — a
-    checkpoint-pinned deployment knob: a real cluster sizes it to
-    stream key-cardinality/throughput; the session's 32 CPU-sized
+    sized to the stream (`_STREAM_STATE_PARTITIONS` = 8, pinned into
+    the checkpoint at first run: a real cluster sizes it to stream
+    key-cardinality/throughput; the session's 32 CPU-sized
     shuffle partitions would commit 4x the state files per batch for
     a join whose per-batch state fits in a few MB).
     """

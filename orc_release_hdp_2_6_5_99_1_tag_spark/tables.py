@@ -6,19 +6,29 @@ stripe/row-group-aligned splits exactly like the reference's
 `Reader.Options.range` split model (reference
 `RecordReaderImpl.java:220-255`).
 
-`events.ts` is special: the driver's testdata has shipped the column as
-both parquet TIMESTAMP(NANOS) and timestamp[us] across rounds, so the
-loader resolves the FILE's type at read time instead of assuming one —
-the same file-vs-reader-type resolution the reference performs in
-`SchemaEvolution.buildConversion` (`SchemaEvolution.java:335`).
+Every read goes through one footer-derived `ReadSpec` per file (or per
+directory of part files): the explicit Spark DDL, the per-column
+fix-ups that turn the read into Spark TIMESTAMP, and the footer max of
+the event-time column. It is the engine's twin of the reference's
+once-per-file `SchemaEvolution.buildConversion`
+(`SchemaEvolution.java:335`): the batch loader, the streaming reader
+and the watermark sentinels all consume the same spec instead of each
+re-deciding how to read `events.ts`, whose parquet type has drifted
+across testdata generations (TIMESTAMP(NANOS), timestamp[us],
+raw integer epochs).
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import TimestampNTZType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 TABLE_NAMES = [
     "region",
@@ -40,29 +50,44 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        return _load_events(spark, path)
-    return _load_generic(spark, path)
+    spec = read_spec(path, "ts" if name == "events" else None)
+    reader = spark.read.schema(spec.ddl) if spec.ddl else spark.read
+    return spec.fix(reader.parquet(path))
 
 
-def _footer_file(path: str) -> str:
+@dataclass(frozen=True)
+class ReadSpec:
+    """How to read one parquet table, decided once from its footer.
+
+    `ddl` is the explicit Spark schema ("" = fall back to inference);
+    `fixes` maps columns to the SQL expressions that turn the raw read
+    into Spark TIMESTAMP; the `ts_*` fields describe the event-time
+    column (`ts_max` in raw epoch units, None when a footer lacks
+    stats; `ts_epoch_type` is the integer arrow type it is read as, or
+    None when it is read as a timestamp)."""
+
+    parts: tuple[str, ...]
+    ddl: str
+    fixes: tuple[tuple[str, str], ...] = ()
+    ts_max: int | None = None
+    ts_units_per_second: int | None = None
+    ts_epoch_type: pa.DataType | None = None
+
+    def fix(self, df: DataFrame) -> DataFrame:
+        """Apply the fix-ups to a batch or streaming read."""
+        if not self.fixes:
+            return df
+        return df.withColumns({c: F.expr(e) for c, e in self.fixes})
+
+
+def _parquet_parts(path: str) -> list[str]:
+    """The parquet files behind a table path: the file itself, or the
+    sorted part files of a directory."""
     if os.path.isdir(path):
-        for n in sorted(os.listdir(path)):
-            if n.endswith(".parquet"):
-                return os.path.join(path, n)
-    return path
-
-
-def events_ts_parquet_type(path: str):
-    """The parquet footer's physical type for events.ts (pyarrow type).
-
-    Footer-only read — no data pages touched. At 100 TB (many files)
-    one representative footer decides the dispatch, exactly like the
-    reference reads one file tail to plan the whole scan.
-    """
-    import pyarrow.parquet as pq
-
-    return pq.read_schema(_footer_file(path)).field("ts").type
+        return [
+            os.path.join(path, n) for n in sorted(os.listdir(path)) if n.endswith(".parquet")
+        ]
+    return [path]
 
 
 def _nanos_as_long_ddl(schema) -> str:
@@ -98,19 +123,14 @@ def _nanos_as_long_ddl(schema) -> str:
     return ", ".join(f"`{f.name}` {ddl(f.type)}" for f in schema)
 
 
-# (footer file, mtime_ns, size) -> (DDL string or "", [nanos cols]).
-# Metadata only — a few hundred bytes per table, never row data; keyed
-# on the file identity so a driver-regenerated testdata invalidates it.
-_DDL_CACHE: dict[tuple[str, int, int], tuple[str, list[str]]] = {}
-
-
 def _explicit_ddl(path: str) -> tuple[str, list[str]]:
-    """(Spark DDL, nanos columns) for a parquet file's footer schema,
-    from the pyarrow footer (~1 ms) — or ("", []) when the footer
-    carries a type `_nanos_as_long_ddl` does not map (callers fall
-    back to Spark's inference). Motivation (r13 optimization round,
-    guide §6 repeated-listing/planning costs): `spark.read.parquet`
-    pays ~150-180 ms of JVM schema inference PER CALL, and a query
+    """(Spark DDL, nanos columns) for a table's footer schema (its
+    first part file for a directory), from the pyarrow footer (~1 ms)
+    — or ("", nanos columns) when the footer carries a type
+    `_nanos_as_long_ddl` does not map (callers fall back to Spark's
+    inference). Motivation (r13 optimization round, guide §6
+    repeated-listing/planning costs): `spark.read.parquet` pays
+    ~150-180 ms of JVM schema inference PER CALL, and a query
     re-resolves every table it loads on every run — q5 touches six
     tables, ~0.9 s of pure driver planning per execution. An explicit
     schema cuts the call to ~20-50 ms and was verified `==` to the
@@ -119,120 +139,94 @@ def _explicit_ddl(path: str) -> tuple[str, list[str]]:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    f = _footer_file(path)
-    st = os.stat(f)
-    key = (f, st.st_mtime_ns, st.st_size)
-    hit = _DDL_CACHE.get(key)
-    if hit is None:
-        schema = pq.read_schema(f)
-        ns_cols = [
-            fld.name
-            for fld in schema
-            if pa.types.is_timestamp(fld.type) and fld.type.unit == "ns"
-        ]
-        try:
-            hit = (_nanos_as_long_ddl(schema), ns_cols)
-        except ValueError:
-            hit = ("", ns_cols)
-        _DDL_CACHE[key] = hit
-    return hit
+    schema = pq.read_schema(_parquet_parts(path)[0])
+    ns_cols = [
+        f.name for f in schema if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+    try:
+        return _nanos_as_long_ddl(schema), ns_cols
+    except ValueError:
+        return "", ns_cols
 
 
-def _load_generic(spark: SparkSession, path: str) -> DataFrame:
-    """Generic table load through an EXPLICIT footer-derived schema
-    (planning cost — see `_explicit_ddl`; inference fallback for
-    unmapped types), robust to a nanos-generation drift in ANY
-    timestamp column (Spark's reader rejects TIMESTAMP(NANOS)): nanos
-    columns are read as long — no session conf is touched, race-free
-    under concurrent queries — and converted to micros.
+_UNITS_PER_SECOND = {"s": 1, "ms": 1_000, "us": 1_000_000, "ns": 1_000_000_000}
+_NANOS_TO_TIMESTAMP = "timestamp_micros(`{}` div 1000)"
+
+# (lo, hi, units per second, conversion) for a raw integer epoch's
+# footer max: the bands are disjoint for any date between ~1973 and ~2500
+_EPOCH_BANDS = (
+    (10**17, 2 * 10**19, 1_000_000_000, _NANOS_TO_TIMESTAMP),
+    (10**14, 10**17, 1_000_000, "timestamp_micros(`{}`)"),
+    (10**11, 10**14, 1_000, "timestamp_millis(`{}`)"),
+    (10**8, 10**11, 1, "timestamp_seconds(`{}`)"),
+)
+
+# (event-time column, (part, mtime_ns, size) per part) -> ReadSpec.
+# Metadata only — a few hundred bytes per table, never row data; keyed
+# on the file identities so regenerated testdata invalidates it.
+_SPEC_CACHE: dict[tuple, ReadSpec] = {}
+
+
+def read_spec(path: str, event_time: str | None = None) -> ReadSpec:
+    """The cached `ReadSpec` of the parquet table at `path` (a file or
+    a directory of parts).
+
+    - TIMESTAMP(NANOS) columns, in any table: Spark's reader rejects
+      them, so they are read as bigint and converted to micros (the
+      testdata carries no sub-microsecond bits, so this is lossless vs the
+      oracle).
+    - `event_time` (events.ts) additionally: a raw integer epoch is
+      converted by the unit its footer max falls in, and a timestamp
+      without time zone (Spark TIMESTAMP_NTZ) is cast to session-tz
+      TIMESTAMP (identity under the pinned UTC session tz,
+      `session.py:47`, matching DuckDB's naive reading). Its max is
+      taken over every part's footer, never one representative part.
     """
-    import pyspark.sql.functions as F
+    parts = _parquet_parts(path)
+    stats = [os.stat(p) for p in parts]
+    key = (event_time, *((p, st.st_mtime_ns, st.st_size) for p, st in zip(parts, stats)))
+    spec = _SPEC_CACHE.get(key)
+    if spec is None:
+        ddl, ns_cols = _explicit_ddl(path)
+        fixes = {c: _NANOS_TO_TIMESTAMP.format(c) for c in ns_cols}
+        ts = _event_time_fields(path, parts, event_time, fixes) if event_time else {}
+        spec = ReadSpec(tuple(parts), ddl, tuple(fixes.items()), **ts)
+        _SPEC_CACHE[key] = spec
+    return spec
 
-    ddl, ns_cols = _explicit_ddl(path)
-    if not ddl:
-        return spark.read.parquet(path)
-    df = spark.read.schema(ddl).parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
 
-
-def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    """Dtype-dispatched events load; always returns ts as session-tz
-    TIMESTAMP (session tz is pinned UTC, `session.py:47`).
-
-    - timestamp[ns]: Spark's vectorized reader rejects nanos; read as
-      raw long via an explicit schema and convert (driver values carry
-      no sub-microsecond bits, so this is lossless vs the oracle).
-    - timestamp[us] → Spark TIMESTAMP_NTZ: cast to timestamp (identity
-      under UTC session tz, matching DuckDB's naive reading).
-    - raw integer epochs: unit resolved from the column's footer-stat
-      magnitude (nanos/micros/millis/seconds around the 2001-2033
-      epoch band), then converted to micros.
-    - already TIMESTAMP: pass through.
-    """
+def _event_time_fields(path: str, parts: list[str], col: str, fixes: dict) -> dict:
+    """The `ts_*` fields of a `ReadSpec` for event-time column `col`,
+    adding its fix-up to `fixes`. Footer metadata only — no data pages."""
     import pyarrow as pa
-    import pyspark.sql.functions as F
-
-    t = events_ts_parquet_type(path)
-    if pa.types.is_timestamp(t) and t.unit == "ns":
-        return _load_generic(spark, path)  # ns ts -> micros conversion
-    if pa.types.is_integer(t):
-        to_micros = _epoch_micros_expr(path)
-        df = _load_generic(spark, path)
-        return df.withColumn("ts", F.timestamp_micros(to_micros))
-    df = _load_generic(spark, path)
-    if isinstance(df.schema["ts"].dataType, TimestampNTZType):
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
-
-
-def _epoch_units_per_second(path: str) -> int:
-    """For a raw-integer events.ts, infer the epoch unit from the
-    footer's column max (metadata only — no data pages). Returns units
-    per second (1e9/1e6/1e3/1). Unit bands are disjoint for any date
-    between ~1973 and ~2500; a max outside every band raises rather
-    than guesses."""
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(_footer_file(path)).metadata
-    mx = None
-    for rg in range(md.num_row_groups):
-        group = md.row_group(rg)
-        col = next(
-            group.column(i)
-            for i in range(group.num_columns)
-            if group.column(i).path_in_schema == "ts"
+    mds = [pq.read_metadata(p) for p in parts]
+    t = mds[0].schema.to_arrow_schema().field(col).type
+    idx = [mds[0].schema.column(i).path for i in range(mds[0].num_columns)].index(col)
+    stats = [
+        md.row_group(rg).column(idx).statistics for md in mds for rg in range(md.num_row_groups)
+    ]
+    maxes = [s.max_raw for s in stats if s is not None and s.has_min_max]
+    maxes = [v for v in maxes if isinstance(v, int)]
+    mx = max(maxes, default=None)
+    # a group without stats may hold the true max: then report none
+    ts_max = mx if len(maxes) == len(stats) else None
+    if pa.types.is_timestamp(t):
+        if t.unit != "ns" and t.tz is None:
+            fixes[col] = f"CAST(`{col}` AS TIMESTAMP)"
+        return dict(
+            ts_max=ts_max,
+            ts_units_per_second=_UNITS_PER_SECOND[t.unit],
+            ts_epoch_type=pa.int64() if t.unit == "ns" else None,
         )
-        if col.statistics is not None and col.statistics.has_min_max:
-            v = col.statistics.max
-            mx = v if mx is None else max(mx, v)
-    if mx is None:
-        raise ValueError(f"events.ts at {path}: integer column without footer stats")
-    if int(1e17) <= mx < int(2e19):
-        return 1_000_000_000  # nanos
-    if int(1e14) <= mx < int(1e17):
-        return 1_000_000  # micros
-    if int(1e11) <= mx < int(1e14):
-        return 1_000  # millis
-    if int(1e8) <= mx < int(1e11):
-        return 1  # seconds
-    raise ValueError(
-        f"events.ts at {path}: integer epoch max {mx} outside every known unit band"
-    )
-
-
-def _epoch_micros_expr(path: str):
-    """Expression converting a raw-integer events.ts to epoch micros,
-    unit-dispatched via `_epoch_units_per_second`."""
-    import pyspark.sql.functions as F
-
-    ups = _epoch_units_per_second(path)
-    if ups == 1_000_000_000:
-        return F.expr("ts div 1000")
-    if ups == 1_000_000:
-        return F.col("ts")
-    return F.col("ts") * (1_000_000 // ups)
+    if not pa.types.is_integer(t):
+        return {}
+    band = next((b for b in _EPOCH_BANDS if mx is not None and b[0] <= mx < b[1]), None)
+    if band is None:
+        raise ValueError(f"{col} at {path}: integer epoch max {mx} outside every unit band")
+    fixes[col] = band[3].format(col)
+    return dict(ts_max=ts_max, ts_units_per_second=band[2], ts_epoch_type=t)
 
 
 def scratch_dir(sf_dir: str) -> str:

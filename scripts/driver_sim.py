@@ -8,17 +8,19 @@ Exits non-zero and lists failing queries if any compare fails.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 from oracle_utils import compare_query, duckdb_con  # noqa: E402
 
 import __spark_entry__ as e  # noqa: E402

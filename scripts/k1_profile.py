@@ -9,8 +9,9 @@ round (`_assign` is lazy; only `_update`'s collect runs a job), so
 this script measures what is actually left: init collect, the two
 update jobs, the final consumer job, and pure plan-construction time.
 
-Usage: python scripts/k1_profile.py [n_vectors] [reps]
-       (default: the sf0.1 embeddings table; pass n to synth instead)
+Usage: python scripts/k1_profile.py [reps]
+       (default 3 reps over $SPARK_GRAFT_SF_DIR's embeddings table,
+       sf0.1 unless set)
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     spark = get_spark("k1-profile")
     spark.sparkContext.setLogLevel("ERROR")
     from pyspark import StorageLevel

@@ -52,8 +52,9 @@ def main() -> None:
         dest_dir = os.path.join(args.out, f"{name}.parquet")
         # a DIRECTORY of part files: both tables.load_table (Spark
         # reads a dir natively) and the DuckDB oracle helpers (glob)
-        # handle directories; _footer_file() picks a representative
-        # part for footer dispatch.
+        # handle directories; tables.read_spec takes the schema from
+        # the first part and the ts max over every part, and the
+        # events stream stages one link per part.
         if os.path.isdir(dest_dir):
             for f in os.listdir(dest_dir):
                 os.remove(os.path.join(dest_dir, f))

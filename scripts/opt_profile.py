@@ -21,19 +21,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE
 from orc_release_hdp_2_6_5_99_1_tag_spark import catalog, engine_clear_caches, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-HEADLINE = [
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_revenue_delta", "w1_topk_per_group", "w2_sessionize",
-    "f7_composite_3vl", "a1_column_stats", "t2_acid_merge_on_read",
-    "d1_exact_dedup", "d2_minhash_lsh", "v1_cosine_topk",
-    "v2_lsh_bucketed_ann", "x1_token_count", "m1_multimodal_features",
-    "w3_asof_join", "f12_row_seek", "c2_cast_matrix",
-    "pipe1_training_data_prep",
-]
 
 
 def main() -> None:

@@ -25,26 +25,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import EXTENDED
 from orc_release_hdp_2_6_5_99_1_tag_spark import catalog, get_spark
 from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import stage_shared_topics
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-DEFAULT = [
-    "r1_streaming_orc_ingest",
-    "r2_streaming_windowed_agg",
-    "r3_stateful_running_totals",
-    "r4_streaming_acid_cdc",
-    "r5_session_windows",
-    "r6_stream_dedup",
-    "r7_stream_stream_join",
-    "r8_streaming_pipeline",
-    "r9_stream_static_enrichment",
-    "r10_stream_ohlc",
-    "r11_stream_outer_join",
-    "r12_python_stream_source",
-]
+DEFAULT = [n for n in EXTENDED if n.startswith("r")]
 
 
 def main() -> None:

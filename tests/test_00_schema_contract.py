@@ -18,8 +18,10 @@ Three layers:
 
 from __future__ import annotations
 
+import datetime
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
@@ -128,7 +130,7 @@ def test_loader_normalizes_events_ts(spark):
     assert df.schema["ts"].dataType.simpleString() == "timestamp", (
         "load_table must hand consumers events.ts as session-tz TIMESTAMP; got "
         f"{df.schema['ts'].dataType.simpleString()} — the dtype dispatch in "
-        "tables.py:_load_events is broken for this testdata generation"
+        "tables.read_spec is broken for this testdata generation"
     )
 
 
@@ -174,65 +176,122 @@ def test_stream_matches_batch_on_ts(spark):
     ), (
         f"STREAM/BATCH DIVERGENCE on events.ts: stream={stream} batch={batch} — "
         "the streaming schema dispatch (streaming/ingest.py:_events_stream) "
-        "disagrees with the batch loader (tables.py:_load_events); this is the "
+        "disagrees with the batch loader (tables.load_table); this is the "
         "silent-corruption failure mode from round 2"
     )
 
 
-def test_loader_handles_nanos_generation(spark, tmp_path):
-    """The dispatch must keep working if the driver ever reverts to the
-    TIMESTAMP(NANOS) testdata generation: write a nanos events file and
-    assert batch AND stream loaders return identical micros values."""
-    import datetime
-    import shutil
+_BASE = datetime.datetime(2024, 3, 1, 12, 0, 0)
+_EPOCH = datetime.datetime(1970, 1, 1)
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq2
 
-    sf = str(tmp_path / "sfnanos")
-    os.makedirs(sf, exist_ok=True)
-    base = datetime.datetime(2024, 3, 1, 12, 0, 0)
-    rows = [
-        (i, base + datetime.timedelta(seconds=i, microseconds=137 * i), i % 5,
-         "click", float(i), "{}")
-        for i in range(20)
-    ]
-    table = pa.table(
+def _events_table(ts):
+    n = len(ts)
+    return pa.table(
         {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array([r[1] for r in rows], pa.timestamp("ns")),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([r[4] for r in rows], pa.float64()),
-            "props": pa.array([r[5] for r in rows], pa.string()),
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": ts,
+            "user_id": pa.array([i % 5 for i in range(n)], pa.int64()),
+            "event_type": pa.array(["click"] * n, pa.string()),
+            "value": pa.array([float(i) for i in range(n)], pa.float64()),
+            "props": pa.array(["{}"] * n, pa.string()),
         }
     )
-    pq2.write_table(table, os.path.join(sf, "events.parquet"))
+
+
+def _stream_with_sentinels(spark, sf):
+    """Run the sentinel-staged events stream over `sf` to a parquet
+    sink; return (data rows, sentinel rows) read back from it."""
+    import shutil
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import (
+        _events_stream,
+        _not_sentinel,
+    )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
+
+    shutil.rmtree(scratch_dir(sf))  # a stale checkpoint would skip the files
+    out = os.path.join(scratch_dir(sf), "stream", "generation_probe")
+    try:
+        q = (
+            _events_stream(spark, sf, with_sentinel=True)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", out + "_ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        _await(q, 300)
+        sink = spark.read.parquet(out)
+        data = sink.filter(_not_sentinel("event_type")).orderBy("event_id").collect()
+        sentinels = sink.filter(~_not_sentinel("event_type")).orderBy("ts").collect()
+    finally:
+        shutil.rmtree(scratch_dir(sf), ignore_errors=True)
+    return data, sentinels
+
+
+def _ts_generation(gen: str, dts):
+    """events.ts for `dts` in one testdata generation, and the
+    Spark TIMESTAMP values a correct loader returns for it."""
+    if gen == "ns":
+        return pa.array(dts, pa.timestamp("ns")), dts
+    if gen == "us_ntz":
+        return pa.array(dts, pa.timestamp("us")), dts
+    mult = {"int_s": 1, "int_ms": 1000, "int_us": 10**6, "int_ns": 10**9}[gen]
+    raw = [(d - _EPOCH) // datetime.timedelta(microseconds=1) * mult // 10**6 for d in dts]
+    want = [_EPOCH + datetime.timedelta(microseconds=r * 10**6 // mult) for r in raw]
+    return pa.array(raw, pa.int64()), want
+
+
+@pytest.mark.parametrize("gen", ["ns", "us_ntz", "int_s", "int_ms", "int_us", "int_ns"])
+def test_loader_handles_every_ts_generation(spark, tmp_path, gen):
+    """The footer-derived read spec must keep working for every
+    testdata generation shipped so far or plausible next
+    (TIMESTAMP(NANOS), micros NTZ, raw int64 epochs in s/ms/us/ns):
+    batch values are exact, and the sentinel-staged stream returns the
+    same rows as the batch plus two sentinels past the data's max."""
+    sf = str(tmp_path / f"sf_{gen}")
+    os.makedirs(sf, exist_ok=True)
+    dts = [_BASE + datetime.timedelta(seconds=i, microseconds=137 * i) for i in range(20)]
+    ts, want = _ts_generation(gen, dts)
+    pq.write_table(_events_table(ts), os.path.join(sf, "events.parquet"))
 
     df = load_table(spark, sf, "events")
     assert df.schema["ts"].dataType.simpleString() == "timestamp"
     got = [r["ts"] for r in df.orderBy("event_id").collect()]
-    assert got == [r[1] for r in rows], "nanos branch corrupted values"
+    assert got == want, f"{gen}: batch loader corrupted values"
 
-    from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import _events_stream
-    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
+    data, sentinels = _stream_with_sentinels(spark, sf)
+    assert [r["ts"] for r in data] == got, f"{gen}: stream disagrees with batch"
+    assert [(r["ts"].date() - max(got).date()).days for r in sentinels] == [2, 4], gen
 
-    out = os.path.join(scratch_dir(sf), "stream", "nanos_probe")
-    ckpt = out + "_ckpt"
-    shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
-        _events_stream(spark, sf)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await(q, 300)
-    sgot = [r["ts"] for r in spark.read.parquet(out).orderBy("event_id").collect()]
-    assert sgot == got, "stream nanos branch disagrees with batch"
-    shutil.rmtree(os.path.join("/root/repo/.scratch", "sfnanos"), ignore_errors=True)
+
+def test_directory_source_streams_every_part(spark, tmp_path):
+    """A directory-shaped events.parquet (scripts/make_mrg_fixture.py)
+    must stream every part file, not zero rows: stream count and
+    min/max(ts) equal the batch, and the watermark sentinels sit past
+    the LAST part's max (the footer max is taken over every part)."""
+    sf = str(tmp_path / "sf_parts")
+    parts_dir = os.path.join(sf, "events.parquet")
+    os.makedirs(parts_dir)
+    dts = [_BASE + datetime.timedelta(hours=12 * i) for i in range(20)]
+    table = _events_table(pa.array(dts, pa.timestamp("us")))
+    for i in range(2):
+        part = os.path.join(parts_dir, f"part-{i:02d}.parquet")
+        pq.write_table(table.slice(10 * i, 10), part, version="2.6")
+        os.utime(part, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    batch = load_table(spark, sf, "events").agg(
+        F.min("ts").alias("mn"), F.max("ts").alias("mx"), F.count("*").alias("n")
+    ).collect()[0]
+    assert (batch["mn"], batch["mx"], batch["n"]) == (dts[0], dts[-1], 20)
+
+    data, sentinels = _stream_with_sentinels(spark, sf)
+    ts = [r["ts"] for r in data]
+    assert (min(ts, default=None), max(ts, default=None), len(ts)) == (
+        batch["mn"], batch["mx"], batch["n"]
+    ), f"directory source streamed {len(ts)} of {batch['n']} rows"
+    assert [(r["ts"].date() - dts[-1].date()).days for r in sentinels] == [2, 4]
 
 
 @pytest.mark.parametrize("unit,mult", [("ns", 1000000000), ("us", 1000000), ("ms", 1000), ("s", 1)])

@@ -403,7 +403,7 @@ def test_r11_cold_shape_stays_amortized(spark, sf_dir):
     import shutil
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import (
-        _R11_STATE_PARTITIONS,
+        _STREAM_STATE_PARTITIONS,
         r11_stream_outer_join,
     )
     from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
@@ -425,6 +425,6 @@ def test_r11_cold_shape_stays_amortized(spark, sf_dir):
             if d.isdigit()
         ]
     )
-    assert state_parts == _R11_STATE_PARTITIONS, (
-        f"state partitions {state_parts} != pinned {_R11_STATE_PARTITIONS}"
+    assert state_parts == _STREAM_STATE_PARTITIONS, (
+        f"state partitions {state_parts} != pinned {_STREAM_STATE_PARTITIONS}"
     )
