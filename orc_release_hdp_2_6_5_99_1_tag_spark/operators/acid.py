@@ -30,19 +30,12 @@ Demo dataset is built deterministically from `orders`:
 from __future__ import annotations
 
 import os
-import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import read_orc, write_orc
-from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
-    load_table,
-    marker_valid,
-    scratch_dir,
-    source_fingerprint,
-    write_marker,
-)
+from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table, staged
 
 OP_INSERT, OP_UPDATE, OP_DELETE = 0, 1, 2
 _N_BUCKETS = 4
@@ -85,11 +78,12 @@ def _acid_event(df: DataFrame, operation: int, txn: int) -> DataFrame:
 
 def acid_table_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the base + delta directory layout once per sf."""
-    root = os.path.join(scratch_dir(sf_dir), "acid", "orders_acid")
-    fp = source_fingerprint(sf_dir, "orders")
-    if marker_valid(os.path.join(root, "_done"), fp):
-        return root
-    shutil.rmtree(root, ignore_errors=True)
+    return staged(
+        sf_dir, "acid/orders_acid", ["orders"], lambda root: _write_acid_table(spark, sf_dir, root)
+    )
+
+
+def _write_acid_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     o = load_table(spark, sf_dir, "orders")
     base = _acid_event(o, OP_INSERT, txn=1)
     updated = o.filter(F.col("o_orderkey") % 10 == 0).select(
@@ -117,8 +111,6 @@ def acid_table_dir(spark: SparkSession, sf_dir: str) -> str:
             ),
             os.path.join(root, sub),
         )
-    write_marker(os.path.join(root, "_done"), fp)
-    return root
 
 
 def _union_events(parts: list) -> DataFrame:
@@ -275,9 +267,8 @@ def t3_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve reads from it alone (same result as merge-on-read, zero merge
     cost afterwards — reference `acid.md:45-62`)."""
     root = acid_table_dir(spark, sf_dir)
-    compacted = os.path.join(scratch_dir(sf_dir), "acid", "orders_compacted")
-    fp = source_fingerprint(sf_dir, "orders")
-    if not marker_valid(compacted + "._fp", fp):
+
+    def build(compacted: str) -> None:
         base = merged_view(spark, root).select(
             F.lit(OP_INSERT).alias("operation"),
             F.lit(1).cast("bigint").alias("originalTransaction"),
@@ -296,8 +287,8 @@ def t3_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             compacted,
         )
-        write_marker(compacted + "._fp", fp)
-    out = _read_events(spark, compacted)
+
+    out = _read_events(spark, staged(sf_dir, "acid/orders_compacted", ["orders"], build))
     return out.select("row.id", "row.status", "row.totalprice", "bucket", "currentTransaction").orderBy(
         "id"
     )
@@ -312,11 +303,8 @@ def t5_minor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deltas), leaving the base untouched; the merged view over
     base + combined delta must equal the original three-dir view."""
     root = acid_table_dir(spark, sf_dir)
-    minor_root = os.path.join(scratch_dir(sf_dir), "acid", "orders_minor")
-    fp = source_fingerprint(sf_dir, "orders")
-    if not marker_valid(os.path.join(minor_root, "_done"), fp):
-        shutil.rmtree(minor_root, ignore_errors=True)
-        os.makedirs(minor_root, exist_ok=True)
+
+    def build(minor_root: str) -> None:
         deltas = [
             _read_events(spark, os.path.join(root, d))
             for d in sorted(os.listdir(root))
@@ -342,10 +330,10 @@ def t5_minor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(minor_root, "delta_0000002_0000003"),
         )
         # base is shared (not rewritten) — link it into the minor layout
-        base_link = os.path.join(minor_root, "base_0000001")
-        if not os.path.exists(base_link):
-            os.symlink(os.path.join(root, "base_0000001"), base_link)
-        write_marker(os.path.join(minor_root, "_done"), fp)
+        base = "base_0000001"
+        os.symlink(os.path.join(root, base), os.path.join(minor_root, base))
+
+    minor_root = staged(sf_dir, "acid/orders_minor", ["orders"], build)
     return merged_view(spark, minor_root).orderBy("id")
 
 
@@ -391,11 +379,12 @@ def original_files_dir(spark: SparkSession, sf_dir: str) -> str:
     IS derivable from the file alone, matching the Hive original-files
     contract. txn 4 updates o_orderkey%7==0 (status→'V',
     totalprice+50); txn 5 deletes o_orderkey%50==0."""
-    root = os.path.join(scratch_dir(sf_dir), "acid", "orders_original")
-    fp = source_fingerprint(sf_dir, "orders")
-    if marker_valid(os.path.join(root, "_done"), fp):
-        return root
-    shutil.rmtree(root, ignore_errors=True)
+    return staged(
+        sf_dir, "acid/orders_original", ["orders"], lambda root: _write_original(spark, sf_dir, root)
+    )
+
+
+def _write_original(spark: SparkSession, sf_dir: str, root: str) -> None:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -446,8 +435,6 @@ def original_files_dir(spark: SparkSession, sf_dir: str) -> str:
             ),
             os.path.join(root, sub),
         )
-    write_marker(os.path.join(root, "_done"), fp)
-    return root
 
 
 def t6_original_files(spark: SparkSession, sf_dir: str) -> DataFrame:

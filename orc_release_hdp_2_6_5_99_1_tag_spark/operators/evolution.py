@@ -12,8 +12,6 @@ in the oracle with TRY_CAST / to_timestamp.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -23,13 +21,7 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.functions import (
     union_tag,
 )
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import orc_copy, read_orc, write_orc
-from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
-    load_table,
-    marker_valid,
-    scratch_dir,
-    source_fingerprint,
-    write_marker,
-)
+from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table, staged
 
 
 def c1_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,15 +198,17 @@ def _positional_orc(spark: SparkSession, sf_dir: str) -> str:
     the reference grew `orc.force.positional.evolution`
     (`OrcConf.java:141-145`): the file's names carry no information,
     so the reader must map file→reader columns BY POSITION."""
-    out = os.path.join(scratch_dir(sf_dir), "orc", "lineitem_positional")
-    fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(out + "._fp", fp):
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
-        )
-        write_orc(li.toDF("_col0", "_col1", "_col2", "_col3"), out)
-        write_marker(out + "._fp", fp)
-    return out
+    return staged(
+        sf_dir,
+        "orc/lineitem_positional",
+        ["lineitem"],
+        lambda p: write_orc(
+            load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
+            .toDF("_col0", "_col1", "_col2", "_col3"),
+            p,
+        ),
+    )
 
 
 def c3_positional_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -270,19 +264,17 @@ def u1_union_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     through ORC: encode uniontype<bigint,string> rows, write, read,
     decode, aggregate per tag. Exactly one variant is non-null per row
     (the reference's tag-stream invariant)."""
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "union_demo")
-    l = load_table(spark, sf_dir, "lineitem")
-    fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(dest + "._fp", fp):
+
+    def build(dest: str) -> None:
         tag = (F.col("l_linenumber") % 2).cast("tinyint")
-        u = l.select(
+        u = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey",
             "l_linenumber",
             union_encode(tag, F.col("l_orderkey"), F.col("l_returnflag")).alias("u"),
         )
         write_orc(u, dest)
-        write_marker(dest + "._fp", fp)
-    df = read_orc(spark, dest)
+
+    df = read_orc(spark, staged(sf_dir, "orc/union_demo", ["lineitem"], build))
     return (
         df.select(
             union_tag(F.col("u")).alias("tag"),
@@ -320,11 +312,9 @@ def t1_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     `TestVectorOrcFile.java:243-247`), then flatten and checksum.
     NULLs injected at the struct level cover PRESENT-stream semantics.
     """
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "nested_demo")
-    l = load_table(spark, sf_dir, "lineitem")
-    fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(dest + "._fp", fp):
-        nested = l.select(
+
+    def build(dest: str) -> None:
+        nested = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey",
             "l_linenumber",
             F.when(
@@ -343,8 +333,8 @@ def t1_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("middle"),
         )
         write_orc(nested, dest)
-        write_marker(dest + "._fp", fp)
-    df = read_orc(spark, dest)
+
+    df = read_orc(spark, staged(sf_dir, "orc/nested_demo", ["lineitem"], build))
     return df.agg(
         F.count(F.lit(1)).alias("cnt"),
         F.count("inner").alias("n_inner"),

@@ -15,19 +15,11 @@ already proves file-level in a4_merged_file_stats.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import read_orc, write_orc
-from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
-    load_table,
-    marker_valid,
-    scratch_dir,
-    source_fingerprint,
-    write_marker,
-)
+from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table, staged
 
 # Split point inside the testdata's January-2024 event range: rows
 # before it form the materialized base, rows at/after it the delta.
@@ -47,13 +39,14 @@ def mv1_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize base partials once (fingerprint-keyed scratch ORC),
     then merge the delta's partials into them: union + one tiny
     re-aggregate. Result must equal the full-log daily aggregate."""
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "mv1_daily_agg")
-    fp = source_fingerprint(sf_dir, "events")
     split = F.lit(_SPLIT).cast("timestamp")
     e = load_table(spark, sf_dir, "events")
-    if not marker_valid(dest + "._fp", fp):
-        write_orc(_daily_partials(e.filter(F.col("ts") < split)), dest)
-        write_marker(dest + "._fp", fp)
+    dest = staged(
+        sf_dir,
+        "orc/mv1_daily_agg",
+        ["events"],
+        lambda p: write_orc(_daily_partials(e.filter(F.col("ts") < split)), p),
+    )
     base = read_orc(spark, dest)
     delta = _daily_partials(e.filter(F.col("ts") >= split))
     return (
@@ -109,13 +102,14 @@ def mv2_affected_key_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional to the delta's key footprint, never a full-history
     rescan. The result must equal the full recompute (the oracle).
     """
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "mv2_user_profile")
-    fp = source_fingerprint(sf_dir, "events")
     split = F.lit(_SPLIT).cast("timestamp")
     e = load_table(spark, sf_dir, "events")
-    if not marker_valid(dest + "._fp", fp):
-        write_orc(_user_profile(e.filter(F.col("ts") < split)), dest)
-        write_marker(dest + "._fp", fp)
+    dest = staged(
+        sf_dir,
+        "orc/mv2_user_profile",
+        ["events"],
+        lambda p: write_orc(_user_profile(e.filter(F.col("ts") < split)), p),
+    )
     view = read_orc(spark, dest)
     affected = (
         e.filter(F.col("ts") >= split).select("user_id").distinct()

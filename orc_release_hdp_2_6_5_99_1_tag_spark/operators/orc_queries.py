@@ -24,13 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.meta import orc_file_stats_from_footer
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import orc_copy, read_orc, write_orc
-from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
-    load_table,
-    marker_valid,
-    scratch_dir,
-    source_fingerprint,
-    write_marker,
-)
+from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table, staged
 
 
 def _lineitem_fingerprint(df: DataFrame) -> DataFrame:
@@ -138,18 +132,16 @@ def s5_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes directories at plan time — the engine's analog of the
     reference's stripe-range split selection. Plan shows the pruned
     partition count (asserted in tests)."""
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_by_status")
-    fp = source_fingerprint(sf_dir, "orders")
-    if not marker_valid(dest + "._fp", fp):
-        o = load_table(spark, sf_dir, "orders")
-        (
-            o.repartition("o_orderstatus")
-            .write.mode("overwrite")
-            .option("compression", "zlib")
-            .partitionBy("o_orderstatus")
-            .orc(dest)
-        )
-        write_marker(dest + "._fp", fp)
+    dest = staged(
+        sf_dir,
+        "orc/orders_by_status",
+        ["orders"],
+        lambda p: load_table(spark, sf_dir, "orders")
+        .repartition("o_orderstatus")
+        .write.option("compression", "zlib")
+        .partitionBy("o_orderstatus")
+        .orc(p),
+    )
     df = spark.read.orc(dest).filter(F.col("o_orderstatus") == "F")
     return df.agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -169,26 +161,30 @@ def s9_json_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9: JSON → ORC conversion pipeline (reference ConvertTool,
     `tools/convert/JsonReader.java`): dump events to JSON, read JSON
     with explicit schema, write ORC, read back, aggregate."""
-    base = scratch_dir(sf_dir)
-    json_dir = os.path.join(base, "json", "events")
-    orc_dir = os.path.join(base, "orc", "events_from_json")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(orc_dir + "._fp", fp):
-        e = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "props",
+
+    def build(orc_dir: str) -> None:
+        json_dir = staged(
+            sf_dir,
+            "json/events",
+            ["events"],
+            lambda p: load_table(spark, sf_dir, "events")
+            .select(
+                "event_id",
+                F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
+                "user_id",
+                "event_type",
+                "value",
+                "props",
+            )
+            .write.json(p),
         )
-        e.write.mode("overwrite").json(json_dir)
         j = spark.read.schema(
             "event_id bigint, ts string, user_id bigint, event_type string,"
             " value double, props string"
         ).json(json_dir)
         write_orc(j.withColumn("ts", F.to_timestamp("ts")), orc_dir)
-        write_marker(orc_dir + "._fp", fp)
+
+    orc_dir = staged(sf_dir, "orc/events_from_json", ["events"], build)
     df = read_orc(spark, orc_dir)
     return (
         df.groupBy("event_type")
@@ -216,10 +212,8 @@ def s10_json_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     one file set writes `value` as integer, another as double; `extra`
     exists only in one set (→ nullable merge). Returns the inferred
     (field, type) table."""
-    base = scratch_dir(sf_dir)
-    json_dir = os.path.join(base, "json", "mixed_schema")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(os.path.join(json_dir, "_done"), fp):
+
+    def build(json_dir: str) -> None:
         e = load_table(spark, sf_dir, "events")
         a = e.limit(200).select(
             "event_id", F.col("value").cast("long").alias("value"), "event_type"
@@ -227,9 +221,10 @@ def s10_json_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = e.limit(200).select(
             "event_id", F.col("value").alias("value"), F.lit("x").alias("extra")
         )
-        a.write.mode("overwrite").json(os.path.join(json_dir, "a"))
-        b.write.mode("overwrite").json(os.path.join(json_dir, "b"))
-        write_marker(os.path.join(json_dir, "_done"), fp)
+        a.write.json(os.path.join(json_dir, "a"))
+        b.write.json(os.path.join(json_dir, "b"))
+
+    json_dir = staged(sf_dir, "json/mixed_schema", ["events"], build)
     inferred = spark.read.json([os.path.join(json_dir, "a"), os.path.join(json_dir, "b")])
     fields = [(f.name, f.dataType.simpleString()) for f in inferred.schema.fields]
     return spark.createDataFrame(sorted(fields), "field string, inferred_type string")
@@ -254,14 +249,13 @@ def s13_corrupt_file_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     torn garbage file still yields every valid row under
     `spark.sql.files.ignoreCorruptFiles` (set/restored around the
     action so the driver's session is untouched)."""
-    base = scratch_dir(sf_dir)
-    dest = os.path.join(base, "orc", "nation_with_corrupt")
-    fp = source_fingerprint(sf_dir, "nation")
-    if not marker_valid(dest + "._fp", fp):
+
+    def build(dest: str) -> None:
         write_orc(load_table(spark, sf_dir, "nation"), dest)
         with open(os.path.join(dest, "part-corrupt.orc"), "wb") as fh:
             fh.write(b"ORC\x00this is not a real orc file" * 64)
-        write_marker(dest + "._fp", fp)
+
+    dest = staged(sf_dir, "orc/nation_with_corrupt", ["nation"], build)
     prev = spark.conf.get("spark.sql.files.ignoreCorruptFiles", "false")
     spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
     try:
@@ -291,11 +285,12 @@ def s11_orc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     file tails only — no data pages read. The copy is written with a
     fixed file count so the result is scale-stable and oracle-checkable
     against a full count."""
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "lineitem_meta4")
-    fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(dest + "._fp", fp):
-        write_orc(load_table(spark, sf_dir, "lineitem").repartition(4), dest)
-        write_marker(dest + "._fp", fp)
+    dest = staged(
+        sf_dir,
+        "orc/lineitem_meta4",
+        ["lineitem"],
+        lambda p: write_orc(load_table(spark, sf_dir, "lineitem").repartition(4), p),
+    )
     return orc_file_stats_from_footer(spark, dest)
 
 
@@ -369,16 +364,13 @@ def s14_csv_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     newlines-free text so the round-trip exercises CSV quote-escaping;
     dates and decimals ride through the text representation bit-true,
     verified by the DuckDB oracle against the original parquet."""
-    base = scratch_dir(sf_dir)
-    csv_dir = os.path.join(base, "csv", "lineitem")
-    orc_dir = os.path.join(base, "orc", "lineitem_from_csv")
-    fp = source_fingerprint(sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("decimal(15,2)")
     note = F.concat(
         F.lit('flag="'), F.col("l_returnflag"), F.lit('", status='),
         F.col("l_linestatus"), F.lit(", qty,"), qty.cast("string"),
     )
-    if not marker_valid(orc_dir + "._fp", fp):
+
+    def build(orc_dir: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", qty.alias("l_quantity"),
             F.col("l_extendedprice").cast("decimal(15,2)").alias("l_extendedprice"),
@@ -387,10 +379,11 @@ def s14_csv_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_shipdate").cast("date").alias("l_shipdate"),
             note.alias("note"),
         )
-        (
-            li.write.mode("overwrite")
-            .option("header", "true")
-            .csv(csv_dir)
+        csv_dir = staged(
+            sf_dir,
+            "csv/lineitem",
+            ["lineitem"],
+            lambda p: li.write.option("header", "true").csv(p),
         )
         c = (
             spark.read.schema(
@@ -404,8 +397,8 @@ def s14_csv_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .csv(csv_dir)
         )
         write_orc(c, orc_dir)
-        write_marker(orc_dir + "._fp", fp)
-    df = read_orc(spark, orc_dir)
+
+    df = read_orc(spark, staged(sf_dir, "orc/lineitem_from_csv", ["lineitem"], build))
     return (
         df.groupBy("l_returnflag")
         .agg(
@@ -457,15 +450,18 @@ def s15_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is still reference-default (64 MiB stripes, 10k stride),
     verified per-stripe by the s11/footer machinery.
     """
-    base = scratch_dir(sf_dir)
-    frag_dir = os.path.join(base, "orc", "lineitem_fragmented")
-    comp_dir = os.path.join(base, "orc", "lineitem_compacted")
-    fp = source_fingerprint(sf_dir, "lineitem")
-    if not marker_valid(comp_dir + "._fp", fp):
-        li = load_table(spark, sf_dir, "lineitem")
-        write_orc(li.repartition(_S15_FRAGMENTS), frag_dir)
-        write_orc(read_orc(spark, frag_dir).repartition(_S15_TARGET), comp_dir)
-        write_marker(comp_dir + "._fp", fp)
+    frag_dir = staged(
+        sf_dir,
+        "orc/lineitem_fragmented",
+        ["lineitem"],
+        lambda p: write_orc(load_table(spark, sf_dir, "lineitem").repartition(_S15_FRAGMENTS), p),
+    )
+    comp_dir = staged(
+        sf_dir,
+        "orc/lineitem_compacted",
+        ["lineitem"],
+        lambda p: write_orc(read_orc(spark, frag_dir).repartition(_S15_TARGET), p),
+    )
     n_before = len([f for f in os.listdir(frag_dir) if f.startswith("part")])
     n_after = len([f for f in os.listdir(comp_dir) if f.startswith("part")])
     return (
@@ -649,23 +645,30 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, table: str, key: str) -> s
     time. (The catalog entry is per-session; the data files are
     shared, and a fresh session re-registers over the same path.)"""
     import re
-    import shutil
 
     tag = re.sub(r"[^0-9a-zA-Z]+", "_", os.path.basename(os.path.normpath(sf_dir)))
     name = f"bkt_{table}_{tag}"
-    path = os.path.join(scratch_dir(sf_dir), "bucketed", table)
-    # The fingerprint must pin the BUCKET SPEC, not just the source
-    # table: if the bucket count or key ever changes, files written
-    # under the old spec must not be re-registered as CLUSTERED BY the
-    # new one — a sort-merge join would silently read wrongly-bucketed
-    # files and return wrong results (round-7 ADVICE).
-    fp = source_fingerprint(sf_dir, table) + f";buckets={_S17_BUCKETS};key={key}"
-    has_data = os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
+
+    def build(path: str) -> None:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (
+            load_table(spark, sf_dir, table)
+            .write.format("parquet")
+            .bucketBy(_S17_BUCKETS, key)
+            .sortBy(key)
+            .option("path", path)
+            .saveAsTable(name)
+        )
+
+    # The spec must pin the BUCKET SPEC, not just the source table: if
+    # the bucket count or key ever changes, files written under the old
+    # spec must not be re-registered as CLUSTERED BY the new one — a
+    # sort-merge join would silently read wrongly-bucketed files and
+    # return wrong results (round-7 ADVICE).
+    path = staged(
+        sf_dir, f"bucketed/{table}", [table], build, spec=f";buckets={_S17_BUCKETS};key={key}"
     )
-    if marker_valid(path + "._fp", fp) and has_data:
-        if spark.catalog.tableExists(name):
-            return name
+    if not spark.catalog.tableExists(name):
         # Data files are valid but the in-memory catalog (per-session)
         # lost the entry — a fresh session must NOT pay the clustering
         # shuffle again. Re-register the existing bucketed files:
@@ -681,19 +684,6 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, table: str, key: str) -> s
             f"CLUSTERED BY ({key}) SORTED BY ({key}) "
             f"INTO {_S17_BUCKETS} BUCKETS LOCATION '{path}'"
         )
-        return name
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(path, ignore_errors=True)
-    (
-        load_table(spark, sf_dir, table)
-        .write.format("parquet")
-        .bucketBy(_S17_BUCKETS, key)
-        .sortBy(key)
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(name)
-    )
-    write_marker(path + "._fp", fp)
     return name
 
 
@@ -754,30 +744,35 @@ def _s18_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per testdata fingerprint) an order-month
     PARTITIONED parquet copy of orders — the hive-style layout whose
     directories static (s5) and dynamic (s18) pruning eliminate."""
-    out = os.path.join(scratch_dir(sf_dir), "parquet", "orders_by_month")
-    fp = source_fingerprint(sf_dir, "orders")
-    if not marker_valid(out + "._fp", fp):
-        o = load_table(spark, sf_dir, "orders").withColumn(
-            "o_month", F.month("o_orderdate")
-        )
-        o.write.mode("overwrite").partitionBy("o_month").parquet(out)
-        write_marker(out + "._fp", fp)
-    return out
+    return staged(
+        sf_dir,
+        "parquet/orders_by_month",
+        ["orders"],
+        lambda p: load_table(spark, sf_dir, "orders")
+        .withColumn("o_month", F.month("o_orderdate"))
+        .write.partitionBy("o_month")
+        .parquet(p),
+    )
 
 
 def _s18_month_dim(spark: SparkSession, sf_dir: str) -> str:
     """A 12-row month dimension (month -> quarter) written as parquet:
     DPP requires a real relation on the dim side (a LocalRelation
     would constant-fold instead of exercising the runtime filter)."""
-    out = os.path.join(scratch_dir(sf_dir), "parquet", "month_dim")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        spark.range(1, 13).select(
+    return staged(
+        sf_dir,
+        "parquet/month_dim",
+        [],
+        lambda p: spark.range(1, 13)
+        .select(
             F.col("id").cast("int").alias("m_month"),
             # floor-based quarter: Spark's int cast truncates but
             # DuckDB's rounds, so derive via explicit FLOOR both sides
             F.floor((F.col("id") + 2) / 3).cast("int").alias("m_quarter"),
-        ).coalesce(1).write.mode("overwrite").parquet(out)
-    return out
+        )
+        .coalesce(1)
+        .write.parquet(p),
+    )
 
 
 def s18_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -857,13 +852,8 @@ def s19_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot/aggregate runs over ~rows/stride metadata rows, not data."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_stats import rowgroup_stats
 
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "lineitem_rowindex")
-    # write-spec in the fingerprint: a stride or column-set change must
-    # invalidate the staged file (same staleness class as _bucketed_table)
-    fp = source_fingerprint(sf_dir, "lineitem") + (
-        f";stride={_S19_STRIDE};cols=l_orderkey,l_linenumber,l_quantity,l_returnflag"
-    )
-    if not marker_valid(dest + "._fp", fp):
+
+    def build(dest: str) -> None:
         df = (
             load_table(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
@@ -871,7 +861,16 @@ def s19_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("l_orderkey", "l_linenumber")
         )
         write_orc(df, dest, row_index_stride=_S19_STRIDE, stripe_size=256 * 1024 * 1024)
-        write_marker(dest + "._fp", fp)
+
+    # write-spec in the marker: a stride or column-set change must
+    # invalidate the staged file (same staleness class as _bucketed_table)
+    dest = staged(
+        sf_dir,
+        "orc/lineitem_rowindex",
+        ["lineitem"],
+        build,
+        spec=f";stride={_S19_STRIDE};cols=l_orderkey,l_linenumber,l_quantity,l_returnflag",
+    )
     rg = rowgroup_stats(spark, dest, ["l_orderkey", "l_returnflag"]).cache()
     misaligned = rg.filter((F.col("start_row") % _S19_STRIDE) != 0).count()
     if misaligned:
@@ -938,17 +937,14 @@ def s20_xml_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-true; the DuckDB oracle recomputes the same aggregate straight
     off the original parquet, so any escaping or type-mapping loss in
     either direction breaks the value hash."""
-    base = scratch_dir(sf_dir)
-    xml_dir = os.path.join(base, "xml", "customer")
-    orc_dir = os.path.join(base, "orc", "customer_from_xml")
-    fp = source_fingerprint(sf_dir, "customer")
     bal = F.col("c_acctbal").cast("decimal(15,2)")
     # <, >, &, and quotes all must survive writer escaping
     note = F.concat(
         F.lit('bal<'), bal.cast("string"), F.lit('>&"'), F.col("c_name"),
         F.lit("'"),
     )
-    if not marker_valid(orc_dir + "._fp", fp):
+
+    def build(orc_dir: str) -> None:
         c = load_table(spark, sf_dir, "customer").select(
             "c_custkey",
             F.col("c_nationkey").cast("int").alias("c_nationkey"),
@@ -964,12 +960,14 @@ def s20_xml_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("phone"),
             ).alias("contact"),
         )
-        (
-            c.write.mode("overwrite")
-            .format("xml")
+        xml_dir = staged(
+            sf_dir,
+            "xml/customer",
+            ["customer"],
+            lambda p: c.write.format("xml")
             .option("rootTag", "customers")
             .option("rowTag", "customer")
-            .save(xml_dir)
+            .save(p),
         )
         x = (
             spark.read.format("xml")
@@ -982,8 +980,8 @@ def s20_xml_to_orc_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load(xml_dir)
         )
         write_orc(x, orc_dir)
-        write_marker(orc_dir + "._fp", fp)
-    df = read_orc(spark, orc_dir)
+
+    df = read_orc(spark, staged(sf_dir, "orc/customer_from_xml", ["customer"], build))
     return (
         df.groupBy("c_mktsegment")
         .agg(
@@ -1028,18 +1026,19 @@ def s21_python_datasource_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import register_orc_meta
 
     register_orc_meta(spark)
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_meta4")
-    fp = source_fingerprint(sf_dir, "orders") + (
-        ";files=4;cols=o_orderkey,o_totalprice,o_orderstatus"
-    )
-    if not marker_valid(dest + "._fp", fp):
-        df = (
+    dest = staged(
+        sf_dir,
+        "orc/orders_meta4",
+        ["orders"],
+        lambda p: write_orc(
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
-            .repartition(4, F.col("o_orderkey"))
-        )
-        write_orc(df, dest, stripe_size=256 * 1024 * 1024)
-        write_marker(dest + "._fp", fp)
+            .repartition(4, F.col("o_orderkey")),
+            p,
+            stripe_size=256 * 1024 * 1024,
+        ),
+        spec=";files=4;cols=o_orderkey,o_totalprice,o_orderstatus",
+    )
     meta = (
         spark.read.format("orc_meta")
         .option("path", dest)
@@ -1120,21 +1119,21 @@ def s22_partial_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
         "l_returnflag",
     ]  # fmt: skip
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "lineitem_partial_read")
-    fp = source_fingerprint(sf_dir, "lineitem") + (
-        f";stride={_S22_STRIDE};stripe=1m;cols={','.join(cols)}"
-    )
-    if not marker_valid(dest + "._fp", fp):
-        df = (
+    dest = staged(
+        sf_dir,
+        "orc/lineitem_partial_read",
+        ["lineitem"],
+        lambda p: write_orc(
             load_table(spark, sf_dir, "lineitem")
             .select(*cols)
             .repartition(1)
-            .sortWithinPartitions("l_orderkey", "l_linenumber")
-        )
-        write_orc(
-            df, dest, row_index_stride=_S22_STRIDE, stripe_size=1024 * 1024
-        )
-        write_marker(dest + "._fp", fp)
+            .sortWithinPartitions("l_orderkey", "l_linenumber"),
+            p,
+            row_index_stride=_S22_STRIDE,
+            stripe_size=1024 * 1024,
+        ),
+        spec=f";stride={_S22_STRIDE};stripe=1m;cols={','.join(cols)}",
+    )
     import glob
 
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
@@ -1202,17 +1201,11 @@ def s23_bounded_tail_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         parse_tail_of_file,
     )
 
-    base = scratch_dir(sf_dir)
-    grown_dir = os.path.join(base, "orc", "orders_growing")
-    grown = os.path.join(grown_dir, "growing.orc")
-    side = grown + ".flush_length"
-    prefix_dir = os.path.join(base, "orc", "orders_durable_prefix")
-    fp = source_fingerprint(sf_dir, "orders") + f";cap={_S23_KEY_CAP};suffix=half"
-    if not marker_valid(grown_dir + "._fp", fp):
+    def build_grown(grown_dir: str) -> None:
         import glob
         import shutil
 
-        tmp = os.path.join(base, "orc", "orders_growing_stage")
+        tmp = grown_dir + "_stage"
         df = (
             load_table(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") < _S23_KEY_CAP)
@@ -1222,27 +1215,32 @@ def s23_bounded_tail_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_orc(df, tmp)
         src = sorted(glob.glob(os.path.join(tmp, "*.orc")))[0]
-        os.makedirs(grown_dir, exist_ok=True)
+        os.makedirs(grown_dir)
         durable = os.path.getsize(src)
-        with open(src, "rb") as f_in, open(grown, "wb") as f_out:
+        with open(src, "rb") as f_in, open(os.path.join(grown_dir, "growing.orc"), "wb") as f_out:
             blob = f_in.read()
             f_out.write(blob)
             # the "still being written" suffix: the file's own first
             # half — valid-looking ORC bytes, guaranteed tail-free
             f_out.write(blob[: durable // 2])
-        with open(side, "w") as fh:
+        with open(os.path.join(grown_dir, "growing.orc.flush_length"), "w") as fh:
             fh.write(str(durable))
         shutil.rmtree(tmp, ignore_errors=True)
-        write_marker(grown_dir + "._fp", fp)
-    durable = int(open(side).read())
+
+    spec = f";cap={_S23_KEY_CAP};suffix=half"
+    grown_dir = staged(sf_dir, "orc/orders_growing", ["orders"], build_grown, spec=spec)
+    grown = os.path.join(grown_dir, "growing.orc")
+    durable = int(open(grown + ".flush_length").read())
     meta = parse_tail_of_file(grown, max_file_length=durable)
-    if not marker_valid(prefix_dir + "._fp", fp):
-        os.makedirs(prefix_dir, exist_ok=True)
+
+    def build_prefix(prefix_dir: str) -> None:
+        os.makedirs(prefix_dir)
         with open(grown, "rb") as f_in, open(
             os.path.join(prefix_dir, "part-00000.orc"), "wb"
         ) as f_out:
             f_out.write(f_in.read(durable))
-        write_marker(prefix_dir + "._fp", fp)
+
+    prefix_dir = staged(sf_dir, "orc/orders_durable_prefix", ["orders"], build_prefix, spec=spec)
     return (
         read_orc(spark, prefix_dir)
         .groupBy("o_orderstatus")
@@ -1308,22 +1306,22 @@ def s24_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cols = ["l_orderkey", "l_suppkey", "l_quantity", "l_returnflag"]
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "lineitem_lake_scan")
-    fp = source_fingerprint(sf_dir, "lineitem") + (
-        f";files={_S24_FILES};stride=1000;chunk=4k;cols={','.join(cols)}"
-    )
-    if not marker_valid(dest + "._fp", fp):
-        df = (
+    dest = staged(
+        sf_dir,
+        "orc/lineitem_lake_scan",
+        ["lineitem"],
+        lambda p: write_orc(
             load_table(spark, sf_dir, "lineitem")
             .select(*cols)
             .repartitionByRange(_S24_FILES, "l_orderkey")
-            .sortWithinPartitions("l_orderkey")
-        )
-        write_orc(
-            df, dest, row_index_stride=1000, compress_size=4096,
+            .sortWithinPartitions("l_orderkey"),
+            p,
+            row_index_stride=1000,
+            compress_size=4096,
             stripe_size=1024 * 1024,
-        )
-        write_marker(dest + "._fp", fp)
+        ),
+        spec=f";files={_S24_FILES};stride=1000;chunk=4k;cols={','.join(cols)}",
+    )
     import glob
 
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
@@ -1382,9 +1380,8 @@ def s25_orc_native_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_orc_native,
     )
 
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_native_nested")
-    fp = source_fingerprint(sf_dir, "orders") + ";stride=1000;files=4;nested=v2"
-    if not marker_valid(dest + "._fp", fp):
+
+    def build(dest: str) -> None:
         df = (
             load_table(spark, sf_dir, "orders")
             .select(
@@ -1407,7 +1404,10 @@ def s25_orc_native_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("o_orderkey")
         )
         write_orc(df, dest, row_index_stride=1000)
-        write_marker(dest + "._fp", fp)
+
+    dest = staged(
+        sf_dir, "orc/orders_native_nested", ["orders"], build, spec=";stride=1000;files=4;nested=v2"
+    )
     register_orc_native(spark)
     scan = (
         spark.read.format("orc_native")
@@ -1449,6 +1449,22 @@ _S26_SPLIT = 800                 # old generation: l_orderkey < 800
 _S26_LO, _S26_HI = 500, 1200     # spans BOTH generations at every SF
 
 
+def _write_generations(dest: str, gens: list[tuple[str, DataFrame]]) -> None:
+    """Write each (prefix, df) generation as ORC with a 1000-row stride
+    and move its files into `dest` as `<prefix>_<i>.orc`, so a lake's
+    generations sort by prefix (the election tests rely on the order)."""
+    import glob
+    import shutil
+
+    os.makedirs(dest)
+    for prefix, df in gens:
+        gen = f"{dest}_{prefix}"
+        write_orc(df, gen, row_index_stride=1000)
+        for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
+            shutil.move(f, os.path.join(dest, f"{prefix}_{i}.orc"))
+        shutil.rmtree(gen)
+
+
 def s26_evolved_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Evolved-lake scan with AUTOMATIC reader-schema election (r11
     verdict Next #2/#3): the lake mixes two generations of lineitem —
@@ -1476,18 +1492,12 @@ def s26_evolved_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original parquet — DuckDB never sees ORC, election, or the
     convert layer."""
     import glob
-    import shutil
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
         read_planned_lake,
     )
 
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "lineitem_evolved_lake")
-    fp = source_fingerprint(sf_dir, "lineitem") + (
-        f";split={_S26_SPLIT};files=2+2;stride=1000;v1"
-    )
-    if not marker_valid(dest + "._fp", fp):
-        shutil.rmtree(dest, ignore_errors=True)
+    def build(dest: str) -> None:
         li = load_table(spark, sf_dir, "lineitem")
         old = (
             li.filter(F.col("l_orderkey") < _S26_SPLIT)
@@ -1512,14 +1522,15 @@ def s26_evolved_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(2, "l_orderkey")
             .sortWithinPartitions("l_orderkey")
         )
-        write_orc(old, dest + "_g0", row_index_stride=1000)
-        write_orc(new, dest + "_g1", row_index_stride=1000)
-        os.makedirs(dest, exist_ok=True)
-        for gen, prefix in ((dest + "_g0", "a_g0"), (dest + "_g1", "z_g1")):
-            for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
-                shutil.copy(f, os.path.join(dest, f"{prefix}_{i}.orc"))
-            shutil.rmtree(gen)
-        write_marker(dest + "._fp", fp)
+        _write_generations(dest, [("a_g0", old), ("z_g1", new)])
+
+    dest = staged(
+        sf_dir,
+        "orc/lineitem_evolved_lake",
+        ["lineitem"],
+        build,
+        spec=f";split={_S26_SPLIT};files=2+2;stride=1000;v1",
+    )
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
     cols = ["l_orderkey", "l_quantity", "l_returnflag", "l_disc_price"]
     tree = ("between", "l_orderkey", [_S26_LO, _S26_HI])
@@ -1568,10 +1579,11 @@ def _s27_stage(spark: SparkSession, sf_dir: str) -> str:
     (cust.custkey), 1000-row stride — so per-subcolumn footer and
     ROW_INDEX statistics (`proto/orc_proto.proto:84-91`, flattened-id
     keying) give disjoint custkey ranges per file AND per row group."""
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_custkey_sorted")
-    fp = source_fingerprint(sf_dir, "orders") + ";files=4;stride=1000;v1"
-    if not marker_valid(dest + "._fp", fp):
-        df = (
+    return staged(
+        sf_dir,
+        "orc/orders_custkey_sorted",
+        ["orders"],
+        lambda p: write_orc(
             load_table(spark, sf_dir, "orders")
             .repartitionByRange(4, "o_custkey")
             .sortWithinPartitions("o_custkey")
@@ -1582,11 +1594,12 @@ def _s27_stage(spark: SparkSession, sf_dir: str) -> str:
                     F.col("o_custkey").cast("bigint").alias("custkey"),
                     F.col("o_orderpriority").alias("prio"),
                 ).alias("cust"),
-            )
-        )
-        write_orc(df, dest, row_index_stride=1000)
-        write_marker(dest + "._fp", fp)
-    return dest
+            ),
+            p,
+            row_index_stride=1000,
+        ),
+        spec=";files=4;stride=1000;v1",
+    )
 
 
 def s27_nested_sarg_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1672,18 +1685,12 @@ def s28_positional_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the original parquet; DuckDB never sees `_col` names,
     election, or the translation."""
     import glob
-    import shutil
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
         read_planned_lake,
     )
 
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_positional_lake")
-    fp = source_fingerprint(sf_dir, "orders") + (
-        f";split={_S28_SPLIT};files=2+2;stride=1000;v1"
-    )
-    if not marker_valid(dest + "._fp", fp):
-        shutil.rmtree(dest, ignore_errors=True)
+    def build(dest: str) -> None:
         o = load_table(spark, sf_dir, "orders")
         old = (
             o.filter(F.col("o_orderkey") < _S28_SPLIT)
@@ -1706,14 +1713,15 @@ def s28_positional_lake_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(2, "o_orderkey")
             .sortWithinPartitions("o_orderkey")
         )
-        write_orc(old, dest + "_g0", row_index_stride=1000)
-        write_orc(new, dest + "_g1", row_index_stride=1000)
-        os.makedirs(dest, exist_ok=True)
-        for gen, prefix in ((dest + "_g0", "a_g0"), (dest + "_g1", "z_g1")):
-            for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
-                shutil.copy(f, os.path.join(dest, f"{prefix}_{i}.orc"))
-            shutil.rmtree(gen)
-        write_marker(dest + "._fp", fp)
+        _write_generations(dest, [("a_g0", old), ("z_g1", new)])
+
+    dest = staged(
+        sf_dir,
+        "orc/orders_positional_lake",
+        ["orders"],
+        build,
+        spec=f";split={_S28_SPLIT};files=2+2;stride=1000;v1",
+    )
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_custkey"]
     tree = ("between", "o_orderkey", [_S28_LO, _S28_HI])
@@ -1761,15 +1769,8 @@ def _s29_stage(spark: SparkSession, sf_dir: str) -> str:
     for ACID files; `positionalLevels = isAcid ? 2 : 1`). The new
     delta inserts the rest with real row names plus an added
     o_custkey, and a third delta DELETEs every okey % 10 == 0."""
-    import glob
-    import shutil
 
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_acid_positional")
-    fp = source_fingerprint(sf_dir, "orders") + (
-        f";split={_S29_SPLIT};files=2+2+1;stride=1000;v1"
-    )
-    if not marker_valid(dest + "._fp", fp):
-        shutil.rmtree(dest, ignore_errors=True)
+    def build(dest: str) -> None:
         o = load_table(spark, sf_dir, "orders")
 
         def events(df: DataFrame, txn: int, op: int, row_cols) -> DataFrame:
@@ -1804,19 +1805,15 @@ def _s29_stage(spark: SparkSession, sf_dir: str) -> str:
         dels = events(
             o.filter(F.col("o_orderkey") % 10 == 0), 3, 2, new_row
         ).coalesce(1).sortWithinPartitions("row.o_orderkey")
-        write_orc(old, dest + "_d1", row_index_stride=1000)
-        write_orc(new, dest + "_d2", row_index_stride=1000)
-        write_orc(dels, dest + "_d3", row_index_stride=1000)
-        os.makedirs(dest, exist_ok=True)
-        for gen, prefix in (
-            (dest + "_d1", "a_d1"), (dest + "_d2", "b_d2"),
-            (dest + "_d3", "c_d3"),
-        ):
-            for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
-                shutil.copy(f, os.path.join(dest, f"{prefix}_{i}.orc"))
-            shutil.rmtree(gen)
-        write_marker(dest + "._fp", fp)
-    return dest
+        _write_generations(dest, [("a_d1", old), ("b_d2", new), ("c_d3", dels)])
+
+    return staged(
+        sf_dir,
+        "orc/orders_acid_positional",
+        ["orders"],
+        build,
+        spec=f";split={_S29_SPLIT};files=2+2+1;stride=1000;v1",
+    )
 
 
 def s29_acid_positional_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1912,18 +1909,12 @@ def s30_forced_positional_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a name rewrite); force-positional changes WHICH files
     reconcile, not the cost of reconciling them."""
     import glob
-    import shutil
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
         read_planned_lake,
     )
 
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_legacy_named_lake")
-    fp = source_fingerprint(sf_dir, "orders") + (
-        f";split={_S30_SPLIT};files=2+2;stride=1000;v1"
-    )
-    if not marker_valid(dest + "._fp", fp):
-        shutil.rmtree(dest, ignore_errors=True)
+    def build(dest: str) -> None:
         o = load_table(spark, sf_dir, "orders")
         old = (
             o.filter(F.col("o_orderkey") < _S30_SPLIT)
@@ -1946,14 +1937,15 @@ def s30_forced_positional_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(2, "o_orderkey")
             .sortWithinPartitions("o_orderkey")
         )
-        write_orc(old, dest + "_g0", row_index_stride=1000)
-        write_orc(new, dest + "_g1", row_index_stride=1000)
-        os.makedirs(dest, exist_ok=True)
-        for gen, prefix in ((dest + "_g0", "a_g0"), (dest + "_g1", "z_g1")):
-            for i, f in enumerate(sorted(glob.glob(os.path.join(gen, "*.orc")))):
-                shutil.copy(f, os.path.join(dest, f"{prefix}_{i}.orc"))
-            shutil.rmtree(gen)
-        write_marker(dest + "._fp", fp)
+        _write_generations(dest, [("a_g0", old), ("z_g1", new)])
+
+    dest = staged(
+        sf_dir,
+        "orc/orders_legacy_named_lake",
+        ["orders"],
+        build,
+        spec=f";split={_S30_SPLIT};files=2+2;stride=1000;v1",
+    )
     files = sorted(glob.glob(os.path.join(dest, "*.orc")))
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_custkey"]
     tree = ("between", "o_orderkey", [_S30_LO, _S30_HI])
@@ -2019,30 +2011,29 @@ def s31_native_writer_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderdate"]  # fmt: skip
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "orders_native_written")
-    fp = source_fingerprint(sf_dir, "orders") + (
-        ";writer=native;files=4;stride=1000;blooms=o_orderkey"
-    )
-    if not marker_valid(dest + "._fp", fp):
-        import shutil
 
+    def build(dest: str) -> None:
         register_orc_native_sink(spark)
-        df = (
+        (
             load_table(spark, sf_dir, "orders")
             .select(*cols)
             .repartitionByRange(4, "o_orderkey")
             .sortWithinPartitions("o_orderkey")
-        )
-        shutil.rmtree(dest, ignore_errors=True)
-        (
-            df.write.format("orc_native_sink")
+            .write.format("orc_native_sink")
             .option("path", dest)
             .option("row_index_stride", "1000")
             .option("bloom_filter_columns", "o_orderkey")
             .mode("append")
             .save()
         )
-        write_marker(dest + "._fp", fp)
+
+    dest = staged(
+        sf_dir,
+        "orc/orders_native_written",
+        ["orders"],
+        build,
+        spec=";writer=native;files=4;stride=1000;blooms=o_orderkey",
+    )
     scan = spark.read.orc(dest)
     return (
         scan.filter(

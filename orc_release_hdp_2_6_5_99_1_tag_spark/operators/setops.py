@@ -338,7 +338,7 @@ def j4_cbo_stats_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     native analog of the reference's footer statistics, one level up.
     Session confs are set/restored; catalog tables are per-sf-named
     and rebuilt only when the source fingerprint moves."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table, scratch_dir
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table, staged
     import os as _os
 
     tag = _os.path.basename(_os.path.normpath(sf_dir)).replace(".", "_")
@@ -352,9 +352,11 @@ def j4_cbo_stats_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the next session's identically-named table. The parquet data
         # lives under scratch (reused across sessions); the catalog
         # entry + its ANALYZE statistics are rebuilt per session.
-        data_dir = _os.path.join(scratch_dir(sf_dir), "j4", t)
-        if not _os.path.exists(_os.path.join(data_dir, "_SUCCESS")):
-            load_table(spark, sf_dir, t).write.mode("overwrite").parquet(data_dir)
+        def build(path: str) -> None:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")  # its statistics are stale
+            load_table(spark, sf_dir, t).write.parquet(path)
+
+        data_dir = staged(sf_dir, f"j4/{t}", [t], build)
         if not spark.catalog.tableExists(tbl):
             spark.catalog.createTable(tbl, path=data_dir, source="parquet")
             spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR ALL COLUMNS")

@@ -29,13 +29,7 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.session import (
     ORC_ROW_INDEX_STRIDE,
     ORC_STRIPE_SIZE,
 )
-from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
-    load_table,
-    marker_valid,
-    scratch_dir,
-    source_fingerprint,
-    write_marker,
-)
+from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table, staged
 
 
 def write_orc(
@@ -201,8 +195,9 @@ def orc_copy(
     sort_by: list[str] | None = None,
     target_file_rows: int | None = None,
 ) -> str:
-    """Materialize (once per process/sf) an ORC copy of a testdata table
-    and return its path. `sort_by` writes row groups with disjoint
+    """Materialize (once per sf and write spec) an ORC copy of a
+    testdata table and return its path; the copy's marker covers the
+    write options, so changing one rebuilds it. `sort_by` writes row groups with disjoint
     min/max ranges, the layout the reference's split-elimination fixture
     uses (`examples/orc_split_elim.orc`) so PPD skipping is measurable.
     `target_file_rows` sizes output files explicitly (≈ one 64 MiB
@@ -213,32 +208,33 @@ def orc_copy(
     """
     import math
 
-    dest = os.path.join(scratch_dir(sf_dir), "orc", f"{table}_{variant}")
-    # fingerprint marker lives NEXT TO dest (mode=overwrite wipes dest);
-    # keyed on the source parquet so copies rebuild when testdata changes
-    marker = dest + "._fp"
-    fp = source_fingerprint(sf_dir, table)
-    if marker_valid(marker, fp):
-        return dest
-    df = load_table(spark, sf_dir, table)
-    n_files = (
-        max(1, math.ceil(df.count() / target_file_rows)) if target_file_rows else None
+    def build(dest: str) -> None:
+        df = load_table(spark, sf_dir, table)
+        n_files = (
+            max(1, math.ceil(df.count() / target_file_rows)) if target_file_rows else None
+        )
+        if sort_by:
+            # Range-partition on the sort key, then sort within each task:
+            # every output file covers a disjoint key range, so row-group
+            # min/max stats stay disjoint (the reference's split-elimination
+            # layout, examples/orc_split_elim.orc) while the write runs in
+            # parallel instead of through one task.
+            args = ([n_files] if n_files else []) + list(sort_by)
+            df = df.repartitionByRange(*args).sortWithinPartitions(*sort_by)
+        elif n_files:
+            df = df.repartition(n_files)
+        write_orc(
+            df,
+            dest,
+            compression=compression,
+            bloom_filter_columns=bloom_filter_columns,
+        )
+
+    return staged(
+        sf_dir,
+        f"orc/{table}_{variant}",
+        [table],
+        build,
+        spec=f";bloom={bloom_filter_columns};compression={compression}"
+        f";sort_by={sort_by};target_file_rows={target_file_rows}",
     )
-    if sort_by:
-        # Range-partition on the sort key, then sort within each task:
-        # every output file covers a disjoint key range, so row-group
-        # min/max stats stay disjoint (the reference's split-elimination
-        # layout, examples/orc_split_elim.orc) while the write runs in
-        # parallel instead of through one task.
-        args = ([n_files] if n_files else []) + list(sort_by)
-        df = df.repartitionByRange(*args).sortWithinPartitions(*sort_by)
-    elif n_files:
-        df = df.repartition(n_files)
-    write_orc(
-        df,
-        dest,
-        compression=compression,
-        bloom_filter_columns=bloom_filter_columns,
-    )
-    write_marker(marker, fp)
-    return dest

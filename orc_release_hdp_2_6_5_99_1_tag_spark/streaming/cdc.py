@@ -24,7 +24,6 @@ the pressure valve, exactly as in the reference's design.
 from __future__ import annotations
 
 import os
-import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -36,13 +35,11 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.operators.acid import (
     _read_events,
 )
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import write_orc
-from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import _await, _events_stream
-from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
-    marker_valid,
-    scratch_dir,
-    source_fingerprint,
-    write_marker,
+from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import (
+    _events_stream,
+    _run_available_now,
 )
+from orc_release_hdp_2_6_5_99_1_tag_spark.tables import staged
 
 _N_BUCKETS = 4
 
@@ -83,18 +80,9 @@ def _as_acid_events(batch: DataFrame, batch_id: int) -> DataFrame:
 def r4_streaming_acid_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream → foreachBatch ACID delta writer → merged view: latest
     non-tombstoned state per user."""
-    root = os.path.join(scratch_dir(sf_dir), "acid", "users_cdc")
-    done = os.path.join(root, "_stream_done")
-    ckpt = os.path.join(scratch_dir(sf_dir), "stream", "cdc_ckpt")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        # stale/absent marker ⇒ the output is absent, partial, or built
-        # from different testdata; a surviving checkpoint would make the
-        # availableNow replay a no-op, so sink and checkpoint are
-        # rebuilt as a unit
-        shutil.rmtree(root, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        os.makedirs(root, exist_ok=True)
+
+    def build(root: str) -> None:
+        os.makedirs(root)
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             # the graded sink is only ts-order-comparable to the oracle
@@ -117,15 +105,12 @@ def r4_streaming_acid_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(root, f"delta_{batch_id + 2:07d}_{batch_id + 2:07d}"),
             )
 
-        q = (
-            _events_stream(spark, sf_dir)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-        write_marker(done, fp)
+        writer = _events_stream(spark, sf_dir).writeStream.foreachBatch(write_batch)
+        _run_available_now(spark, writer, root + "_ckpt")
+
+    # a surviving checkpoint would make the availableNow replay a no-op,
+    # so sink and checkpoint are rebuilt as a unit
+    root = staged(sf_dir, "acid/users_cdc", ["events"], build, clear=["acid/users_cdc_ckpt"])
     parts = [
         _read_events(spark, os.path.join(root, d))
         for d in sorted(os.listdir(root))

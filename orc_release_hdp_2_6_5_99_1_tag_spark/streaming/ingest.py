@@ -27,20 +27,18 @@ window is finalized and emitted before the availableNow run terminates
 from __future__ import annotations
 
 import os
-import shutil
+from collections.abc import Callable
 from contextlib import contextmanager
+from typing import TYPE_CHECKING
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from orc_release_hdp_2_6_5_99_1_tag_spark.tables import (
-    marker_valid,
-    read_spec,
-    scratch_dir,
-    source_fingerprint,
-    write_marker,
-)
+from orc_release_hdp_2_6_5_99_1_tag_spark.tables import read_spec, staged
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 _SENTINEL_TYPE = "__watermark_sentinel__"
 
@@ -88,6 +86,41 @@ def _await(q: StreamingQuery, timeout: int = _STREAM_TIMEOUT_S) -> None:
             f"streaming query did not terminate within {timeout}s; "
             "sink left unmarked so the next call rebuilds it"
         )
+
+
+def _run_available_now(
+    spark: SparkSession, writer, ckpt: str, timeout: int = _STREAM_TIMEOUT_S
+) -> None:
+    """Start `writer` as one availableNow run over checkpoint `ckpt`
+    with stream-sized state partitions, and wait for it to finish."""
+    with _state_sized_shuffle(spark):
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        _await(q, timeout)
+
+
+def _sink(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    stream: Callable[[], DataFrame],
+    *,
+    sources: tuple[str, ...] = ("events",),
+    spec: str = "",
+    fmt: str = "parquet",
+    **options: str,
+) -> str:
+    """The staged availableNow sink `stream/<name>`: when it is stale,
+    `stream()` is built and drained into it in one run. Its checkpoint
+    `stream/<name>_ckpt` is cleared with it — a stale checkpoint would
+    turn the replay into a no-op over an empty sink."""
+
+    def build(out: str) -> None:
+        writer = stream().writeStream.format(fmt).option("path", out).options(**options)
+        _run_available_now(spark, writer, out + "_ckpt")
+
+    return staged(
+        sf_dir, f"stream/{name}", sources, build, spec=spec, clear=[f"stream/{name}_ckpt"]
+    )
 
 
 def _not_sentinel(col: str):
@@ -142,34 +175,17 @@ def _events_stream(
         raise ValueError(
             "multi-batch/filtered staging (splits/copies/only_type) requires an explicit sub="
         )
-    sub = sub or ("events_src_wm" if with_sentinel else "events_src")
-    src_dir = os.path.join(scratch_dir(sf_dir), "stream", sub)
-    os.makedirs(src_dir, exist_ok=True)
+    src_dir = _stage_topic(
+        spark,
+        sf_dir,
+        sub or ("events_src_wm" if with_sentinel else "events_src"),
+        with_sentinel=with_sentinel,
+        copies=copies,
+        splits=splits,
+        only_type=only_type,
+    )
     path = os.path.join(sf_dir, "events.parquet")
     spec = read_spec(path, "ts")
-    if only_type is not None:
-        # type-filtered SOURCE staging for per-entity streams (e.g. a
-        # clicks topic and a purchases topic). The filter must happen at
-        # the source, never inside the streaming plan: Catalyst pushes
-        # deterministic filters below the EventTimeWatermark node, which
-        # would hide the watermark sentinels from the collector and
-        # stall outer-join/window finalization.
-        _stage_filtered(sf_dir, src_dir, only_type)
-    elif splits > 1:
-        # genuinely multi-batch source: the events rows time-sorted and
-        # sliced into `splits` physical files with staggered mtimes
-        # (each slice staged `copies` times for redelivery modeling)
-        _stage_splits(sf_dir, src_dir, splits, copies)
-    else:
-        for i in range(copies):
-            suffix = "" if copies == 1 else f"_{chr(97 + i)}"
-            for part in spec.parts:
-                tail = ".parquet" if part == path else "_" + os.path.basename(part)
-                link = os.path.join(src_dir, f"events{suffix}{tail}")
-                if not os.path.exists(link):
-                    os.symlink(part, link)
-    if with_sentinel:
-        _stage_sentinel(spark, sf_dir, src_dir)
     # single_batch: deliver data + sentinels in ONE micro-batch and let
     # the engine's no-data finalization batch (run by availableNow once
     # the watermark advances past the last batch's max event time) do
@@ -190,11 +206,73 @@ def _events_stream(
     return spec.fix(reader.parquet(src_dir))
 
 
-def _stage_filtered(sf_dir: str, src_dir: str, only_type: str) -> None:
-    """Stage a type-filtered copy of the events parquet (pyarrow
-    filter, physical schema preserved byte-for-byte so the stream's
-    footer-type dispatch stays valid) — models a per-entity topic."""
-    _stage_filtered_topics(sf_dir, [(src_dir, only_type)])
+def _stage_topic(
+    spark: SparkSession,
+    sf_dir: str,
+    sub: str,
+    *,
+    with_sentinel: bool = False,
+    copies: int = 1,
+    splits: int = 1,
+    only_type: str | None = None,
+    events: Callable[[], pa.Table] | None = None,
+) -> str:
+    """Stage the stream source directory `stream/<sub>` as one staged
+    artifact: its data files, then (`with_sentinel`) the two watermark
+    sentinels, rebuilt as a unit when the events source or the staging
+    shape changes. `events` loads the events table for a type-filtered
+    topic; callers staging several topics share one loader so the
+    table is read once."""
+
+    def build(src_dir: str) -> None:
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        os.makedirs(src_dir)
+        path = os.path.join(sf_dir, "events.parquet")
+        if only_type is not None:
+            # type-filtered SOURCE staging for per-entity streams (e.g. a
+            # clicks topic and a purchases topic). The filter must happen
+            # at the source, never inside the streaming plan: Catalyst
+            # pushes deterministic filters below the EventTimeWatermark
+            # node, which would hide the watermark sentinels from the
+            # collector and stall outer-join/window finalization. pyarrow
+            # keeps the physical schema byte-for-byte, so the stream's
+            # footer-derived read spec stays valid.
+            t = events() if events else pq.read_table(path)
+            pq.write_table(
+                t.filter(pc.equal(t["event_type"], only_type)),
+                os.path.join(src_dir, "events_filtered.parquet"),
+                version="2.6",
+            )
+        elif splits > 1:
+            # genuinely multi-batch source: the events rows time-sorted and
+            # sliced into `splits` physical files with staggered mtimes
+            # (each slice staged `copies` times for redelivery modeling)
+            _stage_splits(sf_dir, src_dir, splits, copies)
+        else:
+            for i in range(copies):
+                suffix = "" if copies == 1 else f"_{chr(97 + i)}"
+                for part in read_spec(path, "ts").parts:
+                    tail = ".parquet" if part == path else "_" + os.path.basename(part)
+                    os.symlink(part, os.path.join(src_dir, f"events{suffix}{tail}"))
+        if with_sentinel:
+            _stage_sentinel(spark, sf_dir, src_dir)
+
+    shape = f";copies={copies};splits={splits};only_type={only_type};sentinel={with_sentinel}"
+    return staged(sf_dir, f"stream/{sub}", ["events"], build, spec=shape)
+
+
+def _stage_r11_topics(spark: SparkSession, sf_dir: str) -> None:
+    """r11's clicks and purchases topics (type-filtered, with
+    sentinels): a cold staging reads the events table once for both."""
+    import functools
+
+    import pyarrow.parquet as pq
+
+    events = functools.cache(lambda: pq.read_table(os.path.join(sf_dir, "events.parquet")))
+    for sub, typ in (("r11_clicks_src", "click"), ("r11_purch_src", "purchase")):
+        _stage_topic(spark, sf_dir, sub, with_sentinel=True, only_type=typ, events=events)
 
 
 def stage_shared_topics(spark: SparkSession, sf_dir: str) -> None:
@@ -213,52 +291,9 @@ def stage_shared_topics(spark: SparkSession, sf_dir: str) -> None:
     kind (a one-time pass over the events table), and leaving them on
     r11's own line made its 16.0s bench entry read 2.4x its steady-
     state sink-build cost."""
-    _events_stream(spark, sf_dir)                      # events_src
-    _events_stream(spark, sf_dir, with_sentinel=True)  # events_src_wm + sentinels
-    # r11's clicks/purchases topics: one pass over events, two
-    # filtered writes, then the (cheap, marker-guarded) sentinels
-    base = scratch_dir(sf_dir)
-    _stage_filtered_topics(
-        sf_dir,
-        [
-            (os.path.join(base, "stream", "r11_clicks_src"), "click"),
-            (os.path.join(base, "stream", "r11_purch_src"), "purchase"),
-        ],
-    )
-    for sub, typ in (("r11_clicks_src", "click"), ("r11_purch_src", "purchase")):
-        _events_stream(
-            spark, sf_dir, with_sentinel=True, sub=sub, only_type=typ,
-            single_batch=True,
-        )
-
-
-def _stage_filtered_topics(sf_dir: str, topics: list[tuple[str, str]]) -> None:
-    """Stage several type-filtered topics in ONE pass over the events
-    parquet: the source table is read once and each (dir, type) pair
-    gets its filtered slice — callers that need a clicks topic AND a
-    purchases topic (r11) pay one table scan instead of one per topic.
-    Markers are per-topic, so a partially-valid set only restages the
-    missing topics."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    fp_base = source_fingerprint(sf_dir, "events")
-    todo = []
-    for src_dir, only_type in topics:
-        marker = os.path.join(src_dir, "_filtered_done")
-        fp = fp_base + f";only_type={only_type}"
-        if not marker_valid(marker, fp):
-            todo.append((src_dir, only_type, marker, fp))
-    if not todo:
-        return
-    path = os.path.join(sf_dir, "events.parquet")
-    t = pq.read_table(path)
-    for src_dir, only_type, marker, fp in todo:
-        os.makedirs(src_dir, exist_ok=True)
-        filtered = t.filter(pc.equal(t["event_type"], only_type))
-        dest = os.path.join(src_dir, "events_filtered.parquet")
-        pq.write_table(filtered, dest, version="2.6")
-        write_marker(marker, fp)
+    _stage_topic(spark, sf_dir, "events_src")
+    _stage_topic(spark, sf_dir, "events_src_wm", with_sentinel=True)
+    _stage_r11_topics(spark, sf_dir)
 
 
 def _stage_splits(sf_dir: str, src_dir: str, splits: int, copies: int = 1) -> None:
@@ -277,10 +312,6 @@ def _stage_splits(sf_dir: str, src_dir: str, splits: int, copies: int = 1) -> No
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    marker = os.path.join(src_dir, "_splits_done")
-    fp = source_fingerprint(sf_dir, "events") + f";splits={splits};copies={copies}"
-    if marker_valid(marker, fp):
-        return
     path = os.path.join(sf_dir, "events.parquet")
     t = pq.read_table(path)
     t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
@@ -295,7 +326,6 @@ def _stage_splits(sf_dir: str, src_dir: str, splits: int, copies: int = 1) -> No
             pq.write_table(t.slice(lo, hi - lo), dest, version="2.6")
             seq = i * copies + c
             os.utime(dest, (base + seq, base + seq))
-    write_marker(marker, fp)
 
 
 _SENTINEL_DAYS_CACHE: dict[str, tuple[str, str]] = {}
@@ -341,13 +371,12 @@ def _sentinel_days(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
 
 def _stage_sentinel(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
-    """Write the two one-row watermark-advancing sentinel files with
-    staggered mtimes (keyed on the source fingerprint so they restage
-    when testdata changes). The sentinel ts column follows the source's
-    read spec — an integer epoch at the source unit when the stream
-    reads ts as an integer (the nanos and raw-integer generations), NTZ
-    micros otherwise — so the stream's one reader schema fits every
-    file.
+    """Write the two one-row watermark-advancing sentinel files into
+    `src_dir`, with mtimes after its data files. The sentinel ts column
+    follows the source's read spec — an integer epoch at the source
+    unit when the stream reads ts as an integer (the nanos and
+    raw-integer generations), NTZ micros otherwise — so the stream's
+    one reader schema fits every file.
 
     Written directly with pyarrow: the previous Spark route
     (createDataFrame of one Python row → coalesce(1) write) planned a
@@ -361,10 +390,6 @@ def _stage_sentinel(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    marker = os.path.join(src_dir, "_sentinel_done")
-    fp = source_fingerprint(sf_dir, "events")
-    if marker_valid(marker, fp):
-        return
     spec = read_spec(os.path.join(sf_dir, "events.parquet"), "ts")
     d1, d2 = _sentinel_days(spark, sf_dir)
     # batches are mtime-ordered; anchor on max(source mtimes, now) so a
@@ -414,12 +439,9 @@ def _stage_sentinel(spark: SparkSession, sf_dir: str, src_dir: str) -> None:
             }
         )
         dest = os.path.join(src_dir, f"zz_sentinel_{i}.parquet")
-        if os.path.exists(dest):
-            os.remove(dest)
         pq.write_table(sent, dest, version="2.6")
         # file-source batches are ordered by mtime: events < s1 < s2
         os.utime(dest, (now + 10 * (i + 1), now + 10 * (i + 1)))
-    write_marker(marker, fp)
 
 
 def r1_streaming_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -427,27 +449,14 @@ def r1_streaming_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches; then read the sink back and checksum it. Files
     appear atomically per micro-batch commit — the capability the
     reference approximates with intermediate footer flushes."""
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "events_orc")
-    ckpt = os.path.join(base, "stream", "events_orc_ckpt")
-    done = os.path.join(base, "stream", "events_orc._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        # rebuild sink + checkpoint as a unit (a stale checkpoint would
-        # turn the availableNow replay into a no-op over an empty sink)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = _events_stream(spark, sf_dir).filter(F.col("event_type") != "error")
-        q = (
-            stream.writeStream.format("orc")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .option("compression", "zlib")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-        write_marker(done, fp)
+    out = _sink(
+        spark,
+        sf_dir,
+        "events_orc",
+        lambda: _events_stream(spark, sf_dir).filter(F.col("event_type") != "error"),
+        fmt="orc",
+        compression="zlib",
+    )
     df = spark.read.orc(out)
     return df.agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -476,17 +485,11 @@ def r2_streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. The staged sentinel advances the watermark past the data
     horizon so every real window finalizes within the availableNow run.
     """
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r2_windows")
-    ckpt = os.path.join(base, "stream", "r2_windows_ckpt")
-    done = os.path.join(base, "stream", "r2_windows._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = _events_stream(spark, sf_dir, with_sentinel=True)
-        agg = (
-            stream.withWatermark("ts", "0 seconds")
+
+    def stream() -> DataFrame:
+        return (
+            _events_stream(spark, sf_dir, with_sentinel=True)
+            .withWatermark("ts", "0 seconds")
             .groupBy(F.window("ts", "1 day").alias("w"), F.col("event_type"))
             .agg(
                 F.count(F.lit(1)).alias("cnt"),
@@ -501,19 +504,9 @@ def r2_streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(_sink(spark, sf_dir, "r2_windows", stream))
         .filter(_not_sentinel("event_type"))
         .orderBy("day", "event_type")
     )
@@ -544,19 +537,11 @@ def r5_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     so state is bounded by concurrently-active users, not history —
     the sentinel closes the final sessions so the availableNow run
     emits everything."""
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r5_sessions")
-    ckpt = os.path.join(base, "stream", "r5_sessions_ckpt")
-    done = os.path.join(base, "stream", "r5_sessions._done")
-    # ";sink=v2": sink schema gained is_sentinel — a marker from the v1
-    # sink must not validate against the new read-back path
-    fp = source_fingerprint(sf_dir, "events") + ";sink=v2"
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = _events_stream(spark, sf_dir, with_sentinel=True)
-        agg = (
-            stream.withWatermark("ts", "0 seconds")
+
+    def stream() -> DataFrame:
+        return (
+            _events_stream(spark, sf_dir, with_sentinel=True)
+            .withWatermark("ts", "0 seconds")
             .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -580,17 +565,10 @@ def r5_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "is_sentinel",
             )
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
+    # ";sink=v2": sink schema gained is_sentinel — a marker from the v1
+    # sink must not validate against the new read-back path
+    out = _sink(spark, sf_dir, "r5_sessions", stream, spec=";sink=v2")
     return (
         spark.read.parquet(out)
         .filter((F.col("is_sentinel") == 0) | F.col("is_sentinel").isNull())
@@ -640,29 +618,14 @@ def r6_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon, not history). The sink checksum equals the batch table's —
     proof no duplicate survived and no original was lost.
     """
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r6_dedup")
-    ckpt = os.path.join(base, "stream", "r6_dedup_ckpt")
-    done = os.path.join(base, "stream", "r6_dedup._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        shutil.rmtree(os.path.join(base, "stream", "events_src_dup"), ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = _events_stream(spark, sf_dir, sub="events_src_dup", copies=2)
-        deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        with _state_sized_shuffle(spark):
-            q = (
-                deduped.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+    out = _sink(
+        spark,
+        sf_dir,
+        "r6_dedup",
+        lambda: _events_stream(spark, sf_dir, sub="events_src_dup", copies=2)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["event_id"]),
+    )
     df = spark.read.parquet(out)
     return df.agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -695,16 +658,10 @@ def r7_stream_stream_join(spark: SparkSession, sf_dir: str, splits: int = 1) -> 
     no sentinel needed. The pair stream lands in a parquet sink; the
     checksum over the sink equals the batch SQL join.
     """
-    base = scratch_dir(sf_dir)
     tag = "r7_pairs" if splits == 1 else f"r7_pairs_s{splits}"
     sub = None if splits == 1 else f"events_src_s{splits}"
-    out = os.path.join(base, "stream", tag)
-    ckpt = os.path.join(base, "stream", f"{tag}_ckpt")
-    done = os.path.join(base, "stream", f"{tag}._done")
-    fp = source_fingerprint(sf_dir, "events") + f";splits={splits}"
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def stream() -> DataFrame:
         clicks = (
             _events_stream(spark, sf_dir, sub=sub, splits=splits)
             .filter(F.col("event_type") == "click")
@@ -725,23 +682,14 @@ def r7_stream_stream_join(spark: SparkSession, sf_dir: str, splits: int = 1) -> 
             )
             .withWatermark("p_ts", "1 hour")
         )
-        pairs = clicks.join(
+        return clicks.join(
             purchases,
             (F.col("c_user") == F.col("p_user"))
             & (F.col("p_ts") >= F.col("c_ts") - F.expr("INTERVAL 30 MINUTES"))
             & (F.col("p_ts") <= F.col("c_ts")),
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                pairs.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
-    df = spark.read.parquet(out)
+
+    df = spark.read.parquet(_sink(spark, sf_dir, tag, stream, spec=f";splits={splits}"))
     return df.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.count_distinct("c_user").alias("nd_users"),
@@ -780,23 +728,14 @@ def r8_streaming_pipeline(spark: SparkSession, sf_dir: str, splits: int = 1) -> 
     redelivery pattern. Sentinels ride the quality filter via their
     reserved type and close the final windows.
     """
-    base = scratch_dir(sf_dir)
     tag = "r8_pipeline" if splits == 1 else f"r8_pipeline_s{splits}"
     sub = "events_src_pipe" if splits == 1 else f"events_src_pipe_s{splits}"
-    out = os.path.join(base, "stream", tag)
-    ckpt = os.path.join(base, "stream", f"{tag}_ckpt")
-    done = os.path.join(base, "stream", f"{tag}._done")
-    fp = source_fingerprint(sf_dir, "events") + f";splits={splits}"
-    if not marker_valid(done, fp):
-        shutil.rmtree(os.path.join(base, "stream", sub), ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = _events_stream(
-            spark, sf_dir, with_sentinel=True, sub=sub, copies=2, splits=splits
-        )
-        quality = (F.col("event_type") != "error") & (F.col("value") >= 1.0)
-        agg = (
-            stream.withWatermark("ts", "1 hour")
+    quality = (F.col("event_type") != "error") & (F.col("value") >= 1.0)
+
+    def stream() -> DataFrame:
+        return (
+            _events_stream(spark, sf_dir, with_sentinel=True, sub=sub, copies=2, splits=splits)
+            .withWatermark("ts", "1 hour")
             # sentinel rows must pass the (pushed-down) quality filter
             # so they still reach the watermark collector
             .filter(quality | (F.col("event_type") == _SENTINEL_TYPE))
@@ -815,19 +754,9 @@ def r8_streaming_pipeline(spark: SparkSession, sf_dir: str, splits: int = 1) -> 
                 "sum_value",
             )
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(_sink(spark, sf_dir, tag, stream, spec=f";splits={splits}"))
         .filter(_not_sentinel("event_type"))
         .orderBy("day", "event_type")
     )
@@ -861,18 +790,8 @@ def r9_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     event firehose against slowly-changing reference data at 100 TB/day
     — the dimension refreshes per micro-batch read, state stays zero.
     """
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r9_enriched")
-    ckpt = os.path.join(base, "stream", "r9_enriched_ckpt")
-    done = os.path.join(base, "stream", "r9_enriched._done")
-    fp = (
-        source_fingerprint(sf_dir, "events")
-        + ";"
-        + source_fingerprint(sf_dir, "customer")
-    )
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def stream() -> DataFrame:
         from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table
 
         cust = load_table(spark, sf_dir, "customer").select(
@@ -884,9 +803,9 @@ def r9_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim = cust.join(
             F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"]
         ).select("c_custkey", "n_name", "c_mktsegment")
-        stream = _events_stream(spark, sf_dir)
-        enriched = stream.join(
-            F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "left"
+        events = _events_stream(spark, sf_dir)
+        return events.join(
+            F.broadcast(dim), events["user_id"] == dim["c_custkey"], "left"
         ).select(
             "event_id",
             "user_id",
@@ -895,15 +814,8 @@ def r9_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_name"), F.lit("UNKNOWN")).alias("n_name"),
             F.coalesce(F.col("c_mktsegment"), F.lit("UNKNOWN")).alias("segment"),
         )
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-        write_marker(done, fp)
+
+    out = _sink(spark, sf_dir, "r9_enriched", stream, sources=("events", "customer", "nation"))
     df = spark.read.parquet(out)
     return (
         df.groupBy("n_name")
@@ -945,18 +857,12 @@ def r10_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The batch w8 query over the same events is the exact oracle: a
     correct continuous aggregate must equal its full recompute.
     """
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r10_ohlc")
-    ckpt = os.path.join(base, "stream", "r10_ohlc_ckpt")
-    done = os.path.join(base, "stream", "r10_ohlc._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        stream = _events_stream(spark, sf_dir, with_sentinel=True)
-        tv = F.struct(F.col("ts"), F.col("value"))
-        agg = (
-            stream.withWatermark("ts", "0 seconds")
+    tv = F.struct(F.col("ts"), F.col("value"))
+
+    def stream() -> DataFrame:
+        return (
+            _events_stream(spark, sf_dir, with_sentinel=True)
+            .withWatermark("ts", "0 seconds")
             .groupBy(F.window("ts", "1 hour").alias("w"), F.col("user_id"))
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -983,19 +889,9 @@ def r10_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "is_sentinel",
             )
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                agg.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(_sink(spark, sf_dir, "r10_ohlc", stream))
         .filter(F.col("is_sentinel") == 0)
         .drop("is_sentinel")
         .orderBy("user_id", "hour")
@@ -1026,7 +922,7 @@ def r11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted once the watermark PROVES no future match can arrive.
 
     The two sides are staged as type-filtered SOURCES (a clicks topic
-    and a purchases topic — `_stage_filtered`), never filtered inside
+    and a purchases topic — `_stage_r11_topics`), never filtered inside
     the streaming plan: a pushed-down type filter would drop the
     watermark sentinels below the EventTimeWatermark collector, the
     purchase-side watermark would stall at (real max − delay), and
@@ -1047,7 +943,7 @@ def r11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per join side. Three amortizations, measured at sf0.1/local[32]
     (39.2s → ~2.5s stream time, identical oracle output):
     (1) both topics staged in ONE pass over events
-    (`_stage_filtered_topics`: single read, two filtered writes);
+    (`_stage_r11_topics`: single read, two filtered writes);
     (2) each side delivered as ONE micro-batch (`single_batch=True`)
     — outer-row emission needs only that the watermark pass the
     eligibility point, which the engine's no-data finalization batch
@@ -1059,29 +955,16 @@ def r11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle partitions would commit 4x the state files per batch for
     a join whose per-batch state fits in a few MB).
     """
-    base = scratch_dir(sf_dir)
-    out = os.path.join(base, "stream", "r11_outer")
-    ckpt = os.path.join(base, "stream", "r11_outer_ckpt")
-    done = os.path.join(base, "stream", "r11_outer._done")
-    fp = source_fingerprint(sf_dir, "events")
-    if not marker_valid(done, fp):
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+
+    def stream() -> DataFrame:
         # both topics staged in ONE pass over events (single table
-        # read, two filtered writes). The topic dirs are NOT deleted
-        # here: every staging step inside them (filtered copy,
-        # sentinels) is source-fingerprint-marker-guarded, so a stale
-        # topic restages itself — and `stage_shared_topics` pre-builds
-        # them so this line is a no-op on the bench path (r11 verdict
-        # #6: the 16.0s bench entry was 2.4x steady-state because this
-        # one-time staging landed on the query's own line).
-        _stage_filtered_topics(
-            sf_dir,
-            [
-                (os.path.join(base, "stream", "r11_clicks_src"), "click"),
-                (os.path.join(base, "stream", "r11_purch_src"), "purchase"),
-            ],
-        )
+        # read, two filtered writes). The topics are staged artifacts
+        # of their own, so a stale topic restages itself — and
+        # `stage_shared_topics` pre-builds them so this line is a
+        # no-op on the bench path (r11 verdict #6: the 16.0s bench
+        # entry was 2.4x steady-state because this one-time staging
+        # landed on the query's own line).
+        _stage_r11_topics(spark, sf_dir)
         clicks = (
             _events_stream(
                 spark,
@@ -1115,23 +998,15 @@ def r11_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withWatermark("p_ts", "1 hour")
         )
-        joined = clicks.join(
+        return clicks.join(
             purchases,
             (F.col("c_user") == F.col("p_user"))
             & (F.col("p_ts") >= F.col("c_ts") - F.expr("INTERVAL 30 MINUTES"))
             & (F.col("p_ts") <= F.col("c_ts")),
             "leftOuter",
         )
-        with _state_sized_shuffle(spark):
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q)
-        write_marker(done, fp)
+
+    out = _sink(spark, sf_dir, "r11_outer", stream)
     df = spark.read.parquet(out).filter(_not_sentinel("c_type"))
     return df.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1182,28 +1057,29 @@ def r12_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_synthetic_events,
     )
 
-    base = os.path.join(scratch_dir(sf_dir), "stream", "pyds_source")
-    sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
-    fp = f"synthetic_events;n={SYNTH_N};batch={SYNTH_BATCH}"
-    if not marker_valid(base + "._fp", fp):
+
+    def build(base: str) -> None:
         register_synthetic_events(spark)
-        shutil.rmtree(base, ignore_errors=True)
         runs = SYNTH_N // SYNTH_BATCH + 1  # one run PAST the fixpoint
         for _ in range(runs):
-            q = (
+            writer = (
                 spark.readStream.format("synthetic_events")
                 .load()
                 .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .option("path", os.path.join(base, "sink"))
             )
-            _await(q, 120)
-        write_marker(base + "._fp", fp)
+            _run_available_now(spark, writer, os.path.join(base, "ckpt"), 120)
+
+    base = staged(
+        sf_dir,
+        "stream/pyds_source",
+        [],
+        build,
+        spec=f"synthetic_events;n={SYNTH_N};batch={SYNTH_BATCH}",
+    )
     return (
         spark.read.schema("id bigint, bucket int, amount bigint")
-        .parquet(sink)
+        .parquet(os.path.join(base, "sink"))
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n"),

@@ -16,11 +16,28 @@ and the watermark sentinels all consume the same spec instead of each
 re-deciding how to read `events.ts`, whose parquet type has drifted
 across testdata generations (TIMESTAMP(NANOS), timestamp[us],
 raw integer epochs).
+
+Every derived artifact (ORC copies, lakes, ACID dirs, text dumps,
+stream topics and sinks) lives under `scratch_dir(sf_dir)` and is built
+through one protocol, `staged`: the artifact at `<path>` is current
+only if `<path>` exists AND the marker file `<path>._done` next to it
+holds the fingerprint of the source tables it was built from (each
+parquet's path, mtime_ns and size) followed by the build's own spec
+(write options, file counts, staging shape). Anything else removes the
+artifact (and the siblings named with it, such as a stream's
+checkpoint), rebuilds it, and writes the marker last — so regenerated
+testdata, a changed build spec, an interrupted build and a deleted
+artifact all rebuild, and no partial output is ever served. The same
+rule guards an ORC file in the reference, which is readable only
+through the tail written last and checked against the file's real
+length (`ReaderImpl.extractFileTail`).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from typing import TYPE_CHECKING
 
@@ -229,42 +246,60 @@ def _event_time_fields(path: str, parts: list[str], col: str, fixes: dict) -> di
     return dict(ts_max=ts_max, ts_units_per_second=band[2], ts_epoch_type=t)
 
 
+_SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
+
 def scratch_dir(sf_dir: str) -> str:
-    """Per-sf scratch directory for derived artifacts (ORC copies, ACID
-    delta dirs, streaming checkpoints). Lives under the repo, gitignored.
-    """
+    """Per-sf scratch directory for derived artifacts, under `.scratch/`
+    of the checkout this package was imported from (gitignored), so a
+    second checkout never serves artifacts its sibling's code built."""
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    d = os.path.join("/root/repo/.scratch", tag)
+    d = os.path.join(_SCRATCH_ROOT, tag)
     os.makedirs(d, exist_ok=True)
     return d
 
 
-def source_fingerprint(sf_dir: str, *names: str) -> str:
-    """Fingerprint (path + mtime + size) of the source parquet files a
-    derived scratch artifact is built from. Completion markers store
-    this string, so artifacts rebuild automatically whenever the driver
-    regenerates testdata — the round-2 failure mode was a `_done`
-    marker surviving a testdata change and pinning a sink built from
-    corrupted values.
+def staged(
+    sf_dir: str,
+    rel: str,
+    sources: Iterable[str],
+    build: Callable[[str], None],
+    *,
+    spec: str = "",
+    clear: Iterable[str] = (),
+) -> str:
+    """The derived artifact `scratch_dir(sf_dir)/rel`, built by
+    `build(path)` unless it is current; returns its path.
+
+    Current means the path exists AND its marker `<path>._done` holds
+    the fingerprint (path, mtime_ns and size of each `sources` table's
+    parquet) followed by `spec`, the build's own parameters. Otherwise
+    the marker, the path and each `clear` sibling (a stream's
+    checkpoint; relative to the scratch dir like `rel`) are removed,
+    the artifact is built, and the marker is written last: an
+    interrupted build leaves no marker, and a deleted artifact is never
+    vouched for by the marker it left behind.
     """
-    parts = []
-    for name in names:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        st = os.stat(p)
-        parts.append(f"{p}:{st.st_mtime_ns}:{st.st_size}")
-    return ";".join(parts)
-
-
-def marker_valid(marker_path: str, fingerprint: str) -> bool:
-    """True iff the completion marker exists AND matches the current
-    source fingerprint (empty legacy markers never match)."""
+    base = scratch_dir(sf_dir)
+    path = os.path.join(base, rel)
+    marker = path + "._done"
+    stats = ((p, os.stat(p)) for p in (os.path.join(sf_dir, f"{n}.parquet") for n in sources))
+    fp = ";".join(f"{p}:{st.st_mtime_ns}:{st.st_size}" for p, st in stats) + spec
     try:
-        with open(marker_path) as fh:
-            return fh.read() == fingerprint
+        with open(marker) as fh:
+            if fh.read() == fp and os.path.exists(path):
+                return path
     except OSError:
-        return False
-
-
-def write_marker(marker_path: str, fingerprint: str) -> None:
-    with open(marker_path, "w") as fh:
-        fh.write(fingerprint)
+        pass
+    for p in (marker, path, *(os.path.join(base, c) for c in clear)):
+        if os.path.isdir(p) and not os.path.islink(p):
+            shutil.rmtree(p)
+        elif os.path.lexists(p):
+            os.remove(p)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    build(path)
+    with open(marker, "w") as fh:
+        fh.write(fp)
+    return path

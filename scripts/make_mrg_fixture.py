@@ -16,8 +16,8 @@ one file/one row group: splitting 25-row nation.parquet would only add
 per-file open overhead.
 
 Usage:
-    python scripts/make_mrg_fixture.py [--out /root/repo/.scratch/fixtures/mrg0.1]
-    SPARK_GRAFT_SF_DIR=/root/repo/.scratch/fixtures/mrg0.1 \
+    python scripts/make_mrg_fixture.py [--out <checkout>/.scratch/fixtures/mrg0.1]
+    SPARK_GRAFT_SF_DIR=<checkout>/.scratch/fixtures/mrg0.1 \
         SPARK_GRAFT_CPUS=8 python scripts/opt_profile.py --headline
 """
 
@@ -27,7 +27,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import TABLE_NAMES
 
@@ -39,7 +40,7 @@ def main() -> None:
     import pyarrow.parquet as pq
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/.scratch/fixtures/mrg0.1")
+    ap.add_argument("--out", default=os.path.join(_REPO, ".scratch", "fixtures", "mrg0.1"))
     ap.add_argument("--files", type=int, default=4)
     ap.add_argument("--row-groups-per-file", type=int, default=4)
     args = ap.parse_args()

@@ -391,7 +391,65 @@ def test_scratch_caches_rebuild_on_source_change(spark, tmp_path):
     )
     import shutil
 
-    shutil.rmtree(os.path.join("/root/repo/.scratch", "sffp"), ignore_errors=True)
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
+
+    shutil.rmtree(scratch_dir(sf), ignore_errors=True)
+
+
+def _orc_copy_rows(spark, sf):
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import orc_copy
+
+    return sorted(spark.read.orc(orc_copy(spark, sf, "nation")).collect())
+
+
+def _s26_rows(spark, sf):
+    from orc_release_hdp_2_6_5_99_1_tag_spark.operators.orc_queries import (
+        s26_evolved_lake_scan,
+    )
+
+    return s26_evolved_lake_scan(spark, sf).collect()
+
+
+def _r1_rows(spark, sf):
+    from orc_release_hdp_2_6_5_99_1_tag_spark.streaming.ingest import (
+        r1_streaming_orc_ingest,
+    )
+
+    return r1_streaming_orc_ingest(spark, sf).collect()
+
+
+# case -> (artifact path under the sf's scratch dir, rows served from it)
+_STAGED_ARTIFACTS = {
+    "orc_copy": ("orc/nation_default", _orc_copy_rows),
+    "s26_lake": ("orc/lineitem_evolved_lake", _s26_rows),
+    "r1_sink": ("stream/events_orc", _r1_rows),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_STAGED_ARTIFACTS))
+def test_deleted_artifact_is_rebuilt(spark, tmp_path, case):
+    """A marker vouches only for an artifact that still exists: delete
+    the artifact but keep its marker, and the next call must rebuild it
+    and serve the same rows (trusting the marker alone crashed s22 on
+    `files[0]` and r1 on a missing sink path)."""
+    import shutil
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
+
+    rel, rows = _STAGED_ARTIFACTS[case]
+    sf = str(tmp_path / f"sfgone_{case}")
+    os.makedirs(sf)
+    for t in ("nation", "lineitem", "events"):
+        os.symlink(os.path.join(SF_DIR, f"{t}.parquet"), os.path.join(sf, f"{t}.parquet"))
+    try:
+        before = rows(spark, sf)
+        assert before, f"{case}: no rows to compare"
+        path = os.path.join(scratch_dir(sf), rel)
+        shutil.rmtree(path)
+        assert rows(spark, sf) == before, f"{case}: rebuilt artifact serves different rows"
+        assert os.path.isdir(path), f"{case}: artifact was not rebuilt"
+    finally:
+        shutil.rmtree(scratch_dir(sf), ignore_errors=True)
 
 
 def test_explicit_ddl_matches_inference(spark):

@@ -68,12 +68,15 @@ def test_distributed_stats_match_java_reader(spark, sf_dir):
     """The distributed pure-Python path and the ORC Java library agree
     on merged per-column stats over a multi-file lineitem directory
     (ints, doubles, strings, timestamp)."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import scratch_dir, write_orc
-    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import write_orc
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table, staged
 
-    dest = os.path.join(scratch_dir(sf_dir), "orc", "lineitem_tailtest")
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        write_orc(load_table(spark, sf_dir, "lineitem").repartition(3), dest)
+    dest = staged(
+        sf_dir,
+        "orc/lineitem_tailtest",
+        ["lineitem"],
+        lambda p: write_orc(load_table(spark, sf_dir, "lineitem").repartition(3), p),
+    )
     a = footer_column_stats(spark, dest).collect()
     b = footer_column_stats_py4j(spark, dest).collect()
     assert _norm(a) == _norm(b)

@@ -479,8 +479,8 @@ def test_s17_fresh_session_reregisters_without_rewriting(spark, sf_dir):
     from orc_release_hdp_2_6_5_99_1_tag_spark.operators.orc_queries import (
         _bucketed_table,
         s17_bucketed_join,
-        scratch_dir,
     )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
 
     name = _bucketed_table(spark, sf_dir, "orders", "o_custkey")
     path = os.path.join(scratch_dir(sf_dir), "bucketed", "orders")

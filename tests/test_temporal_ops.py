@@ -55,6 +55,6 @@ def test_mv1_uses_cached_base_not_history_rescan(spark, sf_dir, tmp_path):
         assert changed, "poisoned base partials were ignored — MV is rescanning history"
     finally:
         shutil.rmtree(dest, ignore_errors=True)
-        fp_marker = dest + "._fp"
-        if os.path.exists(fp_marker):
-            os.remove(fp_marker)
+        marker = dest + "._done"
+        if os.path.exists(marker):
+            os.remove(marker)
