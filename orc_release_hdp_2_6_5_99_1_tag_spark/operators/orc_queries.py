@@ -1103,7 +1103,7 @@ def s22_partial_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_stream_decode.py asserts the byte fraction).
 
     Scale: `read_planned` runs the file's FileScanPlan in one Spark
-    task (mapInPandas): the task reads the file's metadata once, then
+    task (`file_job.map_files`): the task reads the file's metadata once, then
     decodes only the kept stripes from ranged reads — the driver
     parses one file tail and never touches data bytes. The kept
     groups sit at the start of the key-sorted file, so they fall in

@@ -167,7 +167,7 @@ def tree_rename(tree: Any, mapping: dict[str, str]) -> Any:
 
 def _dec_ps(t: dict) -> tuple[int, int]:
     """(precision, scale) with the v0.11 defaults the decode tier and
-    orc_schema_ddl already pin: (38, 6)."""
+    file_job.arrow_type already pin: (38, 6)."""
     p = t["precision"] if t["precision"] is not None else 38
     s = t["scale"] if t["scale"] is not None else 6
     return p, s
@@ -337,6 +337,15 @@ def elect_reader_path(
     return _elect(cands, force_positional=force_positional)
 
 
+def _path_signature(path: str):
+    """(path, schema signature) of one file: the election sweep's task."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+        parse_tail_of_file,
+    )
+
+    yield {"path": [path], "sig": [schema_signature(parse_tail_of_file(path))]}
+
+
 def elect_reader_meta(
     paths: list[str],
     spark=None,
@@ -353,42 +362,17 @@ def elect_reader_meta(
     if spark is None or len(paths) <= threshold:
         return elect_reader_path(paths, force_positional=force_positional)
 
+    import pyarrow as pa
     import pyspark.sql.functions as F
 
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import map_files
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
         parse_tail_of_file,
     )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-        _ship_package,
-    )
 
-    _ship_package(spark)
-    files_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(min(len(paths), 256))
-
-    def _sig(batches):
-        import pandas as pd
-
-        from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
-            evolution_native as evo,
-        )
-        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-            parse_tail_of_file as ptf,
-        )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "sig": [
-                        evo.schema_signature(ptf(p)) for p in pdf["path"]
-                    ],
-                }
-            )
-
+    schema = pa.schema([("path", pa.string()), ("sig", pa.string())])
     reps = (
-        files_df.mapInPandas(_sig, "path string, sig string")
+        map_files(spark, paths, _path_signature, schema)
         .groupBy("sig")
         .agg(F.min("path").alias("path"))
         .collect()

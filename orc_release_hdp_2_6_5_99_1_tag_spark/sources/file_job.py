@@ -1,0 +1,204 @@
+"""One Spark task per ORC file: the ORC tier's per-file job.
+
+Every distributed read in the tier is this one shape. That covers
+footer and row-group statistics (`footer_stats`), `orc_meta` (`meta`),
+the union shim (`union_reader`), the planned lake scan
+(`stream_decode.read_planned_lake`) and the schema-election sweep
+(`evolution_native`):
+
+- `orc_files(path)` is the one listing rule;
+- `ship_package(spark)` puts the engine package on the executors as
+  one zip, so task code imports it by its real name;
+- `map_files(spark, files, per_file, schema)` runs `per_file(path)`
+  in one task per file (up to `MAX_TASKS`) and turns what it yields
+  into Arrow record batches of the declared Arrow schema. The
+  exchange is Arrow end to end (`mapInArrow`). No pandas frame sits in
+  between, so a nullable int64 stays exact; pandas would store it as
+  float64 and round values past 2^53. A map also stays a map.
+
+The Python DataSources (`pyds`) plan the same one-partition-per-file
+shape through Spark's DataSource API, with the same listing, shipping
+and type mapping.
+
+The ORC type tree (`Footer.types`, proto/orc_proto.proto) maps to
+Arrow in one place, `arrow_type`. Spark schemas are derived from the
+Arrow schema. A tz-naive `timestamp[us]` becomes Spark TIMESTAMP,
+whose values read back unchanged under the engine's UTC session.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import tempfile
+import zipfile
+from typing import Callable, Iterable
+
+import pyarrow as pa
+
+MAX_TASKS = 256  # tasks per job; a larger file list shares tasks
+
+_PKG_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def orc_files(path: str) -> list[str]:
+    """The ORC files a path names. A file path stands for itself. A
+    directory lists the non-hidden `*.orc` regular files directly under
+    it, sorted: Spark's and the engine's part files, torn members
+    included, but not a growing file's `.flush_length` side file. An
+    empty or missing path raises."""
+    if os.path.isfile(path):
+        return [path]
+    names = os.listdir(path) if os.path.isdir(path) else []
+    files = sorted(
+        os.path.join(path, n)
+        for n in names
+        if n.endswith(".orc")
+        and not n.startswith(("_", "."))
+        and os.path.isfile(os.path.join(path, n))
+    )
+    if not files:
+        raise FileNotFoundError(f"no .orc files under {path}")
+    return files
+
+
+def package_zip(pkg_dir: str) -> str:
+    """A zip of the package at `pkg_dir`, built once per source state.
+    Its name hashes the package directory and each `.py` file's
+    relative path, size and st_mtime_ns, so two checkouts never share
+    a zip and an edit within the same second gets a new one."""
+    pkg_dir = os.path.abspath(pkg_dir)
+    sources = sorted(
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(pkg_dir)
+        for f in files
+        if f.endswith(".py")
+    )
+    key = hashlib.sha256(pkg_dir.encode())
+    for full in sources:
+        st = os.stat(full)
+        rel = os.path.relpath(full, pkg_dir)
+        key.update(f"\0{rel}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    zip_path = os.path.join(
+        tempfile.gettempdir(),
+        f"{os.path.basename(pkg_dir)}-{key.hexdigest()[:20]}.zip",
+    )
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for full in sources:
+                zf.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
+def ship_package(spark) -> None:
+    """Put the engine package on the executors' import path. Vanilla
+    sessions' Python workers do not have the repo on sys.path. A
+    re-add of the same zip is a no-op."""
+    spark.sparkContext.addPyFile(package_zip(_PKG_DIR))
+
+
+def map_files(
+    spark,
+    files: list[str],
+    per_file: Callable[[str], Iterable],
+    schema: pa.Schema,
+):
+    """Run `per_file(path)` on executors, one task per file up to
+    MAX_TASKS. `per_file` yields batches, each either a column mapping
+    `{name: values}` or a list of row dicts. Each batch becomes an
+    Arrow record batch of `schema`, and the DataFrame's Spark schema
+    is derived from `schema`."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if not files:
+        raise ValueError("map_files: empty file list")
+    ship_package(spark)
+
+    def run(batches):
+        for rb in batches:
+            for path in rb.column(0).to_pylist():
+                for out in per_file(path):
+                    if isinstance(out, list):
+                        yield pa.RecordBatch.from_pylist(out, schema=schema)
+                    else:
+                        yield pa.RecordBatch.from_pydict(out, schema=schema)
+
+    return (
+        spark.createDataFrame([(f,) for f in files], "path string")
+        .repartition(min(len(files), MAX_TASKS))
+        .mapInArrow(run, from_arrow_schema(schema))
+    )
+
+
+_ARROW_PRIMITIVES = {
+    "boolean": pa.bool_(), "tinyint": pa.int8(), "smallint": pa.int16(),
+    "int": pa.int32(), "bigint": pa.int64(), "float": pa.float32(),
+    "double": pa.float64(), "date": pa.date32(), "string": pa.string(),
+    "char": pa.string(), "varchar": pa.string(), "binary": pa.binary(),
+    "timestamp": pa.timestamp("us"),
+}  # fmt: skip
+
+
+def arrow_type(types: list[dict], cid: int, included=None) -> pa.DataType:
+    """ORC type-tree node -> Arrow type, recursively: the full
+    include-tree mapping (nested projection, reference
+    `c++/include/orc/Reader.hh:260-281`; `mapred/OrcInputFormat.
+    parseInclude:61-88` resolves the same subtree closure). A struct
+    keeps only its `included` fields. The decoders produce the
+    matching Python shapes: list -> list, struct -> field dict,
+    map -> (k, v) tuple list, union -> the engine's tagged struct
+    {_tag, f0, f1, ...} (`stream_decode._UnionDecoder`). Unknown
+    future kinds raise."""
+    t = types[cid]
+    k = t["kind"]
+    if k == "decimal":
+        # v0.11 files carry no precision/scale attributes;
+        # (38, 6) is the reference reader's default
+        p, s = t.get("precision"), t.get("scale")
+        return pa.decimal128(38 if p is None else p, 6 if s is None else s)
+    if k == "list":
+        return pa.list_(arrow_type(types, t["subtypes"][0], included))
+    if k == "map":
+        mk, mv = t["subtypes"]
+        return pa.map_(arrow_type(types, mk, included), arrow_type(types, mv, included))
+    if k == "struct":
+        return pa.struct(
+            [
+                (fn, arrow_type(types, sub, included))
+                for fn, sub in zip(t["field_names"], t["subtypes"])
+                if included is None or sub in included
+            ]
+        )
+    if k == "union":
+        return pa.struct(
+            [("_tag", pa.int8())]
+            + [
+                (f"f{i}", arrow_type(types, sub, included))
+                for i, sub in enumerate(t["subtypes"])
+            ]
+        )
+    if k in _ARROW_PRIMITIVES:
+        return _ARROW_PRIMITIVES[k]
+    raise ValueError(f"ORC kind {k!r} has no arrow mapping")
+
+
+def arrow_schema(meta: dict, columns: list[str]) -> pa.Schema:
+    """Arrow schema of `columns` read against the tail parse `meta`.
+    A dotted sub-path renders its top-level column as a struct pruned
+    to the included fields."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
+        _column_ids,
+        _included_ids,
+        output_columns,
+    )
+
+    ids = _column_ids(meta)
+    included = _included_ids(meta, columns)
+    return pa.schema(
+        [
+            (c, arrow_type(meta["types"], ids[c], included))
+            for c in output_columns(columns, meta)
+        ]
+    )

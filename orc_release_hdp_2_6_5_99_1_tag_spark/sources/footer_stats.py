@@ -5,13 +5,13 @@ the reference serves `orc-tools meta` from `Footer.statistics`
 
 Two implementations:
 
-- `footer_column_stats` (the query path): DISTRIBUTED — executors
-  parse file tails with the pure-Python parser (`footer_tail.py`,
-  shipped to workers via addPyFile) emitting typed per-file partial
-  rows, and Spark performs the final merge (min of mins, max of maxes,
-  sum of sums, OR of hasNull) — the exact partial/final design of the
-  reference's `ColumnStatisticsImpl.merge()`. One tail-read per file,
-  parallel across the cluster: scales to million-file lakes.
+- `footer_column_stats` (the query path): distributed through the
+  per-file job (`file_job.map_files`). Each task parses one file's
+  tail with the pure-Python parser (`footer_tail.py`) and emits typed
+  per-column partial rows as Arrow batches. Spark then performs the
+  final merge: min of mins, max of maxes, sum of sums, OR of hasNull.
+  This is the partial/final design of the reference's
+  `ColumnStatisticsImpl.merge()`, with one tail read per file.
 - `footer_column_stats_py4j`: the ORC Java library via py4j, driver
   side — kept as a cross-implementation oracle for tests (our parser
   vs the reference's own reader on identical files).
@@ -19,113 +19,87 @@ Two implementations:
 
 from __future__ import annotations
 
-import glob
-import os
+from datetime import date, datetime, timedelta
 from decimal import Decimal
+from functools import partial
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import map_files, orc_files
 
 _INT_KINDS = ("tinyint", "smallint", "int", "bigint")
 _STRLIKE_KINDS = ("string", "char", "varchar")
 
-_PARTIAL_SCHEMA = (
-    "column_name string, kind string, n_values long, has_null boolean,"
-    " min_long long, max_long long, sum_long long, sum_long_defined boolean,"
-    " min_dbl double, max_dbl double, sum_dbl double,"
-    " min_str string, max_str string,"
-    " min_dec string, max_dec string, sum_dec string,"
-    " true_count long"
-)
+_PARTIAL_SCHEMA = pa.schema(
+    [("column_name", pa.string()), ("kind", pa.string()),
+     ("n_values", pa.int64()), ("has_null", pa.bool_())]
+    + [(c, pa.int64()) for c in ("min_long", "max_long", "sum_long")]
+    + [("sum_long_defined", pa.bool_())]
+    + [(c, pa.float64()) for c in ("min_dbl", "max_dbl", "sum_dbl")]
+    + [(c, pa.string()) for c in ("min_str", "max_str", "min_dec", "max_dec", "sum_dec")]
+    + [("true_count", pa.int64())]
+)  # fmt: skip
 
 
-def _orc_files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    return sorted(
-        f
-        for f in glob.glob(os.path.join(path, "*.orc"))
-        + glob.glob(os.path.join(path, "part-*"))
-        if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
+def _render_ts(ms: int | None) -> str | None:
+    if ms is None:
+        return None
+    s, frac = divmod(ms, 1000)
+    t = datetime(1970, 1, 1) + timedelta(seconds=s)
+    # %Y does not zero-pad years < 1000 (glibc), which would break the
+    # lexicographic cross-file min/max merge — pad every component
+    out = (
+        f"{t.year:04d}-{t.month:02d}-{t.day:02d}"
+        f" {t.hour:02d}:{t.minute:02d}:{t.second:02d}"
     )
+    if frac:
+        out += ("." + f"{frac:03d}").rstrip("0")
+    return out
 
 
-def _make_tail_mapper():
-    """mapInPandas closure: one typed partial-stats row per (file,
-    top-level column). Self-contained: imports `footer_tail` shipped
-    via addPyFile (executors don't have this repo on sys.path)."""
-
-    def tails_to_partials(batches):
-        from datetime import date, datetime, timedelta
-
-        import pandas as pd
-
-        try:
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
-        except ImportError:  # executor: module shipped flat via addPyFile
-            import footer_tail as ft
-
-        def render_ts(ms: int | None) -> str | None:
-            if ms is None:
-                return None
-            s, frac = divmod(ms, 1000)
-            t = datetime(1970, 1, 1) + timedelta(seconds=s)
-            # %Y does not zero-pad years < 1000 (glibc), which would
-            # break the lexicographic cross-file min/max merge — pad
-            # every component explicitly
-            out = (
-                f"{t.year:04d}-{t.month:02d}-{t.day:02d}"
-                f" {t.hour:02d}:{t.minute:02d}:{t.second:02d}"
-            )
-            if frac:
-                out += ("." + f"{frac:03d}").rstrip("0")
-            return out
-
-        cols = [c.split()[0] for c in _PARTIAL_SCHEMA.split(",")]
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                tail = ft.parse_tail_of_file(path)
-                for c in tail["columns"]:
-                    t = c.get("typed", {})
-                    kind = c["kind"]
-                    r = dict.fromkeys(cols)
-                    r.update(
-                        column_name=c["name"],
-                        kind=kind,
-                        n_values=int(c.get("n_values", 0)),
-                        has_null=bool(c.get("has_null", False)),
-                        sum_long_defined=True,
-                    )
-                    if kind in _INT_KINDS:
-                        r["min_long"], r["max_long"] = t.get("min"), t.get("max")
-                        r["sum_long"] = t.get("sum")
-                        # reference omits the int sum on overflow
-                        r["sum_long_defined"] = "sum" in t
-                    elif kind in ("float", "double"):
-                        r["min_dbl"], r["max_dbl"] = t.get("min"), t.get("max")
-                        r["sum_dbl"] = t.get("sum")
-                    elif kind in _STRLIKE_KINDS:
-                        r["min_str"], r["max_str"] = t.get("min"), t.get("max")
-                    elif kind == "decimal":
-                        r["min_dec"], r["max_dec"] = t.get("min"), t.get("max")
-                        r["sum_dec"] = t.get("sum")
-                    elif kind == "boolean":
-                        r["true_count"] = t.get("true_count", 0)
-                    elif kind == "date":
-                        for k in ("min", "max"):
-                            if t.get(k) is not None:
-                                r[f"{k}_str"] = str(date(1970, 1, 1) + timedelta(days=t[k]))
-                    elif kind == "timestamp":
-                        r["min_str"] = render_ts(t.get("min_utc", t.get("min")))
-                        r["max_str"] = render_ts(t.get("max_utc", t.get("max")))
-                    elif kind == "binary":
-                        r["sum_long"] = t.get("sum")
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tails_to_partials
+def _file_partials(path: str):
+    """One typed partial-stats row per top-level column of one file."""
+    rows = []
+    for c in ft.parse_tail_of_file(path)["columns"]:
+        t = c.get("typed", {})
+        kind = c["kind"]
+        r = {
+            "column_name": c["name"],
+            "kind": kind,
+            "n_values": int(c.get("n_values", 0)),
+            "has_null": bool(c.get("has_null", False)),
+            "sum_long_defined": True,
+        }
+        if kind in _INT_KINDS:
+            r["min_long"], r["max_long"] = t.get("min"), t.get("max")
+            r["sum_long"] = t.get("sum")
+            # reference omits the int sum on overflow
+            r["sum_long_defined"] = "sum" in t
+        elif kind in ("float", "double"):
+            r["min_dbl"], r["max_dbl"] = t.get("min"), t.get("max")
+            r["sum_dbl"] = t.get("sum")
+        elif kind in _STRLIKE_KINDS:
+            r["min_str"], r["max_str"] = t.get("min"), t.get("max")
+        elif kind == "decimal":
+            r["min_dec"], r["max_dec"] = t.get("min"), t.get("max")
+            r["sum_dec"] = t.get("sum")
+        elif kind == "boolean":
+            r["true_count"] = t.get("true_count", 0)
+        elif kind == "date":
+            for k in ("min", "max"):
+                if t.get(k) is not None:
+                    r[f"{k}_str"] = str(date(1970, 1, 1) + timedelta(days=t[k]))
+        elif kind == "timestamp":
+            r["min_str"] = _render_ts(t.get("min_utc", t.get("min")))
+            r["max_str"] = _render_ts(t.get("max_utc", t.get("max")))
+        elif kind == "binary":
+            r["sum_long"] = t.get("sum")
+        rows.append(r)
+    yield rows
 
 
 def _strip_dec(col):
@@ -143,16 +117,7 @@ def footer_column_stats(spark: SparkSession, path: str) -> DataFrame:
     min/max/sum rendered as strings (heterogeneous types stack into one
     result, like `orc-tools meta` output). Distributed: executors read
     tails, Spark merges partials."""
-    files = sorted(set(_orc_files(path)))
-    if not files:
-        raise FileNotFoundError(f"no ORC files under {path}")
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail
-
-    spark.sparkContext.addPyFile(footer_tail.__file__)
-    fdf = spark.createDataFrame([(f,) for f in files], "path string")
-    partials = fdf.repartition(min(len(files), 64)).mapInPandas(
-        _make_tail_mapper(), schema=_PARTIAL_SCHEMA
-    )
+    partials = map_files(spark, orc_files(path), _file_partials, _PARTIAL_SCHEMA)
     merged = partials.groupBy("column_name", "kind").agg(
         F.sum("n_values").alias("n_values"),
         F.max("has_null").alias("has_null"),
@@ -237,7 +202,7 @@ def footer_column_stats_py4j(spark: SparkSession, path: str) -> DataFrame:
     jvm = spark._jvm  # type: ignore[attr-defined]
     conf = spark._jsc.hadoopConfiguration()  # type: ignore[attr-defined]
     merged: dict[str, dict] = {}
-    for f in sorted(set(_orc_files(path))):
+    for f in orc_files(path):
         jpath = jvm.org.apache.hadoop.fs.Path(f)
         reader = jvm.org.apache.orc.OrcFile.createReader(
             jpath, jvm.org.apache.orc.OrcFile.readerOptions(conf)
@@ -300,91 +265,71 @@ def footer_column_stats_py4j(spark: SparkSession, path: str) -> DataFrame:
 # Row-group (RowIndexEntry) statistics — the reference's THIRD stats level
 # ---------------------------------------------------------------------------
 
-_RG_SCHEMA = (
-    "path string, column_name string, stripe_idx int, group_idx int,"
-    " group_ord int, start_row long, rows_in_group long,"
-    " n_values long, has_null boolean, min_val string, max_val string"
-)
+_RG_SCHEMA = pa.schema(
+    [("path", pa.string()), ("column_name", pa.string())]
+    + [(c, pa.int32()) for c in ("stripe_idx", "group_idx", "group_ord")]
+    + [(c, pa.int64()) for c in ("start_row", "rows_in_group", "n_values")]
+    + [("has_null", pa.bool_()), ("min_val", pa.string()), ("max_val", pa.string())]
+)  # fmt: skip
 
 
-def _make_rowindex_mapper():
-    """mapInPandas closure: one row per (file, column, row group) with
-    the RowIndexEntry statistics (`OrcProto.RowIndexEntry`:
-    positions=1, statistics=2 — proto/orc_proto.proto:84-91, surfaced
-    by `orc-tools meta --withIndex`, read by
-    `RecordReaderImpl.readRowIndex`). Self-contained for addPyFile
-    shipping, like the file-stats mapper above.
+def _file_rowgroups(path: str, columns: list[str]):
+    """One row per (column, row group) of one file with the
+    RowIndexEntry statistics (`OrcProto.RowIndexEntry`: positions=1,
+    statistics=2 — proto/orc_proto.proto:84-91, surfaced by
+    `orc-tools meta --withIndex`, read by
+    `RecordReaderImpl.readRowIndex`).
 
     start_row / rows_in_group come from stripe geometry (stripe row
     offsets + the footer's rowIndexStride), NOT from the entry's
     n_values — numberOfValues counts non-null values, so geometry is
     the only null-safe way to place a group in the file's row space."""
-
-    def files_to_rowgroups(batches):
-        import pandas as pd
-
-        try:
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
-        except ImportError:  # executor: module shipped flat via addPyFile
-            import footer_tail as ft
-
-        cols = [
-            "path", "column_name", "stripe_idx", "group_idx", "group_ord",
-            "start_row", "rows_in_group", "n_values", "has_null",
-            "min_val", "max_val",
-        ]  # fmt: skip
-        for pdf in batches:
-            rows = []
-            for path, cols_csv in zip(pdf["path"], pdf["cols"]):
-                tail = ft.parse_tail_of_file(path)
-                ids = {c["name"]: c["col_id"] for c in tail["columns"]}
-                stride = tail["row_index_stride"]
-                if not stride:
-                    # orc.create.index=false / stride 0: no row-group
-                    # geometry exists — zero silent rows or garbage
-                    # start_row arithmetic would both be wrong answers
-                    raise ValueError(
-                        f"{path}: rowIndexStride=0 (written without row "
-                        f"indexes); row-group statistics are undefined"
-                    )
-                stripes = ft.parse_stripe_footers(path)
-                for cname in cols_csv.split(","):
-                    if cname not in ids:
-                        raise KeyError(
-                            f"column {cname!r} not in {path}: {sorted(ids)}"
-                        )
-                    per_stripe = ft.parse_row_index(path, ids[cname])
-                    if any(not entries for entries in per_stripe):
-                        raise ValueError(
-                            f"{path}: column {cname!r} has a stripe with no "
-                            f"RowIndexEntry despite rowIndexStride={stride}"
-                        )
-                    row_offset = 0
-                    g_ord = 0
-                    for s_idx, (st, entries) in enumerate(zip(stripes, per_stripe)):
-                        for g_idx, e in enumerate(entries):
-                            typed = e.get("typed", {})
-                            mn, mx = typed.get("min"), typed.get("max")
-                            rows.append(
-                                (
-                                    path,
-                                    cname,
-                                    s_idx,
-                                    g_idx,
-                                    g_ord,
-                                    row_offset + g_idx * stride,
-                                    min(stride, st["numberOfRows"] - g_idx * stride),
-                                    e.get("n_values", 0),
-                                    bool(e.get("has_null")),
-                                    None if mn is None else str(mn),
-                                    None if mx is None else str(mx),
-                                )
-                            )
-                            g_ord += 1
-                        row_offset += st["numberOfRows"]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files_to_rowgroups
+    tail = ft.parse_tail_of_file(path)
+    ids = {c["name"]: c["col_id"] for c in tail["columns"]}
+    stride = tail["row_index_stride"]
+    if not stride:
+        # orc.create.index=false / stride 0: no row-group geometry
+        # exists — zero silent rows or garbage start_row arithmetic
+        # would both be wrong answers
+        raise ValueError(
+            f"{path}: rowIndexStride=0 (written without row "
+            f"indexes); row-group statistics are undefined"
+        )
+    stripes = ft.parse_stripe_footers(path)
+    rows = []
+    for cname in columns:
+        if cname not in ids:
+            raise KeyError(f"column {cname!r} not in {path}: {sorted(ids)}")
+        per_stripe = ft.parse_row_index(path, ids[cname])
+        if any(not entries for entries in per_stripe):
+            raise ValueError(
+                f"{path}: column {cname!r} has a stripe with no "
+                f"RowIndexEntry despite rowIndexStride={stride}"
+            )
+        row_offset = 0
+        g_ord = 0
+        for s_idx, (st, entries) in enumerate(zip(stripes, per_stripe)):
+            for g_idx, e in enumerate(entries):
+                typed = e.get("typed", {})
+                mn, mx = typed.get("min"), typed.get("max")
+                rows.append(
+                    {
+                        "path": path,
+                        "column_name": cname,
+                        "stripe_idx": s_idx,
+                        "group_idx": g_idx,
+                        "group_ord": g_ord,
+                        "start_row": row_offset + g_idx * stride,
+                        "rows_in_group": min(stride, st["numberOfRows"] - g_idx * stride),
+                        "n_values": e.get("n_values", 0),
+                        "has_null": bool(e.get("has_null")),
+                        "min_val": None if mn is None else str(mn),
+                        "max_val": None if mx is None else str(mx),
+                    }
+                )
+                g_ord += 1
+            row_offset += st["numberOfRows"]
+    yield rows
 
 
 def rowgroup_stats(spark: SparkSession, path: str, columns: list[str]) -> DataFrame:
@@ -399,14 +344,5 @@ def rowgroup_stats(spark: SparkSession, path: str, columns: list[str]) -> DataFr
     do ranged reads of each stripe's index region only (tail + index
     bytes, never data pages) — scales to million-file lakes with no
     driver-side parsing."""
-    files = sorted(set(_orc_files(path)))
-    if not files:
-        raise FileNotFoundError(f"no ORC files under {path}")
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail
-
-    spark.sparkContext.addPyFile(footer_tail.__file__)
-    cols_csv = ",".join(columns)
-    fdf = spark.createDataFrame([(f, cols_csv) for f in files], "path string, cols string")
-    return fdf.repartition(min(len(files), 64)).mapInPandas(
-        _make_rowindex_mapper(), schema=_RG_SCHEMA
-    )
+    per_file = partial(_file_rowgroups, columns=list(columns))
+    return map_files(spark, orc_files(path), per_file, _RG_SCHEMA)

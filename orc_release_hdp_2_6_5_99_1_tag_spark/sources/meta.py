@@ -5,141 +5,69 @@ shortcut (SURVEY §4 custom (c)).
 
 The reference answers count/min/max/sum from footer statistics without
 scanning rows (`ColumnStatisticsImpl.java`, `Footer.statistics`). Spark
-4's ORC scan doesn't expose aggregate pushdown to Python, so we read
-footers directly with pyarrow.orc on the driver — file tails only, no
-data pages; at 100 TB this is one tail-read per file and should be
-distributed (mapPartitions over file lists) — `orc_meta_distributed`
-does exactly that.
+4's ORC scan doesn't expose aggregate pushdown to Python, so executors
+read footers directly with pyarrow.orc: file tails only, no data
+pages, one task per file through the per-file job
+(`file_job.map_files`).
 """
 
 from __future__ import annotations
 
-import glob
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import map_files, orc_files
 
-def _orc_files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    return sorted(
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.orc"), recursive=True)
-        + glob.glob(os.path.join(path, "**", "part-*"), recursive=True)
-        if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-    )
+_META_SCHEMA = pa.schema(
+    [
+        ("file", pa.string()),
+        ("nrows", pa.int64()),
+        ("nstripes", pa.int64()),
+        ("compression", pa.string()),
+        ("compression_size", pa.int64()),
+        ("row_index_stride", pa.int64()),
+        ("writer", pa.string()),
+        ("content_length", pa.int64()),
+        ("ncolumns", pa.int32()),
+    ]
+)
 
 
-def _file_meta_rows(path: str) -> list[dict]:
-    """Per-file footer facts (schema, rows, stripes, compression)."""
+def _file_meta(path: str):
+    """Footer facts (schema, rows, stripes, compression) of one file."""
     from pyarrow import orc as pa_orc
 
-    rows = []
-    for f in sorted(set(_orc_files(path))):
-        o = pa_orc.ORCFile(f)
-        rows.append(
-            {
-                "file": os.path.basename(f),
-                "nrows": int(o.nrows),
-                "nstripes": int(o.nstripes),
-                "compression": str(o.compression),
-                "compression_size": int(o.compression_size),
-                "row_index_stride": int(o.row_index_stride),
-                "writer": str(o.writer),
-                "content_length": int(o.content_length),
-                "ncolumns": len(o.schema),
-            }
-        )
-    return rows
+    o = pa_orc.ORCFile(path)
+    yield [
+        {
+            "file": os.path.basename(path),
+            "nrows": int(o.nrows),
+            "nstripes": int(o.nstripes),
+            "compression": str(o.compression),
+            "compression_size": int(o.compression_size),
+            "row_index_stride": int(o.row_index_stride),
+            "writer": str(o.writer),
+            "content_length": int(o.content_length),
+            "ncolumns": len(o.schema),
+        }
+    ]
 
 
 def orc_meta(spark: SparkSession, path: str) -> DataFrame:
-    """`orc-tools meta` as a DataFrame (driver-side tail reads)."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("file", T.StringType()),
-            T.StructField("nrows", T.LongType()),
-            T.StructField("nstripes", T.LongType()),
-            T.StructField("compression", T.StringType()),
-            T.StructField("compression_size", T.LongType()),
-            T.StructField("row_index_stride", T.LongType()),
-            T.StructField("writer", T.StringType()),
-            T.StructField("content_length", T.LongType()),
-            T.StructField("ncolumns", T.IntegerType()),
-        ]
-    )
-    return spark.createDataFrame(_file_meta_rows(path), schema)
-
-
-def orc_meta_distributed(spark: SparkSession, path: str) -> DataFrame:
-    """Same facts, but footer reads run on executors (scale path: one
-    task per file batch instead of a driver-side loop)."""
-    files = sorted(set(_orc_files(path)))
-    if not files:
-        return orc_meta(spark, path)
-
-    # self-contained closure: executors do not have this repo on their
-    # import path, so the tail-reading logic is inlined (pickled by value)
-    def read_tails(it):
-        import os as _os
-
-        import pandas as pd
-        from pyarrow import orc as pa_orc
-
-        for pdf in it:
-            out = []
-            for f in pdf["path"]:
-                o = pa_orc.ORCFile(f)
-                out.append(
-                    {
-                        "file": _os.path.basename(f),
-                        "nrows": int(o.nrows),
-                        "nstripes": int(o.nstripes),
-                        "compression": str(o.compression),
-                        "compression_size": int(o.compression_size),
-                        "row_index_stride": int(o.row_index_stride),
-                        "writer": str(o.writer),
-                        "content_length": int(o.content_length),
-                        "ncolumns": len(o.schema),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "file",
-                    "nrows",
-                    "nstripes",
-                    "compression",
-                    "compression_size",
-                    "row_index_stride",
-                    "writer",
-                    "content_length",
-                    "ncolumns",
-                ],
-            )
-
-    fdf = spark.createDataFrame([(f,) for f in files], "path string")
-    return fdf.repartition(min(len(files), 32)).mapInPandas(
-        read_tails,
-        schema=(
-            "file string, nrows long, nstripes long, compression string,"
-            " compression_size long, row_index_stride long, writer string,"
-            " content_length long, ncolumns int"
-        ),
-    )
+    """`orc-tools meta` as a DataFrame: one row per file, read from its
+    tail on an executor."""
+    return map_files(spark, orc_files(path), _file_meta, _META_SCHEMA)
 
 
 def orc_file_stats_from_footer(spark: SparkSession, path: str) -> DataFrame:
     """Metadata-only total row count per ORC directory — the footer
-    statistics shortcut (no data pages touched). Uses the distributed
-    footer reader: at a million files this is a parallel tail-read
-    job, not a driver loop."""
+    statistics shortcut (no data pages touched). At a million files
+    this is a parallel tail-read job, not a driver loop."""
     import pyspark.sql.functions as F
 
-    return orc_meta_distributed(spark, path).agg(
+    return orc_meta(spark, path).agg(
         F.count("*").alias("nfiles"),
         F.sum("nrows").alias("total_rows"),
         F.sum("nstripes").alias("total_stripes"),

@@ -83,18 +83,15 @@ def recover_orc_dir(spark: SparkSession, src: str, dest: str) -> dict:
     torn/corrupt ORC files by copying every file whose footer parses
     into a clean directory (originals untouched — the reference's
     side-backup behavior). Returns counts."""
-    import glob
     import shutil
 
     from pyarrow import orc as pa_orc
 
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import orc_files
+
     os.makedirs(dest, exist_ok=True)
     good, bad = 0, 0
-    for f in sorted(
-        set(glob.glob(os.path.join(src, "*.orc")) + glob.glob(os.path.join(src, "part-*")))
-    ):
-        if os.path.basename(f).startswith(("_", ".")):
-            continue
+    for f in orc_files(src):
         try:
             pa_orc.ORCFile(f)  # parses the tail; raises on torn files
             shutil.copy2(f, os.path.join(dest, os.path.basename(f)))

@@ -11,30 +11,36 @@ surface as a QUERYABLE table instead of a CLI dump (reference:
 `tools/src/FileMetadata.cc`, `OrcFile.createReader` +
 `Reader.getStripeStatistics`).
 
-Planning contract: `partitions()` lists files on the DRIVER (metadata
-listing only — no parsing); each executor task gets ONE file and does
-ranged reads of the tail regions with the repo's pure-Python parser
+Planning contract: `partitions()` lists files on the DRIVER with
+`file_job.orc_files` (metadata listing only — no parsing); each
+executor task gets ONE file and does ranged reads of the tail regions
+with the repo's pure-Python parser
 (`footer_tail.parse_tail_of_file(include_stripe_stats=True)` +
 `parse_stripe_footers`), never a data scan. A million-file lake fans
-out one task per file, the same topology as `sources/footer_stats.py`'s
-mapInPandas variant — this module is that capability re-expressed
+out one task per file, the same topology as the per-file job
+(`file_job.map_files`) — this module is that capability re-expressed
 through the engine's native source-plugin API, so it composes with
 `spark.read` options; for SQL, register a temp view over the loaded
 DataFrame (CREATE TABLE ... USING orc_meta parses, but this Spark
 build does not forward DDL OPTIONS to Python sources — pinned in
 tests/test_python_datasource.py).
 
-Worker-shipping contract (same as footer_stats): external drivers run
-vanilla sessions whose Python workers do NOT have this repo on
-sys.path, so (a) `footer_tail` is shipped flat via addPyFile and
-imported with a flat fallback, and (b) the DataSource class itself is
-defined INSIDE the registration function so cloudpickle serializes it
-BY VALUE instead of by module reference (a module-level class would
-unpickle as `import orc_release_hdp_2_6_5_99_1_tag_spark...` on the
-worker and fail).
+Worker-shipping contract: external drivers run vanilla sessions whose
+Python workers do NOT have this repo on sys.path. Every register_*
+function ships the engine package as one zip (`file_job.ship_package`),
+so task code imports the package by its real name. The DataSource
+classes are defined inside factory functions, so cloudpickle
+serializes them by value.
 """
 
 from __future__ import annotations
+
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import (
+    arrow_schema,
+    arrow_type,
+    orc_files,
+    ship_package,
+)
 
 SCHEMA = (
     "file string, stripe_idx int, column_name string, kind string, "
@@ -75,17 +81,11 @@ def _build_datasource_class():
 
         def partitions(self):
             # DRIVER-side: file LISTING only (no parsing) — 1 task/file
-            import glob
-            import os
-
-            files = sorted(glob.glob(os.path.join(self._path, "*.orc")))
-            if not files:
-                raise FileNotFoundError(f"no .orc files under {self._path}")
-            return [InputPartition(f) for f in files]
+            return [InputPartition(f) for f in orc_files(self._path)]
 
         def read(self, partition):
             # EXECUTOR-side: ranged tail reads via the pure-Python
-            # parser, shipped flat via addPyFile by register_orc_meta.
+            # parser, in the package zip shipped by register_orc_meta.
             # Emits ONE pyarrow.RecordBatch per file instead of
             # per-row tuples (supported by the Spark 4 Python
             # DataSource read contract): the (file × stripes ×
@@ -97,12 +97,9 @@ def _build_datasource_class():
 
             import pyarrow as pa
 
-            try:
-                from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
-                    footer_tail as ft,
-                )
-            except ImportError:  # vanilla-session worker: flat module
-                import footer_tail as ft
+            from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
+                footer_tail as ft,
+            )
 
             path = partition.value
             tail = ft.parse_tail_of_file(path, include_stripe_stats=True)
@@ -174,13 +171,10 @@ def _build_datasource_class():
 
 
 def register_orc_meta(spark) -> None:
-    """Idempotent per-session registration: ships footer_tail flat to
-    the workers (addPyFile is a no-op on re-add of the same path) and
-    registers the by-value-pickled DataSource class (re-register
-    replaces, matching spark.udtf.register semantics)."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail
-
-    spark.sparkContext.addPyFile(footer_tail.__file__)
+    """Idempotent per-session registration: ships the package zip to
+    the workers and registers the by-value-pickled DataSource class
+    (re-register replaces, matching spark.udtf.register semantics)."""
+    ship_package(spark)
     spark.dataSource.register(_build_datasource_class())
 
 
@@ -540,12 +534,8 @@ def _spark_schema_to_orc_ddl(schema) -> tuple[str, list[str]]:
 
 
 def register_orc_native_sink(spark) -> None:
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-        _ship_package,
-    )
-
     # write() imports orc_encode on the WORKER — ship the package zip
-    _ship_package(spark)
+    ship_package(spark)
     spark.dataSource.register(_build_orc_native_sink_class())
 
 
@@ -591,65 +581,6 @@ def _build_orc_native_class():
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import _column_ids
 
-    def _pa_type(types, cid, included=None):
-        """ORC type-tree node -> arrow type, recursively — the full
-        include-tree mapping (nested projection is P2, reference
-        `c++/include/orc/Reader.hh:260-281`; `mapred/OrcInputFormat.
-        parseInclude:61-88` resolves the same subtree closure). The
-        composite decoders already produce the matching Python
-        shapes: list -> list, struct -> field dict, map -> (k, v)
-        tuple list, union -> the engine's tagged-struct convention
-        {_tag, f0, f1, ...} (`stream_decode._UnionDecoder`). Unknown
-        future kinds raise, which excludes the column from the
-        default projection."""
-        import pyarrow as pa
-
-        prim = {
-            "boolean": pa.bool_(), "tinyint": pa.int8(),
-            "smallint": pa.int16(), "int": pa.int32(),
-            "bigint": pa.int64(), "float": pa.float32(),
-            "double": pa.float64(), "date": pa.date32(),
-            "string": pa.string(), "char": pa.string(),
-            "varchar": pa.string(), "binary": pa.binary(),
-            "timestamp": pa.timestamp("us"),
-        }  # fmt: skip
-        t = types[cid]
-        k = t["kind"]
-        if k == "decimal":
-            # v0.11 files carry no precision/scale attributes;
-            # (38, 6) is the reference reader's default
-            p, s = t.get("precision"), t.get("scale")
-            return pa.decimal128(38 if p is None else p, 6 if s is None else s)
-        if k == "list":
-            return pa.list_(_pa_type(types, t["subtypes"][0], included))
-        if k == "map":
-            mk, mv = t["subtypes"]
-            return pa.map_(
-                _pa_type(types, mk, included), _pa_type(types, mv, included)
-            )
-        if k == "struct":
-            # include-pruned, matching the decoder's pruned field dicts
-            return pa.struct(
-                [
-                    (fn, _pa_type(types, sub, included))
-                    for fn, sub in zip(t["field_names"], t["subtypes"])
-                    if included is None or sub in included
-                ]
-            )
-        if k == "union":
-            return pa.struct(
-                [("_tag", pa.int8())]
-                + [
-                    (f"f{i}", _pa_type(types, sub, included))
-                    for i, sub in enumerate(t["subtypes"])
-                ]
-            )
-        if k in prim:
-            return prim[k]
-        raise ValueError(
-            f"orc_native: ORC kind {k!r} has no arrow mapping"
-        )
-
     def _default_columns(meta):
         """columns option omitted: every top-level column whose type
         tree the arrow exchange maps (since the nested mapping this
@@ -657,7 +588,7 @@ def _build_orc_native_class():
         cols = []
         for name, cid in _column_ids(meta).items():
             try:
-                _pa_type(meta["types"], cid)
+                arrow_type(meta["types"], cid)
             except ValueError:
                 continue
             cols.append(name)
@@ -727,10 +658,9 @@ def _build_orc_native_class():
         return None  # String* etc.
 
     def _first_meta(options):
-        """ONE driver-side glob + tail parse, shared by schema() and
+        """ONE driver-side listing + tail parse, shared by schema() and
         the reader (the arrow schema and default columns are constant
         across the lake and pickled to every task)."""
-        import glob
         import os
 
         from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
@@ -742,9 +672,7 @@ def _build_orc_native_class():
             raise ValueError(
                 "orc_native requires .option('path', <orc dir>)"
             )
-        files = sorted(glob.glob(os.path.join(path, "*.orc")))
-        if not files:
-            raise FileNotFoundError(f"no .orc files under {path}")
+        files = orc_files(path)
         if _use_side_file(options):
             files = [_bounded_view(f) for f in files]
         # evolved lakes (C1): the READER schema is ELECTED — the file
@@ -871,7 +799,7 @@ def _build_orc_native_class():
                 options.get("tolerate_missing_schema", "true")
             ).lower() not in ("0", "false", "no")
             self._tree = None  # set by pushFilters
-            self._schema = self._arrow_schema(meta)
+            self._schema = arrow_schema(meta, self._columns)
             # the elected reader schema's tail parse ships to every
             # task: field-level NULL-fill and widening conversions in
             # scan_file_evolved key off it (evolution_native)
@@ -891,35 +819,12 @@ def _build_orc_native_class():
                 self._tree = ("and", *leaves)
 
         def partitions(self):
-            import glob
-            import os
-
-            files = sorted(glob.glob(os.path.join(self._path, "*.orc")))
-            if not files:
-                raise FileNotFoundError(f"no .orc files under {self._path}")
+            files = orc_files(self._path)
             if self._use_side:
                 # bounded views are built DRIVER-side (partition
                 # planning), so tasks scan plain complete files
                 files = [_bounded_view(f) for f in files]
             return [InputPartition(f) for f in files]
-
-        def _arrow_schema(self, meta):
-            import pyarrow as pa
-
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-                _included_ids,
-                output_columns,
-            )
-
-            ids = _column_ids(meta)
-            # dotted sub-paths (nested projection P2): the schema is
-            # the PRUNED struct per top-level name; _included_ids
-            # raises the clear unknown-column/field error
-            included = _included_ids(meta, self._columns)
-            fields = []
-            for c in output_columns(self._columns, meta):
-                fields.append((c, _pa_type(meta["types"], ids[c], included)))
-            return pa.schema(fields)
 
         def read(self, partition):
             import os
@@ -942,12 +847,8 @@ def _build_orc_native_class():
                 force_positional=self._force_positional,
                 tolerate_missing_schema=self._tolerate_missing,
             ):
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(res["columns"][c], type=schema.field(c).type)
-                        for c in outs
-                    ],
-                    schema=schema,
+                yield pa.RecordBatch.from_pydict(
+                    {c: res["columns"][c] for c in outs}, schema=schema
                 )
             self._drop_audit(audit)
 
@@ -975,19 +876,17 @@ def _build_orc_native_class():
                 self._meta_cache = _first_meta(self.options)
             return self._meta_cache
 
-        def schema(self) -> str:
-            from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-                orc_schema_ddl,
-            )
+        def schema(self):
+            from pyspark.sql.pandas.types import from_arrow_schema
 
-            first, meta = self._cached_meta()
+            _, meta = self._cached_meta()
             cols = self.options.get("columns")
             names = (
                 [c.strip() for c in cols.split(",")]
                 if cols
                 else _default_columns(meta)
             )
-            return orc_schema_ddl(first, names)
+            return from_arrow_schema(arrow_schema(meta, names))
 
         def reader(self, schema) -> OrcNativeReader:
             first, meta = self._cached_meta()
@@ -997,15 +896,9 @@ def _build_orc_native_class():
 
 
 def register_orc_native(spark) -> None:
-    """Idempotent: ships the whole engine package (the decode chain
-    spans footer_tail/tools/truth/bloom, so the flat single-module
-    trick does not cover it), enables the Python-source filter
-    pushdown conf (off by default in Spark 4.1), and registers the
-    by-value-pickled class."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-        _ship_package,
-    )
-
-    _ship_package(spark)
+    """Idempotent: ships the engine package zip, enables the
+    Python-source filter pushdown conf (off by default in Spark 4.1),
+    and registers the by-value-pickled class."""
+    ship_package(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(_build_orc_native_class())

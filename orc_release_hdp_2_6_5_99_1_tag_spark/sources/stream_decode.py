@@ -50,8 +50,9 @@ scan into a `FileScanPlan` (namespace map, effective SArg, level-1/2
 decisions, level-3 byte ranges, converters); scanning executes that
 plan and `explain_lake_scan` reports its summary. Scale: one file is
 the per-task unit — `read_planned_lake` (and `read_planned`, its
-one-file case) fans out one Spark task per file (mapInPandas), the
-same topology as `sources/pyds.py`, so a 100-TB lake decodes planned
+one-file case) fans out one Spark task per file through the per-file
+job (`file_job.map_files`, Arrow batches end to end), the same
+topology as `sources/pyds.py`, so a 100-TB lake decodes planned
 ranges with cluster-wide parallelism while the driver never touches
 data bytes.
 """
@@ -1214,41 +1215,6 @@ def decode_stripe(
     ).decode(stripe_idx)
 
 
-def _ship_package(spark) -> None:
-    """Ship the whole engine package to the workers as one zip (an
-    addPyFile re-add of the same path is a no-op, and the zip is
-    cached until any source file changes). Each task builds and runs
-    its file's FileScanPlan (see read_planned_lake), so workers need
-    the package importable by its real name — the flat single-module
-    trick pyds/footer_stats use doesn't cover a module graph."""
-    import os
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg_name = os.path.basename(pkg_dir)
-    newest = 0.0
-    sources = []
-    for root, _dirs, files in os.walk(pkg_dir):
-        for f in files:
-            if f.endswith(".py"):
-                full = os.path.join(root, f)
-                sources.append(full)
-                newest = max(newest, os.path.getmtime(full))
-    import tempfile
-
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{pkg_name}-{int(newest)}.zip"
-    )
-    if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for full in sources:
-                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                zf.write(full, rel)
-        os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
-
-
 def keep_all_picks(path: str) -> list[list[dict]]:
     """pickRowGroups-shaped keep-everything decisions (one entry per
     row group per stripe, from the root column's row index) — the
@@ -1267,76 +1233,6 @@ def _keep_all(row_index: list[list[dict]]) -> list[list[dict]]:
         ]
         for per_stripe in row_index
     ]
-
-
-def orc_schema_ddl(path: str, columns: list[str]) -> str:
-    """Spark DDL schema for `columns` derived from one metadata-only
-    tail parse of an ORC file (union -> the engine's tagged-struct
-    convention; char/varchar -> string, matching Spark's reader).
-    Dotted sub-paths render their top-level column as a PRUNED struct
-    carrying only the included fields (nested projection P2)."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        _column_ids,
-        _included_ids,
-        output_columns,
-    )
-
-    meta = parse_tail_of_file(path)
-    ids = _column_ids(meta)
-    types = meta["types"]
-    included = _included_ids(meta, columns)
-    spark_types = {
-        "boolean": "boolean", "tinyint": "tinyint", "smallint": "smallint",
-        "int": "int", "bigint": "bigint", "float": "float",
-        "double": "double", "date": "date", "string": "string",
-        "char": "string", "varchar": "string", "timestamp": "timestamp",
-        "binary": "binary",
-    }  # fmt: skip
-
-    def _sql_type(cid: int) -> str:
-        t = types[cid]
-        if t["kind"] == "decimal":
-            # v0.11 decimal types carry no precision/scale attributes;
-            # (38, 6) is the reference reader's default (same rule as
-            # _ColumnDecoder's decode path)
-            p_ = t["precision"] if t["precision"] is not None else 38
-            s_ = t["scale"] if t["scale"] is not None else 6
-            return f"decimal({p_},{s_})"
-        if t["kind"] == "list":
-            return f"array<{_sql_type(t['subtypes'][0])}>"
-        if t["kind"] == "map":
-            k, v = t["subtypes"]
-            return f"map<{_sql_type(k)},{_sql_type(v)}>"
-        if t["kind"] == "struct":
-            inner = ", ".join(
-                f"{_quote(fn)}: {_sql_type(sub)}"
-                for fn, sub in zip(t["field_names"], t["subtypes"])
-                if sub in included
-            )
-            return f"struct<{inner}>"
-        if t["kind"] == "union":
-            inner = ", ".join(
-                f"f{i}: {_sql_type(sub)}"
-                for i, sub in enumerate(t["subtypes"])
-            )
-            return f"struct<_tag: tinyint, {inner}>"
-        return spark_types[t["kind"]]
-
-    return ", ".join(
-        f"{_quote(c)} {_sql_type(ids[c])}"
-        for c in output_columns(columns, meta)
-    )
-
-
-def _quote(name: str) -> str:
-    """Backtick-quote a column/field name for Spark DDL when it is not
-    a plain identifier (legal ORC names may contain literal dots —
-    pinned by test_orc_native_literal_dot_filter_attr_degrades)."""
-    import re
-
-    if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-        return name
-    return "`" + name.replace("`", "``") + "`"
 
 
 def file_prunes(path: str, tree: Any) -> dict:
@@ -1613,43 +1509,25 @@ def read_planned_lake(spark, paths: list[str], tree: Any, columns: list[str],
     data IO, and a file skipped at level 1 costs its task one tail
     read. Returns the decoded rows; the caller applies the residual
     row-level predicate (pruning is conservative)."""
-    import pandas as pd
-
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        output_columns,
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import (
+        arrow_schema,
+        map_files,
     )
 
-    if not paths:
-        raise ValueError("read_planned_lake: empty file list")
-    _ship_package(spark)
-    reader_path, reader_meta = _reader_schema(
-        paths, reader_path, force_positional, spark
-    )
-    outs = output_columns(columns, reader_meta)
-    schema = orc_schema_ddl(reader_path, columns)
-    files_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(len(paths))
+    _, reader_meta = _reader_schema(paths, reader_path, force_positional, spark)
+    schema = arrow_schema(reader_meta, columns)
 
-    def _scan(batches):
-        from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
-            stream_decode as m,
-        )
+    def scan(path: str):
+        # per-file name-based evolution: missing columns null-fill,
+        # predicates on them disable pruning for that file only
+        # (residual filter stays exact)
+        for res in scan_file_evolved(
+            path, tree, columns, reader_meta=reader_meta,
+            force_positional=force_positional,
+        ):
+            yield {c: res["columns"][c] for c in schema.names}
 
-        for pdf in batches:
-            for path in pdf["path"]:
-                # per-file name-based evolution: missing columns
-                # null-fill, predicates on them disable pruning for
-                # that file only (residual filter stays exact)
-                for res in m.scan_file_evolved(
-                    path, tree, columns, reader_meta=reader_meta,
-                    force_positional=force_positional,
-                ):
-                    yield pd.DataFrame(
-                        {c: res["columns"][c] for c in outs}
-                    )
-
-    return files_df.mapInPandas(_scan, schema=schema)
+    return map_files(spark, paths, scan, schema)
 
 
 def _reader_schema(paths: list[str], reader_path: str | None,

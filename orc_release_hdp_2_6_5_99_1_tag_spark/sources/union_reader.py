@@ -10,10 +10,10 @@ byte-tag stream + sparse child columns (`TreeReaderFactory.java:
 (`ReaderImpl.java` postscript handling). pyarrow's ORC reader does
 both, so the shim distributes pyarrow decoding over executors:
 
-- one task per file via `mapInArrow` over the file list — footer and
-  stripe bytes are read inside the task, never on the driver, so the
-  shim scales like any file-parallel scan, and the data stays arrow
-  end-to-end (no pandas dtype lossiness for nullable ints);
+- one task per file through the per-file job (`file_job.map_files`):
+  footer and stripe bytes are read inside the task, never on the
+  driver, so the shim scales like any file-parallel scan, and the data
+  stays Arrow end to end;
 - `sparse_union<T0,T1,...>` columns become
   `struct<_tag: tinyint, f0: T0, f1: T1, ...>` (the
   `functions/union_type.py` convention) with each variant masked to
@@ -28,14 +28,12 @@ variant 0.
 
 from __future__ import annotations
 
-import glob
-import os
-from typing import Iterator
-
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.orc as pa_orc
 from pyspark.sql import DataFrame, SparkSession
+
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import map_files, orc_files
 
 
 def _tagged_type(t: pa.DataType) -> pa.DataType:
@@ -121,45 +119,23 @@ def _null_marked_offsets(a: pa.Array) -> pa.Array:
     return pa.array(vals + [offs[len(a)]], type=pa.int32())
 
 
-def _orc_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            f
-            for f in glob.glob(os.path.join(path, "*"))
-            if not os.path.basename(f).startswith(("_", "."))
-        )
-    return [path]
-
-
 def read_orc_tagged(spark: SparkSession, path: str) -> DataFrame:
     """Distributed pyarrow ORC read with union→tagged-struct decoding.
 
     The driver opens one footer to derive the shim schema; row data is
     decoded inside executor tasks, one file per task.
     """
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    files = _orc_files(path)
+    files = orc_files(path)
     probe = pa_orc.ORCFile(files[0]).schema
     arrow_schema = pa.schema([pa.field(f.name, _tagged_type(f.type)) for f in probe])
-    spark_schema = from_arrow_schema(arrow_schema)
-    if not spark_schema.fields:
+    if not arrow_schema.names:
         return spark.range(0).select()
 
-    paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        len(files)
-    )
+    def decode(p: str):
+        tbl = pa_orc.ORCFile(p).read()
+        yield dict(zip(arrow_schema.names, map(_convert_array, tbl.columns)))
 
-    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # mapInArrow: arrow end to end — no pandas dtype lossiness
-        # (nullable int64 would otherwise round-trip through float64)
-        for rb in batches:
-            for p in rb.column(0).to_pylist():
-                tbl = pa_orc.ORCFile(p).read()
-                cols = [_convert_array(tbl.column(i)) for i in range(tbl.num_columns)]
-                yield from pa.table(cols, schema=arrow_schema).to_batches()
-
-    return paths.mapInArrow(decode, schema=spark_schema)
+    return map_files(spark, files, decode, arrow_schema)
 
 
 def read_orc_permissive(spark: SparkSession, path: str) -> DataFrame:
@@ -171,7 +147,9 @@ def read_orc_permissive(spark: SparkSession, path: str) -> DataFrame:
         df = spark.read.orc(path)
         df.schema  # force analysis so unsupported types surface here
         return df
-    except Exception:
-        if not os.path.exists(path) or not _orc_files(path):
-            raise  # nothing for the shim either — surface the real cause
-        return read_orc_tagged(spark, path)
+    except Exception as native_error:
+        try:
+            return read_orc_tagged(spark, path)
+        except FileNotFoundError:
+            # nothing for the shim either — surface the real cause
+            raise native_error from None

@@ -1196,7 +1196,7 @@ def test_election_cache_across_loads(spark, positional_lake, monkeypatch):
     lake_dir = os.path.dirname(positional_lake["old"])
     for _ in range(2):
         src = cls(options={"path": lake_dir})
-        assert "bigint" in src.schema()
+        assert "bigint" in src.schema().simpleString()
     assert calls["n"] == 1
     # a changed lake re-elects
     import shutil
@@ -1523,3 +1523,127 @@ def test_explain_equals_scan(request, lake, tree, cols, force):
         reasons = {os.path.basename(r["path"]): r["keep_all_reason"] for r in rep}
         assert reasons["c_gen0.orc"] == "ppd-unsafe conversion"
         assert reasons["a_gen2.orc"] is None
+
+
+# ---------------------------------------------------------------------------
+# declared Spark schema: pinned per lake fixture, for both native readers
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def typed_lake(spark, tmp_path_factory):
+    """Two files covering every primitive kind the Arrow exchange maps,
+    timestamps included (also nested), plus struct/list/map."""
+    import pyspark.sql.functions as F
+
+    out = str(tmp_path_factory.mktemp("typedlake") / "lake")
+    ts = F.lit("2013-06-01 01:02:03.456789").cast("timestamp") + F.make_interval(
+        hours=F.col("id").cast("int")
+    )
+    (
+        spark.range(4000)
+        .select(
+            "id",
+            F.col("id").cast("int").alias("i32"),
+            (F.col("id") % 100).cast("smallint").alias("i16"),
+            (F.col("id") % 64).cast("tinyint").alias("i8"),
+            (F.col("id") % 2 == 0).alias("flag"),
+            (F.col("id") * F.lit(0.25)).cast("float").alias("f32"),
+            (F.col("id") / F.lit(7.0)).alias("f64"),
+            F.date_add(F.lit("2020-01-01").cast("date"), (F.col("id") % 500).cast("int")).alias("d"),
+            F.when(F.col("id") % 5 != 0, ts).alias("ts"),
+            (F.col("id") * F.lit(7) / F.lit(4)).cast("decimal(14,3)").alias("dec"),
+            F.md5(F.col("id").cast("string")).alias("s"),
+            F.col("id").cast("string").cast("binary").alias("b"),
+            F.struct(F.col("id").cast("int").alias("a"), ts.alias("t")).alias("st"),
+            F.array(ts, ts).alias("arr"),
+            F.create_map(F.lit("k"), (F.col("id") / 4).cast("decimal(10,2)")).alias("m"),
+        )
+        .repartitionByRange(2, "id")
+        .sortWithinPartitions("id")
+        .write.mode("overwrite")
+        .option("orc.row.index.stride", "1000")
+        .orc(out)
+    )
+    return {"files": sorted(glob.glob(os.path.join(out, "*.orc")))}
+
+
+_TYPED_COLS = [
+    "id", "i32", "i16", "i8", "flag", "f32", "f64", "d", "ts", "dec", "s",
+    "b", "st", "arr", "m",
+]  # fmt: skip
+_ACID_ROW = "struct<operation:int,rowId:bigint,currentTransaction:bigint,row:struct<{}>>"
+# (columns, force_positional, simpleString the DDL mapping declared)
+_SCHEMA_CASES = {
+    "evolved_lake": (
+        ["id", "v", "st", "w"], False,
+        "struct<id:bigint,v:double,st:struct<a:bigint,b:string>,w:string>",
+    ),
+    "positional_lake": (
+        ["id", "name", "extra"], False,
+        "struct<id:bigint,name:string,extra:double>",
+    ),
+    "legacy_named_lake": (["id", "name"], True, "struct<id:bigint,name:string>"),
+    "acid_positional_lake": (
+        _ACID_COLS, False, _ACID_ROW.format("id:bigint,name:string,extra:double"),
+    ),
+    "s29_acid_lake": (
+        _ACID_COLS, False,
+        _ACID_ROW.format(
+            "o_orderkey:bigint,o_orderstatus:string,o_totalprice:double,o_custkey:bigint"
+        ),
+    ),
+    "range_lake": (["id", "v", "s"], False, "struct<id:bigint,v:int,s:string>"),
+    "typed_lake": (
+        _TYPED_COLS, False,
+        "struct<id:bigint,i32:int,i16:smallint,i8:tinyint,flag:boolean,f32:float,"
+        "f64:double,d:date,ts:timestamp,dec:decimal(14,3),s:string,b:binary,"
+        "st:struct<a:int,t:timestamp>,arr:array<timestamp>,m:map<string,decimal(10,2)>>",
+    ),
+}  # fmt: skip
+
+
+@pytest.mark.parametrize("lake", sorted(_SCHEMA_CASES))
+def test_declared_schema_unchanged(request, spark, lake):
+    """The Spark schema both native readers declare, derived from the
+    one ORC-type → Arrow mapping, renders exactly as the DDL mapping
+    it replaced did; tz-naive ORC timestamps stay Spark `timestamp`."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import (
+        register_orc_native,
+    )
+
+    cols, force, want = _SCHEMA_CASES[lake]
+    files = request.getfixturevalue(lake)["files"]
+    planned = sd.read_planned_lake(spark, files, None, cols, force_positional=force)
+    register_orc_native(spark)
+    native = (
+        spark.read.format("orc_native")
+        .option("path", os.path.dirname(files[0]))
+        .option("columns", ",".join(cols))
+        .option("force_positional", str(force).lower())
+        .load()
+    )
+    assert planned.schema.simpleString() == native.schema.simpleString() == want
+
+
+def test_typed_lake_values_match_spark_reader(spark, typed_lake):
+    """Every kind, timestamps included, keeps its value through the
+    Arrow exchange of both native readers under the UTC session."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import (
+        register_orc_native,
+    )
+
+    files = typed_lake["files"]
+    register_orc_native(spark)
+    want = sorted(spark.read.orc(files).select(*_TYPED_COLS).collect())
+    planned = sd.read_planned_lake(spark, files, None, _TYPED_COLS).collect()
+    native = (
+        spark.read.format("orc_native")
+        .option("path", os.path.dirname(files[0]))
+        .option("columns", ",".join(_TYPED_COLS))
+        .load()
+        .collect()
+    )
+    assert len(want) == 4000
+    assert sorted(planned) == want
+    assert sorted(native) == want

@@ -82,10 +82,46 @@ def test_orc_meta_one_task_per_file(spark, orc_dir):
     assert df.rdd.getNumPartitions() == n_files
 
 
-def test_orc_meta_empty_dir_fails_loudly(spark, tmp_path):
-    """Repo convention: loud guards, not silent empties."""
-    with pytest.raises(Exception, match="no .orc files"):
-        spark.read.format("orc_meta").option("path", str(tmp_path)).load().collect()
+def _source_scan(fmt):
+    def scan(spark, path):
+        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import (
+            register_orc_native,
+        )
+
+        register_orc_native(spark)
+        return spark.read.format(fmt).option("path", path).load()
+
+    return scan
+
+
+def _empty_path_readers():
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_stats import (
+        footer_column_stats,
+        rowgroup_stats,
+    )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.meta import orc_meta
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.union_reader import (
+        read_orc_tagged,
+    )
+
+    return {
+        "orc_meta": orc_meta,
+        "footer_column_stats": footer_column_stats,
+        "rowgroup_stats": lambda spark, path: rowgroup_stats(spark, path, ["k"]),
+        "read_orc_tagged": read_orc_tagged,
+        "orc_meta_source": _source_scan("orc_meta"),
+        "orc_native_source": _source_scan("orc_native"),
+    }
+
+
+@pytest.mark.parametrize("reader", sorted(_empty_path_readers()))
+def test_orc_meta_empty_dir_fails_loudly(spark, tmp_path, reader):
+    """Repo convention: loud guards, not silent empties. Every ORC-tier
+    reader refuses a directory with no .orc files in it, and says so."""
+    (tmp_path / "_SUCCESS").write_bytes(b"")
+    (tmp_path / "notes.txt").write_bytes(b"not orc")
+    with pytest.raises(Exception, match=f"no .orc files under {tmp_path}"):
+        _empty_path_readers()[reader](spark, str(tmp_path)).collect()
 
 
 def test_orc_meta_requires_path(spark):

@@ -1,7 +1,8 @@
 """Randomized ORC write→read round-trips (the reference's
 `TestVectorOrcFile` seeded-random strategy, SURVEY §5.3) via
 hypothesis: arbitrary rows of the mixed scalar schema must survive the
-ORC round trip exactly. Also covers orc_meta_distributed."""
+ORC round trip exactly. Also covers orc_meta against pyarrow's own
+footer reader."""
 
 from __future__ import annotations
 
@@ -17,7 +18,7 @@ from hypothesis import strategies as st
 # the nightly/full mode (same flag as the golden-corpus sweep) all 12
 _EXAMPLES = 12 if os.environ.get("SPARK_GRAFT_FULL_SWEEP") == "1" else 5
 
-from orc_release_hdp_2_6_5_99_1_tag_spark.sources.meta import orc_meta_distributed
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources.meta import orc_meta
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_io import orc_copy, read_orc, write_orc
 
 _SCHEMA = T.StructType(
@@ -67,10 +68,20 @@ def test_random_scalar_roundtrip(spark, tmp_path_factory, rows):
     assert _norm([tuple(r) for r in back.collect()]) == _norm(rows)
 
 
-def test_orc_meta_distributed_matches_driver_side(spark, sf_dir):
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.meta import orc_meta
+def test_orc_meta_matches_pyarrow_footers(spark, sf_dir):
+    """orc_meta's per-file rows are the footer facts pyarrow.orc.ORCFile
+    reports for each file of the copy."""
+    from pyarrow import orc as pa_orc
 
     path = orc_copy(spark, sf_dir, "lineitem")
-    a = sorted(map(tuple, orc_meta(spark, path).collect()))
-    b = sorted(map(tuple, orc_meta_distributed(spark, path).collect()))
-    assert a == b and len(a) >= 1
+    want = []
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".orc") or name.startswith(("_", ".")):
+            continue
+        o = pa_orc.ORCFile(os.path.join(path, name))
+        want.append(
+            (name, o.nrows, o.nstripes, str(o.compression), o.compression_size,
+             o.row_index_stride, str(o.writer), o.content_length, len(o.schema))
+        )  # fmt: skip
+    got = sorted(map(tuple, orc_meta(spark, path).collect()))
+    assert got == want and len(got) >= 1

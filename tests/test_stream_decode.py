@@ -771,9 +771,15 @@ def test_read_planned_v011_decimal_schema(spark):
     golden = "/root/reference/examples/orc-file-11-format.orc"
     if not os.path.exists(golden):
         pytest.skip("reference examples absent")
-    assert "decimal1 decimal(38,6)" in sd.orc_schema_ddl(
-        golden, ["decimal1"]
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import arrow_schema
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+        parse_tail_of_file,
     )
+
+    schema = from_arrow_schema(arrow_schema(parse_tail_of_file(golden), ["decimal1"]))
+    assert "decimal1:decimal(38,6)" in schema.simpleString()
     tree = ("or", ("is_null", "int1", None),
             ("not", ("is_null", "int1", None)))
     rows = sd.read_planned(
