@@ -63,10 +63,13 @@ def orc_files(path: str) -> list[str]:
 
 
 def package_zip(pkg_dir: str) -> str:
-    """A zip of the package at `pkg_dir`, built once per source state.
-    Its name hashes the package directory and each `.py` file's
-    relative path, size and st_mtime_ns, so two checkouts never share
-    a zip and an edit within the same second gets a new one."""
+    """A zip of the package at `pkg_dir`, built once per source state
+    and named `<pkg>-<dirhash>-<statehash>.zip`. The first hash is of
+    the package directory, so two checkouts never share a zip. The
+    second covers each `.py` file's relative path, size and
+    st_mtime_ns, so an edit within the same second gets a new zip.
+    Building one removes the same checkout's older zips and leaves
+    other checkouts' alone."""
     pkg_dir = os.path.abspath(pkg_dir)
     sources = sorted(
         os.path.join(root, f)
@@ -74,21 +77,30 @@ def package_zip(pkg_dir: str) -> str:
         for f in files
         if f.endswith(".py")
     )
-    key = hashlib.sha256(pkg_dir.encode())
+    state = hashlib.sha256()
     for full in sources:
         st = os.stat(full)
         rel = os.path.relpath(full, pkg_dir)
-        key.update(f"\0{rel}\0{st.st_size}\0{st.st_mtime_ns}".encode())
-    zip_path = os.path.join(
-        tempfile.gettempdir(),
-        f"{os.path.basename(pkg_dir)}-{key.hexdigest()[:20]}.zip",
+        state.update(f"\0{rel}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    tmp_dir = tempfile.gettempdir()
+    prefix = (
+        f"{os.path.basename(pkg_dir)}-"
+        f"{hashlib.sha256(pkg_dir.encode()).hexdigest()[:12]}-"
     )
+    zip_path = os.path.join(tmp_dir, f"{prefix}{state.hexdigest()[:20]}.zip")
     if not os.path.exists(zip_path):
         tmp = f"{zip_path}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as zf:
             for full in sources:
                 zf.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
         os.replace(tmp, zip_path)
+        for name in os.listdir(tmp_dir):
+            old = os.path.join(tmp_dir, name)
+            if name.startswith(prefix) and name.endswith(".zip") and old != zip_path:
+                try:
+                    os.remove(old)
+                except OSError:
+                    pass  # a concurrent build removed it first
     return zip_path
 
 
@@ -106,10 +118,10 @@ def map_files(
     schema: pa.Schema,
 ):
     """Run `per_file(path)` on executors, one task per file up to
-    MAX_TASKS. `per_file` yields batches, each either a column mapping
-    `{name: values}` or a list of row dicts. Each batch becomes an
-    Arrow record batch of `schema`, and the DataFrame's Spark schema
-    is derived from `schema`."""
+    MAX_TASKS. `per_file` yields batches: a `pa.RecordBatch` of
+    `schema` passes through as is; a column mapping `{name: values}` or
+    a list of row dicts becomes one. The DataFrame's Spark schema is
+    derived from `schema`."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     if not files:
@@ -120,7 +132,9 @@ def map_files(
         for rb in batches:
             for path in rb.column(0).to_pylist():
                 for out in per_file(path):
-                    if isinstance(out, list):
+                    if isinstance(out, pa.RecordBatch):
+                        yield out
+                    elif isinstance(out, list):
                         yield pa.RecordBatch.from_pylist(out, schema=schema)
                     else:
                         yield pa.RecordBatch.from_pydict(out, schema=schema)
@@ -146,11 +160,10 @@ def arrow_type(types: list[dict], cid: int, included=None) -> pa.DataType:
     include-tree mapping (nested projection, reference
     `c++/include/orc/Reader.hh:260-281`; `mapred/OrcInputFormat.
     parseInclude:61-88` resolves the same subtree closure). A struct
-    keeps only its `included` fields. The decoders produce the
-    matching Python shapes: list -> list, struct -> field dict,
-    map -> (k, v) tuple list, union -> the engine's tagged struct
-    {_tag, f0, f1, ...} (`stream_decode._UnionDecoder`). Unknown
-    future kinds raise."""
+    keeps only its `included` fields. A union is the engine's tagged
+    struct {_tag, f0, f1, ...} (`stream_decode._Union`). The native
+    decoder builds arrays of exactly these types. Unknown future kinds
+    raise."""
     t = types[cid]
     k = t["kind"]
     if k == "decimal":

@@ -279,7 +279,7 @@ class _BitFieldWriter:
     position adds a bit-offset slot; a partial byte at a group
     boundary stays pending and is emitted with the NEXT group, which
     is exactly what the recorded (byte pos, bit offset) means to the
-    reader's BitFieldReader.seek."""
+    reader's bit-field seek (`stream_decode._Bits`)."""
 
     def __init__(self, out: _OutStream):
         self._bytes = _ByteRLEWriter(out)
@@ -308,7 +308,7 @@ class _BitFieldWriter:
 
 def _pack_bits(values: list[int], width: int) -> bytes:
     """Big-endian bit pack, zero-padded to a byte boundary (inverse of
-    stream_decode._read_bits)."""
+    stream_decode._unpack)."""
     acc = nbits = 0
     out = bytearray()
     for v in values:
@@ -1424,7 +1424,7 @@ def schema_from_type_tree(types: list[dict]) -> list[tuple[str, dict]]:
     """footer_tail.parse_tail's flattened `types` array → the writer's
     [(name, node)] top-level schema. v0.11 decimals carry no declared
     scale — default to (38, 6), the same pin the native decoder
-    quantizes to (see stream_decode._ColumnDecoder)."""
+    quantizes to (see stream_decode._Decimals)."""
 
     def node_of(tid: int) -> dict:
         t = types[tid]

@@ -799,7 +799,6 @@ def _build_orc_native_class():
                 options.get("tolerate_missing_schema", "true")
             ).lower() not in ("0", "false", "no")
             self._tree = None  # set by pushFilters
-            self._schema = arrow_schema(meta, self._columns)
             # the elected reader schema's tail parse ships to every
             # task: field-level NULL-fill and widening conversions in
             # scan_file_evolved key off it (evolution_native)
@@ -829,27 +828,20 @@ def _build_orc_native_class():
         def read(self, partition):
             import os
 
-            import pyarrow as pa
-
             from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
                 stream_decode as m,
             )
 
             path = partition.value
             audit = {"file": os.path.basename(path)}
-            schema = self._schema
-            # the arrow schema's field names ARE the output names
-            # (exact-match-aware; built once on the driver)
-            outs = schema.names
-            for res in m.scan_file_evolved(
-                path, self._tree, self._columns, audit,
+            # the plan's batches carry the reader schema: arrow_schema
+            # of the elected reader meta and the requested columns
+            yield from m.plan_file_scan(
+                path, self._tree, self._columns,
                 reader_meta=self._reader_meta,
                 force_positional=self._force_positional,
                 tolerate_missing_schema=self._tolerate_missing,
-            ):
-                yield pa.RecordBatch.from_pydict(
-                    {c: res["columns"][c] for c in outs}, schema=schema
-                )
+            ).execute(audit)
             self._drop_audit(audit)
 
         def _drop_audit(self, audit) -> None:

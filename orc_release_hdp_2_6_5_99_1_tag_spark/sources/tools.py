@@ -474,7 +474,7 @@ def orc_writer_timezones(paths: list[str]) -> list[dict]:
     wall-clock seconds back to instants (the reference reader builds
     `base_timestamp = toEpoch(2015-01-01 00:00, writerTimezone)` —
     `TreeReaderFactory.java:934-956`; the engine's decoder does the
-    same in `stream_decode._ColumnDecoder`).
+    same in `stream_decode._Timestamps`).
 
     Per file -> per stripe: the declared zone (absent -> "UTC", the
     pre-ORC-37 writer convention), the UTC offset in seconds its rules

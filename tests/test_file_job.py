@@ -151,8 +151,34 @@ def test_package_zip_is_keyed_per_checkout_and_edit(tmp_path, monkeypatch):
     assert za2 not in (za, zb)
     with zipfile.ZipFile(za2) as zf:
         assert zf.read("pkg/m.py") == b"X = 22\n"
+    assert not os.path.exists(za) and os.path.exists(zb)  # superseded
+
+
+def test_package_zip_keeps_one_zip_per_checkout(tmp_path, monkeypatch):
+    """Two edits leave one zip of the edited checkout; a second
+    checkout's zip, and a zip of no known checkout, survive."""
+    import tempfile
+
+    zips = tmp_path / "tmp"
+    zips.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(zips))
+    stray = zips / "pkg-0123456789ab.zip"  # the older one-hash naming
+    stray.write_bytes(b"")
+    second = 1_700_000_000 * 10**9
+    a = _small_package(str(tmp_path / "a"), "X = 1\n", second)
+    b = _small_package(str(tmp_path / "b"), "X = 1\n", second)
+    zb = file_job.package_zip(b)
+    m = os.path.join(a, "m.py")
+    for i in range(3):
+        with open(m, "w") as fh:
+            fh.write(f"X = {i}\n")
+        os.utime(m, ns=(second + i,) * 2)
+        za = file_job.package_zip(a)
+    assert sorted(os.listdir(zips)) == sorted(
+        os.path.basename(p) for p in (za, zb, str(stray))
+    )
     with zipfile.ZipFile(za) as zf:
-        assert zf.read("pkg/m.py") == b"X = 1\n"
+        assert zf.read("pkg/m.py") == b"X = 2\n"
 
 
 # ---------------------------------------------------------------------------
@@ -194,6 +220,10 @@ def test_per_file_job_lives_in_one_module():
     with open(_HOME) as fh:
         src = fh.read()
     assert "\ndef map_files(" in src and "\ndef orc_files(" in src
+    # the ORC queries list their lakes through file_job.orc_files too
+    queries = os.path.join(os.path.dirname(_SOURCES), "operators", "orc_queries.py")
+    globs = [o for o in _offences(queries) if "glob" in o[1]]
+    assert globs == [], f"inline glob listing in operators/orc_queries.py: {globs}"
 
 
 @pytest.mark.parametrize("kind", ["empty", "missing"])

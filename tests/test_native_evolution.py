@@ -1647,3 +1647,16 @@ def test_typed_lake_values_match_spark_reader(spark, typed_lake):
     assert len(want) == 4000
     assert sorted(planned) == want
     assert sorted(native) == want
+
+
+@pytest.mark.parametrize("lake", sorted(_SCHEMA_CASES))
+def test_arrow_parity_lakes(request, lake):
+    """Every file of every declared-schema lake decodes to pyarrow's
+    values under all / alternating / contiguous row-group picks, and
+    the batches carry the elected reader's Arrow schema."""
+    from tests.arrow_parity import check_file
+
+    cols, force, _ = _SCHEMA_CASES[lake]
+    files = request.getfixturevalue(lake)["files"]
+    _, reader_meta = sd._reader_schema(files, None, force)
+    assert sum(check_file(f, cols, reader_meta, force) for f in files) > 0

@@ -416,7 +416,7 @@ _UNION_GOLDEN = "/root/reference/examples/TestOrcFile.testUnionAndTimestamp.orc"
     not os.path.exists(_UNION_GOLDEN), reason="reference examples absent"
 )
 def test_union_decode_golden_vs_reference_dump():
-    """_UnionDecoder (UnionTreeReader parity, TreeReaderFactory.java:
+    """The union decoder (UnionTreeReader parity, TreeReaderFactory.java:
     1865-1949) decodes the reference-written union golden value-exactly
     against the reference reader's OWN expected dump — including the
     three-way distinction the Arrow shim cannot make: NULL union vs
@@ -494,7 +494,7 @@ _V11_GOLDEN = "/root/reference/examples/orc-file-11-format.orc"
     not os.path.exists(_V11_GOLDEN), reason="reference examples absent"
 )
 def test_rlev1_decode_v011_golden_vs_reference_dump():
-    """RLEv1Reader (RunLengthIntegerReader v1 parity): the v0.11
+    """The RLEv1 kernel (RunLengthIntegerReader v1 parity): the v0.11
     golden uses pre-V2 encodings (DIRECT / DICTIONARY) for every
     integer-backed stream — int DATA, string LENGTH + dictionary
     indices, timestamp DATA/SECONDARY, decimal SECONDARY, list/map
@@ -1022,3 +1022,158 @@ def test_literal_dot_column_name_resolves_whole(spark, tmp_path):
     # file-level pruning on the literal-dot name uses its own stats
     assert sd.file_prunes(path, ("less_than", "a.b", 100))["keep"] is True
     assert sd.file_prunes(path, ("less_than", "a.b", -5))["keep"] is False
+
+
+def test_arrow_parity_typed_file(typed_file):
+    """The columnar decode of the full type surface equals pyarrow's
+    read under all / alternating / contiguous row-group picks, and the
+    run walk sees every RLEv2 sub-encoding."""
+    from tests.arrow_parity import check_file
+
+    sd.RUN_COUNTER.clear()
+    assert check_file(typed_file, ALL_COLS) > 5000
+    for name in ("SHORT_REPEAT", "DIRECT", "PATCHED_BASE", "DELTA"):
+        assert sd.RUN_COUNTER.get(name, 0) > 0, name
+
+
+def test_arrow_parity_rlev1(tmp_path):
+    """The same parity on a v0.11 file (RLEv1 integer streams, both
+    run kinds), nulls and dictionary strings included."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import (
+        write_orc_native,
+    )
+    from tests.arrow_parity import check_file
+
+    n = 5_000
+    cols = {
+        "k": list(range(n)),
+        "r": [(v * 7919) % 100_003 - 50_000 for v in range(n)],
+        "x": [None if v % 11 == 3 else -v * 3 for v in range(n)],
+        "t": [(-128, 127, 0, -1)[v % 4] for v in range(n)],
+        "s": [None if v % 13 == 7 else f"name_{v % 20}" for v in range(n)],
+        "u": [f"uniq{v}" for v in range(n)],
+        "d": [Decimal(v) / 4 for v in range(n)],
+        # after 1970: pyarrow's reader skips the `secs -= 1` rule for
+        # sub-millisecond fractions (see test_scan_file_edges_exact)
+        "ts": [dt.datetime(2010, 6, 1) + dt.timedelta(seconds=v, microseconds=v) for v in range(n)],
+        "day": [dt.date(1969, 12, 1) + dt.timedelta(days=v % 90) for v in range(n)],
+        "b": [None if v % 5 == 0 else v % 3 == 1 for v in range(n)],
+        "f": [v / 8 for v in range(n)],
+    }
+    path = str(tmp_path / "v011.orc")
+    write_orc_native(
+        path, cols, "k bigint, r bigint, x int, t tinyint, s string, u string, "
+        "d decimal(10,2), ts timestamp, day date, b boolean, f double",
+        version="0.11", row_index_stride=1_000, stripe_rows=3_000,
+    )  # fmt: skip
+    sd.RUN_COUNTER.clear()
+    assert check_file(path, list(cols)) > n
+    assert sd.RUN_COUNTER.get("v1_run", 0) > 0
+    assert sd.RUN_COUNTER.get("v1_literal", 0) > 0
+
+
+_BIG = 2**53
+
+
+def test_scan_file_edges_exact(tmp_path, monkeypatch):
+    """scan_file's lists at the edges of the numpy/Python boundary,
+    against literal values: int64 past 2^53 with nulls (also on both
+    sides of a row-group boundary), tinyint -128, booleans, dates at
+    years 1 and 9999, a pre-1970 timestamp with a fraction (the
+    `secs -= 1` rule), a non-UTC writer zone across both DST switches,
+    and a timestamp past year 9999, which must raise."""
+    import datetime as dt
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import orc_encode as oe
+
+    n = 4_000  # two stripes of two 1000-row groups
+    last = dt.datetime(9999, 12, 31, 23, 59, 59)
+    utc = [
+        dt.datetime(1969, 12, 31, 23, 59, 58, 250_000),
+        dt.datetime(1960, 1, 1, 0, 0, 0, 1),
+        dt.datetime(2015, 1, 1),
+        None,
+    ]
+    # the writer encodes against the UTC base; the second stripe claims
+    # America/New_York, so each value reads back 5 h later, on the New
+    # York wall clock
+    written = [
+        dt.datetime(2021, 3, 14, 1, 59, 59, 500_000),
+        dt.datetime(2021, 3, 14, 2, 0, 0),
+        dt.datetime(2021, 11, 7, 0, 59, 59),
+        dt.datetime(2021, 11, 7, 1, 0, 0),
+        dt.datetime(2021, 7, 1, 12, 0, 0, 1),
+    ]
+    new_york = [
+        dt.datetime(2021, 3, 14, 1, 59, 59, 500_000),  # EST
+        dt.datetime(2021, 3, 14, 3, 0, 0),  # EDT: 02:xx never happened
+        dt.datetime(2021, 11, 7, 1, 59, 59),  # EDT
+        dt.datetime(2021, 11, 7, 1, 0, 0),  # EST: 01:xx again
+        dt.datetime(2021, 7, 1, 13, 0, 0, 1),
+    ]
+    big = [_BIG + 1 + i for i in range(n)]
+    for i in (1, 999, 1000, 2999, 3000):
+        big[i] = None
+    cols = {
+        "k": list(range(n)),
+        "big": big,
+        "tiny": [(-128, 127, 0, -1)[i % 4] for i in range(n)],
+        "flag": [None if i % 5 == 4 else i % 3 == 0 for i in range(n)],
+        "day": [
+            (dt.date(1, 1, 1), dt.date(1969, 12, 31), dt.date(1970, 1, 1),
+             dt.date(9999, 12, 31))[i % 4]
+            for i in range(n)
+        ],  # fmt: skip
+        "ts": [utc[i % 4] for i in range(2000)] + [written[i % 5] for i in range(2000)],
+        "late": [dt.datetime(2000, 1, 1)] * (n - 1) + [last],
+    }
+    zones = iter(["UTC", "America/New_York"])
+    pb_string, ts_parts = oe._pb_string, oe._ts_parts
+    monkeypatch.setattr(
+        oe, "_pb_string",
+        lambda f, s: pb_string(f, next(zones) if (f, s) == (3, "UTC") else s),
+    )
+
+    def one_day_late(v):
+        secs, nanos = ts_parts(v)
+        return (secs + 86_400 if v == last else secs), nanos
+
+    monkeypatch.setattr(oe, "_ts_parts", one_day_late)
+    path = str(tmp_path / "edges.orc")
+    oe.write_orc_native(
+        path, cols, "k bigint, big bigint, tiny tinyint, flag boolean, day date, "
+        "ts timestamp, late timestamp",
+        row_index_stride=1_000, stripe_rows=2_000,
+    )  # fmt: skip
+    monkeypatch.undo()
+
+    names = ["k", "big", "tiny", "flag", "day", "ts"]
+    got = {c: [] for c in names}
+    for res in sd.scan_file(path, None, names):
+        for c in names:
+            got[c].extend(res["columns"][c])
+    assert got["big"][:3] == [_BIG + 1, None, _BIG + 3]
+    assert got["big"][998:1002] == [_BIG + 999, None, None, _BIG + 1002]
+    assert got["big"] == big
+    assert got["tiny"][:4] == [-128, 127, 0, -1] and got["tiny"] == cols["tiny"]
+    assert got["flag"][:5] == [True, False, False, True, None]
+    assert got["flag"] == cols["flag"]
+    assert got["day"][:4] == [
+        dt.date(1, 1, 1), dt.date(1969, 12, 31), dt.date(1970, 1, 1), dt.date(9999, 12, 31),
+    ]  # fmt: skip
+    assert got["day"] == cols["day"]
+    assert got["ts"][:4] == utc
+    assert got["ts"][2000:2005] == new_york
+    assert got["ts"] == [utc[i % 4] for i in range(2000)] + [
+        new_york[i % 5] for i in range(2000)
+    ]
+    # one kept group on each side of the null-straddled boundary
+    for lo, row in ((0, 999), (1000, 1000)):
+        res = list(sd.scan_file(path, ("between", "k", [lo, lo + 999]), ["k", "big"]))
+        vals = dict(zip(res[0]["columns"]["k"], res[0]["columns"]["big"]))
+        assert len(vals) == 1000 and vals[row] is None
+    with pytest.raises(OverflowError):
+        list(sd.scan_file(path, None, ["late"]))
