@@ -1,4 +1,4 @@
-"""Pure-Python ORC v0.12 WRITER — the parity tier's write side.
+"""Native (JVM-free) ORC v0.12 WRITER — the parity tier's write side.
 
 Why this exists: the engine's production writes go through Spark's
 embedded Java ORC library (`sources/orc_io.write_orc`), but the parity
@@ -28,11 +28,21 @@ few wide outliers, preparePatchedBlob analog), `RunLengthByteWriter`,
 hashes), and the position-recorder layout mirrored read-side by
 `footer_tail.get_index_position` (RecordReaderUtils.java:387-457).
 
-Scale doctrine: this is the PARITY/VERIFICATION tier — per-value
-Python by design, same as the native decode path the judge has
-repeatedly adjudicated. Production 100-TB writes stay on the JVM
-writer; this module's job is to prove the format knowledge and to
-manufacture precise fixtures.
+Columnar encode: like the reference's `Writer.addRowBatch`, which takes
+whole `VectorizedRowBatch`es, every column arrives as one Arrow array
+(Arrow arrays, record batches and tables go straight in; Python lists
+are converted once, by `pa.array`, with a per-value coercion only for
+the forms Arrow does not take). Each node then encodes a whole stripe
+of row groups from numpy buffers: group statistics are min/max/sum
+over slices, the bloom hashes run in wrapping uint64, the RLE encoders
+find their runs with array kernels and pack one bit width per numpy
+call, so Python visits run headers, not values. Runs are chosen by
+one greedy scan (a constant run first, then a fixed delta, then
+literals up to the next constant triple), and the file bytes are
+pinned by tests/test_writer_bytes.py. The per-value loops left are
+decimal varints and char/varchar length enforcement.
+Production 100-TB writes stay on the JVM writer; this module proves
+the format knowledge and manufactures precise fixtures.
 
 Deliberate divergences from the HDP-era source (documented both ways,
 following the embedded-Java-ORC pin of [[reference-divergences]]):
@@ -49,16 +59,18 @@ following the embedded-Java-ORC pin of [[reference-divergences]]):
 
 from __future__ import annotations
 
-import datetime as _dt
 import math
 import struct
 import zlib
-from decimal import Decimal
-from typing import Any
+from decimal import Context, Decimal
+from typing import Any, Callable
 
-from .bloom import DEFAULT_SEED, murmur3_hash64, wang_long_hash
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
-_MASK64 = (1 << 64) - 1
+from .bloom import DEFAULT_SEED
+from .file_job import arrow_type
 
 # proto Type.Kind codes (orc_proto.proto:145-164), inverse of
 # footer_tail.KIND
@@ -87,8 +99,6 @@ _ENCODING_CODE = {"DIRECT": 0, "DICTIONARY": 1, "DIRECT_V2": 2, "DICTIONARY_V2":
 # seconds between the Unix epoch and the ORC timestamp base
 # (2015-01-01 00:00:00 UTC — the writer timezone this module pins)
 _TS_BASE = 1_420_070_400
-_EPOCH_DT = _dt.datetime(1970, 1, 1)
-_EPOCH_DATE = _dt.date(1970, 1, 1)
 
 
 # ---------------------------------------------------------------------------
@@ -97,6 +107,8 @@ _EPOCH_DATE = _dt.date(1970, 1, 1)
 
 
 def _uvarint(n: int) -> bytes:
+    if n < 0x80:
+        return bytes((n,))
     out = bytearray()
     while True:
         b = n & 0x7F
@@ -215,277 +227,14 @@ def _compress_chunk(raw: bytes, comp: str) -> bytes | None:
     raise ValueError(f"unsupported write compression {comp!r} (LZO is read-only)")
 
 
-class _ByteRLEWriter:
-    """RunLengthByteWriter: runs of 3..130 as [count-3][value],
-    literals of 1..128 as [256-count][bytes]. flush() closes pending
-    state so runs never straddle a row-group boundary (run-offset
-    position slot stays 0)."""
+# ---------------------------------------------------------------------------
+# columnar kernels: whole-array numpy forms of the reference's value
+# encoders. Each returns one stripe's stream bytes plus the byte offset
+# at which every row group starts, so no run crosses a group boundary
+# and every run-offset position slot stays 0.
+# ---------------------------------------------------------------------------
 
-    def __init__(self, out: _OutStream):
-        self._out = out
-        self._lit = bytearray()
-        self._run_val = -1
-        self._run_len = 0
-
-    def write(self, b: int) -> None:
-        if self._run_len > 0:
-            if b == self._run_val and self._run_len < 130:
-                self._run_len += 1
-                return
-            self._emit_run()
-        if self._lit and self._lit[-1] == b and (
-            len(self._lit) >= 2 and self._lit[-2] == b
-        ):
-            # promote trailing pair + this byte to a run
-            del self._lit[-2:]
-            self._emit_literals()
-            self._run_val, self._run_len = b, 3
-            return
-        self._lit.append(b)
-        if len(self._lit) == 128:
-            self._emit_literals()
-
-    def _emit_run(self) -> None:
-        while self._run_len >= 3:
-            n = min(self._run_len, 130)
-            self._out.write(bytes((n - 3, self._run_val)))
-            self._run_len -= n
-        for _ in range(self._run_len):  # leftover 1-2 copies as literals
-            self._lit.append(self._run_val)
-        self._run_len = 0
-
-    def _emit_literals(self) -> None:
-        i = 0
-        while i < len(self._lit):
-            n = min(len(self._lit) - i, 128)
-            self._out.write(bytes((256 - n,)) + bytes(self._lit[i : i + n]))
-            i += n
-        self._lit.clear()
-
-    def flush(self) -> None:
-        if self._run_len:
-            self._emit_run()
-        if self._lit:
-            self._emit_literals()
-
-    def pos(self) -> list[int]:
-        """Stream slots + the RLE run-offset slot (always 0: flush()
-        precedes every position record)."""
-        return self._out.pos() + [0]
-
-
-class _BitFieldWriter:
-    """BitFieldWriter: bits MSB-first into bytes over byte-RLE. The
-    position adds a bit-offset slot; a partial byte at a group
-    boundary stays pending and is emitted with the NEXT group, which
-    is exactly what the recorded (byte pos, bit offset) means to the
-    reader's bit-field seek (`stream_decode._Bits`)."""
-
-    def __init__(self, out: _OutStream):
-        self._bytes = _ByteRLEWriter(out)
-        self._cur = 0
-        self._nbits = 0
-
-    def write(self, bit: int) -> None:
-        self._cur = (self._cur << 1) | (bit & 1)
-        self._nbits += 1
-        if self._nbits == 8:
-            self._bytes.write(self._cur)
-            self._cur, self._nbits = 0, 0
-
-    def group_boundary(self) -> None:
-        self._bytes.flush()
-
-    def pos(self) -> list[int]:
-        return self._bytes.pos() + [self._nbits]
-
-    def finish(self) -> None:
-        if self._nbits:
-            self._bytes.write(self._cur << (8 - self._nbits))
-            self._cur, self._nbits = 0, 0
-        self._bytes.flush()
-
-
-def _pack_bits(values: list[int], width: int) -> bytes:
-    """Big-endian bit pack, zero-padded to a byte boundary (inverse of
-    stream_decode._unpack)."""
-    acc = nbits = 0
-    out = bytearray()
-    for v in values:
-        acc = (acc << width) | (v & ((1 << width) - 1))
-        nbits += width
-        while nbits >= 8:
-            nbits -= 8
-            out.append((acc >> nbits) & 0xFF)
-            acc &= (1 << nbits) - 1
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
-class _RLEv2Writer:
-    """RunLengthIntegerWriterV2, the three sub-encodings a writer may
-    always choose (SHORT_REPEAT for 3-10 repeats, DELTA for longer
-    constant and fixed-delta runs, DIRECT for everything else;
-    PATCHED_BASE is an optional compression win, not a format
-    requirement). Values are buffered and encoded at flush() — called
-    at every row-group boundary — so no run crosses a boundary and the
-    run-offset position slot is always 0."""
-
-    def __init__(self, out: _OutStream, signed: bool):
-        self._out = out
-        self._signed = signed
-        self._buf: list[int] = []
-
-    def write(self, v: int) -> None:
-        self._buf.append(v)
-
-    def write_all(self, vs: list[int]) -> None:
-        self._buf.extend(vs)
-
-    def flush(self) -> None:
-        v = self._buf
-        n = len(v)
-        i = 0
-        while i < n:
-            # constant run?
-            j = i + 1
-            while j < n and j - i < 512 and v[j] == v[i]:
-                j += 1
-            run = j - i
-            if run >= 3:
-                if run <= 10:
-                    self._short_repeat(v[i], run)
-                else:
-                    self._fixed_delta(v[i], 0, run)
-                i = j
-                continue
-            # fixed-delta run?
-            if i + 2 < n and v[i + 2] - v[i + 1] == v[i + 1] - v[i] != 0:
-                d = v[i + 1] - v[i]
-                j = i + 2
-                while j + 1 < n and j + 1 - i < 512 and v[j + 1] - v[j] == d:
-                    j += 1
-                self._fixed_delta(v[i], d, j + 1 - i)
-                i = j + 1
-                continue
-            # literals until the next constant run of >= 3 (max 512)
-            j = i
-            while j < n and j - i < 512:
-                if j + 2 < n and v[j] == v[j + 1] == v[j + 2]:
-                    break
-                j += 1
-            if not self._maybe_patched_base(v[i:j]):
-                self._direct(v[i:j])
-            i = j
-        self._buf = []
-
-    def _enc(self, x: int) -> int:
-        return _zz_enc(x) if self._signed else x
-
-    def _short_repeat(self, value: int, repeat: int) -> None:
-        enc = self._enc(value)
-        width = max(1, (enc.bit_length() + 7) // 8)
-        self._out.write(bytes((((width - 1) << 3) | (repeat - 3),)))
-        self._out.write(enc.to_bytes(width, "big"))
-
-    def _fixed_delta(self, base: int, delta: int, length: int) -> None:
-        # DELTA header: 11 | width-code 0 (fixed) | (length-1) 9 bits
-        lm1 = length - 1
-        self._out.write(bytes(((3 << 6) | ((lm1 >> 8) & 1), lm1 & 0xFF)))
-        self._out.write(
-            _uvarint(_zz_enc(base)) if self._signed else _uvarint(base)
-        )
-        self._out.write(_uvarint(_zz_enc(delta)))  # delta base: always signed
-
-    def _maybe_patched_base(self, values: list[int]) -> bool:
-        """PATCHED_BASE (RunLengthIntegerWriterV2.preparePatchedBlob
-        analog): when a literal run is mostly-narrow with a few wide
-        outliers, encode deltas from the min at the 90th-percentile
-        width and carry the outliers' high bits as (gap, patch)
-        entries. Operates on RAW values (the sub-encoding is not
-        zigzagged — the reader sign-extends at the end); falls back to
-        DIRECT (returns False) when there are no outliers, too many
-        (> 31), or no size win."""
-        n = len(values)
-        if n < 4:
-            return False
-        base = min(values)
-        if base < -(1 << 62) or max(values) - base >= (1 << 63):
-            return False  # sign-magnitude base / delta overflow guards
-        deltas = [x - base for x in values]
-        bits = sorted(max(1, d.bit_length()) for d in deltas)
-        width = _closest_width(bits[(n * 9) // 10 - 1])
-        max_bits = bits[-1]
-        if max_bits <= width:
-            return False  # no outliers: plain DIRECT on deltas wins nothing
-        patch_idx = [i for i, d in enumerate(deltas) if d.bit_length() > width]
-        if not (1 <= len(patch_idx) <= 31):
-            return False
-        patch_bits = max((deltas[i] >> width).bit_length() for i in patch_idx)
-        patch_width = _closest_width(max(1, patch_bits))
-        # gap list with (255, 0) continuation fillers
-        entries: list[tuple[int, int]] = []
-        prev = 0
-        for i in patch_idx:
-            gap = i - prev
-            while gap > 255:
-                entries.append((255, 0))
-                gap -= 255
-            entries.append((gap, deltas[i] >> width))
-            prev = i
-        if len(entries) > 31:
-            return False
-        gap_width = max(1, max(g for g, _ in entries).bit_length())
-        entry_width = _closest_width(patch_width + gap_width)
-        # size check vs DIRECT on the zigzag/raw encoding
-        direct_width = _closest_width(
-            max(max(self._enc(x).bit_length() for x in values), 1)
-        )
-        base_mag = -base if base < 0 else base
-        base_width = max(1, (base_mag.bit_length() + 1 + 7) // 8)
-        pb_bits = (
-            32 + base_width * 8 + n * width + len(entries) * entry_width
-        )
-        if pb_bits >= n * direct_width:
-            return False
-        # emit
-        lm1 = n - 1
-        self._out.write(
-            bytes(
-                (
-                    (2 << 6) | (_WIDTH_CODE[width] << 1) | ((lm1 >> 8) & 1),
-                    lm1 & 0xFF,
-                    ((base_width - 1) << 5) | _WIDTH_CODE[patch_width],
-                    ((gap_width - 1) << 5) | len(entries),
-                )
-            )
-        )
-        raw = base_mag.to_bytes(base_width, "big")
-        if base < 0:  # sign-magnitude MSB
-            raw = bytes((raw[0] | 0x80,)) + raw[1:]
-        self._out.write(raw)
-        mask = (1 << width) - 1
-        self._out.write(_pack_bits([d & mask for d in deltas], width))
-        self._out.write(
-            _pack_bits(
-                [(g << patch_width) | p for g, p in entries], entry_width
-            )
-        )
-        return True
-
-    def _direct(self, values: list[int]) -> None:
-        enc = [self._enc(x) for x in values]
-        width = _closest_width(max(max(e.bit_length() for e in enc), 1))
-        code = _WIDTH_CODE[width]
-        lm1 = len(values) - 1
-        self._out.write(
-            bytes(((1 << 6) | (code << 1) | ((lm1 >> 8) & 1), lm1 & 0xFF))
-        )
-        self._out.write(_pack_bits(enc, width))
-
-    def pos(self) -> list[int]:
-        return self._out.pos() + [0]
+_U64 = np.uint64
 
 
 def _closest_width(n: int) -> int:
@@ -495,72 +244,526 @@ def _closest_width(n: int) -> int:
     return 64
 
 
-class _RLEv1Writer:
-    """RunLengthIntegerWriter (version 1 — what v0.11 files carry):
+_CLOSEST = np.array([_closest_width(b) for b in range(65)], dtype=np.int64)
+_CODE_OF = np.zeros(65, dtype=np.int64)
+_CODE_OF[_WIDTH_TABLE] = np.arange(len(_WIDTH_TABLE))
+
+
+def _ranges(starts, lens) -> np.ndarray:
+    """The concatenated index ranges [start, start + len)."""
+    lens = np.asarray(lens, dtype=np.int64)
+    ends = np.cumsum(lens)
+    if not len(ends) or ends[-1] == 0:
+        return np.zeros(0, dtype=np.int64)
+    shift = np.repeat(np.asarray(starts, dtype=np.int64) - (ends - lens), lens)
+    return np.arange(ends[-1], dtype=np.int64) + shift
+
+
+def _next_true(flags: np.ndarray, none: int) -> np.ndarray:
+    """For each i, the smallest k >= i with flags[k] (`none` if no k)."""
+    idx = np.where(flags, np.arange(len(flags)), none)
+    return np.minimum.accumulate(idx[::-1])[::-1]
+
+
+def _bit_length(u: np.ndarray) -> np.ndarray:
+    """int.bit_length of every uint64 (the float exponent overshoots by
+    one just below a power of two; the shift test takes it back)."""
+    u = np.asarray(u).astype(_U64, copy=False)
+    e = np.minimum(np.frexp(u.astype(np.float64))[1], 64).astype(np.int64)
+    over = (e > 0) & ((u >> np.maximum(e - 1, 0).astype(_U64)) == 0)
+    return e - over
+
+
+def _zigzag(v: np.ndarray) -> np.ndarray:
+    v = np.asarray(v, dtype=np.int64)
+    return ((v << 1) ^ (v >> 63)).view(_U64)
+
+
+def _varint_matrix(u: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128 bytes of every uint64: an (m, 10) byte matrix and the
+    byte count of each row."""
+    u = np.asarray(u).astype(_U64, copy=False)
+    nb = np.maximum(1, (_bit_length(u) + 6) // 7)
+    cols = np.arange(10)
+    mat = ((u[:, None] >> (7 * cols).astype(_U64)) & _U64(0x7F)).astype(np.uint8)
+    mat |= (cols[None, :] < (nb - 1)[:, None]).astype(np.uint8) << 7
+    return mat, nb
+
+
+def _varints(u: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128 bytes of every uint64, concatenated, plus each value's
+    byte count."""
+    mat, nb = _varint_matrix(u)
+    return mat[np.arange(10)[None, :] < nb[:, None]], nb
+
+
+def _pack(u: np.ndarray, lens, width: int) -> np.ndarray:
+    """Big-endian bit pack of consecutive runs of `lens` values, each
+    run zero-padded to a byte boundary (inverse of
+    stream_decode's unpack)."""
+    u = np.asarray(u).astype(_U64, copy=False)
+    if width % 8 == 0:
+        mat = np.empty((len(u), width // 8), dtype=np.uint8)
+        for j in range(width // 8):
+            mat[:, j] = (u >> _U64(width - 8 * (j + 1))) & _U64(0xFF)
+        return mat.ravel()
+    bits = np.empty((len(u), width), dtype=np.uint8)
+    for j in range(width):
+        bits[:, j] = (u >> _U64(width - 1 - j)) & _U64(1)
+    flat = bits.ravel()
+    lens = np.asarray(lens, dtype=np.int64)
+    pad = (-lens * width) % 8
+    if pad.any():
+        flat = np.insert(flat, np.repeat(np.cumsum(lens) * width, pad), 0)
+    return np.packbits(flat)
+
+
+def _assemble(head: np.ndarray, hlen, pay_parts: list, pay_start, pay_len):
+    """Interleave each run's header row (`head[i, :hlen[i]]`) with its
+    payload slice (of the concatenated `pay_parts`) in run order."""
+    n_runs, hw = head.shape
+    src = np.concatenate([head.ravel()] + pay_parts) if pay_parts else head.ravel()
+    starts = np.empty(2 * n_runs, dtype=np.int64)
+    lens = np.empty(2 * n_runs, dtype=np.int64)
+    starts[0::2] = np.arange(n_runs) * hw
+    lens[0::2] = hlen
+    starts[1::2] = np.asarray(pay_start) + n_runs * hw
+    lens[1::2] = pay_len
+    return src[_ranges(starts, lens)], np.asarray(hlen) + np.asarray(pay_len)
+
+
+def _group_offsets(run_starts, run_bytes, bounds) -> np.ndarray:
+    """Byte offset of every group boundary: runs never straddle one."""
+    off = np.concatenate([[0], np.cumsum(run_bytes)])
+    return off[np.searchsorted(run_starts, bounds)]
+
+
+def _walk(nxt: np.ndarray, n: int) -> np.ndarray:
+    """Run starts of the greedy scan: from each start the run table
+    names the next one, so only run headers are visited."""
+    table = nxt.tolist()
+    starts = []
+    i = 0
+    while i < n:
+        starts.append(i)
+        i = table[i]
+    return np.array(starts, dtype=np.int64)
+
+
+def _diffs(v: np.ndarray, bounds: np.ndarray):
+    """Neighbour geometry shared by the integer encoders: group end per
+    value, `same[k]` (v[k+1] == v[k] inside one group), the wrapped
+    differences, `dsame[k]` (d[k] == d[k+1], both exact and inside one
+    group; a difference that leaves int64 can never repeat inside the
+    range) and the length of the equal-difference run from each value."""
+    n = len(v)
+    pos = np.arange(n)
+    gend = np.repeat(bounds[1:], np.diff(bounds))
+    inner = pos[:-1] + 1 < gend[:-1]
+    same = inner & (v[1:] == v[:-1])
+    d = v[1:] - v[:-1]
+    dok = inner & (((v[1:] ^ v[:-1]) & (v[1:] ^ d)) >= 0)
+    dsame = dok[:-1] & dok[1:] & (d[:-1] == d[1:])  # d[k] == d[k+1]
+    # values in the equal-difference run from i (diffs i.. all equal)
+    dvals = np.zeros(n, dtype=np.int64)
+    if n >= 2:
+        dend = _next_true(np.append(~dsame, True), n - 1)
+        dvals[: n - 1] = dend - pos[: n - 1] + 2
+    return pos, gend, same, np.append(d, 0), dsame, dvals
+
+
+def _rlev2(vals: np.ndarray, signed: bool, bounds: np.ndarray):
+    """RunLengthIntegerWriterV2 over whole groups, choosing exactly the
+    greedy scan's runs: a constant run of 3..512 (SHORT_REPEAT up to
+    10, else DELTA with delta 0), else a fixed non-zero delta run of
+    3..512, else literals up to the next constant triple (at most 512)
+    as PATCHED_BASE when a few wide outliers make that smaller
+    (preparePatchedBlob analog), else DIRECT."""
+    v = np.asarray(vals, dtype=np.int64)
+    n = len(v)
+    if n == 0:
+        return np.zeros(0, dtype=np.uint8), np.zeros(len(bounds), dtype=np.int64)
+    pos, gend, same, d, dsame, dvals = _diffs(v, bounds)
+    triple = np.zeros(n, dtype=bool)
+    triple[: max(n - 2, 0)] = same[:-1] & same[1:]
+    const = np.minimum(_next_true(np.append(~same, True), n) + 1 - pos, 512)
+    delta = np.zeros(n, dtype=bool)
+    delta[: max(n - 2, 0)] = dsame & (d[: n - 2] != 0)
+    lit_end = np.minimum(np.minimum(_next_true(triple, n), pos + 512), gend)
+    nxt = np.where(triple, pos + const, np.where(delta, pos + np.minimum(dvals, 512), lit_end))
+    s = _walk(nxt, n)
+    L = nxt[s] - s
+    enc = _zigzag(v) if signed else v.view(_U64)
+    bl = _bit_length(enc)
+    n_runs = len(s)
+    head = np.zeros((n_runs, 22), dtype=np.uint8)
+    hlen = np.zeros(n_runs, dtype=np.int64)
+    pay_start = np.zeros(n_runs, dtype=np.int64)
+    pay_len = np.zeros(n_runs, dtype=np.int64)
+    pay_parts: list[np.ndarray] = []
+    pay_total = 0
+
+    # SHORT_REPEAT: width-3 bits | repeat-3, then the value big-endian
+    sr = np.flatnonzero(triple[s] & (L <= 10))
+    if len(sr):
+        val = enc[s[sr]]
+        w = np.maximum(1, (bl[s[sr]] + 7) // 8)
+        head[sr, 0] = ((w - 1) << 3) | (L[sr] - 3)
+        for b in range(8):
+            r = b < w
+            head[sr[r], 1 + b] = (val[r] >> ((w[r] - 1 - b) * 8).astype(_U64)) & _U64(0xFF)
+        hlen[sr] = 1 + w
+
+    # DELTA, fixed: 11 | width-code 0 | length-1, base varint, delta varint
+    dl = np.flatnonzero((triple[s] & (L > 10)) | delta[s])
+    if len(dl):
+        lm1 = L[dl] - 1
+        head[dl, 0] = 0xC0 | ((lm1 >> 8) & 1)
+        head[dl, 1] = lm1 & 0xFF
+        bmat, bnb = _varint_matrix(enc[s[dl]])  # zigzag iff signed
+        dmat, dnb = _varint_matrix(_zigzag(np.where(delta[s[dl]], d[s[dl]], 0)))
+        for j in range(10):
+            r = j < bnb
+            head[dl[r], 2 + j] = bmat[r, j]
+        for j in range(10):
+            r = j < dnb
+            head[dl[r], 2 + bnb[r] + j] = dmat[r, j]
+        hlen[dl] = 2 + bnb + dnb
+
+    lit = np.flatnonzero(~triple[s] & ~delta[s])
+    if len(lit):
+        direct_w = _CLOSEST[np.maximum(np.maximum.reduceat(bl, s)[lit], 1)]
+        patched = _patched_runs(v, s, L, lit, direct_w)
+        for i, blob in patched.items():
+            pay_parts.append(np.frombuffer(blob, dtype=np.uint8))
+            pay_start[i], pay_len[i] = pay_total, len(blob)
+            pay_total += len(blob)
+        keep = ~np.isin(lit, list(patched))
+        lit, direct_w = lit[keep], direct_w[keep]
+        lm1 = L[lit] - 1
+        head[lit, 0] = 0x40 | (_CODE_OF[direct_w] << 1) | ((lm1 >> 8) & 1)
+        head[lit, 1] = lm1 & 0xFF
+        hlen[lit] = 2
+        for w in np.unique(direct_w).tolist():
+            sel = lit[direct_w == w]
+            packed = _pack(enc[_ranges(s[sel], L[sel])], L[sel], w)
+            nbytes = (L[sel] * w + 7) // 8
+            pay_start[sel] = pay_total + np.cumsum(nbytes) - nbytes
+            pay_len[sel] = nbytes
+            pay_parts.append(packed)
+            pay_total += len(packed)
+    out, run_bytes = _assemble(head, hlen, pay_parts, pay_start, pay_len)
+    return out, _group_offsets(s, run_bytes, bounds)
+
+
+def _patched_runs(v, s, L, lit, direct_w) -> dict[int, bytes]:
+    """PATCHED_BASE blobs for the literal runs that take it. A run of
+    at least 4 values is a candidate when 1..31 of its deltas (from
+    the run minimum) are wider than its 90th-percentile delta width
+    and the patched form can still be smaller; the rest of the
+    decision (at most 31 gap entries, a size win over DIRECT) runs
+    per candidate."""
+    ok = L[lit] >= 4
+    c, dw = lit[ok], direct_w[ok]
+    if not len(c):
+        return {}
+    base = np.minimum.reduceat(v, s)[c]
+    top = np.maximum.reduceat(v, s)[c]
+    span = top.view(_U64) - base.view(_U64)
+    ok = (base >= -(1 << 62)) & (span < _U64(1 << 63))
+    c, dw, base = c[ok], dw[ok], base[ok]
+    if not len(c):
+        return {}
+    lens = L[c]
+    deltas = v[_ranges(s[c], lens)].view(_U64) - np.repeat(base.view(_U64), lens)
+    dbits = np.maximum(1, _bit_length(deltas))
+    local = np.repeat(np.arange(len(c)), lens)
+    hist = np.bincount(local * 65 + dbits, minlength=len(c) * 65).reshape(-1, 65)
+    p90 = (hist.cumsum(axis=1) <= ((lens * 9) // 10 - 1)[:, None]).sum(axis=1)
+    width = _CLOSEST[p90]
+    first = np.cumsum(lens) - lens
+    n_patch = np.add.reduceat(dbits > np.repeat(width, lens), first)
+    # the patched size is at least a 32-bit header, a 1-byte base, the
+    # packed deltas and one 2-bit entry per patch
+    take = (n_patch >= 1) & (n_patch <= 31) & (40 + lens * width + 2 * n_patch < lens * dw)
+    out: dict[int, bytes] = {}
+    for j in np.flatnonzero(take).tolist():
+        blob = _patched_base(
+            int(base[j]), deltas[first[j] : first[j] + lens[j]], int(width[j]),
+            int(dw[j]),
+        )  # fmt: skip
+        if blob is not None:
+            out[int(c[j])] = blob
+    return out
+
+
+def _patched_base(base: int, deltas: np.ndarray, width: int, direct_width: int):
+    """One PATCHED_BASE run (RAW values: the sub-encoding is not
+    zigzagged, the reader sign-extends the base), or None when there
+    are no outliers, too many (> 31 entries) or no size win."""
+    n = len(deltas)
+    patch_idx = np.flatnonzero(_bit_length(deltas) > width)
+    if not 1 <= len(patch_idx) <= 31:
+        return None
+    patches = deltas[patch_idx] >> _U64(width)
+    patch_width = _closest_width(max(1, int(_bit_length(patches).max())))
+    # gap list with (255, 0) continuation fillers
+    entries: list[tuple[int, int]] = []
+    prev = 0
+    for i, p in zip(patch_idx.tolist(), patches.tolist()):
+        gap = i - prev
+        while gap > 255:
+            entries.append((255, 0))
+            gap -= 255
+        entries.append((gap, p))
+        prev = i
+    if len(entries) > 31:
+        return None
+    gap_width = max(1, max(g for g, _ in entries).bit_length())
+    entry_width = _closest_width(patch_width + gap_width)
+    base_mag = -base if base < 0 else base
+    base_width = max(1, (base_mag.bit_length() + 1 + 7) // 8)
+    if 32 + base_width * 8 + n * width + len(entries) * entry_width >= n * direct_width:
+        return None
+    lm1 = n - 1
+    raw = bytearray(base_mag.to_bytes(base_width, "big"))
+    if base < 0:  # sign-magnitude MSB
+        raw[0] |= 0x80
+    mask = (1 << entry_width) - 1
+    ent = np.array([((g << patch_width) | p) & mask for g, p in entries], dtype=_U64)
+    return b"".join((
+        bytes((
+            (2 << 6) | (_WIDTH_CODE[width] << 1) | ((lm1 >> 8) & 1), lm1 & 0xFF,
+            ((base_width - 1) << 5) | _WIDTH_CODE[patch_width],
+            ((gap_width - 1) << 5) | len(entries),
+        )),
+        bytes(raw),
+        _pack(deltas, [n], width).tobytes(),
+        _pack(ent, [len(ent)], entry_width).tobytes(),
+    ))  # fmt: skip
+
+
+def _rlev1(vals: np.ndarray, signed: bool, bounds: np.ndarray):
+    """RunLengthIntegerWriter (version 1, what v0.11 files carry):
     control 0..127 = a run of (control + 3) values stepping by one
     SIGNED byte delta from a varint base; control 128..255 =
-    (256 - control) literal varints. Same flush-at-group-boundary
-    contract as the v2 writer (run-offset position slot stays 0)."""
+    (256 - control) literal varints, up to the next place a run could
+    start (at most 128)."""
+    v = np.asarray(vals, dtype=np.int64)
+    n = len(v)
+    if n == 0:
+        return np.zeros(0, dtype=np.uint8), np.zeros(len(bounds), dtype=np.int64)
+    pos, gend, _same, d, dsame, dvals = _diffs(v, bounds)
+    run = np.zeros(n, dtype=bool)
+    run[: max(n - 2, 0)] = dsame & (d[: n - 2] >= -128) & (d[: n - 2] <= 127)
+    lit_end = np.minimum(np.minimum(_next_true(run, n), pos + 128), gend)
+    nxt = np.where(run, pos + np.minimum(dvals, 130), lit_end)
+    s = _walk(nxt, n)
+    L = nxt[s] - s
+    enc = _zigzag(v) if signed else v.view(_U64)
+    flat, nb = _varints(enc)
+    voff = np.concatenate([[0], np.cumsum(nb)])
+    is_run = run[s]
+    head = np.zeros((len(s), 12), dtype=np.uint8)
+    hlen = np.ones(len(s), dtype=np.int64)
+    head[:, 0] = np.where(is_run, L - 3, 256 - L)
+    r = np.flatnonzero(is_run)
+    head[r, 1] = d[s[r]] & 0xFF
+    bmat, bnb = _varint_matrix(enc[s[r]])
+    head[r, 2:] = bmat
+    hlen[r] = 2 + bnb
+    pay_start = np.where(is_run, 0, voff[s])
+    pay_len = np.where(is_run, 0, voff[s + L] - voff[s])
+    out, run_bytes = _assemble(head, hlen, [flat], pay_start, pay_len)
+    return out, _group_offsets(s, run_bytes, bounds)
 
-    def __init__(self, out: _OutStream, signed: bool):
-        self._out = out
-        self._signed = signed
-        self._buf: list[int] = []
 
-    def write(self, v: int) -> None:
-        self._buf.append(v)
+def _byte_rle(b: np.ndarray, bounds: np.ndarray):
+    """RunLengthByteWriter: runs of 3..130 as [count-3][value],
+    literals of 1..128 as [256-count][bytes]. A run of equal bytes
+    becomes a run once two copies sit in the literal buffer and a
+    third arrives, so whether (and where) it starts depends on how
+    full the 128-byte literal buffer is; only runs of 3 or more are
+    visited to decide that."""
+    b = np.asarray(b, dtype=np.uint8)
+    n = len(b)
+    if n == 0:
+        return np.zeros(0, dtype=np.uint8), np.zeros(len(bounds), dtype=np.int64)
+    gend = np.repeat(bounds[1:], np.diff(bounds))
+    first = np.ones(n, dtype=bool)
+    first[1:] = (b[1:] != b[:-1]) | (np.arange(1, n) >= gend[:-1])
+    rs = np.flatnonzero(first)
+    rl = np.diff(np.append(rs, n))
+    long = rl >= 3
+    cand_s, cand_l = rs[long].tolist(), rl[long].tolist()
+    t_start: list[int] = []
+    t_len: list[int] = []
+    t_run: list[bool] = []
 
-    def write_all(self, vs: list[int]) -> None:
-        self._buf.extend(vs)
+    def literals(a: int, z: int) -> None:
+        for off in range(a, z, 128):
+            t_start.append(off)
+            t_len.append(min(128, z - off))
+            t_run.append(False)
 
-    def _varint(self, v: int) -> bytes:
-        return _uvarint(_zz_enc(v)) if self._signed else _uvarint(v)
+    ci = 0
+    bl = bounds.tolist()
+    for g in range(len(bl) - 1):
+        region, z = bl[g], bl[g + 1]
+        while ci < len(cand_s) and cand_s[ci] < z:
+            start, length = cand_s[ci], cand_l[ci]
+            ci += 1
+            # literal-buffer fill when the run's first byte arrives: a
+            # flush at 128 between its first three bytes delays it
+            c = (start - region) % 128
+            skip = 0 if c <= 125 else (2 if c == 126 else 1)
+            rest = length - skip
+            if rest < 3:
+                continue
+            p = start + skip
+            literals(region, p)
+            q, r = divmod(rest, 130)
+            for k in range(q):
+                t_start.append(p + 130 * k)
+                t_len.append(130)
+                t_run.append(True)
+            if r >= 3:
+                t_start.append(p + 130 * q)
+                t_len.append(r)
+                t_run.append(True)
+                region = start + length
+            else:  # 0..2 leftover copies start the next literal region
+                region = p + 130 * q
+        literals(region, z)
+    ts = np.array(t_start, dtype=np.int64)
+    tl = np.array(t_len, dtype=np.int64)
+    tr = np.array(t_run, dtype=bool)
+    head = np.zeros((len(ts), 2), dtype=np.uint8)
+    head[:, 0] = np.where(tr, tl - 3, 256 - tl)
+    head[tr, 1] = b[ts[tr]]
+    out, run_bytes = _assemble(
+        head, np.where(tr, 2, 1), [b], np.where(tr, 0, ts), np.where(tr, 0, tl)
+    )
+    return out, _group_offsets(ts, run_bytes, bounds)
 
-    def flush(self) -> None:
-        v = self._buf
-        n = len(v)
-        i = 0
-        while i < n:
-            # constant-delta run (delta must fit one signed byte)
-            if i + 2 < n:
-                d = v[i + 1] - v[i]
-                if -128 <= d <= 127 and v[i + 2] - v[i + 1] == d:
-                    j = i + 2
-                    while j + 1 < n and j + 1 - i < 130 and v[j + 1] - v[j] == d:
-                        j += 1
-                    run = j + 1 - i
-                    self._out.write(bytes((run - 3, d & 0xFF)))
-                    self._out.write(self._varint(v[i]))
-                    i = j + 1
-                    continue
-            # literals until the next run of >= 3 starts (max 128)
-            j = i
-            while j < n and j - i < 128:
-                if (
-                    j + 2 < n
-                    and -128 <= v[j + 1] - v[j] <= 127
-                    and v[j + 2] - v[j + 1] == v[j + 1] - v[j]
-                ):
-                    break
-                j += 1
-            count = j - i
-            self._out.write(bytes((256 - count,)))
-            for x in v[i:j]:
-                self._out.write(self._varint(x))
-            i = j
-        self._buf = []
 
-    def pos(self) -> list[int]:
-        return self._out.pos() + [0]
+def _bitfield(bits: np.ndarray, bounds: np.ndarray):
+    """BitFieldWriter: bits MSB-first into bytes over byte-RLE. A
+    partial byte at a group boundary stays pending and is emitted with
+    the NEXT group; the position's bit-offset slot says how many of
+    its bits belong to earlier groups (`stream_decode`'s bit seek).
+    Returns bytes, group offsets and those bit offsets."""
+    packed = np.packbits(np.asarray(bits, dtype=bool))
+    byte_bounds = np.append(bounds[:-1] // 8, len(packed))
+    out, offs = _byte_rle(packed, byte_bounds)
+    return out, offs, bounds[:-1] % 8
+
+
+def _emit(out: "_OutStream", buf: np.ndarray, offs: np.ndarray) -> list[list[int]]:
+    """Write one stream group by group, closing the compression chunk
+    at every boundary; returns the stream slots of each group start."""
+    data = memoryview(np.ascontiguousarray(buf, dtype=np.uint8))
+    pos = []
+    for a, z in zip(offs[:-1].tolist(), offs[1:].tolist()):
+        out.end_group()
+        pos.append(out.pos())
+        out.write(data[a:z])
+    return pos
 
 
 # ---------------------------------------------------------------------------
-# column statistics builders (ColumnStatisticsImpl analogs)
+# bloom filters (BloomFilterUtf8 write side of sources/bloom.py): the
+# Java-compatible hashes in wrapping uint64, one scatter per stripe
+# ---------------------------------------------------------------------------
+
+_C1, _C2 = _U64(0x87C37B91114253D5), _U64(0x4CF5AD432745937F)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << _U64(r)) | (x >> _U64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = h ^ (h >> _U64(33))
+    h = h * _U64(0xFF51AFD7ED558CCD)
+    h = h ^ (h >> _U64(33))
+    h = h * _U64(0xC4CEB9FE1A85EC53)
+    return h ^ (h >> _U64(33))
+
+
+def wang_hashes(keys: np.ndarray) -> np.ndarray:
+    """`bloom.wang_long_hash` of every int64 (Java long semantics)."""
+    k = np.asarray(keys, dtype=np.int64).view(_U64)
+    with np.errstate(over="ignore"):
+        k = ~k + (k << _U64(21))
+        k = k ^ (k >> _U64(24))
+        k = k + (k << _U64(3)) + (k << _U64(8))
+        k = k ^ (k >> _U64(14))
+        k = k + (k << _U64(2)) + (k << _U64(4))
+        k = k ^ (k >> _U64(28))
+        k = k + (k << _U64(31))
+    return k.view(np.int64)
+
+
+def murmur3_hashes(arr: pa.Array) -> np.ndarray:
+    """`bloom.murmur3_hash64` (DEFAULT_SEED) of every value of a
+    non-null string or binary array, over its UTF-8 bytes."""
+    offs = _offsets(arr)
+    data = np.concatenate([_bytes_of(arr)[: offs[-1]], np.zeros(8, np.uint8)])
+    starts, lens = offs[:-1], np.diff(offs)
+    h = np.full(len(lens), DEFAULT_SEED, dtype=_U64)
+    blocks = lens // 8
+    shifts = (np.arange(8) * 8).astype(_U64)
+
+    def word(at: np.ndarray, nbytes) -> np.ndarray:
+        got = data[at[:, None] + np.arange(8)].astype(_U64)
+        got *= np.arange(8)[None, :] < np.asarray(nbytes).reshape(-1, 1)
+        return np.bitwise_or.reduce(got << shifts, axis=1)
+
+    with np.errstate(over="ignore"):
+        for i in range(int(blocks.max()) if len(blocks) else 0):
+            act = np.flatnonzero(blocks > i)
+            k = _rotl(word(starts[act] + 8 * i, 8) * _C1, 31) * _C2
+            x = _rotl(h[act] ^ k, 27)
+            h[act] = x * _U64(5) + _U64(0x52DCE729)
+        tail = lens % 8
+        act = np.flatnonzero(tail)
+        k1 = word(starts[act] + 8 * blocks[act], tail[act])
+        h[act] ^= _rotl(k1 * _C1, 31) * _C2
+        h = _fmix(h ^ lens.astype(_U64))
+    return h.view(np.int64)
+
+
+def _blooms(hashes: np.ndarray, vbounds: np.ndarray, expected: int, fpp: float) -> list[bytes]:
+    """One serialized BloomFilter per group (Kirsch-Mitzenmacher bits
+    over int32 lattice arithmetic with Java overflow), set by one
+    scatter over all groups."""
+    m = int(math.ceil(-expected * math.log(fpp) / (math.log(2) ** 2)))
+    num_bits = ((m + 63) // 64) * 64
+    k = max(1, round(num_bits / expected * math.log(2)))
+    h = np.asarray(hashes, dtype=np.int64).view(_U64)
+    h1 = ((h & _U64(0xFFFFFFFF)).astype(np.int64) ^ 0x80000000) - 0x80000000
+    h2 = ((h >> _U64(32)).astype(np.int64) ^ 0x80000000) - 0x80000000
+    combined = h1[:, None] + np.arange(1, k + 1)[None, :] * h2[:, None]
+    combined = ((combined + 0x80000000) & 0xFFFFFFFF) - 0x80000000
+    combined = np.where(combined < 0, ~combined, combined) % num_bits
+    n_groups = len(vbounds) - 1
+    group = np.repeat(np.arange(n_groups), np.diff(vbounds))
+    bits = np.zeros((n_groups, num_bits), dtype=bool)
+    bits[np.repeat(group, k), combined.ravel()] = True
+    words = np.packbits(bits, axis=1, bitorder="little")
+    head = _pb_varint(1, k)
+    return [head + _pb_bytes(3, row.tobytes()) for row in words]
+
+
+# ---------------------------------------------------------------------------
+# column statistics (ColumnStatisticsImpl analogs), computed per group
+# from the group's slice and folded into stripe and file scopes
 # ---------------------------------------------------------------------------
 
 
 class _Stats:
-    """Incremental min/max/sum/count per ORC kind; serializes to the
+    """min/max/sum/count per ORC kind; serializes to the
     ColumnStatistics proto message. One instance per (column, scope):
     row group, stripe, file — merged by accumulation, the same
     fold the reference's A4 path reads back."""
@@ -575,48 +778,6 @@ class _Stats:
         self.true_count = 0
         self.nan_seen = False
         self.sum_overflow = False
-
-    def update(self, v: Any) -> None:
-        if v is None:
-            self.has_null = True
-            return
-        self.n += 1
-        k = self.kind
-        if k in ("struct", "list", "map", "union"):
-            return  # composite stats are count/hasNull only
-        if k == "boolean":
-            if v:
-                self.true_count += 1
-            return
-        if k in ("float", "double") and isinstance(v, float) and math.isnan(v):
-            # embedded-writer parity (ORC-629 era): NaN is excluded
-            # from min/max but still poisons the sum — probed against
-            # spark.write.orc in test_native_writer's NaN test
-            self.nan_seen = True
-            self.sum += v
-            return
-        key: Any = v
-        if k == "timestamp":
-            key = _ts_millis(v)
-        elif k == "date":
-            key = (v - _EPOCH_DATE).days
-        elif k == "binary":
-            self.sum += len(v)
-            return
-        if self.min is None or key < self.min:
-            self.min = key
-        if self.max is None or key > self.max:
-            self.max = key
-        if k in ("tinyint", "smallint", "int", "bigint"):
-            self.sum += key
-            if not (-(1 << 63) <= self.sum < (1 << 63)):
-                self.sum_overflow = True
-        elif k in ("float", "double"):
-            self.sum += key
-        elif k in ("string", "char", "varchar"):
-            self.sum += len(str(key).encode("utf-8"))
-        elif k == "decimal":
-            self.sum += key
 
     def merge(self, other: "_Stats") -> None:
         self.n += other.n
@@ -689,75 +850,36 @@ def _dec_str(d: Decimal) -> str:
     return s
 
 
-def _ts_millis(v: _dt.datetime) -> int:
-    """Naive wall clock → epoch millis under the UTC pin, floored the
-    way the writer's secs*1000 + nanos/1e6 truncation does."""
-    return (v - _EPOCH_DT) // _dt.timedelta(milliseconds=1)
+def _int_sums(x: np.ndarray, vb: np.ndarray, groups: list[int]):
+    """Exact per-group sums and whether any prefix sum of the group
+    leaves int64 (the reference drops the sum then). int64 sums wrap
+    silently, so they run in numpy only when no prefix can overflow."""
+    lo, hi = int(x.min()), int(x.max())
+    if max(-lo, hi) * int(np.diff(vb).max()) < (1 << 63):
+        sums = np.add.reduceat(x, vb[groups]).tolist()
+        return sums, [False] * len(sums)
+    sums, overflow = [], []
+    for g in groups:
+        pre = np.cumsum(x[vb[g] : vb[g + 1]].astype(object))
+        sums.append(int(pre[-1]))
+        overflow.append(max(pre) >= (1 << 63) or min(pre) < -(1 << 63))
+    return sums, overflow
 
 
 # ---------------------------------------------------------------------------
-# bloom filter builder (BloomFilterUtf8 write side of sources/bloom.py)
-# ---------------------------------------------------------------------------
-
-
-class _BloomBuilder:
-    def __init__(self, expected: int, fpp: float):
-        m = int(math.ceil(-expected * math.log(fpp) / (math.log(2) ** 2)))
-        self.num_bits = ((m + 63) // 64) * 64
-        self.k = max(1, round(self.num_bits / expected * math.log(2)))
-        self.words = [0] * (self.num_bits // 64)
-
-    def _add_hash(self, h64: int) -> None:
-        h = h64 & _MASK64
-        h1 = _to_i32(h)
-        h2 = _to_i32(h >> 32)
-        for i in range(1, self.k + 1):
-            combined = _to_i32(h1 + i * h2)
-            if combined < 0:
-                combined = ~combined
-            pos = combined % self.num_bits
-            self.words[pos >> 6] |= 1 << (pos & 63)
-
-    def add(self, kind: str, v: Any) -> None:
-        if v is None:
-            return
-        if kind in ("string", "char", "varchar"):
-            self._add_hash(murmur3_hash64(str(v).encode("utf-8"), DEFAULT_SEED))
-        elif kind in ("tinyint", "smallint", "int", "bigint"):
-            self._add_hash(wang_long_hash(v))
-        elif kind == "date":
-            self._add_hash(wang_long_hash((v - _EPOCH_DATE).days))
-        elif kind == "timestamp":
-            self._add_hash(wang_long_hash(_ts_millis(v)))
-        elif kind in ("float", "double"):
-            (bits,) = struct.unpack("<q", struct.pack("<d", float(v)))
-            self._add_hash(wang_long_hash(bits))
-        elif kind == "decimal":
-            self._add_hash(
-                murmur3_hash64(_dec_str(v).encode("utf-8"), DEFAULT_SEED)
-            )
-        # boolean/binary: no bloom (reference writes none)
-
-    def serialize(self) -> bytes:
-        bits = b"".join(struct.pack("<Q", w & _MASK64) for w in self.words)
-        return _pb_varint(1, self.k) + _pb_bytes(3, bits)
-
-
-def _to_i32(v: int) -> int:
-    v &= 0xFFFFFFFF
-    return v - (1 << 32) if v >= (1 << 31) else v
-
-
-# ---------------------------------------------------------------------------
-# per-node writers (TreeWriter analogs, buffered per stripe)
+# per-node writers (TreeWriter analogs), one stripe at a time
 #
-# Values are distributed down the type tree GROUP BY GROUP (the
-# parent's row-group slicing defines each child's group boundaries —
-# a child's group holds exactly the values of its parent's non-null
-# rows, the ORC nested-column contract the composite decoders in
-# stream_decode read back), then each node encodes its stored groups
-# in order, recording positions at every boundary.
+# Each node holds its stripe's values as one Arrow array plus the row
+# offsets of its row groups. A child's group holds exactly the values
+# of its parent's non-null rows in that group (the ORC nested-column
+# contract the composite decoders in stream_decode read back), so a
+# child's group offsets are its parent's counted through the parent's
+# validity (struct, union) or lengths (list, map).
 # ---------------------------------------------------------------------------
+
+
+_INTS = ("tinyint", "smallint", "int", "bigint")
+_STRINGS = ("string", "char", "varchar")
 
 
 class _NodeBase:
@@ -767,34 +889,59 @@ class _NodeBase:
         self.cid = node["cid"]
         self.kind = node["kind"]
         self.opts = opts
-        self.groups: list[list[Any]] = []
         self.encoding = "DIRECT"
         self.dictionary_size = 0
         self.index_entries: list[tuple[list[int], bytes]] = []
         self.stripe_stats = _Stats(self.kind)
-        self.blooms: list[_BloomBuilder] = []
+        self.blooms: list[bytes] = []
 
-    def _has_nulls(self) -> bool:
-        return any(v is None for g in self.groups for v in g)
+    def load(self, arr: pa.Array, bounds: np.ndarray) -> None:
+        """Take this stripe's values and group row offsets: `live` holds
+        the non-null values, `vbounds` their group offsets."""
+        self.bounds = bounds
+        self.valid = arr.is_valid().to_numpy(zero_copy_only=False) if arr.null_count else None
+        if self.valid is None:
+            self.live, self.vbounds = arr, bounds
+        else:
+            self.live = arr.filter(pa.array(self.valid))
+            self.vbounds = np.concatenate([[0], np.cumsum(self.valid)])[bounds]
 
-    def _mk_present(self):
-        comp = self.opts["compression"]
-        block = self.opts["compression_block_size"]
-        if self._has_nulls():
-            out = _OutStream(comp, block)
-            return out, _BitFieldWriter(out)
-        return None, None
+    def _group_stats(self) -> list[_Stats]:
+        nn = np.diff(self.vbounds)
+        has_null = np.diff(self.bounds) > nn
+        out = []
+        for n, h in zip(nn.tolist(), has_null.tolist()):
+            st = _Stats(self.kind)
+            st.n, st.has_null = n, h
+            out.append(st)
+        return out
 
-    def _group_stats(self, group: list[Any], present, bloom) -> _Stats:
-        gstats = _Stats(self.kind)
-        for v in group:
-            gstats.update(v)
-            if bloom is not None:
-                bloom.add(self.kind, v)
-            if present is not None:
-                present.write(0 if v is None else 1)
-        self.stripe_stats.merge(gstats)
-        return gstats
+    def _present(self, streams: list) -> list[list[int]]:
+        """The PRESENT stream (only when the stripe has NULLs) and its
+        per-group slots."""
+        if self.valid is None:
+            return [[] for _ in range(len(self.bounds) - 1)]
+        out = _OutStream(self.opts["compression"], self.opts["compression_block_size"])
+        buf, offs, nbits = _bitfield(self.valid, self.bounds)
+        pos = [p + [0, nb] for p, nb in zip(_emit(out, buf, offs), nbits.tolist())]
+        streams.append(("PRESENT", out.finish()))
+        return pos
+
+    def _index(self, pos: list[list[int]], stats: list[_Stats]) -> None:
+        for p, st in zip(pos, stats):
+            self.stripe_stats.merge(st)
+            self.index_entries.append((p, st.serialize()))
+
+    def _rle(self) -> Callable:
+        # RLE version keys off the COLUMN ENCODING, exactly like the
+        # reader's _int_rle (TreeReaderFactory.createIntegerReader)
+        return _rlev1 if self.encoding in ("DIRECT", "DICTIONARY") else _rlev2
+
+    def _stream(self, name: str, buf, offs, slots: int, streams: list) -> list[list[int]]:
+        out = _OutStream(self.opts["compression"], self.opts["compression_block_size"])
+        pos = [p + [0] * slots for p in _emit(out, buf, offs)]
+        streams.append((name, out.finish()))
+        return pos
 
 
 def _enforce_char_length(v: str, kind: str, max_len: int) -> str:
@@ -816,15 +963,52 @@ def _enforce_char_length(v: str, kind: str, max_len: int) -> str:
     return v
 
 
+def _enforce_lengths(arr: pa.Array, kind: str, max_len: int) -> pa.Array:
+    """Apply char/varchar enforcement; the per-value rewrite runs only
+    when some value's byte length is off."""
+    n_bytes = pc.binary_length(arr)
+    bad = pc.not_equal(n_bytes, max_len) if kind == "char" else pc.greater(n_bytes, max_len)
+    if not pc.any(bad).as_py():
+        return arr
+    return pa.array(
+        [None if v is None else _enforce_char_length(v, kind, max_len) for v in arr.to_pylist()],
+        type=arr.type,
+    )
+
+
+def _offsets(arr: pa.Array) -> np.ndarray:
+    """Value offsets of a string/binary/list/map array (slice-aware)."""
+    if isinstance(arr, (pa.ListArray, pa.MapArray)):
+        return np.asarray(arr.offsets, dtype=np.int64)
+    raw = arr.buffers()[1]
+    if raw is None:
+        return np.zeros(len(arr) + 1, dtype=np.int64)
+    large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    offs = np.frombuffer(raw, dtype=np.int64 if large else np.int32)
+    return offs[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+
+
+def _bytes_of(arr: pa.Array) -> np.ndarray:
+    raw = arr.buffers()[2]
+    return np.frombuffer(raw, dtype=np.uint8) if raw is not None else np.zeros(0, np.uint8)
+
+
+def _decimal_unscaled(arr: pa.Array) -> list[int]:
+    """Unscaled integers of a non-null decimal128 array."""
+    if not len(arr):
+        return []
+    words = np.frombuffer(arr.buffers()[1], dtype="<u8")
+    words = words[2 * arr.offset : 2 * (arr.offset + len(arr))]
+    lo, hi = words[0::2].tolist(), words[1::2].view(np.int64).tolist()
+    return [(h << 64) | l for h, l in zip(hi, lo)]
+
+
 class _PrimitiveNode(_NodeBase):
-    def distribute(self, vals: list[Any]) -> None:
+    def load(self, arr: pa.Array, bounds: np.ndarray) -> None:
         ml = self.node["max_length"]
         if self.kind in ("char", "varchar") and ml:
-            vals = [
-                None if v is None else _enforce_char_length(v, self.kind, ml)
-                for v in vals
-            ]
-        self.groups.append(vals)
+            arr = _enforce_lengths(arr, self.kind, ml)
+        super().load(arr, bounds)
 
     def _elect_encoding(self) -> None:
         k = self.kind
@@ -835,16 +1019,14 @@ class _PrimitiveNode(_NodeBase):
             # encoding names; 0.12 the *_V2 pair (WriterImpl
             # isNewWriteFormat switch)
             self.encoding = "DIRECT" if v11 else "DIRECT_V2"
-        elif k in ("string", "char", "varchar"):
-            non_null = [v for g in self.groups for v in g if v is not None]
-            distinct = set(non_null)
+        elif k in _STRINGS:
+            distinct = pc.unique(self.live)
             # checkDictionaryEncoding: distinct/total <= threshold
-            if non_null and len(distinct) / len(non_null) <= self.opts[
+            if len(self.live) and len(distinct) / len(self.live) <= self.opts[
                 "dictionary_key_threshold"
             ]:
                 self.encoding = "DICTIONARY" if v11 else "DICTIONARY_V2"
-                self._dict = sorted(distinct)
-                self._dict_ids = {s: i for i, s in enumerate(self._dict)}
+                self._dict = distinct.take(pc.sort_indices(distinct))
                 self.dictionary_size = len(self._dict)
             else:
                 self.encoding = "DIRECT" if v11 else "DIRECT_V2"
@@ -853,212 +1035,196 @@ class _PrimitiveNode(_NodeBase):
 
     def encode(self) -> list[tuple[str, bytes]]:
         self._elect_encoding()
-        opts = self.opts
-        want_bloom = self.name in opts["bloom_filter_columns"] and (
-            self.kind not in ("boolean", "binary")
-        )
-        present_out, present = self._mk_present()
-        enc = _PrimitiveEncoder(
-            self.kind, self.encoding, opts["compression"],
-            opts["compression_block_size"], self.node,
-            getattr(self, "_dict", None), getattr(self, "_dict_ids", None),
-        )  # fmt: skip
-        for group in self.groups:
-            # record positions FIRST (they address this group's
-            # start). Order matters: flush the value encoders into
-            # their streams, THEN close the compression chunk, THEN
-            # read positions — so the previous group's bytes are
-            # inside the chunk the recorded offset points past.
-            if present is not None:
-                present.group_boundary()
-                present_out.end_group()
-                pos = list(present.pos())
-            else:
-                pos = []
-            enc.group_boundary()
-            pos += enc.pos()
-            bloom = None
-            if want_bloom:
-                bloom = _BloomBuilder(
-                    opts["row_index_stride"], opts["bloom_filter_fpp"]
-                )
-                self.blooms.append(bloom)
-            gstats = self._group_stats(group, present, bloom)
-            enc.write_group([v for v in group if v is not None])
-            self.index_entries.append((pos, gstats.serialize()))
-
         streams: list[tuple[str, bytes]] = []
-        if present is not None:
-            present.finish()
-            streams.append(("PRESENT", present_out.finish()))
-        streams.extend(enc.finish())
+        pos = self._present(streams)
+        stats = self._group_stats()
+        hashes = self._values(streams, pos, stats)
+        if hashes is not None and self.name in self.opts["bloom_filter_columns"]:
+            self.blooms = _blooms(
+                hashes, self.vbounds, self.opts["row_index_stride"],
+                self.opts["bloom_filter_fpp"],
+            )  # fmt: skip
+        self._index(pos, stats)
         return streams
 
+    def _values(self, streams: list, pos: list, stats: list[_Stats]):
+        """Encode the non-null values into their streams, appending
+        each group's slots to `pos` and filling `stats`; returns the
+        values' bloom hashes (None for kinds without a bloom)."""
+        k = self.kind
+        live, vb = self.live, self.vbounds
+        groups = np.flatnonzero(np.diff(vb)).tolist()
+        rle = self._rle()
 
-def _field_of(v: Any, idx: int, fname: str) -> Any:
-    """Struct member access: engine dicts by name, Row/tuple by
-    position (a pyspark Row is a tuple subclass)."""
-    if isinstance(v, dict):
-        return v.get(fname)
-    return v[idx]
+        def put(name, encoded, slots=1):
+            for p, s in zip(pos, self._stream(name, *encoded, slots, streams)):
+                p += s
+
+        if k == "boolean":
+            x = live.to_numpy(zero_copy_only=False).astype(bool)
+            buf, offs, nbits = _bitfield(x, vb)
+            put("DATA", (buf, offs))
+            for p, nb in zip(pos, nbits.tolist()):
+                p.append(nb)
+            trues = np.diff(np.concatenate([[0], np.cumsum(x)])[vb]).tolist()
+            for st, t in zip(stats, trues):
+                st.true_count = t
+            return None
+        if k in _INTS or k in ("date", "timestamp"):
+            x = np.asarray(live.cast(pa.int32() if k == "date" else pa.int64()), dtype=np.int64)
+            if k == "tinyint":
+                put("DATA", _byte_rle((x & 0xFF).astype(np.uint8), vb))
+            elif k == "timestamp":
+                secs, nanos = _ts_parts(x)
+                put("DATA", rle(secs, True, vb))
+                put("SECONDARY", rle(_enc_nanos(nanos), False, vb))
+                x = np.floor_divide(x, 1000)  # stats and blooms use epoch millis
+            else:
+                put("DATA", rle(x, True, vb))
+            if groups:
+                starts = vb[groups]
+                mins = np.minimum.reduceat(x, starts).tolist()
+                maxs = np.maximum.reduceat(x, starts).tolist()
+                for g, lo, hi in zip(groups, mins, maxs):
+                    stats[g].min, stats[g].max = lo, hi
+                if k in _INTS:
+                    for g, sm, ov in zip(groups, *_int_sums(x, vb, groups)):
+                        stats[g].sum, stats[g].sum_overflow = sm, ov
+            return wang_hashes(x)
+        if k in ("float", "double"):
+            x = np.asarray(live, dtype=np.float64)
+            width = 4 if k == "float" else 8
+            put("DATA", (x.astype(f"<f{width}").view(np.uint8), vb * width), 0)
+            for g in groups:
+                st = stats[g]
+                seg = x[vb[g] : vb[g + 1]]
+                # sequential from 0, like `sum += v` (np.sum is pairwise)
+                with np.errstate(invalid="ignore"):
+                    st.sum = float(np.cumsum(np.append(0.0, seg))[-1])
+                # embedded-writer parity (ORC-629 era): NaN is excluded
+                # from min/max but still poisons the sum — probed
+                # against spark.write.orc in test_native_writer's NaN test
+                nan = np.isnan(seg)
+                st.nan_seen = bool(nan.any())
+                seg = seg[~nan]
+                if len(seg):  # argmin/argmax keep the first of equal values
+                    st.min, st.max = float(seg[np.argmin(seg)]), float(seg[np.argmax(seg)])
+            return wang_hashes(x.view(np.int64))
+        if k == "decimal":
+            scale = self.node["scale"] or 0
+            unscaled = _decimal_unscaled(live)
+            varints = [_uvarint(_zz_enc(u)) for u in unscaled]
+            ends = np.cumsum([0] + [len(b) for b in varints])
+            put("DATA", (np.frombuffer(b"".join(varints), dtype=np.uint8), ends[vb]), 0)
+            put("SECONDARY", rle(np.full(len(unscaled), scale), True, vb))
+            dec = lambda u: Decimal(f"{u}e-{scale}")  # noqa: E731 (exact)
+            for g in groups:
+                seg = unscaled[vb[g] : vb[g + 1]]
+                st = stats[g]
+                st.min, st.max, st.sum = dec(min(seg)), dec(max(seg)), dec(sum(seg))
+            return murmur3_hashes(pa.array([_dec_str(dec(u)) for u in unscaled], pa.string()))
+        # string family and binary: the sum is the byte length
+        offs = _offsets(live)
+        glen = np.diff(offs[vb]).tolist()
+        for g in groups:
+            stats[g].sum = glen[g]
+            if k in _STRINGS:
+                mm = pc.min_max(live.slice(vb[g], vb[g + 1] - vb[g]))
+                stats[g].min, stats[g].max = mm["min"].as_py(), mm["max"].as_py()
+        if self.encoding in ("DICTIONARY", "DICTIONARY_V2"):
+            ids = np.asarray(pc.index_in(live, value_set=self._dict), dtype=np.int64)
+            put("DATA", rle(ids, False, vb))
+            # the dictionary is stripe-global, read whole: no positions
+            doffs = _offsets(self._dict)
+            one = np.array([0, len(doffs) - 1])
+            self._stream("LENGTH", *rle(np.diff(doffs), False, one), 0, streams)
+            words = _bytes_of(self._dict)[doffs[0] : doffs[-1]]
+            self._stream("DICTIONARY_DATA", words, np.array([0, len(words)]), 0, streams)
+        else:
+            put("DATA", (_bytes_of(live), offs[vb]), 0)
+            put("LENGTH", rle(np.diff(offs), False, vb))
+        return None if k == "binary" else murmur3_hashes(live)
+
+
+def _ts_parts(micros: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Epoch microseconds → (seconds rel. the 2015-01-01 UTC base,
+    nanos), the exact inverse of the reader's TreeReaderFactory rule
+    (negative seconds with nanos get the +1 adjustment)."""
+    secs, frac = np.divmod(micros, 1_000_000)
+    secs += (secs < 0) & (frac != 0)
+    return secs - _TS_BASE, frac * 1000
+
+
+def _enc_nanos(nanos: np.ndarray) -> np.ndarray:
+    """parseNanos inverse: strip trailing decimal zeros (count d >= 2
+    encodes as d-1 in the low 3 bits)."""
+    z = np.asarray(nanos, dtype=np.int64)
+    d = np.zeros(len(z), dtype=np.int64)
+    for _ in range(8):
+        step = (z != 0) & (z % 10 == 0)
+        z = np.where(step, z // 10, z)
+        d += step
+    return np.where(
+        nanos == 0, 0, np.where(d < 2, (z * 10**d) << 3, (z << 3) | (d - 1))
+    )
 
 
 class _StructNode(_NodeBase):
     """StructTreeWriter analog: PRESENT only; children hold the
-    flattened values of the rows where the struct itself is
-    non-null."""
+    values of the rows where the struct itself is non-null."""
 
     def __init__(self, name, node, opts, registry):
         super().__init__(name, node, opts)
         self.children = [
-            (
-                fname,
-                _build_node_writer(
-                    f"{name}.{fname}" if name else fname, child, opts, registry
-                ),
+            _build_node_writer(
+                f"{name}.{fname}" if name else fname, child, opts, registry
             )
             for fname, child in node["children"]
         ]
 
-    def distribute(self, vals: list[Any]) -> None:
-        self.groups.append(vals)
-        live = [v for v in vals if v is not None]
-        for i, (fname, w) in enumerate(self.children):
-            w.distribute([_field_of(v, i, fname) for v in live])
+    def load(self, arr, bounds) -> None:
+        super().load(arr, bounds)
+        for i, w in enumerate(self.children):
+            w.load(self.live.field(i), self.vbounds)
 
     def encode(self) -> list[tuple[str, bytes]]:
-        present_out, present = self._mk_present()
-        for group in self.groups:
-            if present is not None:
-                present.group_boundary()
-                present_out.end_group()
-                pos = list(present.pos())
-            else:
-                pos = []
-            gstats = self._group_stats(group, present, None)
-            self.index_entries.append((pos, gstats.serialize()))
-        if present is not None:
-            present.finish()
-            return [("PRESENT", present_out.finish())]
-        return []
-
-
-class _ListNode(_NodeBase):
-    """ListTreeWriter analog: PRESENT + LENGTH (RLEv2 unsigned, one
-    count per non-null row); the child holds the flattened elements."""
-
-    def __init__(self, name, node, opts, registry):
-        super().__init__(name, node, opts)
-        self.encoding = "DIRECT" if opts["version"] == "0.11" else "DIRECT_V2"
-        self.child = _build_node_writer(
-            f"{name}._elem" if name else None, node["children"][0][1],
-            opts, registry,
-        )  # fmt: skip
-
-    def distribute(self, vals: list[Any]) -> None:
-        self.groups.append(vals)
-        flat: list[Any] = []
-        for v in vals:
-            if v is not None:
-                flat.extend(v)
-        self.child.distribute(flat)
-
-    def encode(self) -> list[tuple[str, bytes]]:
-        comp = self.opts["compression"]
-        block = self.opts["compression_block_size"]
-        present_out, present = self._mk_present()
-        len_out = _OutStream(comp, block)
-        _LenRLE = (
-            _RLEv1Writer if self.encoding == "DIRECT" else _RLEv2Writer
-        )
-        lengths = _LenRLE(len_out, False)
-        for group in self.groups:
-            if present is not None:
-                present.group_boundary()
-                present_out.end_group()
-                pos = list(present.pos())
-            else:
-                pos = []
-            lengths.flush()
-            len_out.end_group()
-            pos += lengths.pos()
-            gstats = self._group_stats(group, present, None)
-            for v in group:
-                if v is not None:
-                    lengths.write(len(v))
-            self.index_entries.append((pos, gstats.serialize()))
-        lengths.flush()
         streams: list[tuple[str, bytes]] = []
-        if present is not None:
-            present.finish()
-            streams.append(("PRESENT", present_out.finish()))
-        streams.append(("LENGTH", len_out.finish()))
+        pos = self._present(streams)
+        self._index(pos, self._group_stats())
         return streams
 
 
-class _MapNode(_NodeBase):
-    """MapTreeWriter analog: PRESENT + LENGTH; key/value children hold
-    the flattened entries. Accepts dicts or (k, v) tuple lists (the
-    engine's decode convention)."""
+class _ListNode(_NodeBase):
+    """ListTreeWriter analog: PRESENT + LENGTH (unsigned RLE, one count
+    per non-null row); the child holds the flattened elements. A map
+    (MapTreeWriter) is the same with key and value children."""
 
     def __init__(self, name, node, opts, registry):
         super().__init__(name, node, opts)
         self.encoding = "DIRECT" if opts["version"] == "0.11" else "DIRECT_V2"
-        self.key = _build_node_writer(
-            f"{name}._key" if name else None, node["children"][0][1],
-            opts, registry,
-        )  # fmt: skip
-        self.value = _build_node_writer(
-            f"{name}._value" if name else None, node["children"][1][1],
-            opts, registry,
-        )  # fmt: skip
-
-    def distribute(self, vals: list[Any]) -> None:
-        norm = [
-            None if v is None else (list(v.items()) if isinstance(v, dict) else list(v))
-            for v in vals
+        suffixes = ["_elem"] if self.kind == "list" else ["_key", "_value"]
+        self.children = [
+            _build_node_writer(f"{name}.{sfx}" if name else None, child, opts, registry)
+            for sfx, (_fn, child) in zip(suffixes, node["children"])
         ]
-        self.groups.append(norm)
-        keys: list[Any] = []
-        vvals: list[Any] = []
-        for v in norm:
-            if v is not None:
-                for k, val in v:
-                    keys.append(k)
-                    vvals.append(val)
-        self.key.distribute(keys)
-        self.value.distribute(vvals)
+
+    def load(self, arr, bounds) -> None:
+        super().load(arr, bounds)
+        offs = _offsets(self.live)
+        self.lengths = np.diff(offs)
+        cb = np.concatenate([[0], np.cumsum(self.lengths)])[self.vbounds]
+        if self.kind == "list":
+            kids = [self.live.values]
+        else:
+            kids = [self.live.keys, self.live.items]
+        for w, kid in zip(self.children, kids):
+            w.load(kid.slice(offs[0], offs[-1] - offs[0]), cb)
 
     def encode(self) -> list[tuple[str, bytes]]:
-        comp = self.opts["compression"]
-        block = self.opts["compression_block_size"]
-        present_out, present = self._mk_present()
-        len_out = _OutStream(comp, block)
-        _LenRLE = (
-            _RLEv1Writer if self.encoding == "DIRECT" else _RLEv2Writer
-        )
-        lengths = _LenRLE(len_out, False)
-        for group in self.groups:
-            if present is not None:
-                present.group_boundary()
-                present_out.end_group()
-                pos = list(present.pos())
-            else:
-                pos = []
-            lengths.flush()
-            len_out.end_group()
-            pos += lengths.pos()
-            gstats = self._group_stats(group, present, None)
-            for v in group:
-                if v is not None:
-                    lengths.write(len(v))
-            self.index_entries.append((pos, gstats.serialize()))
-        lengths.flush()
         streams: list[tuple[str, bytes]] = []
-        if present is not None:
-            present.finish()
-            streams.append(("PRESENT", present_out.finish()))
-        streams.append(("LENGTH", len_out.finish()))
+        pos = self._present(streams)
+        slots = self._stream("LENGTH", *self._rle()(self.lengths, False, self.vbounds), 1, streams)
+        self._index([p + s for p, s in zip(pos, slots)], self._group_stats())
         return streams
 
 
@@ -1066,7 +1232,7 @@ class _UnionNode(_NodeBase):
     """UnionTreeWriter analog: PRESENT + byte-RLE tag DATA; each
     variant child holds the values of the rows its tag selects. Input
     is the engine's tagged-struct convention {_tag, f0, f1, ...}
-    (stream_decode._UnionDecoder's output shape)."""
+    (stream_decode's union output shape)."""
 
     def __init__(self, name, node, opts, registry):
         super().__init__(name, node, opts)
@@ -1077,39 +1243,20 @@ class _UnionNode(_NodeBase):
             for i, (_fn, child) in enumerate(node["children"])
         ]
 
-    def distribute(self, vals: list[Any]) -> None:
-        self.groups.append(vals)
-        live = [v for v in vals if v is not None]
+    def load(self, arr, bounds) -> None:
+        super().load(arr, bounds)
+        self.tags = np.asarray(self.live.field("_tag"), dtype=np.int64)
         for i, w in enumerate(self.children):
-            w.distribute([v[f"f{i}"] for v in live if v["_tag"] == i])
+            mine = self.tags == i
+            cb = np.concatenate([[0], np.cumsum(mine)])[self.vbounds]
+            w.load(self.live.field(f"f{i}").filter(pa.array(mine)), cb)
 
     def encode(self) -> list[tuple[str, bytes]]:
-        comp = self.opts["compression"]
-        block = self.opts["compression_block_size"]
-        present_out, present = self._mk_present()
-        tag_out = _OutStream(comp, block)
-        tags = _ByteRLEWriter(tag_out)
-        for group in self.groups:
-            if present is not None:
-                present.group_boundary()
-                present_out.end_group()
-                pos = list(present.pos())
-            else:
-                pos = []
-            tags.flush()
-            tag_out.end_group()
-            pos += tags.pos()
-            gstats = self._group_stats(group, present, None)
-            for v in group:
-                if v is not None:
-                    tags.write(v["_tag"])
-            self.index_entries.append((pos, gstats.serialize()))
-        tags.flush()
         streams: list[tuple[str, bytes]] = []
-        if present is not None:
-            present.finish()
-            streams.append(("PRESENT", present_out.finish()))
-        streams.append(("DATA", tag_out.finish()))
+        pos = self._present(streams)
+        tags = _byte_rle((self.tags & 0xFF).astype(np.uint8), self.vbounds)
+        slots = self._stream("DATA", *tags, 1, streams)
+        self._index([p + s for p, s in zip(pos, slots)], self._group_stats())
         return streams
 
 
@@ -1117,10 +1264,8 @@ def _build_node_writer(name, node, opts, registry) -> _NodeBase:
     kind = node["kind"]
     if kind == "struct":
         w: _NodeBase = _StructNode(name, node, opts, registry)
-    elif kind == "list":
+    elif kind in ("list", "map"):
         w = _ListNode(name, node, opts, registry)
-    elif kind == "map":
-        w = _MapNode(name, node, opts, registry)
     elif kind == "union":
         w = _UnionNode(name, node, opts, registry)
     else:
@@ -1129,200 +1274,120 @@ def _build_node_writer(name, node, opts, registry) -> _NodeBase:
     return w
 
 
-class _PrimitiveEncoder:
-    """The per-kind stream set: owns DATA/LENGTH/SECONDARY/
-    DICTIONARY_DATA OutStreams and the RLE/bitfield writers on top,
-    exposes pos() in the getIndexPosition slot order."""
+# ---------------------------------------------------------------------------
+# input: Arrow arrays, record batches or tables, or Python lists
+# converted once
+# ---------------------------------------------------------------------------
 
-    def __init__(self, kind, encoding, comp, block, meta, dict_sorted, dict_ids):
-        self.kind = kind
-        self.encoding = encoding
-        self._meta = meta
-        mk = lambda: _OutStream(comp, block)  # noqa: E731
-        # RLE version keys off the COLUMN ENCODING, exactly like the
-        # reader's _int_rle (TreeReaderFactory.createIntegerReader)
-        _IntRLE = (
-            _RLEv1Writer if encoding in ("DIRECT", "DICTIONARY") else _RLEv2Writer
-        )
-        self._streams: list[tuple[str, _OutStream]] = []
-        k = kind
-        if k in ("smallint", "int", "bigint", "date"):
-            self._data_out = mk()
-            self._data = _IntRLE(self._data_out, True)
-            self._streams = [("DATA", self._data_out)]
-        elif k == "tinyint":
-            self._data_out = mk()
-            self._data = _ByteRLEWriter(self._data_out)
-            self._streams = [("DATA", self._data_out)]
-        elif k == "boolean":
-            self._data_out = mk()
-            self._data = _BitFieldWriter(self._data_out)
-            self._streams = [("DATA", self._data_out)]
-        elif k in ("float", "double"):
-            self._data_out = mk()
-            self._fmt = "<f" if k == "float" else "<d"
-            self._streams = [("DATA", self._data_out)]
-        elif k == "timestamp":
-            self._data_out, self._sec_out = mk(), mk()
-            self._data = _IntRLE(self._data_out, True)
-            self._secondary = _IntRLE(self._sec_out, False)
-            self._streams = [("DATA", self._data_out), ("SECONDARY", self._sec_out)]
-        elif k == "decimal":
-            self._data_out, self._sec_out = mk(), mk()
-            self._secondary = _IntRLE(self._sec_out, True)
-            self._streams = [("DATA", self._data_out), ("SECONDARY", self._sec_out)]
-        elif k in ("string", "char", "varchar", "binary"):
-            if encoding in ("DICTIONARY", "DICTIONARY_V2"):
-                self._data_out = mk()  # dictionary ids
-                self._data = _IntRLE(self._data_out, False)
-                self._dict_ids = dict_ids
-                len_out, dict_out = mk(), mk()
-                lw = _IntRLE(len_out, False)
-                for s in dict_sorted:
-                    b = s.encode("utf-8")
-                    lw.write(len(b))
-                    dict_out.write(b)
-                lw.flush()
-                self._streams = [
-                    ("DATA", self._data_out),
-                    ("LENGTH", len_out),
-                    ("DICTIONARY_DATA", dict_out),
-                ]
-            else:
-                self._data_out, self._len_out = mk(), mk()
-                self._lengths = _IntRLE(self._len_out, False)
-                self._streams = [
-                    ("DATA", self._data_out),
-                    ("LENGTH", self._len_out),
-                ]
-        else:
-            raise NotImplementedError(
-                f"native write of ORC kind {kind!r} is not implemented "
-                "(nested types stay on the JVM writer)"
+_DEC_CTX = Context(prec=77)  # precision 38 + scale headroom
+
+
+def _arrow_type(node: dict) -> pa.DataType:
+    """The writer's Arrow form of a type-tree node: `file_job.arrow_type`
+    with float read as double (statistics and blooms see float values
+    at double precision; only the DATA stream narrows them) and
+    decimals at precision 38 (the declared precision is file metadata,
+    not a bound the writer enforces)."""
+    types: list[dict] = []
+
+    def add(n: dict) -> int:
+        tid = len(types)
+        t = {
+            "kind": "double" if n["kind"] == "float" else n["kind"],
+            "precision": 38 if n["kind"] == "decimal" else None,
+            "scale": n["scale"],
+        }
+        types.append(t)
+        t["subtypes"] = [add(c) for _fn, c in n["children"]]
+        t["field_names"] = [fn for fn, _c in n["children"]]
+        return tid
+
+    add(node)
+    return arrow_type(types, 0)
+
+
+def _field_of(v: Any, idx: int, fname: str) -> Any:
+    """Struct member access: engine dicts by name, Row/tuple by
+    position (a pyspark Row is a tuple subclass)."""
+    if isinstance(v, dict):
+        return v.get(fname)
+    return v[idx]
+
+
+def _coerce(vals: list, node: dict) -> list:
+    """Python values in the forms Arrow's converter does not take:
+    Decimal/str/float/int decimals (quantized to the column scale),
+    truthy booleans, and struct rows that mix dicts with Row/tuples."""
+    k = node["kind"]
+    if k == "decimal":
+        q = Decimal(1).scaleb(-(node["scale"] or 0))
+        return [None if v is None else Decimal(v).quantize(q, context=_DEC_CTX) for v in vals]
+    if k == "boolean":
+        return [None if v is None else bool(v) for v in vals]
+    if k == "struct":
+        kids = node["children"]
+        cols = [
+            _coerce([None if v is None else _field_of(v, i, fn) for v in vals], c)
+            for i, (fn, c) in enumerate(kids)
+        ]
+        rows = zip(*cols) if cols else ([] for _ in vals)
+        return [
+            None if v is None else dict(zip([fn for fn, _c in kids], row))
+            for v, row in zip(vals, rows)
+        ]
+    if k == "list":
+        child = node["children"][0][1]
+        return [None if v is None else _coerce(list(v), child) for v in vals]
+    if k == "map":
+        (_k, kn), (_v, vn) = node["children"]
+        out = []
+        for v in vals:
+            if v is None:
+                out.append(None)
+                continue
+            pairs = list(v.items()) if isinstance(v, dict) else list(v)
+            keys = _coerce([p[0] for p in pairs], kn)
+            out.append(list(zip(keys, _coerce([p[1] for p in pairs], vn))))
+        return out
+    if k == "union":
+        out = []
+        for v in vals:
+            if v is None:
+                out.append(None)
+                continue
+            t = v["_tag"]
+            out.append({"_tag": t, f"f{t}": _coerce([v[f"f{t}"]], node["children"][t][1])[0]})
+        return out
+    return list(vals)
+
+
+def _to_arrow(values: Any, node: dict) -> pa.Array:
+    """One column as an Arrow array of the writer's type."""
+    typ = _arrow_type(node)
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    if isinstance(values, pa.Array):
+        return values if values.type == typ else values.cast(typ)
+    try:
+        return pa.array(values, type=typ)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError, ValueError):
+        return pa.array(_coerce(values, node), type=typ)
+
+
+def _column_arrays(columns: Any, top: list[tuple[str, dict]]) -> list[pa.Array]:
+    """`columns` (a name → values mapping, a RecordBatch or a Table) as
+    one Arrow array per top-level column, all of one length."""
+    if isinstance(columns, (pa.RecordBatch, pa.Table)):
+        get = columns.column
+    else:
+        get = columns.__getitem__
+    arrays = [_to_arrow(get(name), node) for name, node in top]
+    for (name, _n), a in zip(top, arrays):
+        if len(a) != len(arrays[0]):
+            raise ValueError(
+                f"column {name!r} has {len(a)} values, expected {len(arrays[0])}"
             )
-
-    def group_boundary(self) -> None:
-        """Flush the value encoders into their OutStreams (closing any
-        RLE run at the boundary), then close the compression chunks."""
-        k = self.kind
-        if k in ("smallint", "int", "bigint", "date", "tinyint", "timestamp"):
-            self._data.flush()
-        if k == "boolean":
-            self._data.group_boundary()
-        if k == "timestamp" or k == "decimal":
-            self._secondary.flush()
-        if k in ("string", "char", "varchar", "binary"):
-            if self.encoding in ("DICTIONARY", "DICTIONARY_V2"):
-                self._data.flush()
-            else:
-                self._lengths.flush()
-        for _, out in self._streams:
-            out.end_group()
-
-    def pos(self) -> list[int]:
-        """Slot order mirrors getIndexPosition: DATA slots first, then
-        LENGTH/SECONDARY (dictionary ids record DATA only — the
-        dictionary itself is stripe-global, read whole). Call
-        group_boundary() first."""
-        k = self.kind
-        if k in ("smallint", "int", "bigint", "date", "tinyint", "boolean"):
-            return self._data.pos()
-        if k in ("float", "double"):
-            return self._data_out.pos()
-        if k == "timestamp":
-            return self._data.pos() + self._secondary.pos()
-        if k == "decimal":
-            return self._data_out.pos() + self._secondary.pos()
-        if self.encoding in ("DICTIONARY", "DICTIONARY_V2"):
-            return self._data.pos()
-        return self._data_out.pos() + self._lengths.pos()
-
-    def write_group(self, vals: list[Any]) -> None:
-        k = self.kind
-        if k in ("smallint", "int", "bigint"):
-            self._data.write_all([int(v) for v in vals])
-        elif k == "tinyint":
-            for v in vals:
-                self._data.write(int(v) & 0xFF)
-        elif k == "boolean":
-            for v in vals:
-                self._data.write(1 if v else 0)
-        elif k == "date":
-            self._data.write_all([(v - _EPOCH_DATE).days for v in vals])
-        elif k in ("float", "double"):
-            for v in vals:
-                self._data_out.write(struct.pack(self._fmt, float(v)))
-        elif k == "timestamp":
-            for v in vals:
-                secs, nanos = _ts_parts(v)
-                self._data.write(secs)
-                self._secondary.write(_enc_nanos(nanos))
-        elif k == "decimal":
-            from decimal import Context
-
-            ctx = Context(prec=77)  # precision 38 + scale headroom
-            scale = self._meta["scale"] or 0
-            q = Decimal(1).scaleb(-scale)
-            for v in vals:
-                unscaled = int(
-                    Decimal(v).quantize(q, context=ctx).scaleb(scale, ctx)
-                )
-                self._data_out.write(_unbounded_zz_varint(unscaled))
-                self._secondary.write(scale)
-        elif self.encoding in ("DICTIONARY", "DICTIONARY_V2"):
-            self._data.write_all([self._dict_ids[v] for v in vals])
-        else:  # string family / binary, DIRECT_V2
-            for v in vals:
-                b = v if isinstance(v, (bytes, bytearray)) else str(v).encode("utf-8")
-                self._data_out.write(bytes(b))
-                self._lengths.write(len(b))
-
-    def finish(self) -> list[tuple[str, bytes]]:
-        k = self.kind
-        if k in ("smallint", "int", "bigint", "date", "tinyint", "timestamp"):
-            self._data.flush()
-        if k == "boolean":
-            self._data.finish()
-        if k == "timestamp":
-            self._secondary.flush()
-        if k == "decimal":
-            self._secondary.flush()
-        if k in ("string", "char", "varchar", "binary"):
-            if self.encoding in ("DICTIONARY", "DICTIONARY_V2"):
-                self._data.flush()
-            else:
-                self._lengths.flush()
-        return [(kind, out.finish()) for kind, out in self._streams]
-
-
-def _ts_parts(v: _dt.datetime) -> tuple[int, int]:
-    """Wall clock → (seconds rel. 2015-01-01 UTC base, nanos), the
-    exact inverse of the reader's TreeReaderFactory rule (negative
-    seconds with nanos get the +1 adjustment)."""
-    delta = v - _EPOCH_DT
-    secs = delta.days * 86400 + delta.seconds
-    nanos = delta.microseconds * 1000
-    if secs < 0 and nanos != 0:
-        secs += 1
-    return secs - _TS_BASE, nanos
-
-
-def _enc_nanos(nanos: int) -> int:
-    """parseNanos inverse: strip trailing decimal zeros (count d >= 2
-    encodes as d-1 in the low 3 bits)."""
-    if nanos == 0:
-        return 0
-    d = 0
-    while nanos % 10 == 0 and d < 8:
-        nanos //= 10
-        d += 1
-    if d < 2:
-        return (nanos * 10**d) << 3
-    return (nanos << 3) | (d - 1)
-
-
-def _unbounded_zz_varint(v: int) -> bytes:
-    return _uvarint(_zz_enc(v))
+    return arrays
 
 
 # ---------------------------------------------------------------------------
@@ -1466,18 +1531,15 @@ def rewrite_orc_native(src: str, dst: str, **write_opts: Any) -> dict:
         parse_tail_of_file,
     )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
-        scan_file,
+        plan_file_scan,
     )
 
     meta = parse_tail_of_file(src)
     top = schema_from_type_tree(meta["types"])
     names = [n for n, _t in top]
-    cols: dict[str, list] = {n: [] for n in names}
-    if meta["n_rows"]:
-        for batch in scan_file(src, None, names):
-            for k, v in batch["columns"].items():
-                cols[k].extend(v)
-    return write_orc_native(dst, cols, top, **write_opts)
+    batches = list(plan_file_scan(src, None, names).execute()) if meta["n_rows"] else []
+    columns = pa.Table.from_batches(batches) if batches else {n: [] for n in names}
+    return write_orc_native(dst, columns, top, **write_opts)
 
 
 def _flatten_schema(top: list[tuple[str, dict]]) -> tuple[dict, list[dict]]:
@@ -1506,12 +1568,12 @@ def _flatten_schema(top: list[tuple[str, dict]]) -> tuple[dict, list[dict]]:
 
 def _encode_stripe(
     top: list[tuple[str, dict]], n_ids: int, opts: dict,
-    col_slices: list[list[Any]], srows: int,
+    arrays: list[pa.Array], srows: int,
 ) -> dict:
-    """Encode ONE stripe: distribute values down the node-writer tree
-    group by group, then assemble index region + data region + stripe
-    footer. Returns the stripe body bytes plus the per-stripe metadata
-    the file tail needs."""
+    """Encode ONE stripe: load each column's array into the node-writer
+    tree with its row-group offsets, encode every node, then assemble
+    index region + data region + stripe footer. Returns the stripe body
+    bytes plus the per-stripe metadata the file tail needs."""
     comp = opts["compression"]
     block = opts["compression_block_size"]
     stride = opts["row_index_stride"]
@@ -1519,10 +1581,9 @@ def _encode_stripe(
     writers = [
         _build_node_writer(name, node, opts, registry) for name, node in top
     ]
-    for g0 in range(0, srows, stride):
-        g1 = min(g0 + stride, srows)
-        for w, c in zip(writers, col_slices):
-            w.distribute(c[g0:g1])
+    bounds = np.append(np.arange(0, srows, stride), srows)
+    for w, a in zip(writers, arrays):
+        w.load(a, bounds)
     streams_by_cid = {cid: registry[cid].encode() for cid in sorted(registry)}
 
     # root struct (column 0): no streams; row-group stats only
@@ -1548,7 +1609,7 @@ def _encode_stripe(
         index_parts.append(("ROW_INDEX", cid, _frame(msg, comp, block)))
         if cid > 0 and registry[cid].blooms:
             bmsg = b"".join(
-                _pb_bytes(1, b.serialize()) for b in registry[cid].blooms
+                _pb_bytes(1, b) for b in registry[cid].blooms
             )
             index_parts.append(("BLOOM_FILTER_UTF8", cid, _frame(bmsg, comp, block)))
 
@@ -1685,7 +1746,7 @@ def _writer_opts(
 
 def write_orc_native(
     path: str,
-    columns: dict[str, list[Any]],
+    columns: Any,
     schema: str | list[tuple[str, Any]],
     *,
     compression: str = "zlib",
@@ -1701,10 +1762,11 @@ def write_orc_native(
     default; `version="0.11"` emits the pre-RLEv2 format — RLEv1
     integer streams under the plain DIRECT/DICTIONARY encodings, the
     exact shape the reference's 0.11 writer produced and the golden
-    orc-file-11-format.orc carries). `columns` maps column
-    name → list of Python values (None = NULL); all lists must share
-    one length. Returns a summary {n_rows, n_stripes, bytes,
-    encodings}. Layout per PhysicalFsWriter: "ORC" header, stripes
+    orc-file-11-format.orc carries). `columns` is a `pa.Table` or
+    `pa.RecordBatch`, or maps column name → Arrow array or list of
+    Python values (None = NULL); all columns must share one length.
+    Returns a summary {n_rows, n_stripes, bytes, encodings}. Layout
+    per PhysicalFsWriter: "ORC" header, stripes
     (index region → data region → stripe footer), Metadata, Footer,
     PostScript, 1-byte postscript length."""
     top = parse_schema(schema)
@@ -1715,13 +1777,8 @@ def write_orc_native(
         dictionary_key_threshold, bloom_filter_columns, bloom_filter_fpp,
         version,
     )
-    cols = [columns[name] for name, _n in top]
-    n_rows = len(cols[0]) if cols else 0
-    for (name, _n), c in zip(top, cols):
-        if len(c) != n_rows:
-            raise ValueError(
-                f"column {name!r} has {len(c)} values, expected {n_rows}"
-            )
+    arrays = _column_arrays(columns, top)
+    n_rows = len(arrays[0]) if arrays else 0
 
     buf = bytearray(b"ORC")  # header (headerLength = 3)
     stripe_infos: list[dict] = []
@@ -1732,7 +1789,7 @@ def write_orc_native(
     for s0 in range(0, n_rows, stripe_rows) if n_rows else []:
         s1 = min(s0 + stripe_rows, n_rows)
         enc = _encode_stripe(
-            top, n_ids, opts, [c[s0:s1] for c in cols], s1 - s0
+            top, n_ids, opts, [a.slice(s0, s1 - s0) for a in arrays], s1 - s0
         )
         stripe_infos.append({"offset": len(buf), **enc["info"]})
         buf += enc["body"]
@@ -1808,18 +1865,15 @@ class NativeOrcAppender:
         self._encodings: dict[str, str] = {}
         self._n_rows = 0
 
-    def add_stripe(self, columns: dict[str, list[Any]]) -> None:
-        cols = [columns[name] for name, _n in self._top]
-        srows = len(cols[0]) if cols else 0
-        for (name, _n), c in zip(self._top, cols):
-            if len(c) != srows:
-                raise ValueError(
-                    f"column {name!r} has {len(c)} values, expected {srows}"
-                )
+    def add_stripe(self, columns: Any) -> None:
+        """Encode `columns` (the forms `write_orc_native` takes) as one
+        stripe; no rows, no stripe."""
+        arrays = _column_arrays(columns, self._top)
+        srows = len(arrays[0]) if arrays else 0
         if srows == 0:
             return
         enc = _encode_stripe(
-            self._top, len(self._flat), self._opts, cols, srows
+            self._top, len(self._flat), self._opts, arrays, srows
         )
         self._stripe_infos.append({"offset": self._len, **enc["info"]})
         self._fh.write(enc["body"])

@@ -365,9 +365,10 @@ def register_jsonl_sink(spark) -> None:
 
 def _build_orc_native_sink_class():
     """Factory (by-value pickling): `df.write.format("orc_native_sink")`
-    — each task STREAMS its partition to one ORC file through the
-    pure-Python appender (`sources/orc_encode.NativeOrcAppender`,
-    stripe by stripe: RLEv2/byte-RLE/bitfield streams, dictionary
+    — each task STREAMS its partition's Arrow record batches to one
+    ORC file through the columnar appender
+    (`sources/orc_encode.NativeOrcAppender`, stripe by stripe, each
+    stripe `stripe_rows` rows: RLEv2/byte-RLE/bitfield streams, dictionary
     cutover, row-group index positions, stats, optional UTF8 blooms),
     under the same TWO-PHASE commit as jsonl_sink (per-task hidden
     temps, driver publishes part-NNNNN.orc atomically, abort removes
@@ -377,8 +378,7 @@ def _build_orc_native_sink_class():
     Scale: the write is embarrassingly parallel (one file per
     partition, no driver data) and task memory is bounded by ONE
     stripe's rows (the JVM writer's own memory shape — a partition of
-    any size streams through); the per-value Python encode is the
-    parity tier's documented cost — production bulk writes stay on
+    any size streams through); production bulk writes stay on
     the JVM writer (`orc_io.write_orc`), this sink exists to prove
     write-side format parity end-to-end (JVM readers consume the
     output, graded by s31) and to manufacture precise layouts.
@@ -390,7 +390,7 @@ def _build_orc_native_sink_class():
 
     from pyspark.sql.datasource import (
         DataSource,
-        DataSourceWriter,
+        DataSourceArrowWriter,
         WriterCommitMessage,
     )
 
@@ -399,14 +399,13 @@ def _build_orc_native_sink_class():
         tmp_path: str | None
         n_rows: int
 
-    class OrcNativeWriter(DataSourceWriter):
-        def __init__(self, options: dict, ddl: str, names: list[str]):
+    class OrcNativeWriter(DataSourceArrowWriter):
+        def __init__(self, options: dict, ddl: str):
             path = options.get("path")
             if not path:
                 raise ValueError("orc_native_sink requires .option('path', dir)")
             self._dir = path
             self._ddl = ddl
-            self._names = names
             self._comp = options.get("compression", "zlib")
             self._stripe_rows = int(options.get("stripe_rows", 100_000))
             self._stride = int(options.get("row_index_stride", 10_000))
@@ -422,6 +421,7 @@ def _build_orc_native_sink_class():
             import os
             import uuid
 
+            import pyarrow as pa
             from pyspark import TaskContext
 
             from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import (
@@ -436,12 +436,12 @@ def _build_orc_native_sink_class():
             # memory shape), never the whole partition
             ap = None
             tmp = None
-            buf: dict[str, list] = {n: [] for n in self._names}
-            pending = 0
+            pending: list = []  # RecordBatches not yet in a stripe
+            n_pending = 0
             total = 0
 
-            def _flush():
-                nonlocal ap, tmp, pending, total, buf
+            def _flush(stripe):
+                nonlocal ap, tmp, total
                 if ap is None:
                     os.makedirs(self._dir, exist_ok=True)
                     tmp = os.path.join(
@@ -455,19 +455,19 @@ def _build_orc_native_sink_class():
                         bloom_filter_columns=self._blooms,
                         version=self._version,
                     )  # fmt: skip
-                ap.add_stripe(buf)
-                total += pending
-                buf = {n: [] for n in self._names}
-                pending = 0
+                ap.add_stripe(stripe)
+                total += stripe.num_rows
 
-            for row in iterator:
-                for name, v in zip(self._names, row):
-                    buf[name].append(v)
-                pending += 1
-                if pending >= self._stripe_rows:
-                    _flush()
-            if pending:
-                _flush()
+            for batch in iterator:
+                pending.append(batch)
+                n_pending += batch.num_rows
+                while n_pending >= self._stripe_rows:
+                    rows = pa.Table.from_batches(pending)
+                    _flush(rows.slice(0, self._stripe_rows))
+                    rest = rows.slice(self._stripe_rows)
+                    pending, n_pending = rest.to_batches(), rest.num_rows
+            if n_pending:
+                _flush(pa.Table.from_batches(pending))
             if ap is None:  # empty partition: publish nothing
                 return OrcCommit(tmp_path=None, n_rows=0)
             ap.close()
@@ -502,15 +502,14 @@ def _build_orc_native_sink_class():
             return "value string"
 
         def writer(self, schema, overwrite: bool):
-            ddl, names = _spark_schema_to_orc_ddl(schema)
-            return OrcNativeWriter(self.options, ddl, names)
+            return OrcNativeWriter(self.options, _spark_schema_to_orc_ddl(schema))
 
     return OrcNativeSinkSource
 
 
-def _spark_schema_to_orc_ddl(schema) -> tuple[str, list[str]]:
-    """Spark StructType -> (ORC DDL for orc_encode.parse_schema,
-    field names). simpleString() already speaks the shared dialect —
+def _spark_schema_to_orc_ddl(schema) -> str:
+    """Spark StructType -> ORC DDL for orc_encode.parse_schema.
+    simpleString() already speaks the shared dialect —
     primitives, decimal(p,s)/char(n)/varchar(n), and the composite
     struct<...>/array<...>/map<...> forms the writer's type tree
     parses. Unsupported types raise on the driver before any task
@@ -519,7 +518,7 @@ def _spark_schema_to_orc_ddl(schema) -> tuple[str, list[str]]:
         parse_schema,
     )
 
-    parts, names = [], []
+    parts = []
     for f in schema.fields:
         ts = f.dataType.simpleString()
         # ORC TIMESTAMP is the zone-less wall clock — NTZ IS the
@@ -527,10 +526,9 @@ def _spark_schema_to_orc_ddl(schema) -> tuple[str, list[str]]:
         # bytes under the session-UTC pin)
         ts = ts.replace("timestamp_ntz", "timestamp")
         parts.append(f"{f.name} {ts}")
-        names.append(f.name)
     ddl = ", ".join(parts)
     parse_schema(ddl)  # validate eagerly, driver-side
-    return ddl, names
+    return ddl
 
 
 def register_orc_native_sink(spark) -> None:
@@ -736,49 +734,6 @@ def _build_orc_native_class():
             "1", "true", "yes",
         )
 
-    def _bounded_view(path: str):
-        """The committed [0, flush_length) byte view of a growing
-        file, as a real file the unmodified scan chain reads (the s23
-        materialize-the-prefix discipline, kept out of the shared
-        decode path by design). Cached per (file, bound) — a new
-        publish is a new bound, so repeated polls of an unchanged
-        bound cost one stat; stale bounds of the same file are
-        removed. Files without a side file pass through untouched."""
-        import hashlib
-        import os
-        import shutil
-        import tempfile
-
-        side = path + ".flush_length"
-        if not os.path.exists(side):
-            return path
-        with open(side) as fh:
-            bound = int(fh.read().strip())
-        if bound >= os.path.getsize(path):
-            return path
-        tag = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
-        views = os.path.join(tempfile.gettempdir(), "orc_native_views")
-        os.makedirs(views, exist_ok=True)
-        view = os.path.join(views, f"{tag}-{bound}.orc")
-        if not os.path.exists(view):
-            for stale in os.listdir(views):
-                if stale.startswith(f"{tag}-"):
-                    try:
-                        os.remove(os.path.join(views, stale))
-                    except OSError:
-                        pass
-            tmp = view + ".tmp"
-            with open(path, "rb") as src, open(tmp, "wb") as dst:
-                remaining = bound
-                while remaining > 0:
-                    chunk = src.read(min(1 << 20, remaining))
-                    if not chunk:
-                        break
-                    dst.write(chunk)
-                    remaining -= len(chunk)
-            os.replace(tmp, view)
-        return view
-
     class OrcNativeReader(DataSourceReader):
         def __init__(self, options: dict, first=None, meta=None):
             self._path = options["path"]
@@ -885,6 +840,90 @@ def _build_orc_native_class():
             return OrcNativeReader(self.options, first=first, meta=meta)
 
     return OrcNativeSource
+
+
+# ---------------------------------------------------------------------------
+# bounded views of growing files (driver-side planning of orc_native)
+# ---------------------------------------------------------------------------
+
+
+def _bounded_view(path: str) -> str:
+    """The committed [0, flush_length) byte view of a growing file, as
+    a real file the unmodified scan chain reads (the s23
+    materialize-the-prefix discipline, kept out of the shared decode
+    path by design). Views live in `<tmp>/orc_native_views` as
+    `<tag>-<bound>.orc`, `<tag>` a digest of the file's path, next to
+    a `<tag>.src` that names the file. Cached per (file, bound): a new
+    publish is a new bound, so repeated polls of an unchanged bound
+    cost one stat, and stale bounds of the same file are removed. A
+    file's views go once the file is complete (no side file, or a
+    bound that covers the whole file) or gone; files without a side
+    file pass through untouched."""
+    import hashlib
+    import os
+    import tempfile
+
+    views = os.path.join(tempfile.gettempdir(), "orc_native_views")
+    tag = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
+    _drop_views_of_gone_files(views)
+    side = path + ".flush_length"
+    bound = None
+    if os.path.exists(side):
+        with open(side) as fh:
+            bound = int(fh.read().strip())
+    if bound is None or not os.path.exists(path) or bound >= os.path.getsize(path):
+        _drop_views(views, tag)
+        return path
+    view = os.path.join(views, f"{tag}-{bound}.orc")
+    if not os.path.exists(view):
+        _drop_views(views, tag)
+        os.makedirs(views, exist_ok=True)
+        tmp = view + ".tmp"
+        with open(path, "rb") as src, open(tmp, "wb") as dst:
+            remaining = bound
+            while remaining > 0:
+                chunk = src.read(min(1 << 20, remaining))
+                if not chunk:
+                    break
+                dst.write(chunk)
+                remaining -= len(chunk)
+        with open(os.path.join(views, f"{tag}.src"), "w") as fh:
+            fh.write(os.path.abspath(path))
+        os.replace(tmp, view)
+    return view
+
+
+def _drop_views(views: str, tag: str) -> None:
+    """Remove every view of one file (and its `.src` note)."""
+    import os
+
+    try:
+        names = os.listdir(views)
+    except FileNotFoundError:
+        return
+    for name in names:
+        if name.startswith(tag):
+            try:
+                os.remove(os.path.join(views, name))
+            except OSError:
+                pass
+
+
+def _drop_views_of_gone_files(views: str) -> None:
+    import os
+
+    try:
+        notes = [n for n in os.listdir(views) if n.endswith(".src")]
+    except FileNotFoundError:
+        return
+    for note in notes:
+        try:
+            with open(os.path.join(views, note)) as fh:
+                src = fh.read()
+        except OSError:
+            continue
+        if not os.path.exists(src):
+            _drop_views(views, note[: -len(".src")])
 
 
 def register_orc_native(spark) -> None:

@@ -144,3 +144,42 @@ def test_golden_legacy_bloom_structure(spark):
             f"distinct × k=4 (ideal {ideal}, ~{expected_collisions:.0f} "
             "collisions expected)"
         )
+
+
+def test_vectorized_hashes_match_scalar():
+    """The writer's whole-array hashes (`orc_encode.wang_hashes`,
+    `orc_encode.murmur3_hashes`) equal the scalar ones the reader
+    probes with, on the edges of wrapping uint64/int32 arithmetic:
+    the int64 bounds, -1, 0, NaN payloads and -0.0 as long bits, the
+    empty string, non-ASCII text and every Murmur3 tail length."""
+    import struct
+
+    import numpy as np
+    import pyarrow as pa
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import (
+        murmur3_hashes,
+        wang_hashes,
+    )
+
+    def long_bits(x: float) -> int:
+        return struct.unpack("<q", struct.pack("<d", x))[0]
+
+    longs = [-(2**63), 2**63 - 1, -(2**63) + 1, 2**63 - 2, -1, 0, 1,
+             2**31, -(2**31) - 1, 2**32, 104729, -123456789012345]  # fmt: skip
+    longs += [long_bits(x) for x in (float("nan"), -0.0, 0.0, float("inf"), -1.5)]
+    longs += [0x7FF0000000000001, 0x7FF8DEADBEEF0001, -0x0008000000000001]  # NaN payloads
+    got = wang_hashes(np.array(longs, dtype=np.int64)).tolist()
+    assert got == [B.wang_long_hash(v) for v in longs]
+
+    texts = ["", "a", "é", "日本語", "emoji 🎉", "x" * 64]
+    texts += ["abcdefghijklmnopq"[: n] for n in range(1, 16)]  # every tail
+    texts += ["ü" * n for n in range(1, 16)]  # multi-byte tails
+    for typ in (pa.string(), pa.large_string()):
+        arr = pa.array(["pad"] + texts, type=typ).slice(1)  # a sliced view
+        want = [B.murmur3_hash64(t.encode("utf-8")) for t in texts]
+        assert murmur3_hashes(arr).tolist() == want
+    raw = [bytes(range(n)) for n in range(0, 20)]
+    assert murmur3_hashes(pa.array(raw, pa.binary())).tolist() == [
+        B.murmur3_hash64(b) for b in raw
+    ]

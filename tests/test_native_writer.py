@@ -976,6 +976,60 @@ def test_orc_native_datasource_reads_growing_appender_file(spark, tmp_path):
     )
 
 
+def test_bounded_views_removed_once_file_complete(tmp_path, monkeypatch):
+    """`pyds._bounded_view` copies a growing file's committed prefix
+    into `<tmp>/orc_native_views`. The copies of one file go once that
+    file is complete: an appender publishes twice with a read between,
+    closes, and the final read leaves no view behind. A view whose
+    file is gone goes at the next planning call."""
+    import tempfile
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import (
+        NativeOrcAppender,
+    )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import _bounded_view
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    views = tmp_path / "tmp" / "orc_native_views"
+
+    def read(path):
+        view = _bounded_view(path)
+        return view, _native_columns(view, ["k"]).get("k", [])
+
+    path = str(tmp_path / "g.orc")
+    side = path + ".flush_length"
+    ap = NativeOrcAppender(path, "k bigint", row_index_stride=100)
+    ap.add_stripe({"k": list(range(300))})
+    with open(side, "w") as fh:
+        fh.write(str(ap.publish()))
+    torn = [(v * 7919) % 100_003 for v in range(20_000)]
+    ap.add_stripe({"k": torn})  # growth past the committed tail
+    view, got = read(path)
+    assert view != path and got == list(range(300))
+    assert len(list(views.iterdir())) == 2  # the view and its .src note
+    with open(side, "w") as fh:
+        fh.write(str(ap.publish()))
+    ap.close()
+    view, got = read(path)  # the bound now covers the whole file
+    assert view == path and got == list(range(300)) + torn
+    assert list(views.iterdir()) == []
+
+    # a view whose file disappears goes at the next call for any file
+    gone = str(tmp_path / "gone.orc")
+    ap = NativeOrcAppender(gone, "k bigint")
+    ap.add_stripe({"k": [1, 2]})
+    with open(gone + ".flush_length", "w") as fh:
+        fh.write(str(ap.publish()))
+    ap.add_stripe({"k": torn})
+    assert _bounded_view(gone) != gone
+    ap.close()
+    os.remove(gone)
+    os.remove(gone + ".flush_length")
+    assert _bounded_view(path) == path
+    assert list(views.iterdir()) == []
+
+
 # ---------------------------------------------------------------------------
 # property fuzz: write -> native read is the identity
 # ---------------------------------------------------------------------------

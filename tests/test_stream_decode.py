@@ -1137,9 +1137,10 @@ def test_scan_file_edges_exact(tmp_path, monkeypatch):
         lambda f, s: pb_string(f, next(zones) if (f, s) == (3, "UTC") else s),
     )
 
-    def one_day_late(v):
-        secs, nanos = ts_parts(v)
-        return (secs + 86_400 if v == last else secs), nanos
+    def one_day_late(micros):
+        secs, nanos = ts_parts(micros)
+        at_last = micros == (last - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+        return secs + 86_400 * at_last, nanos
 
     monkeypatch.setattr(oe, "_ts_parts", one_day_late)
     path = str(tmp_path / "edges.orc")
