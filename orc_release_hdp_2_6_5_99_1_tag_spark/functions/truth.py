@@ -259,6 +259,10 @@ def evaluate_tree(
     return tv
 
 
+# the leaves checkInBloomFilter refines: a bloom answers membership only
+_BLOOM_OPS = ("equals", "null_safe_equals", "in")
+
+
 def refine_with_bloom(tv: str, op: str, literal: Any, bloom: dict) -> str:
     """The reference's `checkInBloomFilter` refinement: when the
     min/max range can only say MAYBE for an equality-class leaf, a
@@ -267,7 +271,7 @@ def refine_with_bloom(tv: str, op: str, literal: Any, bloom: dict) -> str:
     exist by design). Only YES_NO / YES_NO_NULL are refinable — a
     range YES means min==max==literal (present regardless of what the
     bloom says), and NULL/NO states can't gain a true outcome."""
-    if op not in ("equals", "null_safe_equals", "in"):
+    if op not in _BLOOM_OPS:
         return tv
     if tv not in (YES_NO, YES_NO_NULL):
         return tv
@@ -358,14 +362,17 @@ def explain_file_pruning(path: str, tree: Any) -> list[dict]:
     return out
 
 
-def _tree_columns(tree: Any) -> set[str]:
-    head = tree[0]
-    if head in ("and", "or", "not"):
-        out: set[str] = set()
+def _leaves(tree: Any):
+    """Every leaf ("op", column, literal[, pred_type]) of a tree."""
+    if tree[0] in ("and", "or", "not"):
         for child in tree[1:]:
-            out |= _tree_columns(child)
-        return out
-    return {tree[1]}
+            yield from _leaves(child)
+    else:
+        yield tree
+
+
+def _tree_columns(tree: Any) -> set[str]:
+    return {leaf[1] for leaf in _leaves(tree)}
 
 
 def pick_row_groups(path: str, tree: Any, use_bloom: bool = True) -> list[list[dict]]:
@@ -374,24 +381,30 @@ def pick_row_groups(path: str, tree: Any, use_bloom: bool = True) -> list[list[d
     row group's TruthValue (ROW_INDEX per-row-group min/max/hasNull
     via footer_tail, refined through the row group's bloom filter
     when present and `use_bloom`) and the keep/skip decision. Returns
-    [[{row_group, truth, keep}, ...] per stripe]."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.bloom import parse_bloom_index
+    [[{row_group, truth, keep}, ...] per stripe]. Only the SArg's
+    columns' row indexes are read, and only the blooms an
+    equality-class leaf can use (`_bloom_ids`)."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-        parse_row_index,
+        parse_indexes,
         parse_stripe_footers,
         parse_tail_of_file,
     )
 
     meta = parse_tail_of_file(path)
     stripes = parse_stripe_footers(path)
-    cids = set(_predicate_ids(meta, tree).values())
-    row_index = {cid: parse_row_index(path, cid, stripes) for cid in cids}
-    blooms = (
-        {cid: parse_bloom_index(path, cid, stripes) for cid in cids}
-        if use_bloom
-        else {}
+    row_index, blooms = parse_indexes(
+        path, stripes, (), stats=_predicate_ids(meta, tree).values(),
+        blooms=_bloom_ids(meta, tree) if use_bloom else (),
     )
     return _pick_groups(meta, tree, row_index, blooms)
+
+
+def _bloom_ids(meta: dict, tree: Any) -> set[int]:
+    """Column ids of the leaves a bloom filter can refine (the
+    equality class of `refine_with_bloom`): the only blooms worth
+    reading for this tree."""
+    ids = _predicate_ids(meta, tree)
+    return {ids[leaf[1]] for leaf in _leaves(tree) if leaf[0] in _BLOOM_OPS}
 
 
 def _predicate_ids(meta: dict, tree: Any) -> dict[str, int]:

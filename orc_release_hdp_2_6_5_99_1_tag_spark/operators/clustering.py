@@ -55,10 +55,6 @@ def _lit_vec_sql(vals) -> str:
     return "array(" + ",".join(repr(float(x)) + "D" for x in vals) + ")"
 
 
-def _lit_vec(vals) -> F.Column:
-    return F.expr(_lit_vec_sql(vals))
-
-
 def _sq_dist_sql(v_sql: str, vals) -> str:
     """SQL text for the squared L2 between an array-typed expression
     and a literal centroid, summed in list order (argmin-equivalent to
@@ -66,15 +62,6 @@ def _sq_dist_sql(v_sql: str, vals) -> str:
     return (
         f"aggregate(zip_with({v_sql}, {_lit_vec_sql(vals)}, "
         "(x, c) -> (x - c) * (x - c)), 0.0D, (acc, d) -> acc + d)"
-    )
-
-
-def _sq_dist(v: F.Column, lit_vec: F.Column) -> F.Column:
-    """Column twin of `_sq_dist_sql` for non-literal operands."""
-    return F.aggregate(
-        F.zip_with(v, lit_vec, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
     )
 
 

@@ -138,12 +138,6 @@ def _minhash_agg_exprs(with_size: bool = False) -> list:
     return aggs
 
 
-def minhash_signatures(d: DataFrame) -> DataFrame:
-    """16 minhash values per doc: min over shingles of (a*h + b) % P."""
-    sh = _shingles(d)
-    return sh.groupBy("doc_id").agg(*_minhash_agg_exprs())
-
-
 def _band_buckets(sig: DataFrame) -> DataFrame:
     """Band the signature: band hash = md5 of 4 concatenated minhashes."""
     bands = []

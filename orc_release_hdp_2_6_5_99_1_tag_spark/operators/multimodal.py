@@ -24,15 +24,6 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table
 _FEATURE_SCHEMA = "doc_id bigint, n_bytes int, first_byte int, byte_checksum bigint, decode_status string"
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real decoder hook — image/audio libs are not available in this
-    environment (SURVEY: stub decode behind NotImplementedError)."""
-    raise NotImplementedError(
-        "media codecs unavailable in this environment; "
-        "extract_features uses the deterministic stub path"
-    )
-
-
 def make_feature_extractor():
     """Arrow-batched feature extractor over binary payloads.
 

@@ -27,21 +27,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from orc_release_hdp_2_6_5_99_1_tag_spark.tables import load_table
 
 
-def _dec(col: str, p: int = 18, s: int = 2):
-    return F.col(col).cast(f"decimal({p},{s})")
-
-
-# amounts: price * (1 - discount) [* (1 + tax)], exact decimal arithmetic
-def _disc_price():
-    return _dec("l_extendedprice") * (F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)"))
-
-
-def _charge():
-    return (_disc_price() * (F.lit(1).cast("decimal(8,4)") + F.col("l_tax").cast("decimal(8,4)"))).cast(
-        "decimal(30,6)"
-    )
-
-
 def _sum_revenue():
     """Σ price·(1−discount) via integer arithmetic (q1's measured
     lesson — long-backed accumulation beats decimal accumulators

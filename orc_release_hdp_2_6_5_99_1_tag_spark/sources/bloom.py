@@ -203,26 +203,34 @@ def _parse_bloom_filter(buf: bytes) -> dict:
     return {"num_hash": num_hash, "bits": bits}
 
 
+def bloom_entries(raws: list[bytes]) -> list[dict]:
+    """The per-row-group blooms of one stripe's decompressed
+    BLOOM_FILTER / BLOOM_FILTER_UTF8 streams of a column
+    (`OrcProto.BloomFilterIndex`: repeated BloomFilter=1)."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import _fields
+
+    return [
+        _parse_bloom_filter(v)
+        for raw in raws
+        for f, _w, v in _fields(raw)
+        if f == 1
+    ]
+
+
 def parse_bloom_index(
     path: str, column_id: int, stripes: list[dict] | None = None
 ) -> list[list[dict]]:
     """Parse a column's bloom-filter index streams out of a real ORC
     file: per stripe, the list of per-row-group blooms. Ranged reads
     only — the index region of each stripe (see
-    `footer_tail._index_streams`); `stripes` reuses an earlier
+    `footer_tail.parse_indexes`, which plans use to read blooms with
+    the row indexes); `stripes` reuses an earlier
     parse_stripe_footers."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-        _fields,
-        _index_streams,
+        parse_indexes,
+        parse_stripe_footers,
     )
 
-    kinds = ("BLOOM_FILTER", "BLOOM_FILTER_UTF8")
-    return [
-        [
-            _parse_bloom_filter(v)
-            for raw in raws
-            for f, _w, v in _fields(raw)
-            if f == 1  # repeated BloomFilter
-        ]
-        for raws in _index_streams(path, column_id, kinds, stripes)
-    ]
+    if stripes is None:
+        stripes = parse_stripe_footers(path)
+    return parse_indexes(path, stripes, (), blooms=(column_id,))[1][column_id]

@@ -300,7 +300,7 @@ def _file_rowgroups(path: str, columns: list[str]):
     for cname in columns:
         if cname not in ids:
             raise KeyError(f"column {cname!r} not in {path}: {sorted(ids)}")
-        per_stripe = ft.parse_row_index(path, ids[cname])
+        per_stripe = ft.parse_row_index(path, ids[cname], stripes)
         if any(not entries for entries in per_stripe):
             raise ValueError(
                 f"{path}: column {cname!r} has a stripe with no "

@@ -28,6 +28,8 @@ import struct
 import zlib
 from typing import Any
 
+import numpy as np
+
 # proto enum CompressionKind (orc_proto.proto:205-212)
 _COMPRESSION = {0: "NONE", 1: "ZLIB", 2: "SNAPPY", 3: "LZO", 4: "LZ4", 5: "ZSTD"}
 
@@ -90,6 +92,33 @@ def _packed_varints(v: Any) -> list[int]:
         n, pos = _varint(v, pos)
         out.append(n)
     return out
+
+
+def _span(buf: bytes, pos: int, wire_type: int) -> tuple[int, int]:
+    """Start and end of the value of a field whose key ends at `pos`."""
+    if wire_type == 2:
+        n, pos = _varint(buf, pos)
+        return pos, pos + n
+    if wire_type == 0:
+        return pos, _varint(buf, pos)[1]
+    if wire_type == 1:
+        return pos, pos + 8
+    if wire_type == 5:
+        return pos, pos + 4
+    raise ValueError(f"unsupported protobuf wire type {wire_type}")
+
+
+def varint_array(b: np.ndarray) -> np.ndarray:
+    """Every unsigned varint in the uint8 array `b`, decoded at once
+    (uint64); bytes after the last terminating byte are ignored."""
+    ends = np.flatnonzero(b < 0x80)
+    if not len(ends):
+        return np.zeros(0, np.uint64)
+    b = b[: ends[-1] + 1]
+    firsts = np.concatenate(([0], ends[:-1] + 1))
+    shifts = np.arange(len(b)) - np.repeat(firsts, ends - firsts + 1)
+    parts = (b & 0x7F).astype(np.uint64) << (7 * shifts).astype(np.uint64)
+    return np.bitwise_or.reduceat(parts, firsts)
 
 
 def _lz4_block_decompress(src: bytes) -> bytes:
@@ -662,65 +691,130 @@ def _parse_stream(buf: bytes) -> dict:
     return s
 
 
+_BLOOM_KINDS = ("BLOOM_FILTER", "BLOOM_FILTER_UTF8")
 # the index region of a stripe: these streams precede its data streams
-_INDEX_AREA = ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8")
+_INDEX_AREA = ("ROW_INDEX",) + _BLOOM_KINDS
 
 
 def _index_streams(
-    path: str, column_id: int, kinds: tuple[str, ...],
-    stripes: list[dict] | None = None,
-) -> list[list[bytes]]:
-    """Per stripe, the decompressed `kinds` streams of `column_id` —
-    ranged reads of the index region only (its streams come first in
-    the StripeFooter directory; offsets are cumulative lengths).
-    `stripes` reuses an earlier parse_stripe_footers."""
-    if stripes is None:
-        stripes = parse_stripe_footers(path)
+    path: str, wanted: dict[int, tuple[str, ...]], stripes: list[dict]
+) -> dict[int, list[list[tuple[str, bytes]]]]:
+    """Per column id in `wanted`, per stripe, the decompressed streams
+    of the wanted kinds as (kind, bytes) in directory order — ranged
+    reads of the index region only (its streams come first in the
+    StripeFooter directory; offsets are cumulative lengths). One open
+    and one postscript parse serve every column and stripe."""
+    out: dict[int, list[list[tuple[str, bytes]]]] = {cid: [] for cid in wanted}
     with open(path, "rb") as fh:
         fh.seek(-1, 2)
         ps_len = fh.read(1)[0]
         fh.seek(-(1 + ps_len), 2)
-        ps = _parse_postscript(fh.read(ps_len))
-        out: list[list[bytes]] = []
+        compression = _parse_postscript(fh.read(ps_len))["compression"]
         for st in stripes:
             pos = st["offset"]
-            raws: list[bytes] = []
+            got: dict[int, list[tuple[str, bytes]]] = {cid: [] for cid in wanted}
             for s in st["streams"]:
-                if s["kind"] in _INDEX_AREA:
-                    if s["kind"] in kinds and s["column"] == column_id:
+                kind = s["kind"]
+                if kind in _INDEX_AREA:
+                    if kind in wanted.get(s["column"], ()):
                         fh.seek(pos)
-                        raws.append(
-                            _decompress_tail(fh.read(s["length"]), ps["compression"])
-                        )
+                        raw = _decompress_tail(fh.read(s["length"]), compression)
+                        got[s["column"]].append((kind, raw))
                     pos += s["length"]
-            out.append(raws)
+            for cid, streams in got.items():
+                out[cid].append(streams)
     return out
+
+
+def _row_index_entries(raw: bytes, stats: bool) -> list[dict]:
+    """The entries of one ROW_INDEX stream (`OrcProto.RowIndex`:
+    repeated RowIndexEntry entry=1; RowIndexEntry: positions=1 packed,
+    statistics=2). Python steps over the message fields only; the
+    positions of every entry are decoded together by one numpy varint
+    pass. ColumnStatistics are parsed only when `stats`."""
+    entries: list[dict] = []
+    parts: list[bytes] = []  # every entry's positions bytes, in order
+    nbytes: list[int] = []  # per entry: how many of those bytes
+    pos = 0
+    while pos < len(raw):
+        key, pos = _varint(raw, pos)
+        start, pos = _span(raw, pos, key & 7)
+        if key != 0x0A:  # not field 1 (entry), length-delimited
+            continue
+        entry: dict = {"positions": []}
+        size = 0
+        p = start
+        while p < pos:
+            k, p = _varint(raw, p)
+            a, p = _span(raw, p, k & 7)
+            if k >> 3 == 1:  # a packed blob, or one unpacked varint
+                parts.append(raw[a:p])
+                size += p - a
+            elif k >> 3 == 2 and stats:
+                entry.update(_parse_column_statistics(raw[a:p]))
+        entries.append(entry)
+        nbytes.append(size)
+    blob = np.frombuffer(b"".join(parts), np.uint8)
+    values = varint_array(blob).tolist()
+    # values per entry: the varint-terminating bytes in its share
+    ends = np.cumsum(nbytes, dtype=np.int64)
+    done = np.concatenate(([0], np.cumsum(blob < 0x80)))[ends].tolist()
+    lo = 0
+    for entry, hi in zip(entries, done):
+        entry["positions"] = values[lo:hi]
+        lo = hi
+    return entries
+
+
+def parse_indexes(
+    path: str, stripes: list[dict], columns, stats=(), blooms=(),
+) -> tuple[dict[int, list], dict[int, list]]:
+    """The index a scan plan needs, read in one pass over each stripe's
+    index region: the row index of every column id in `columns` and
+    `stats` — seek positions for all of them, typed statistics only for
+    the `stats` ids (a SearchArgument's leaf columns) — and the bloom
+    index of every id in `blooms`. Returns (row_index, bloom_index),
+    each {column id: per stripe, the per-row-group entries}."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.bloom import bloom_entries
+
+    stats = set(stats)
+    wanted = {cid: ("ROW_INDEX",) for cid in {*columns, *stats}}
+    for cid in blooms:
+        wanted[cid] = wanted.get(cid, ()) + _BLOOM_KINDS
+    row_index: dict[int, list] = {}
+    bloom_index: dict[int, list] = {}
+    for cid, per_stripe in _index_streams(path, wanted, stripes).items():
+        if "ROW_INDEX" in wanted[cid]:
+            row_index[cid] = [
+                [
+                    e
+                    for kind, raw in streams
+                    if kind == "ROW_INDEX"
+                    for e in _row_index_entries(raw, cid in stats)
+                ]
+                for streams in per_stripe
+            ]
+        if cid in blooms:
+            bloom_index[cid] = [
+                bloom_entries([raw for kind, raw in streams if kind != "ROW_INDEX"])
+                for streams in per_stripe
+            ]
+    return row_index, bloom_index
 
 
 def parse_row_index(
     path: str, column_id: int, stripes: list[dict] | None = None
 ) -> list[list[dict]]:
-    """Parse a column's ROW_INDEX streams: per stripe, the list of
+    """Parse one column's ROW_INDEX streams: per stripe, the list of
     per-row-group entries ({positions, n_values, has_null, typed
-    min/max/sum}) — the reference's RowIndex/RowIndexEntry
-    (`OrcProto.RowIndexEntry`: positions=1 packed, statistics=2), the
+    min/max/sum}) — the reference's RowIndex/RowIndexEntry, the
     granularity `pickRowGroups` actually prunes at. Ranged reads of
-    each stripe's index region only."""
-    out: list[list[dict]] = []
-    for raws in _index_streams(path, column_id, ("ROW_INDEX",), stripes):
-        entries: list[dict] = []
-        for raw in raws:
-            for f, _w, v in _fields(raw):
-                if f == 1:  # RowIndexEntry
-                    entry: dict = {"positions": []}
-                    for ef, _ew, ev in _fields(v):
-                        if ef == 1:
-                            entry["positions"] = _packed_varints(ev)
-                        elif ef == 2:
-                            entry.update(_parse_column_statistics(ev))
-                    entries.append(entry)
-        out.append(entries)
-    return out
+    each stripe's index region only; `stripes` reuses an earlier
+    parse_stripe_footers. A plan that needs several columns' indexes
+    reads them together through `parse_indexes`."""
+    if stripes is None:
+        stripes = parse_stripe_footers(path)
+    return parse_indexes(path, stripes, (), stats=(column_id,))[0][column_id]
 
 
 # position-slot widths (RecordReaderUtils.java:387-390): a byte stream

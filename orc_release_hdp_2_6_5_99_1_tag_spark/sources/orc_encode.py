@@ -790,7 +790,14 @@ class _Stats:
                 self.min = other.min
             if self.max is None or other.max > self.max:
                 self.max = other.max
-        if self.kind != "boolean":
+        if self.kind in ("float", "double"):
+            # numpy's scalar add returns the same NaN for the same
+            # operands (the second one's when both are NaN); Python's
+            # float += returns either one's, depending on whether the
+            # interpreter has specialized the addition yet
+            with np.errstate(invalid="ignore"):
+                self.sum = float(np.float64(self.sum) + other.sum)
+        elif self.kind != "boolean":
             self.sum += other.sum
 
     def serialize(self) -> bytes:

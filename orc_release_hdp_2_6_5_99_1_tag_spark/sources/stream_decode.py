@@ -37,9 +37,10 @@ ranges**. Reference analogs, cited per layer:
 
 The decode is columnar, like the reference's `VectorizedRowBatch`
 (RecordReader.java:64): each planned stream is decompressed once into
-one buffer; Python walks the RLE run headers over it and numpy does
-the per-value work (one bit-unpack per width per read, `frombuffer`
-for floats, `unpackbits` for PRESENT). Every column decoder returns a
+one buffer; Python only finds where each RLE run starts, numpy reads
+the run headers from those offsets and does the per-value work (one
+bit-unpack per width per read, `frombuffer` for floats, `unpackbits`
+for PRESENT). Every column decoder returns a
 `pa.Array` of its declared type (`file_job.arrow_type`). Python values
 exist only at `to_pylists`, the boundary of the dict-of-lists calls
 (`scan_file`, `scan_file_evolved`, `decode_stripe`); decimals (unbounded
@@ -57,7 +58,9 @@ list/struct/map composites, and union (tagged-struct surface) — in
 both encoding versions (v0.11 RLEv1 and v0.12 RLEv2 files).
 
 Plan once per file: `plan_file_scan` reads a file's tail, stripe
-footers and the needed row indexes/blooms ONCE and resolves the whole
+footers and index region ONCE — seek positions of every included
+column, statistics of the predicate's columns, blooms only where an
+equality leaf can use them — and resolves the whole
 scan into a `FileScanPlan` (namespace map, effective SArg, level-1/2
 decisions, level-3 byte ranges, converters); scanning executes that
 plan and `explain_lake_scan` reports its summary. Scale: one file is
@@ -87,9 +90,10 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
     _INDEX_AREA,
     _decompress_chunk,
     get_index_position,
-    parse_row_index,
+    parse_indexes,
     parse_stripe_footers,
     parse_tail_of_file,
+    varint_array,
 )
 
 _COMP_CODE = {"NONE": 0, "ZLIB": 1, "SNAPPY": 2, "LZO": 3, "LZ4": 4, "ZSTD": 5}
@@ -259,8 +263,22 @@ def _closest_fixed_bits(n: int) -> int:
     return 64
 
 
+_WIDTHS = np.array(_WIDTH_TABLE, np.int64)
+# _closest_fixed_bits of a patch entry: patch width (<= 64) + gap width (<= 8)
+_FIXED_BITS = np.array([_closest_fixed_bits(n) for n in range(73)], np.int64)
+_U1, _U8 = np.uint64(1), np.uint64(8)
+# a SHORT_REPEAT header byte -> its value count, and its run's bytes
+_SR_COUNT = [(b & 7) + 3 for b in range(64)]
+_SR_BYTES = [2 + ((b >> 3) & 7) for b in range(64)]
+
+
 def _zigzag(v: int) -> int:
     return (v >> 1) ^ -(v & 1)
+
+
+def _unzigzag(v: np.ndarray) -> np.ndarray:
+    """_zigzag over uint64 (the result is the int64 bit pattern)."""
+    return (v >> _U1) ^ (np.uint64(0) - (v & _U1))
 
 
 def _varint(seg: _Seg, pos: int) -> tuple[int, int]:
@@ -283,94 +301,128 @@ def _within(counts: np.ndarray) -> np.ndarray:
     return np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
 
 
+def _spread_index(firsts: np.ndarray, counts: np.ndarray, step: int = 1) -> np.ndarray:
+    """firsts[i] + step * (0..counts[i]-1) for each i, concatenated."""
+    total = int(counts.sum())
+    before = np.cumsum(counts) - counts
+    return np.repeat(firsts - before * step, counts) + np.arange(total) * step
+
+
 def _unpack(arr: np.ndarray, offs, counts, width: int) -> np.ndarray:
     """Big-endian bit unpack (RunLengthIntegerReaderV2 readInts) of
     several packed sections of one width in one pass: section i holds
     counts[i] values starting at byte offs[i] (each section is
     byte-aligned; its trailing pad bits are never read). Each value is
-    gathered from the k bytes that cover its bits — O(values) memory.
-    Returns uint64."""
+    gathered from the k bytes that cover its bits, in the narrowest
+    unsigned dtype that holds k bytes — O(values) memory. Returns
+    uint64."""
     counts = np.asarray(counts, np.int64)
-    bit = np.repeat(np.asarray(offs, np.int64) * 8, counts) + _within(counts) * width
+    bit = _spread_index(np.asarray(offs, np.int64) * 8, counts, width)
     byte = bit >> 3
-    k = (width + 14) // 8 if width % 8 else width // 8
-    acc = arr[byte].astype(np.uint64)
+    # bytes covering one value: a width that divides 8 (or is whole
+    # bytes) never straddles a byte boundary, others may touch one more
+    k = (width + 7) // 8 if width % 8 == 0 or 8 % width == 0 else (width + 14) // 8
+    dt = np.uint16 if k <= 2 else np.uint32 if k <= 4 else np.uint64
+    acc = arr[byte].astype(dt)
     for m in range(1, k):
-        acc = (acc << np.uint64(8)) | arr[byte + m]
-    acc >>= (8 * k - width - (bit & 7)).astype(np.uint64)
+        acc = (acc << dt(8)) | arr[byte + m]
+    acc >>= (8 * k - width - (bit & 7)).astype(dt)
     if width < 64:
-        acc &= np.uint64((1 << width) - 1)
-    return acc
+        acc &= dt((1 << width) - 1)
+    return acc.astype(np.uint64, copy=False)
+
+
+def _big_endian(arr: np.ndarray, offs: np.ndarray, nbytes: np.ndarray) -> np.ndarray:
+    """The nbytes[i]-byte (1..8) big-endian unsigned integer at each
+    byte offs[i], as uint64. Bytes past a value's own are gathered
+    (they lie inside the segment or its _PAD) but not used."""
+    out = np.zeros(len(offs), np.uint64)
+    for m in range(int(nbytes.max())):
+        out = np.where(m < nbytes, (out << _U8) | arr[offs + m], out)
+    return out
+
+
+def _header_varints(arr: np.ndarray, at: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The unsigned varint at each byte offset in `at` (uint64), and the
+    offset after each. The run walk has already read each one to its
+    last byte inside the segment; the ten-byte gather is clipped to the
+    buffer, so it never reads past the _PAD."""
+    b = arr[np.minimum(at[:, None] + np.arange(10), len(arr) - 1)]
+    n = np.argmax(b < 0x80, axis=1) + 1
+    part = (b & 0x7F).astype(np.uint64) << (7 * np.arange(10, dtype=np.uint64))
+    part[np.arange(10) >= n[:, None]] = 0
+    return np.bitwise_or.reduce(part, axis=1), at + n
+
+
+_NO_RUNS = (np.zeros(0, np.int64),) * 7
 
 
 class _Runs:
-    """The run table an integer read builds while Python walks the run
-    headers; `values` then assembles every run at once. A run of L
-    values starts as its `start` repeated, then gains, where it has
-    them, `step * i` (a fixed DELTA run, an RLEv1 run), unpacked bits
-    (DIRECT, PATCHED_BASE), literals (RLEv1) or a running sum of
-    deltas (a packed DELTA run). All arithmetic wraps modulo 2^64."""
+    """The run table of one integer read, as arrays; `values` assembles
+    every run at once. A run of `lens[i]` values starts as `base[i]`
+    repeated, then gains, where it has them, `step * i` (a fixed DELTA
+    run, an RLEv1 run), unpacked bits (DIRECT, PATCHED_BASE), literals
+    (RLEv1) or a running sum of deltas (a packed DELTA run). All
+    arithmetic wraps modulo 2^64. Apart from `lens` (int64) and `base`
+    (uint64), each table is a tuple of equal-length arrays:
 
-    def __init__(self):
-        self.table: list[int] = []  # flat (length, start) per run
-        self.steps: list[tuple[int, int, int]] = []  # (index, len, step)
-        # (width, byte offset, count, first index, mode); mode 0 plain,
-        # 1 zigzag, 2 negated (the deltas of a falling DELTA run)
-        self.packed: list[tuple[int, int, int, int, int]] = []
-        # PATCHED_BASE patch lists: (index, len, width, patch width,
-        # byte offset, entries, entry width)
-        self.patches: list[tuple[int, int, int, int, int, int, int]] = []
-        self.deltas: list[tuple[int, int, int, int]] = []  # (index, len, delta, base)
-        self.literals: list[tuple[int, np.ndarray]] = []
+    - steps: (first index, length, step);
+    - packed: (width, byte offset, count, first index, mode), mode 0
+      plain, 1 zigzag, 2 negated (the deltas of a falling DELTA run);
+    - patches, the PATCHED_BASE patch lists: (first index, length,
+      width, patch width, byte offset, entries, entry width);
+    - deltas: (first index, length, first delta, base);
+    - literals (RLEv1): a list of (first index, uint64 values)."""
+
+    def __init__(self, lens, base, steps=_NO_RUNS[:3], packed=_NO_RUNS[:5],
+                 patches=_NO_RUNS, deltas=_NO_RUNS[:4], literals=()):
+        self.lens, self.base = lens, base
+        self.steps, self.packed, self.patches = steps, packed, patches
+        self.deltas, self.literals = deltas, literals
 
     def values(self, arr: np.ndarray) -> np.ndarray:
-        table = np.array(self.table, np.uint64).reshape(-1, 2)
-        out = np.repeat(table[:, 1], table[:, 0].astype(np.int64))
-        if self.steps:
-            at, lens, step = np.array(self.steps, np.uint64).T
-            lens = lens.astype(np.int64)
+        out = np.repeat(self.base, self.lens)
+        at, lens, step = self.steps
+        if len(at):
             i = _within(lens)
-            steps = np.repeat(step, lens) * i.astype(np.uint64)
-            out[np.repeat(at.astype(np.int64), lens) + i] += steps
-        if self.packed:
-            packed = np.array(self.packed, np.int64)
-            widths = packed[:, 0]
-            for width in np.unique(widths).tolist():
-                offs, counts, ats, modes = packed[widths == width, 1:].T
-                vals = _unpack(arr, offs, counts, width)
-                if modes.any():
-                    mode = np.repeat(modes, counts)
-                    zz = mode == 1
-                    v = vals[zz]
-                    vals[zz] = (v >> np.uint64(1)) ^ (np.uint64(0) - (v & np.uint64(1)))
-                    neg = mode == 2
-                    vals[neg] = np.uint64(0) - vals[neg]
-                out[np.repeat(ats, counts) + _within(counts)] += vals
+            out[np.repeat(at, lens) + i] += np.repeat(step, lens) * i.astype(np.uint64)
+        widths, offs, counts, ats, modes = self.packed
+        for width in np.unique(widths).tolist():
+            sel = widths == width
+            c = counts[sel]
+            vals = _unpack(arr, offs[sel], c, width)
+            if modes[sel].any():
+                mode = np.repeat(modes[sel], c)
+                zz = mode == 1
+                vals[zz] = _unzigzag(vals[zz])
+                neg = mode == 2
+                vals[neg] = np.uint64(0) - vals[neg]
+            out[_spread_index(ats[sel], c)] += vals
         for at, vals in self.literals:
             out[at : at + len(vals)] += vals
-        if self.patches:
+        at, lens, width, pw, off, entries, cw = self.patches
+        for w in np.unique(cw).tolist():
             # (gap, patch) entries, each gap counted from the previous
-            # entry (a (255, 0) entry only advances). The patch fills
-            # the bits above the unpacked value's, so adding it is OR.
-            where, what = [], []
-            for at, length, width, pw, off, plen, cw in self.patches:
-                i = at
-                mask = (1 << pw) - 1
-                for entry in _unpack(arr, [off], [plen], cw).tolist():
-                    gap, patch = entry >> pw, entry & mask
-                    i += gap
-                    if i >= at + length:
-                        break
-                    if patch:
-                        where.append(i)
-                        what.append((patch << width) & _M64)
-            out[np.asarray(where, np.int64)] += np.asarray(what, np.uint64)
-        if self.deltas:
+            # entry (a (255, 0) entry only advances); entries past the
+            # run's end are ignored. The patch fills the bits above the
+            # unpacked value's, so adding it is OR.
+            sel = cw == w
+            n = entries[sel]
+            e = _unpack(arr, off[sel], n, w)
+            shift = np.repeat(pw[sel], n).astype(np.uint64)
+            gap = (e >> shift).astype(np.int64)
+            patch = e & ((_U1 << shift) - _U1)
+            firsts = np.cumsum(n) - n
+            run_sum = np.cumsum(gap)
+            where = np.repeat(at[sel], n) + run_sum - np.repeat(run_sum[firsts] - gap[firsts], n)
+            hit = (where < np.repeat(at[sel] + lens[sel], n)) & (patch != 0)
+            up = np.repeat(width[sel], n)[hit].astype(np.uint64)
+            np.add.at(out, where[hit], patch[hit] << up)
+        first, lens, delta, base = self.deltas
+        if len(first):
             # out holds base + packed delta from each run's third value
             # on; turn that into base + the running sum of the deltas
-            first, lens, delta, base = np.array(self.deltas, np.uint64).T
-            first, lens = first.astype(np.int64), lens.astype(np.int64)
-            pos = np.repeat(first, lens) + _within(lens)
+            pos = _spread_index(first, lens)
             bases = np.repeat(base, lens)
             inc = out[pos] - bases
             starts = np.cumsum(lens) - lens
@@ -382,91 +434,113 @@ class _Runs:
 
 def _rle_v2(seg: _Seg, pos: int, need: int, signed: bool) -> tuple[np.ndarray, int]:
     """RunLengthIntegerReaderV2: decode whole runs from byte `pos` until
-    at least `need` values; the four sub-encodings are selected by the
-    top 2 bits of each run's first byte. Returns (int64 values, the
-    byte after the last run). The loop touches run headers only."""
+    at least `need` values; the top 2 bits of each run's first byte
+    select SHORT_REPEAT, DIRECT, PATCHED_BASE or DELTA. Returns (int64
+    values, the byte after the last run).
+
+    Python only finds where each run starts: it steps over a run by
+    the length its header bytes give (for DELTA, past the ends of its
+    two varints) and checks the run's extent against the segment's end.
+    numpy then reads every header field from the array of run starts —
+    kind, width, count, SHORT_REPEAT values, PATCHED_BASE base and
+    patch fields, DELTA base and delta — into a `_Runs` table."""
     buf, end = seg.buf, seg.end
-    runs = _Runs()
-    table, packed = runs.table, runs.packed
-    direct_mode = 1 if signed else 0
-    seen = [0, 0, 0, 0]
+    starts: list[int] = []
+    append = starts.append
     n = 0
     # every read below pos + 2 lands in the segment or its padding;
-    # each run's extent is checked against `end` before it is used
+    # each run's extent is checked against `end` before the next one
     while n < need:
         b0 = buf[pos]
-        if b0 < 0x40:  # SHORT_REPEAT, the common short run: inline
-            stop = pos + 2 + ((b0 >> 3) & 7)
-            if stop > end:
-                seg.check(stop)
-            val = int.from_bytes(buf[pos + 1 : stop], "big")
-            if signed:
-                val = (val >> 1) ^ -(val & 1)
-            count = (b0 & 7) + 3
-            table += (count, val & _M64)
+        append(pos)
+        if b0 < 0x40:  # SHORT_REPEAT
+            n += _SR_COUNT[b0]
+            stop = pos + _SR_BYTES[b0]
+        else:
+            width = _WIDTH_TABLE[(b0 >> 1) & 0x1F]
+            count = (((b0 & 1) << 8) | buf[pos + 1]) + 1
             n += count
-            pos = stop
-            seen[0] += 1
-            continue
-        enc = b0 >> 6
-        seen[enc] += 1
-        width = _WIDTH_TABLE[(b0 >> 1) & 0x1F]
-        count = (((b0 & 1) << 8) | buf[pos + 1]) + 1
-        pos += 2
-        if enc == 1:  # DIRECT
-            stop = pos + (count * width + 7) // 8
-            if stop > end:
+            if b0 < 0x80:  # DIRECT
+                stop = pos + 2 + (count * width + 7) // 8
+            elif b0 < 0xC0:  # PATCHED_BASE: 2 more header bytes, the base
+                seg.check(pos + 4)
+                b2, b3 = buf[pos + 2], buf[pos + 3]
+                stop = pos + 5 + (b2 >> 5)
                 seg.check(stop)
-            packed.append((width, pos, count, n, direct_mode))
-            table += (count, 0)
-        elif enc == 2:  # PATCHED_BASE
-            seg.check(pos + 2)
-            b2, b3 = buf[pos], buf[pos + 1]
-            base_width = ((b2 >> 5) & 7) + 1
-            patch_width = _WIDTH_TABLE[b2 & 0x1F]
-            patch_len = b3 & 0x1F
-            pos += 2
-            seg.check(pos + base_width)
-            base = int.from_bytes(buf[pos : pos + base_width], "big")
-            sign = 1 << (base_width * 8 - 1)
-            if base & sign:  # sign-magnitude, not two's complement
-                base = -(base & ~sign)
-            pos += base_width
-            patches = pos + (count * width + 7) // 8
-            cw = _closest_fixed_bits(patch_width + ((b3 >> 5) & 7) + 1)
-            stop = patches + (patch_len * cw + 7) // 8
+                cw = _closest_fixed_bits(_WIDTH_TABLE[b2 & 0x1F] + (b3 >> 5) + 1)
+                stop += (count * width + 7) // 8 + ((b3 & 0x1F) * cw + 7) // 8
+            else:  # DELTA: base and delta varints, then packed deltas
+                stop = _varint(seg, _varint(seg, pos + 2)[1])[1]
+                if (b0 >> 1) & 0x1F:
+                    stop += ((count - 2) * width + 7) // 8
+        if stop > end:
             seg.check(stop)
-            packed.append((width, pos, count, n, 0))
-            if patch_len:
-                runs.patches.append((n, count, width, patch_width, patches, patch_len, cw))
-            table += (count, base & _M64)
-        else:  # DELTA
-            base, pos = _varint(seg, pos)
-            if signed:
-                base = _zigzag(base)
-            delta, pos = _varint(seg, pos)
-            delta = _zigzag(delta)
-            stop = pos
-            table += (count, base & _M64)
-            if not (b0 >> 1) & 0x1F:  # fixed delta run
-                if delta:
-                    runs.steps.append((n, count, delta & _M64))
-            else:
-                stop = pos + ((count - 2) * width + 7) // 8
-                seg.check(stop)
-                # index n+1 holds the first delta; the packed deltas
-                # (with the first delta's sign) follow, and a running
-                # sum over the run adds them onto the base
-                if count > 2:
-                    packed.append((width, pos, count - 2, n + 2, 2 if delta < 0 else 0))
-                if count > 1:
-                    runs.deltas.append((n + 1, count - 1, delta & _M64, base & _M64))
-        n += count
         pos = stop
-    for name, c in zip(_ENC_NAMES, seen):
+    if not starts:
+        return np.zeros(0, np.int64), pos
+    arr = seg.arr
+    s = np.array(starts, np.int64)
+    b0 = arr[s]
+    enc = b0 >> 6
+    for name, c in zip(_ENC_NAMES, np.bincount(enc, minlength=4).tolist()):
         if c:
             RUN_COUNTER[name] = RUN_COUNTER.get(name, 0) + c
-    return runs.values(seg.arr), pos
+    short = enc == 0
+    lens = np.where(
+        short, (b0 & 7) + 3, (((b0 & 1).astype(np.int64) << 8) | arr[s + 1]) + 1
+    )
+    first = np.cumsum(lens) - lens
+    width = _WIDTHS[(b0 >> 1) & 0x1F]
+    base = np.zeros(len(s), np.uint64)
+    i = np.flatnonzero(short)
+    if len(i):
+        vals = _big_endian(arr, s[i] + 1, ((b0[i] >> 3) & 7) + 1)
+        base[i] = _unzigzag(vals) if signed else vals
+    d = np.flatnonzero(enc == 1)
+    direct = (width[d], s[d] + 2, lens[d], first[d], np.full(len(d), int(signed)))
+    patched, patches = _NO_RUNS[:5], _NO_RUNS
+    p = np.flatnonzero(enc == 2)
+    if len(p):
+        ps, pl, pf, pwid = s[p], lens[p], first[p], width[p]
+        b2, b3 = arr[ps + 2], arr[ps + 3]
+        nbytes = (b2 >> 5).astype(np.int64) + 1
+        mag = _big_endian(arr, ps + 4, nbytes)
+        sign = _U1 << (nbytes * 8 - 1).astype(np.uint64)
+        # sign-magnitude, not two's complement
+        base[p] = np.where((mag & sign) != 0, np.uint64(0) - (mag & ~sign), mag)
+        data = ps + 4 + nbytes
+        patched = (pwid, data, pl, pf, np.zeros(len(p), np.int64))
+        pw = _WIDTHS[b2 & 0x1F]
+        entries = (b3 & 0x1F).astype(np.int64)
+        k = entries > 0
+        patches = tuple(x[k] for x in (
+            pf, pl, pwid, pw, data + (pl * pwid + 7) // 8, entries,
+            _FIXED_BITS[pw + (b3 >> 5) + 1],
+        ))
+    steps, delta_bits, deltas = _NO_RUNS[:3], _NO_RUNS[:5], _NO_RUNS[:4]
+    q = np.flatnonzero(enc == 3)
+    if len(q):
+        ql, qf, qw = lens[q], first[q], width[q]
+        dbase, after = _header_varints(arr, s[q] + 2)
+        delta, after = _header_varints(arr, after)
+        if signed:
+            dbase = _unzigzag(dbase)
+        delta = _unzigzag(delta)
+        base[q] = dbase
+        fixed = ((b0[q] >> 1) & 0x1F) == 0
+        k = fixed & (delta != 0)
+        steps = (qf[k], ql[k], delta[k])
+        # index first+1 holds the first delta; the packed deltas (with
+        # the first delta's sign) follow, and a running sum over the
+        # run adds them onto the base
+        k = ~fixed & (ql > 2)
+        falling = delta[k].view(np.int64) < 0
+        delta_bits = (qw[k], after[k], ql[k] - 2, qf[k] + 2, falling * 2)
+        k = ~fixed & (ql > 1)
+        deltas = (qf[k] + 1, ql[k] - 1, delta[k], dbase[k])
+    packed = tuple(map(np.concatenate, zip(direct, patched, delta_bits)))
+    runs = _Runs(lens, base, steps, packed, patches, deltas)
+    return runs.values(arr), pos
 
 
 def _varints(seg: _Seg, pos: int, count: int) -> tuple[np.ndarray, int]:
@@ -476,11 +550,8 @@ def _varints(seg: _Seg, pos: int, count: int) -> tuple[np.ndarray, int]:
     ends = np.flatnonzero(window < 0x80)
     if len(ends) < count:
         raise OutOfPlanError(f"{seg.where}: {count} varints run past the planned bytes")
-    ends = ends[:count]
-    firsts = np.concatenate(([0], ends[:-1] + 1))
-    used = window[: ends[-1] + 1].astype(np.uint64) & np.uint64(0x7F)
-    shifts = (7 * _within(ends - firsts + 1)).astype(np.uint64)
-    return np.bitwise_or.reduceat(used << shifts, firsts), pos + int(ends[-1]) + 1
+    stop = int(ends[count - 1]) + 1
+    return varint_array(window[:stop]), pos + stop
 
 
 def _rle_v1(seg: _Seg, pos: int, need: int, signed: bool) -> tuple[np.ndarray, int]:
@@ -491,7 +562,10 @@ def _rle_v1(seg: _Seg, pos: int, need: int, signed: bool) -> tuple[np.ndarray, i
     varints. Reference: `RunLengthIntegerReader.java`; re-derived from
     the public ORC v1 spec's RLEv1 section, not ported."""
     buf = seg.buf
-    runs = _Runs()
+    lens: list[int] = []
+    bases: list[int] = []
+    steps: list[int] = []  # indexes into lens: the runs with a step
+    literals: list[tuple[int, np.ndarray]] = []
     n = 0
     while n < need:
         seg.check(pos + 1)
@@ -503,19 +577,26 @@ def _rle_v1(seg: _Seg, pos: int, need: int, signed: bool) -> tuple[np.ndarray, i
                 delta -= 256
             base, pos = _varint(seg, pos + 2)
             count = control + 3
-            runs.table += (count, (_zigzag(base) if signed else base) & _M64)
+            bases.append((_zigzag(base) if signed else base) & _M64)
             if delta:
-                runs.steps.append((n, count, delta & _M64))
+                steps += (len(lens), delta & _M64)
             RUN_COUNTER["v1_run"] = RUN_COUNTER.get("v1_run", 0) + 1
         else:
             count = 256 - control
             vals, pos = _varints(seg, pos + 1, count)
             if signed:
-                vals = (vals >> np.uint64(1)) ^ (np.uint64(0) - (vals & np.uint64(1)))
-            runs.literals.append((n, vals))
-            runs.table += (count, 0)
+                vals = _unzigzag(vals)
+            literals.append((n, vals))
+            bases.append(0)
             RUN_COUNTER["v1_literal"] = RUN_COUNTER.get("v1_literal", 0) + 1
+        lens.append(count)
         n += count
+    lens_a = np.array(lens, np.int64)
+    run, step = np.array(steps, np.uint64).reshape(-1, 2).T
+    run = run.astype(np.int64)
+    first = np.cumsum(lens_a) - lens_a
+    runs = _Runs(lens_a, np.array(bases, np.uint64), (first[run], lens_a[run], step),
+                 literals=literals)
     return runs.values(seg.arr), pos
 
 
@@ -1197,7 +1278,8 @@ class FileScanPlan:
     stripes: list[dict]         # stripe footers ([] when level 1 skips)
     picks: list[list[dict]]     # level 2: keep bits per stripe per group
     ranges: list[dict]          # level 3: plan_read_ranges per stripe
-    row_index: dict[int, list]  # parsed ROW_INDEX per included column id
+    row_index: dict[int, list]  # ROW_INDEX entries per included column id:
+                                # positions; SArg columns also statistics
     sources: dict[str, str] = field(default_factory=dict)
     missing: list[str] = field(default_factory=list)
     converters: dict[str, Callable] = field(default_factory=dict)
@@ -1367,7 +1449,7 @@ def decode_stripe(
         picks = pick_row_groups(path, tree)
     stripes = parse_stripe_footers(path)
     included = _included_ids(meta, columns)
-    row_index = {cid: parse_row_index(path, cid, stripes) for cid in included}
+    row_index = parse_indexes(path, stripes, included)[0]
     if plan is None:
         plan = _plan_ranges(meta, stripes, included, picks, row_index)
     res = FileScanPlan(
@@ -1382,7 +1464,7 @@ def keep_all_picks(path: str) -> list[list[dict]]:
     row group per stripe, from the root column's row index) — the
     no-predicate scan's picks, shared by decode callers that have no
     SArg (golden-corpus sweep, orc_native full scans)."""
-    return _keep_all(parse_row_index(path, 0))
+    return _keep_all(parse_indexes(path, parse_stripe_footers(path), (0,))[0][0])
 
 
 def _keep_all(row_index: list[list[dict]]) -> list[list[dict]]:
@@ -1500,9 +1582,11 @@ def plan_file_scan(path: str, tree: Any, columns: list[str],
                    force_positional: bool = False,
                    tolerate_missing_schema: bool = True) -> FileScanPlan:
     """Build one file's FileScanPlan, reading its metadata exactly
-    once: the tail, the stripe footers, and the row index (plus, for
-    predicate columns, the bloom index) of every column the plan
-    needs. Evolution semantics, per the reference:
+    once: the tail, the stripe footers, and one pass over the index
+    region (`footer_tail.parse_indexes`) for the seek positions of
+    every included column, the row-group statistics of the predicate's
+    columns and the bloom index of the columns an equality-class leaf
+    names. Evolution semantics, per the reference:
 
     - missing columns read as all-NULL for that file;
     - a predicate that references a missing column — or one that this
@@ -1527,14 +1611,12 @@ def plan_file_scan(path: str, tree: Any, columns: list[str],
       a loud error (the legacy contract — callers that never elected
       a reader schema must not get silently reshaped structs)."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
+        _bloom_ids,
         _pick_groups,
         _predicate_ids,
     )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources import (
         evolution_native as evo,
-    )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.bloom import (
-        parse_bloom_index,
     )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
         _column_ids,
@@ -1650,15 +1732,16 @@ def plan_file_scan(path: str, tree: Any, columns: list[str],
         plan.truth, plan.file_kept = level1["truth"], level1["keep"]
         if not plan.file_kept:
             return plan  # skipped on footer stats: no index bytes read
-    pred = set(_predicate_ids(meta, tree).values()) if tree is not None else set()
     plan.stripes = parse_stripe_footers(path)
-    plan.row_index = {
-        cid: parse_row_index(path, cid, plan.stripes) for cid in included | pred
-    }
     if tree is None:
+        plan.row_index = parse_indexes(path, plan.stripes, included)[0]
         plan.picks = _keep_all(plan.row_index[min(included)])
     else:
-        blooms = {cid: parse_bloom_index(path, cid, plan.stripes) for cid in pred}
+        plan.row_index, blooms = parse_indexes(
+            path, plan.stripes, included,
+            stats=_predicate_ids(meta, tree).values(),
+            blooms=_bloom_ids(meta, tree),
+        )
         plan.picks = _pick_groups(meta, tree, plan.row_index, blooms)
     plan.ranges = _plan_ranges(
         meta, plan.stripes, included, plan.picks, plan.row_index

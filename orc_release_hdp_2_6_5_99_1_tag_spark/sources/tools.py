@@ -77,7 +77,7 @@ def orc_seek_explain(path: str, row: int, columns: list[str] | None = None) -> d
     per-group slots). Ranged metadata reads only."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
         get_index_position,
-        parse_row_index,
+        parse_indexes,
         parse_stripe_footers,
         parse_tail_of_file,
     )
@@ -105,10 +105,11 @@ def orc_seek_explain(path: str, row: int, columns: list[str] | None = None) -> d
                 "positions": {},
                 "streams": {},
             }
+            # positions only, of this stripe only: one index read
+            row_index = parse_indexes(path, [st], [ids[c] for c in columns])[0]
             for cname in columns:
                 col_id = ids[cname]
-                entries = parse_row_index(path, col_id)[si]
-                positions = entries[group]["positions"]
+                positions = row_index[col_id][0][group]["positions"]
                 out["positions"][cname] = positions
                 # label each stream's slot range the way the reader's
                 # PositionProviders consume them (getIndexPosition)
@@ -305,7 +306,7 @@ def plan_read_ranges(
         pick_row_groups,
     )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-        parse_row_index,
+        parse_indexes,
         parse_stripe_footers,
         parse_tail_of_file,
     )
@@ -322,7 +323,7 @@ def plan_read_ranges(
         # so plan and decode are guaranteed to agree (stream_decode)
         picks = pick_row_groups(path, tree)
     stripes = parse_stripe_footers(path)
-    row_index = {cid: parse_row_index(path, cid, stripes) for cid in included}
+    row_index = parse_indexes(path, stripes, included)[0]
     return _plan_ranges(meta, stripes, included, picks, row_index)
 
 
@@ -332,7 +333,7 @@ def _plan_ranges(
 ) -> list[dict]:
     """plan_read_ranges over an already-parsed file: `stripes` from
     parse_stripe_footers, `row_index` mapping every `included` column
-    id to its parse_row_index entries."""
+    id to its row index entries (positions suffice)."""
     types = meta["types"]
     is_compressed = meta["compression"] != "NONE"
     buf = meta["compression_block_size"]

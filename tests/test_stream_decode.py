@@ -585,7 +585,8 @@ def test_scan_file_reads_metadata_once(typed_file, monkeypatch):
     """One scan_file plans its file once: the tail and the stripe
     footers are parsed once, and each included column's row index at
     most once (the predicate column's included), however many stripes
-    and columns the scan decodes."""
+    and columns the scan decodes. The index region is read in one
+    pass (`footer_tail._index_streams`: one open, one postscript)."""
     import sys
     from collections import Counter
 
@@ -593,13 +594,15 @@ def test_scan_file_reads_metadata_once(typed_file, monkeypatch):
 
     calls: Counter = Counter()
     index_reads: Counter = Counter()
-    for name in ("parse_tail_of_file", "parse_stripe_footers", "parse_row_index"):
+    for name in ("parse_tail_of_file", "parse_stripe_footers", "_index_streams"):
         real = getattr(ft, name)
 
         def counting(*a, _real=real, _name=name, **k):
             calls[_name] += 1
-            if _name == "parse_row_index":
-                index_reads[a[1]] += 1
+            if _name == "_index_streams":
+                for cid, kinds in a[1].items():
+                    if "ROW_INDEX" in kinds:
+                        index_reads[cid] += 1
             return _real(*a, **k)
 
         # every engine module that bound the function by name
@@ -616,8 +619,106 @@ def test_scan_file_reads_metadata_once(typed_file, monkeypatch):
     assert rows == 2000
     assert calls["parse_tail_of_file"] == 1
     assert calls["parse_stripe_footers"] == 1
+    assert calls["_index_streams"] == 1
     assert index_reads and max(index_reads.values()) == 1
     assert len(index_reads) == len(ALL_COLS)
+
+
+def _positions_by_loop(raw: bytes) -> list[list[int]]:
+    """Reference parse of one ROW_INDEX stream's positions: a Python
+    walk over every field and every varint."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
+
+    out = []
+    for f, _w, v in ft._fields(raw):
+        if f == 1:
+            out.append([])
+            for ef, _ew, ev in ft._fields(v):
+                if ef == 1:
+                    out[-1] = ft._packed_varints(ev)
+    return out
+
+
+def _picks_from_full_index(path: str, tree) -> list[list[dict]]:
+    """Reference picks: pickRowGroups over every predicate column's
+    full row index AND bloom index, whatever the leaf."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.functions import truth
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import bloom
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
+
+    meta = ft.parse_tail_of_file(path)
+    stripes = ft.parse_stripe_footers(path)
+    cids = set(truth._predicate_ids(meta, tree).values())
+    return truth._pick_groups(
+        meta, tree,
+        {c: ft.parse_row_index(path, c, stripes) for c in cids},
+        {c: bloom.parse_bloom_index(path, c, stripes) for c in cids},
+    )
+
+
+def test_plan_reads_only_the_index_the_predicate_uses(typed_file, tmp_path, monkeypatch):
+    """Planning reads a bloom index only for columns an equality-class
+    leaf names, and typed statistics only for the SArg's columns; the
+    picks equal those from the full index, and every other column's
+    entries carry the same seek positions as a field-by-field parse."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import (
+        write_orc_native,
+    )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import _column_ids
+
+    path = str(tmp_path / "bloom.orc")
+    n = 20_000
+    write_orc_native(
+        path, {"k": list(range(0, 2 * n, 2)), "v": [i % 7 for i in range(n)]},
+        "k bigint, v bigint", row_index_stride=1000, bloom_filter_columns=("k",),
+    )
+    kinds_read: list[str] = []
+    real = ft._index_streams
+
+    def spy(p, wanted, stripes):
+        got = real(p, wanted, stripes)
+        kinds_read.extend(
+            kind for per in got.values() for streams in per for kind, _raw in streams
+        )
+        return got
+
+    monkeypatch.setattr(ft, "_index_streams", spy)
+    cases = [
+        (("between", "k", [1001, 5001]), False),
+        (("and", ("between", "k", [0, 30_000]), ("equals", "v", 3)), False),
+        (("equals", "k", 4001), True),  # odd: absent, inside the range stats
+        (("in", "k", [3, 5, 20_001]), True),
+        (("not", ("null_safe_equals", "k", 7)), True),
+    ]
+    for tree, reads_bloom in cases:
+        kinds_read.clear()
+        plan = sd.plan_file_scan(path, tree, ["k", "v"])
+        blooms = {k for k in kinds_read if k.startswith("BLOOM_FILTER")}
+        assert bool(blooms) == reads_bloom, tree
+        want = _picks_from_full_index(path, tree)
+        assert plan.picks == want, tree
+        assert pick_row_groups(path, tree) == want, tree
+    # the bloom proves absent keys absent: some range-MAYBE groups drop
+    plan = sd.plan_file_scan(path, ("equals", "k", 4001), ["k"])
+    assert sum(d["keep"] for per in plan.picks for d in per) == 0
+
+    monkeypatch.setattr(ft, "_index_streams", real)
+    tree = ("between", "id", [1000, 2999])
+    plan = sd.plan_file_scan(typed_file, tree, ALL_COLS)
+    pred = _column_ids(plan.meta)["id"]
+    raws = real(typed_file, {c: ("ROW_INDEX",) for c in plan.included}, plan.stripes)
+    for cid in plan.included:
+        want = [
+            [p for _kind, raw in streams for p in _positions_by_loop(raw)]
+            for streams in raws[cid]
+        ]
+        got = [[e["positions"] for e in per] for per in plan.row_index[cid]]
+        assert got == want, cid
+        if cid == pred:
+            assert plan.row_index[cid] == ft.parse_row_index(typed_file, cid)
+        else:
+            assert all(set(e) == {"positions"} for per in plan.row_index[cid] for e in per)
 
 
 def test_read_planned_lake_three_level_pruning(spark, range_lake):

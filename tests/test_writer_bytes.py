@@ -18,8 +18,12 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 import math
+import os
 import random
+import subprocess
+import sys
 from decimal import Decimal
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -247,3 +251,34 @@ def test_writer_bytes_unchanged(case, tmp_path):
     path = str(tmp_path / f"{case}.orc")
     write(path)
     assert _sha(path) == digest
+
+
+# +inf and -inf group sums merge into a NaN stripe and file sum. The
+# warm-up first merges a thousand float group sums, which lets the
+# interpreter specialize any float addition on that path.
+_NAN_SUMS = """
+import math, sys
+from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import write_orc_native
+
+path = sys.argv[1]
+if sys.argv[2] == "warm":
+    write_orc_native(path, {"d": [float(i) for i in range(2000)]}, "d double",
+                     row_index_stride=2)
+write_orc_native(path, {"d": [math.inf, 1.0, -math.inf, 1.0, math.nan, 1.0]},
+                 "d double", row_index_stride=2)
+"""
+
+
+def test_nan_sums_independent_of_warm_up(tmp_path):
+    """The bytes of a file whose double sums are NaN depend on the data
+    only: a fresh interpreter and a warmed one write the same file."""
+    root = str(Path(__file__).resolve().parents[1])
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p)}
+    digests = []
+    for state in ("fresh", "warm"):
+        path = str(tmp_path / f"{state}.orc")
+        subprocess.run([sys.executable, "-c", _NAN_SUMS, path, state],
+                       env=env, check=True, timeout=300)
+        digests.append(_sha(path))
+    assert digests[0] == digests[1]
