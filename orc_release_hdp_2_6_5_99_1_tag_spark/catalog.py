@@ -79,43 +79,25 @@ def _build() -> None:
 
     # ---- graded window (first GRADED_WINDOW registrations) ----------
     #
-    # Round-13 rotation (tenth window). The never-fully-green set is
-    # EMPTY (asserted mechanically by tests/test_registry_rotation.py)
-    # and the window is now VERIFIED against scripts/rotation_plan.py
-    # (round-12 verdict Next #2): tests/test_contract.py::
-    # test_rotation_plan_mandatory_in_window asserts that every query
-    # that would breach the <=6 verdict-age invariant at this round
-    # sits in this window — no more hand-written queue comments.
+    # Round-15 window: the round-13 window with 10 slots rotated. The
+    # never-fully-green set is EMPTY (asserted mechanically by
+    # tests/test_registry_rotation.py), and
+    # tests/test_contract.py::test_rotation_plan_mandatory_in_window
+    # asserts that every query scripts/rotation_plan.py lists as
+    # breaching the <=6 verdict-age invariant at the next round sits
+    # in this window.
     #
-    # Composition per the round-12 verdict's "Next" list:
-    # - NEW (2): s29_acid_positional_scan (verdict #3 — ACID two-level
-    #   positional evolution: _colN row struct inside the event
-    #   wrapper, merge-on-read over the evolved scan) and
-    #   s30_forced_positional_scan (verdict #3 — the
-    #   orc.force.positional.evolution case: legacy REAL names
-    #   reconciled by index).
-    # - MANDATORY (1): w8_ohlc_downsample (last green r6, displaced
-    #   from the r12 window by s28 — age 7 at r13 unless re-graded).
-    # - DUE, r7-era (all 32; age 6 at r13, would breach at r14): a8,
-    #   a10, d19, j1, m3, q7, q9-q20, s15, s16, sk2, u3, w4, w9, w12,
-    #   w13, w15, x5, x6, x19, x20, x21.
-    # - NEW, late round-13 (1): s31_native_writer_lake — the native
-    #   ORC WRITER (orc_encode + the orc_native_sink DataSource)
-    #   graded end-to-end: engine writes, embedded Java reader reads,
-    #   DuckDB adjudicates (never-green invariant: graded immediately;
-    #   displaces x15_corpus_shuffle_shards to the r14 queue).
-    # - KEEP-WARM fills (13 of the 23 r8-era age-5 verdicts — they
-    #   reach age 6 at r14; grading most now more than halves the r14
-    #   queue): c3, t6, t7, f1_equals..f5, x10-x14. The remaining 10
-    #   (d18, w14, i3, mv1, r8_streaming_pipeline, sk4, sk5, v5, x22,
-    #   and the displaced x15) are the r14 mandatory core —
-    #   rotation_plan.py will list them.
+    # - Kept from round 13 (40): the flagship; s29, s30 and s31; w8;
+    #   the r7-era cohort (a8, a10, d19, j1, m3, q7, q9-q20, s15, s16,
+    #   sk2, u3, w4, w9, w12, w13, w15, x5, x6, x19, x20, x21); c3, t6
+    #   and t7.
+    # - MANDATORY (10; last green r8, age 7 at r15): d18, w14, x15,
+    #   sk5, x22, v5, sk4, mv1, i3 and r8_streaming_pipeline.
+    # - Swapped OUT (10; driver-green in CORRECTNESS_r14, age 1, still
+    #   oracle-checked by pytest as extras): f1_equals..f5_between and
+    #   x10-x14.
     #
-    # Swapped OUT (all driver-green in CORRECTNESS_r12, age 1, still
-    # oracle-checked by pytest as extras): the r12 additions (s26,
-    # s27, s28), the election re-grades (s24, s25), the r5-era refresh
-    # tier and the 35-strong r6-era cohort. tests/test_contract.py
-    # pins the full composition.
+    # tests/test_contract.py pins the full composition.
     #
     # flagship
     register("q1_pricing_summary", r.q1_pricing_summary, r.Q1_ORACLE)
@@ -160,23 +142,24 @@ def _build() -> None:
     register("x19_bigram_lm", tx.x19_bigram_lm, tx.X19_ORACLE)
     register("x20_vocab_growth", tx.x20_vocab_growth, tx.X20_ORACLE)
     register("x21_source_divergence", tx.x21_source_divergence, tx.X21_ORACLE)
-    # keep-warm fills: 14 of the 23 r8-era age-5 verdicts
+    # keep-warm: the rest of the r8-era cohort graded in round 13
     register("c3_positional_evolution", ev.c3_positional_evolution, ev.C3P_ORACLE)
     register("t6_original_files", ac.t6_original_files, ac.T6_ORACLE)
     register("t7_snapshot_read", ac.t7_snapshot_read, ac.T7_ORACLE)
-    register("f1_equals", f.f1_equals, f.F1_ORACLE)
-    register("f2_null_safe_equals", f.f2_null_safe_equals, f.F2_ORACLE)
-    register("f3_less_than", f.f3_less_than, f.F3_ORACLE)
-    register("f4_in_list", f.f4_in_list, f.F4_ORACLE)
-    register("f5_between", f.f5_between, f.F5_ORACLE)
-    register("x10_source_mix", tx.x10_source_mix, tx.X10_ORACLE)
-    register("x11_doc_chunking", tx.x11_doc_chunking, tx.X11_ORACLE)
-    register("x12_token_freq_quality", tx.x12_token_freq_quality, tx.X12_ORACLE)
-    register("x13_tfidf_topk", tx.x13_tfidf_topk, tx.X13_ORACLE)
-    register("x14_dataset_card", tx.x14_dataset_card, tx.X14_ORACLE)
     # late round-13 addition (never-green invariant): the native
     # writer graded through the embedded Java reader
     register("s31_native_writer_lake", oq.s31_native_writer_lake, oq.S31_ORACLE)
+    # round 15 MANDATORY: last green r8, age 7 at r15 unless re-graded
+    register("d18_containment", dd.d18_containment, dd.D18_ORACLE)
+    register("w14_twap", tp.w14_twap, tp.W14_ORACLE)
+    register("x15_corpus_shuffle_shards", tx.x15_corpus_shuffle_shards, tx.X15_ORACLE)
+    register("sk5_theta_intersection", st.sk5_theta_intersection, st.SK5_ORACLE)
+    register("x22_ngram_novelty", tx.x22_ngram_novelty, tx.X22_ORACLE)
+    register("v5_scalar_quantized_topk", sim.v5_scalar_quantized_topk, sim.V5_ORACLE)
+    register("sk4_hll_distinct", st.sk4_hll_distinct, st.SK4_ORACLE)
+    register("mv1_incremental_agg", inc.mv1_incremental_agg, inc.MV1_ORACLE)
+    register("i3_stratified_sample", smp.i3_stratified_sample, smp.I3_ORACLE)
+    register("r8_streaming_pipeline", ig.r8_streaming_pipeline, ig.R8_ORACLE)
 
     # ---- extras: pytest-validated, not driver-registered ------------
     #
@@ -194,13 +177,18 @@ def _build() -> None:
     # rotated out round 12 (driver-green in CORRECTNESS_r11, age 1):
     # the r11 addition + the r11 refresh tiers + the r10-era keep-warm
     # block (the r12 window is consumed by the r5/r6-era age deadline)
-    # displaced by the round-13 additions (s29/s30 take their slots;
-    # both age 5, re-graded in the r14 window with the other r8-era):
-    register("d18_containment", dd.d18_containment, dd.D18_ORACLE, graded=False)
-    register("w14_twap", tp.w14_twap, tp.W14_ORACLE, graded=False)
-    # displaced by the late round-13 s31 (age 5 — joins the r14
-    # mandatory core with the other r8-era remainders):
-    register("x15_corpus_shuffle_shards", tx.x15_corpus_shuffle_shards, tx.X15_ORACLE, graded=False)
+    # rotated out round 15 (driver-green in CORRECTNESS_r14, age 1;
+    # their slots go to the round-15 mandatory re-grades):
+    register("f1_equals", f.f1_equals, f.F1_ORACLE, graded=False)
+    register("f2_null_safe_equals", f.f2_null_safe_equals, f.F2_ORACLE, graded=False)
+    register("f3_less_than", f.f3_less_than, f.F3_ORACLE, graded=False)
+    register("f4_in_list", f.f4_in_list, f.F4_ORACLE, graded=False)
+    register("f5_between", f.f5_between, f.F5_ORACLE, graded=False)
+    register("x10_source_mix", tx.x10_source_mix, tx.X10_ORACLE, graded=False)
+    register("x11_doc_chunking", tx.x11_doc_chunking, tx.X11_ORACLE, graded=False)
+    register("x12_token_freq_quality", tx.x12_token_freq_quality, tx.X12_ORACLE, graded=False)
+    register("x13_tfidf_topk", tx.x13_tfidf_topk, tx.X13_ORACLE, graded=False)
+    register("x14_dataset_card", tx.x14_dataset_card, tx.X14_ORACLE, graded=False)
     # rotated out round 13 (driver-green in CORRECTNESS_r12, age 1):
     register("s26_evolved_lake_scan", oq.s26_evolved_lake_scan, oq.S26_ORACLE, graded=False)
     register("s27_nested_sarg_scan", oq.s27_nested_sarg_scan, oq.S27_ORACLE, graded=False)
@@ -323,7 +311,6 @@ def _build() -> None:
     register("r12_python_stream_source", ig.r12_python_stream_source, ig.R12_ORACLE, graded=False)
     # rotated out mid-round-10 (driver-green r9; displaced by s24):
     register("v4_pq_ann", sim.v4_pq_ann, sim.V4_ORACLE, graded=False)
-    register("sk5_theta_intersection", st.sk5_theta_intersection, st.SK5_ORACLE, graded=False)
     # rotated out round 10 (driver-green in CORRECTNESS_r09): the r9
     # additions + the r9 refresh tier, all verdict-fresh
     register("sk6_ams_f2", st.sk6_ams_f2, st.SK6_ORACLE, graded=False)
@@ -347,13 +334,6 @@ def _build() -> None:
     register("d4_ngram_jaccard_topk", dd.d4_ngram_jaccard_topk, dd.D4_ORACLE, graded=False)
     register("d5_blocklist_antijoin", xt.d5_blocklist_antijoin, xt.D5_ORACLE, graded=False)
     register("x2_fingerprint", tx.x2_fingerprint, tx.X2_ORACLE, graded=False)
-    register("x22_ngram_novelty", tx.x22_ngram_novelty, tx.X22_ORACLE, graded=False)
-    # rotated out round 7 (driver-green in CORRECTNESS_r06):
-    register("v5_scalar_quantized_topk", sim.v5_scalar_quantized_topk, sim.V5_ORACLE, graded=False)
-    register("sk4_hll_distinct", st.sk4_hll_distinct, st.SK4_ORACLE, graded=False)
-    register("mv1_incremental_agg", inc.mv1_incremental_agg, inc.MV1_ORACLE, graded=False)
-    register("i3_stratified_sample", smp.i3_stratified_sample, smp.I3_ORACLE, graded=False)
-    register("r8_streaming_pipeline", ig.r8_streaming_pipeline, ig.R8_ORACLE, graded=False)
     # rotated out round 6 (driver-green in CORRECTNESS_r05):
     # rotated out round 5 (driver-green in CORRECTNESS_r04):
     # round-7 addition (the one verdict-requested gap-closer): the

@@ -2,8 +2,8 @@
 
 Every distributed read in the tier is this one shape. That covers
 footer and row-group statistics (`footer_stats`), `orc_meta` (`meta`),
-the union shim (`union_reader`), the planned lake scan
-(`stream_decode.read_planned_lake`) and the schema-election sweep
+the planned lake scan (`stream_decode.read_planned_lake`, which
+`union_reader` reads through) and the schema-election sweep
 (`evolution_native`):
 
 - `orc_files(path)` is the one listing rule;

@@ -33,6 +33,13 @@ import numpy as np
 # proto enum CompressionKind (orc_proto.proto:205-212)
 _COMPRESSION = {0: "NONE", 1: "ZLIB", 2: "SNAPPY", 3: "LZO", 4: "LZ4", 5: "ZSTD"}
 
+# proto Footer.writer ids, named as pyarrow.orc names them; a Footer
+# without the field was written by the Java writer
+_WRITER = {
+    0: "ORC_JAVA", 1: "ORC_CPP", 2: "PRESTO", 3: "SCRITCHLEY_GO", 4: "TRINO",
+    5: "CUDF",
+}  # fmt: skip
+
 # proto Type.Kind (orc_proto.proto:145-164)
 KIND = {
     0: "boolean", 1: "tinyint", 2: "smallint", 3: "int", 4: "bigint",
@@ -425,10 +432,12 @@ def parse_tail(data: bytes, include_stripe_stats: bool = False) -> dict:
     least PostScript+Footer — 16 KiB covers typical schemas, callers
     should retry with `1 + ps_len + footerLength` on a short buffer).
 
-    Returns {compression, magic, n_rows, columns: [{name, kind,
-    col_id, n_values, has_null, typed, typed_kind, precision, scale}]}
-    for the root struct's top-level fields, exactly the slice the
-    reference surfaces per file in `orc-tools meta`. With
+    Returns {compression, magic, n_rows, n_stripes, content_length,
+    writer, columns: [{name, kind, col_id, n_values, has_null, typed,
+    typed_kind, precision, scale}]} for the root struct's top-level
+    fields, exactly the slice the reference surfaces per file in
+    `orc-tools meta`. A postscript whose magic is not "ORC", or a
+    Footer without a root type, raises ValueError. With
     `include_stripe_stats`, also parses the Metadata section (the
     per-stripe ColumnStatistics the reference's A4 merge folds into
     file stats, `OrcProto.Metadata`/`StripeStatistics`) into
@@ -443,6 +452,11 @@ def parse_tail(data: bytes, include_stripe_stats: bool = False) -> dict:
         )
     ps_len = data[-1]
     ps = _parse_postscript(data[-1 - ps_len : -1])
+    if ps["magic"] != "ORC":
+        # ReaderImpl.ensureOrcFooter: noise can parse as a protobuf
+        raise ValueError(
+            f"not a valid ORC file: postscript magic is {ps['magic']!r}, not 'ORC'"
+        )
     need = 1 + ps_len + ps["footerLength"]
     if include_stripe_stats:
         need += ps["metadataLength"]
@@ -469,10 +483,13 @@ def parse_tail(data: bytes, include_stripe_stats: bool = False) -> dict:
 
     types: list[dict] = []
     stats: list[dict] = []
-    n_rows = 0
-    row_index_stride = 0
+    n_rows = n_stripes = content_length = row_index_stride = writer = 0
     for field, _wt, v in _fields(footer):
-        if field == 4:
+        if field == 2:
+            content_length = v
+        elif field == 3:  # one StripeInformation per stripe
+            n_stripes += 1
+        elif field == 4:
             types.append(_parse_type(v))
         elif field == 6:
             n_rows = v
@@ -480,9 +497,13 @@ def parse_tail(data: bytes, include_stripe_stats: bool = False) -> dict:
             stats.append(_parse_column_statistics(v))
         elif field == 8:  # Footer.rowIndexStride (orc_proto.proto:118)
             row_index_stride = v
+        elif field == 9:
+            writer = v
+    if not types:
+        raise ValueError("not a valid ORC file: the footer has no root type")
 
     columns = []
-    if types and types[0]["kind"] == 12:  # root struct
+    if types[0]["kind"] == 12:  # root struct
         root = types[0]
         for name, col_id in zip(root["fieldNames"], root["subtypes"]):
             t = types[col_id]
@@ -506,6 +527,9 @@ def parse_tail(data: bytes, include_stripe_stats: bool = False) -> dict:
         "compression": _COMPRESSION.get(ps["compression"], str(ps["compression"])),
         "magic": ps["magic"],
         "n_rows": n_rows,
+        "n_stripes": n_stripes,
+        "content_length": content_length,
+        "writer": _WRITER.get(writer, str(writer)),
         "row_index_stride": row_index_stride,
         "writer_version": ps["writerVersion"],
         "compression_block_size": ps["compressionBlockSize"],

@@ -6,9 +6,10 @@ shortcut (SURVEY §4 custom (c)).
 The reference answers count/min/max/sum from footer statistics without
 scanning rows (`ColumnStatisticsImpl.java`, `Footer.statistics`). Spark
 4's ORC scan doesn't expose aggregate pushdown to Python, so executors
-read footers directly with pyarrow.orc: file tails only, no data
-pages, one task per file through the per-file job
-(`file_job.map_files`).
+parse file tails with `footer_tail`: the PostScript and Footer only, no
+data pages, one task per file through the per-file job
+(`file_job.map_files`). The values are the ones `pyarrow.orc.ORCFile`
+reports, which tests use as the oracle.
 """
 
 from __future__ import annotations
@@ -37,20 +38,21 @@ _META_SCHEMA = pa.schema(
 
 def _file_meta(path: str):
     """Footer facts (schema, rows, stripes, compression) of one file."""
-    from pyarrow import orc as pa_orc
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import parse_tail_of_file
 
-    o = pa_orc.ORCFile(path)
+    t = parse_tail_of_file(path)
+    codec = t["compression"]
     yield [
         {
             "file": os.path.basename(path),
-            "nrows": int(o.nrows),
-            "nstripes": int(o.nstripes),
-            "compression": str(o.compression),
-            "compression_size": int(o.compression_size),
-            "row_index_stride": int(o.row_index_stride),
-            "writer": str(o.writer),
-            "content_length": int(o.content_length),
-            "ncolumns": len(o.schema),
+            "nrows": t["n_rows"],
+            "nstripes": t["n_stripes"],
+            "compression": "UNCOMPRESSED" if codec == "NONE" else codec,
+            "compression_size": t["compression_block_size"],
+            "row_index_stride": t["row_index_stride"],
+            "writer": t["writer"],
+            "content_length": t["content_length"],
+            "ncolumns": len(t["columns"]),
         }
     ]
 

@@ -1740,6 +1740,11 @@ def _writer_opts(
         raise ValueError(f"unsupported write compression {compression!r}")
     if version not in ("0.11", "0.12"):
         raise ValueError(f"unsupported ORC file version {version!r}")
+    if row_index_stride <= 0:
+        raise ValueError(
+            f"Invalid ORC row index stride: row_index_stride={row_index_stride!r} "
+            "must be positive"
+        )
     return {
         "version": version,
         "compression": comp,

@@ -80,20 +80,22 @@ def write_orc(
 def recover_orc_dir(spark: SparkSession, src: str, dest: str) -> dict:
     """S13 recovery job (reference `FileDump.recoverFiles`,
     `tools/FileDump.java:210-285`): salvage a directory containing
-    torn/corrupt ORC files by copying every file whose footer parses
+    torn/corrupt ORC files by copying every file whose tail parses
+    (`footer_tail`: postscript magic, then a Footer with a root type)
     into a clean directory (originals untouched — the reference's
     side-backup behavior). Returns counts."""
     import shutil
 
-    from pyarrow import orc as pa_orc
-
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import orc_files
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+        parse_tail_of_file,
+    )
 
     os.makedirs(dest, exist_ok=True)
     good, bad = 0, 0
     for f in orc_files(src):
         try:
-            pa_orc.ORCFile(f)  # parses the tail; raises on torn files
+            parse_tail_of_file(f)  # raises on torn files
             shutil.copy2(f, os.path.join(dest, os.path.basename(f)))
             good += 1
         except Exception:

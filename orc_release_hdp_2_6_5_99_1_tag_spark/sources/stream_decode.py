@@ -1110,11 +1110,12 @@ class _Union(_Column):
     flattened in row order over the rows its tag selects (a variant
     column reads exactly count(tag == i) values per batch). Surfaced
     in the engine's tagged-struct convention — `{_tag, f0, f1, ...}`
-    with every non-selected variant None — matching
-    `sources/union_reader.py` and `functions/union_type.py`. Unlike
-    the Arrow shim, the PRESENT stream is decoded, so a NULL union is
-    distinguishable from (tag 0, NULL variant) — the reference
-    reader's own `.jsn` dumps pin both (see test_stream_decode)."""
+    with every non-selected variant None — the one
+    `functions/union_type.py` builds and `sources/union_reader.py`
+    reads through this decoder. The PRESENT stream is decoded, so a
+    NULL union is NULL, distinct from (tag 0, NULL variant) — the
+    reference reader's own `.jsn` dumps pin both (see
+    test_stream_decode)."""
 
     def _init(self, io):
         self._tags = self._reader("DATA", _Ints(io.stream(self.cid, "DATA"), _byte_rle))

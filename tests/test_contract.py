@@ -60,10 +60,11 @@ def test_round13_graded_window_composition():
     ≤6 verdict-age invariant at r13), the full 32-strong r7-era
     cohort (age 6 at r13, would breach at r14), the late-round s31
     addition (native writer, never-green — displaces x15), and 13 of
-    the 23 r8-era age-5 verdicts as keep-warm fills (the remaining
-    10, x15 included, head the r14 queue). Displaced to extras: the
-    whole r12 window minus the flagship, all r12-verdict-fresh
-    (age 1). The window is
+    the 23 r8-era age-5 verdicts as keep-warm fills. Displaced to
+    extras: the whole r12 window minus the flagship, all
+    r12-verdict-fresh (age 1). Round 15 keeps that window but for
+    ten keep-warm fills (f1-f5, x10-x14, age 1), whose slots go to
+    the ten r8-era verdicts that reach age 7 at r15. The window is
     cross-checked against scripts/rotation_plan.py by
     test_rotation_plan_mandatory_in_window below;
     tests/test_registry_rotation.py asserts the never-green ⊆
@@ -95,18 +96,18 @@ def test_round13_graded_window_composition():
         "x5_train_test_split", "x6_repetition_metrics",
         "x19_bigram_lm", "x20_vocab_growth",
         "x21_source_divergence",
-        # keep-warm fills (13 of 23 r8-era age-5 verdicts; x15 was
-        # displaced by the late-round s31 and heads the r14 queue)
+        # keep-warm fills (3 of the 13 round-13 r8-era fills; f1-f5
+        # and x10-x14 made room for the round-15 mandatory set)
         "c3_positional_evolution", "t6_original_files",
         "t7_snapshot_read",
-        "f1_equals", "f2_null_safe_equals", "f3_less_than",
-        "f4_in_list", "f5_between",
-        "x10_source_mix", "x11_doc_chunking",
-        "x12_token_freq_quality", "x13_tfidf_topk",
-        "x14_dataset_card",
         # late round-13 addition: the native ORC writer graded
         # end-to-end (engine writes, embedded Java reader reads)
         "s31_native_writer_lake",
+        # round-15 MANDATORY re-grades (last green r8, age 7 at r15)
+        "d18_containment", "i3_stratified_sample", "mv1_incremental_agg",
+        "r8_streaming_pipeline", "sk4_hll_distinct",
+        "sk5_theta_intersection", "v5_scalar_quantized_topk", "w14_twap",
+        "x15_corpus_shuffle_shards", "x22_ngram_novelty",
     }
     assert set(catalog.queries()) == expected
     assert len(expected) == 50

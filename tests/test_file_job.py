@@ -207,6 +207,36 @@ def _offences(path: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
+def _pyarrow_orc_imports(path: str) -> list[int]:
+    """Lines of one module that import `pyarrow.orc`, in any spelling."""
+    with open(path, "rb") as fh:
+        tree = ast.parse(fh.read(), path)
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and not node.level:
+            names = [f"{node.module}.{a.name}" for a in node.names]
+        else:
+            continue
+        if any(n == "pyarrow.orc" or n.startswith("pyarrow.orc.") for n in names):
+            out.append(node.lineno)
+    return out
+
+
+def test_package_reads_orc_without_pyarrow_orc():
+    """The engine reads ORC through Spark's reader, `footer_tail` and
+    `stream_decode` only; `pyarrow.orc` is an oracle for tests."""
+    package = os.path.dirname(_SOURCES)
+    offenders = {
+        os.path.relpath(os.path.join(root, f), package): lines
+        for root, _dirs, files in os.walk(package)
+        for f in sorted(files)
+        if f.endswith(".py") and (lines := _pyarrow_orc_imports(os.path.join(root, f)))
+    }
+    assert offenders == {}, f"pyarrow.orc imported in the package: {offenders}"
+
+
 def test_per_file_job_lives_in_one_module():
     offenders = {}
     for name in sorted(os.listdir(_SOURCES)):

@@ -595,6 +595,16 @@ def test_union_write_native_roundtrip(tmp_path):
     assert native["u"] == vals
 
 
+@pytest.mark.parametrize("stride", [0, -1])
+def test_row_index_stride_must_be_positive(tmp_path, stride):
+    """A stride of zero has no row groups to index; the writer refuses
+    it by name, as pyarrow's writer does, instead of dividing by it."""
+    with pytest.raises(ValueError, match="Invalid ORC row index stride: row_index_stride"):
+        write_orc_native(
+            str(tmp_path / "s.orc"), {"k": [1, 2, 3]}, "k bigint", row_index_stride=stride
+        )
+
+
 # ---------------------------------------------------------------------------
 # the distributed sink (orc_native_sink DataSource)
 # ---------------------------------------------------------------------------

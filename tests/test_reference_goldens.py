@@ -5,11 +5,10 @@ C++ writers, v0.11 and v0.12 formats, zlib/snappy codecs — and
 matches the published expected contents.
 
 Spark's native reader rejects `uniontype` files and future writer
-versions; the pyarrow shim (sources/union_reader.py) closes both gaps
-— unions decode into the tagged-struct convention
-(functions/union_type.py), future versions read permissively — with
-one asserted information loss (null unions collapse to null-valued
-variants).
+versions; `sources/union_reader.read_orc_permissive` closes both gaps
+by falling back to the engine's native decoder — unions decode into
+the tagged-struct convention (functions/union_type.py), a NULL union
+stays NULL, and future versions read permissively.
 """
 
 from __future__ import annotations
@@ -276,7 +275,8 @@ def test_date2038_golden_contents(spark):
 
 def test_non_struct_toplevel_unsupported_everywhere(spark):
     """TestOrcFile.testTimestamp.orc has a bare top-level timestamp
-    (not a struct) — rejected by Spark's reader AND pyarrow's; the
+    (not a struct) — rejected by Spark's reader AND the native
+    fallback; the
     Java reference can write such files but the Hive/Spark data model
     cannot represent them. Documented divergence."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.union_reader import (
@@ -289,13 +289,12 @@ def test_non_struct_toplevel_unsupported_everywhere(spark):
 
 
 def test_union_type_file_via_shim(spark):
-    """Spark's native reader rejects ORC uniontype files; the pyarrow
-    shim (sources/union_reader.py) decodes them into the tagged-struct
-    convention. Deep value compare vs the published expected dump
-    (`TestOrcFile.testUnionAndTimestamp.jsn.gz`, reference reader
-    `TreeReaderFactory.java:1865-1949`), modulo the documented arrow
-    limitation: written-as-NULL unions collapse to a NULL-valued
-    variant (arrow unions have no validity bitmap)."""
+    """Spark's native reader rejects ORC uniontype files;
+    read_orc_permissive decodes them with the native decoder into the
+    tagged-struct convention. Deep value compare vs the published
+    expected dump (`TestOrcFile.testUnionAndTimestamp.jsn.gz`,
+    reference reader `TreeReaderFactory.java:1865-1949`): a NULL union
+    is NULL, and a NULL-valued variant keeps its tag."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.union_reader import (
         read_orc_permissive,
     )
@@ -313,20 +312,18 @@ def test_union_type_file_via_shim(spark):
     assert len(got) == len(want) == 5077
     for g, w in zip(got, want):
         wu = w["union"]
-        if wu is None or wu["value"] is None:
-            # null union and null-valued variant both surface as a
-            # NULL variant value through arrow
-            assert g.union.f0 is None and g.union.f1 is None
+        if wu is None:
+            assert g.union is None
         elif wu["tag"] == 0:
-            assert (g.union._tag, g.union.f0) == (0, wu["value"])
+            assert (g.union._tag, g.union.f0, g.union.f1) == (0, wu["value"], None)
         else:
-            assert (g.union._tag, g.union.f1) == (1, wu["value"])
+            assert (g.union._tag, g.union.f0, g.union.f1) == (1, None, wu["value"])
 
 
 def test_future_version_file_permissive(spark):
     """version1999.orc (writer version stamped 1999.0.999): Spark's
     native reader rejects it, the reference reads it permissively
-    (`ReaderImpl.java` postscript handling) — as does the pyarrow
+    (`ReaderImpl.java` postscript handling) — as does the native
     fallback in read_orc_permissive."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.union_reader import (
         read_orc_permissive,
