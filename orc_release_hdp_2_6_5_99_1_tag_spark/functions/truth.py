@@ -375,7 +375,7 @@ def _tree_columns(tree: Any) -> set[str]:
     return {leaf[1] for leaf in _leaves(tree)}
 
 
-def pick_row_groups(path: str, tree: Any, use_bloom: bool = True) -> list[list[dict]]:
+def pick_row_groups(src, tree: Any, use_bloom: bool = True) -> list[list[dict]]:
     """The reference's `pickRowGroups`, end to end, from ranged
     metadata reads of a real ORC file: per stripe, each 10k-row
     row group's TruthValue (ROW_INDEX per-row-group min/max/hasNull
@@ -383,19 +383,20 @@ def pick_row_groups(path: str, tree: Any, use_bloom: bool = True) -> list[list[d
     when present and `use_bloom`) and the keep/skip decision. Returns
     [[{row_group, truth, keep}, ...] per stripe]. Only the SArg's
     columns' row indexes are read, and only the blooms an
-    equality-class leaf can use (`_bloom_ids`)."""
+    equality-class leaf can use (`_bloom_ids`). `src` is a path or its
+    `footer_tail.FileTail`."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+        open_tail,
         parse_indexes,
         parse_stripe_footers,
-        parse_tail_of_file,
     )
 
-    meta = parse_tail_of_file(path)
-    stripes = parse_stripe_footers(path)
-    row_index, blooms = parse_indexes(
-        path, stripes, (), stats=_predicate_ids(meta, tree).values(),
-        blooms=_bloom_ids(meta, tree) if use_bloom else (),
-    )
+    with open_tail(src) as meta:
+        row_index, blooms = parse_indexes(
+            meta, parse_stripe_footers(meta), (),
+            stats=_predicate_ids(meta, tree).values(),
+            blooms=_bloom_ids(meta, tree) if use_bloom else (),
+        )
     return _pick_groups(meta, tree, row_index, blooms)
 
 

@@ -218,19 +218,21 @@ def bloom_entries(raws: list[bytes]) -> list[dict]:
 
 
 def parse_bloom_index(
-    path: str, column_id: int, stripes: list[dict] | None = None
+    src, column_id: int, stripes: list[dict] | None = None
 ) -> list[list[dict]]:
     """Parse a column's bloom-filter index streams out of a real ORC
     file: per stripe, the list of per-row-group blooms. Ranged reads
     only — the index region of each stripe (see
     `footer_tail.parse_indexes`, which plans use to read blooms with
-    the row indexes); `stripes` reuses an earlier
-    parse_stripe_footers."""
+    the row indexes); `src` is a path or its `footer_tail.FileTail`, and
+    `stripes` reuses an earlier parse_stripe_footers."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+        open_tail,
         parse_indexes,
         parse_stripe_footers,
     )
 
-    if stripes is None:
-        stripes = parse_stripe_footers(path)
-    return parse_indexes(path, stripes, (), blooms=(column_id,))[1][column_id]
+    with open_tail(src) as tail:
+        if stripes is None:
+            stripes = parse_stripe_footers(tail)
+        return parse_indexes(tail, stripes, (), blooms=(column_id,))[1][column_id]

@@ -295,12 +295,12 @@ def _file_rowgroups(path: str, columns: list[str]):
             f"{path}: rowIndexStride=0 (written without row "
             f"indexes); row-group statistics are undefined"
         )
-    stripes = ft.parse_stripe_footers(path)
+    stripes = ft.parse_stripe_footers(tail)
     rows = []
     for cname in columns:
         if cname not in ids:
             raise KeyError(f"column {cname!r} not in {path}: {sorted(ids)}")
-        per_stripe = ft.parse_row_index(path, ids[cname], stripes)
+        per_stripe = ft.parse_row_index(tail, ids[cname], stripes)
         if any(not entries for entries in per_stripe):
             raise ValueError(
                 f"{path}: column {cname!r} has a stripe with no "

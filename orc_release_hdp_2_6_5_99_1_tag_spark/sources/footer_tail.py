@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import struct
 import zlib
+from contextlib import contextmanager
 from typing import Any
 
 import numpy as np
@@ -443,6 +444,12 @@ def parse_tail(data: bytes, include_stripe_stats: bool = False) -> dict:
     file stats, `OrcProto.Metadata`/`StripeStatistics`) into
     `stripe_stats: [[per-column dict, ...] per stripe]`.
     """
+    return _parse_tail(data, include_stripe_stats)[0]
+
+
+def _parse_tail(data: bytes, include_stripe_stats: bool) -> tuple[dict, dict, list[dict]]:
+    """parse_tail, plus the postscript and the Footer's
+    StripeInformation list it parsed on the way."""
     if len(data) < 4:  # "ORC" + postscript length byte at minimum
         # the reference's ReaderImpl.ensureOrcFooter rejects files
         # shorter than the magic + postscript (zero.orc golden)
@@ -483,12 +490,13 @@ def parse_tail(data: bytes, include_stripe_stats: bool = False) -> dict:
 
     types: list[dict] = []
     stats: list[dict] = []
-    n_rows = n_stripes = content_length = row_index_stride = writer = 0
+    stripes: list[dict] = []
+    n_rows = content_length = row_index_stride = writer = 0
     for field, _wt, v in _fields(footer):
         if field == 2:
             content_length = v
         elif field == 3:  # one StripeInformation per stripe
-            n_stripes += 1
+            stripes.append(_parse_stripe_information(v))
         elif field == 4:
             types.append(_parse_type(v))
         elif field == 6:
@@ -527,7 +535,7 @@ def parse_tail(data: bytes, include_stripe_stats: bool = False) -> dict:
         "compression": _COMPRESSION.get(ps["compression"], str(ps["compression"])),
         "magic": ps["magic"],
         "n_rows": n_rows,
-        "n_stripes": n_stripes,
+        "n_stripes": len(stripes),
         "content_length": content_length,
         "writer": _WRITER.get(writer, str(writer)),
         "row_index_stride": row_index_stride,
@@ -557,7 +565,7 @@ def parse_tail(data: bytes, include_stripe_stats: bool = False) -> dict:
     }
     if include_stripe_stats:
         out["stripe_stats"] = stripe_stats
-    return out
+    return out, ps, stripes
 
 
 class _NeedMoreTail(Exception):
@@ -566,15 +574,95 @@ class _NeedMoreTail(Exception):
         self.needed = needed
 
 
-def parse_tail_of_file(
-    path: str,
-    initial_read: int = 16 * 1024,
+class FileTail(dict):
+    """One file's parsed tail (the reference's `FileTail`,
+    `ReaderImpl.extractFileTail:446-560`): the `parse_tail` dict, plus
+    `path`, `length` (the byte bound every read is checked against:
+    the file's size, or a smaller `max_file_length`), `codec` (the
+    postscript's compression code) and `stripe_info` (the Footer's
+    StripeInformation list). `opened()` keeps one handle open across
+    the reads of a block."""
+
+    def __init__(self, meta: dict, path: str, length: int, codec: int,
+                 stripe_info: list[dict]):
+        super().__init__(meta)
+        self.path = path
+        self.length = length
+        self.codec = codec
+        self.stripe_info = stripe_info
+        self._fh = None
+
+    @contextmanager
+    def opened(self):
+        """Serve every read inside the block from one handle (the one
+        already open, if any)."""
+        if self._fh is not None:
+            yield self
+            return
+        with open(self.path, "rb") as fh:
+            self._fh = fh
+            try:
+                yield self
+            finally:
+                self._fh = None
+
+    def read(self, offset: int, n: int) -> bytes:
+        """`n` bytes from `offset`; a read past the bound raises."""
+        if offset < 0 or offset + n > self.length:
+            raise ValueError(
+                f"{self.path}: bytes [{offset}, {offset + n}) pass the "
+                f"{self.length}-byte bound"
+            )
+        with self.opened():
+            self._fh.seek(offset)
+            return self._fh.read(n)
+
+
+@contextmanager
+def open_tail(
+    src: str | FileTail,
     include_stripe_stats: bool = False,
     max_file_length: int | None = None,
-) -> dict:
-    """Read + parse a file's tail, growing the read if the footer is
-    larger than the initial guess (reference reads the last 16 KiB
-    first, `ReaderImpl.extractFileTail:446-560`).
+):
+    """Yield `src`'s FileTail with one handle open for the block, which
+    serves the tail and every read made inside. A path is opened here
+    and its tail located and parsed — the only code that finds where a
+    tail is (see parse_tail_of_file); a FileTail passes through."""
+    if isinstance(src, FileTail):
+        with src.opened():
+            yield src
+        return
+    with open(src, "rb") as fh:
+        size = fh.seek(0, 2)
+        if max_file_length is not None:
+            size = min(size, max_file_length)
+        n = min(size, 16 * 1024)
+        fh.seek(size - n)
+        data = fh.read(n)
+        try:
+            meta, ps, stripes = _parse_tail(data, include_stripe_stats)
+        except _NeedMoreTail as need:
+            n = min(size, need.needed)
+            fh.seek(size - n)
+            meta, ps, stripes = _parse_tail(fh.read(n), include_stripe_stats)
+        tail = FileTail(meta, src, size, ps["compression"], stripes)
+        tail._fh = fh
+        try:
+            yield tail
+        finally:
+            tail._fh = None
+
+
+def parse_tail_of_file(
+    path: str,
+    include_stripe_stats: bool = False,
+    max_file_length: int | None = None,
+) -> FileTail:
+    """Read + parse a file's tail into its FileTail, growing the read
+    if the footer is larger than the first 16 KiB (as the reference
+    does, `ReaderImpl.extractFileTail:446-560`). Later metadata and
+    data reads of the file take this value, so a plan parses one
+    postscript.
 
     `max_file_length` is the reference's readable-while-writing bound
     (`OrcConf.MAX_FILE_LENGTH:118-121`, honored at
@@ -582,22 +670,10 @@ def parse_tail_of_file(
     at that byte, so a reader pointed at a still-growing or torn file
     parses the last durable footer — the length a streaming writer
     publishes in its side file — and sees exactly the committed
-    prefix's schema, stripes, and row count."""
-    import os
-
-    size = os.path.getsize(path)
-    if max_file_length is not None:
-        size = min(size, max_file_length)
-    with open(path, "rb") as fh:
-        n = min(size, initial_read)
-        fh.seek(size - n)
-        data = fh.read(n)
-        try:
-            return parse_tail(data, include_stripe_stats=include_stripe_stats)
-        except _NeedMoreTail as need:
-            n = min(size, need.needed)
-            fh.seek(size - n)
-            return parse_tail(fh.read(n), include_stripe_stats=include_stripe_stats)
+    prefix's schema, stripes, and row count. Reads through the value
+    never pass the bound, so a growing file is read in place."""
+    with open_tail(path, include_stripe_stats, max_file_length) as tail:
+        return tail
 
 
 # ---------------------------------------------------------------------------
@@ -635,7 +711,7 @@ def _parse_column_encoding(buf: bytes) -> dict:
     return enc
 
 
-def parse_stripe_footers(path: str) -> list[dict]:
+def parse_stripe_footers(src: str | FileTail) -> list[dict]:
     """Parse every stripe's StripeFooter — the per-column encoding
     choices (DICTIONARY_V2 vs DIRECT_V2) the writer actually made,
     i.e. the *output* of the reference's dictionary-cutover decision
@@ -645,33 +721,16 @@ def parse_stripe_footers(path: str) -> list[dict]:
     {offset, numberOfRows, encodings} where encodings is indexed by
     column id (0 = the root struct).
 
-    Scale note: metadata-only IO — one tail read plus one
+    `src` is a FileTail, or a path whose tail is parsed here. The
+    stripes are the tail's, and each footer read is checked against
+    its bound. Scale note: metadata-only IO — one
     `footerLength`-byte ranged read per stripe (the `orc-tools meta`
     access pattern), never a data scan."""
-    import os
-
-    size = os.path.getsize(path)
-    with open(path, "rb") as fh:
-        n = min(size, 16 * 1024)
-        fh.seek(size - n)
-        data = fh.read(n)
-        ps_len = data[-1]
-        ps = _parse_postscript(data[-1 - ps_len : -1])
-        need = 1 + ps_len + ps["footerLength"]
-        if need > len(data):
-            fh.seek(size - need)
-            data = fh.read(need)
-        footer_end = len(data) - (1 + ps_len)
-        footer = _decompress_tail(
-            data[footer_end - ps["footerLength"] : footer_end], ps["compression"]
-        )
-        stripes = [
-            _parse_stripe_information(v) for f, _w, v in _fields(footer) if f == 3
-        ]
-        out = []
-        for st in stripes:
-            fh.seek(st["offset"] + st["indexLength"] + st["dataLength"])
-            sf = _decompress_tail(fh.read(st["footerLength"]), ps["compression"])
+    out = []
+    with open_tail(src) as tail:
+        for st in tail.stripe_info:
+            at = st["offset"] + st["indexLength"] + st["dataLength"]
+            sf = _decompress_tail(tail.read(at, st["footerLength"]), tail.codec)
             tz = None
             for f, _w, v in _fields(sf):
                 if f == 3:  # StripeFooter.writerTimezone
@@ -721,19 +780,15 @@ _INDEX_AREA = ("ROW_INDEX",) + _BLOOM_KINDS
 
 
 def _index_streams(
-    path: str, wanted: dict[int, tuple[str, ...]], stripes: list[dict]
+    src: str | FileTail, wanted: dict[int, tuple[str, ...]], stripes: list[dict]
 ) -> dict[int, list[list[tuple[str, bytes]]]]:
     """Per column id in `wanted`, per stripe, the decompressed streams
     of the wanted kinds as (kind, bytes) in directory order — ranged
     reads of the index region only (its streams come first in the
-    StripeFooter directory; offsets are cumulative lengths). One open
-    and one postscript parse serve every column and stripe."""
+    StripeFooter directory; offsets are cumulative lengths), each
+    checked against the tail's bound, through one handle."""
     out: dict[int, list[list[tuple[str, bytes]]]] = {cid: [] for cid in wanted}
-    with open(path, "rb") as fh:
-        fh.seek(-1, 2)
-        ps_len = fh.read(1)[0]
-        fh.seek(-(1 + ps_len), 2)
-        compression = _parse_postscript(fh.read(ps_len))["compression"]
+    with open_tail(src) as tail:
         for st in stripes:
             pos = st["offset"]
             got: dict[int, list[tuple[str, bytes]]] = {cid: [] for cid in wanted}
@@ -741,8 +796,7 @@ def _index_streams(
                 kind = s["kind"]
                 if kind in _INDEX_AREA:
                     if kind in wanted.get(s["column"], ()):
-                        fh.seek(pos)
-                        raw = _decompress_tail(fh.read(s["length"]), compression)
+                        raw = _decompress_tail(tail.read(pos, s["length"]), tail.codec)
                         got[s["column"]].append((kind, raw))
                     pos += s["length"]
             for cid, streams in got.items():
@@ -791,14 +845,16 @@ def _row_index_entries(raw: bytes, stats: bool) -> list[dict]:
 
 
 def parse_indexes(
-    path: str, stripes: list[dict], columns, stats=(), blooms=(),
+    src: str | FileTail, stripes: list[dict], columns, stats=(), blooms=(),
 ) -> tuple[dict[int, list], dict[int, list]]:
     """The index a scan plan needs, read in one pass over each stripe's
     index region: the row index of every column id in `columns` and
     `stats` — seek positions for all of them, typed statistics only for
     the `stats` ids (a SearchArgument's leaf columns) — and the bloom
-    index of every id in `blooms`. Returns (row_index, bloom_index),
-    each {column id: per stripe, the per-row-group entries}."""
+    index of every id in `blooms`. `src` is the file's FileTail (or a
+    path, parsed here); `stripes` its parse_stripe_footers. Returns
+    (row_index, bloom_index), each {column id: per stripe, the
+    per-row-group entries}."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.bloom import bloom_entries
 
     stats = set(stats)
@@ -807,7 +863,8 @@ def parse_indexes(
         wanted[cid] = wanted.get(cid, ()) + _BLOOM_KINDS
     row_index: dict[int, list] = {}
     bloom_index: dict[int, list] = {}
-    for cid, per_stripe in _index_streams(path, wanted, stripes).items():
+    found = _index_streams(src, wanted, stripes)
+    for cid, per_stripe in found.items():
         if "ROW_INDEX" in wanted[cid]:
             row_index[cid] = [
                 [
@@ -827,18 +884,20 @@ def parse_indexes(
 
 
 def parse_row_index(
-    path: str, column_id: int, stripes: list[dict] | None = None
+    src: str | FileTail, column_id: int, stripes: list[dict] | None = None
 ) -> list[list[dict]]:
     """Parse one column's ROW_INDEX streams: per stripe, the list of
     per-row-group entries ({positions, n_values, has_null, typed
     min/max/sum}) — the reference's RowIndex/RowIndexEntry, the
     granularity `pickRowGroups` actually prunes at. Ranged reads of
-    each stripe's index region only; `stripes` reuses an earlier
-    parse_stripe_footers. A plan that needs several columns' indexes
-    reads them together through `parse_indexes`."""
-    if stripes is None:
-        stripes = parse_stripe_footers(path)
-    return parse_indexes(path, stripes, (), stats=(column_id,))[0][column_id]
+    each stripe's index region only; `src` is a FileTail or a path, and
+    `stripes` reuses an earlier parse_stripe_footers. A plan that needs
+    several columns' indexes reads them together through
+    `parse_indexes`."""
+    with open_tail(src) as tail:
+        if stripes is None:
+            stripes = parse_stripe_footers(tail)
+        return parse_indexes(tail, stripes, (), stats=(column_id,))[0][column_id]
 
 
 # position-slot widths (RecordReaderUtils.java:387-390): a byte stream

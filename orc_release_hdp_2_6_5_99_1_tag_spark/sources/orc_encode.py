@@ -1048,7 +1048,7 @@ class _PrimitiveNode(_NodeBase):
         hashes = self._values(streams, pos, stats)
         if hashes is not None and self.name in self.opts["bloom_filter_columns"]:
             self.blooms = _blooms(
-                hashes, self.vbounds, self.opts["row_index_stride"],
+                hashes(), self.vbounds, self.opts["row_index_stride"],
                 self.opts["bloom_filter_fpp"],
             )  # fmt: skip
         self._index(pos, stats)
@@ -1056,8 +1056,9 @@ class _PrimitiveNode(_NodeBase):
 
     def _values(self, streams: list, pos: list, stats: list[_Stats]):
         """Encode the non-null values into their streams, appending
-        each group's slots to `pos` and filling `stats`; returns the
-        values' bloom hashes (None for kinds without a bloom)."""
+        each group's slots to `pos` and filling `stats`; returns a
+        function computing the values' bloom hashes (None for kinds
+        without a bloom), called only for bloom columns."""
         k = self.kind
         live, vb = self.live, self.vbounds
         groups = np.flatnonzero(np.diff(vb)).tolist()
@@ -1097,7 +1098,7 @@ class _PrimitiveNode(_NodeBase):
                 if k in _INTS:
                     for g, sm, ov in zip(groups, *_int_sums(x, vb, groups)):
                         stats[g].sum, stats[g].sum_overflow = sm, ov
-            return wang_hashes(x)
+            return lambda: wang_hashes(x)
         if k in ("float", "double"):
             x = np.asarray(live, dtype=np.float64)
             width = 4 if k == "float" else 8
@@ -1116,7 +1117,7 @@ class _PrimitiveNode(_NodeBase):
                 seg = seg[~nan]
                 if len(seg):  # argmin/argmax keep the first of equal values
                     st.min, st.max = float(seg[np.argmin(seg)]), float(seg[np.argmax(seg)])
-            return wang_hashes(x.view(np.int64))
+            return lambda: wang_hashes(x.view(np.int64))
         if k == "decimal":
             scale = self.node["scale"] or 0
             unscaled = _decimal_unscaled(live)
@@ -1129,7 +1130,9 @@ class _PrimitiveNode(_NodeBase):
                 seg = unscaled[vb[g] : vb[g + 1]]
                 st = stats[g]
                 st.min, st.max, st.sum = dec(min(seg)), dec(max(seg)), dec(sum(seg))
-            return murmur3_hashes(pa.array([_dec_str(dec(u)) for u in unscaled], pa.string()))
+            return lambda: murmur3_hashes(
+                pa.array([_dec_str(dec(u)) for u in unscaled], pa.string())
+            )
         # string family and binary: the sum is the byte length
         offs = _offsets(live)
         glen = np.diff(offs[vb]).tolist()
@@ -1150,7 +1153,7 @@ class _PrimitiveNode(_NodeBase):
         else:
             put("DATA", (_bytes_of(live), offs[vb]), 0)
             put("LENGTH", rle(np.diff(offs), False, vb))
-        return None if k == "binary" else murmur3_hashes(live)
+        return None if k == "binary" else lambda: murmur3_hashes(live)
 
 
 def _ts_parts(micros: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -15,8 +15,8 @@ Planning contract: `partitions()` lists files on the DRIVER with
 `file_job.orc_files` (metadata listing only — no parsing); each
 executor task gets ONE file and does ranged reads of the tail regions
 with the repo's pure-Python parser
-(`footer_tail.parse_tail_of_file(include_stripe_stats=True)` +
-`parse_stripe_footers`), never a data scan. A million-file lake fans
+(`footer_tail.parse_tail_of_file(include_stripe_stats=True)`: the
+Footer's stripe list and the stripe statistics), never a data scan. A million-file lake fans
 out one task per file, the same topology as the per-file job
 (`file_job.map_files`) — this module is that capability re-expressed
 through the engine's native source-plugin API, so it composes with
@@ -101,48 +101,6 @@ def _build_datasource_class():
                 footer_tail as ft,
             )
 
-            path = partition.value
-            tail = ft.parse_tail_of_file(path, include_stripe_stats=True)
-            stripes = ft.parse_stripe_footers(path)
-            names = [c["name"] for c in tail["columns"]]
-            kinds = [c["kind"] for c in tail["columns"]]
-            fname = os.path.basename(path)
-            cols: dict[str, list] = {k: [] for k in (
-                "file", "stripe_idx", "column_name", "kind", "n_values",
-                "has_null", "min_val", "max_val", "n_rows_stripe",
-                "stripe_offset", "index_length", "n_cols", "compression",
-                "row_index_stride", "writer_version",
-            )}
-            for s_idx, st in enumerate(stripes):
-                per_col = (
-                    tail["stripe_stats"][s_idx]
-                    if tail.get("stripe_stats")
-                    else []
-                )
-                for c_idx, cname in enumerate(names):
-                    # stripe_stats index 0 is the root struct
-                    stats = (
-                        per_col[c_idx + 1]
-                        if len(per_col) > c_idx + 1
-                        else {}
-                    )
-                    typed = stats.get("typed") or {}
-                    mn, mx = typed.get("min"), typed.get("max")
-                    cols["file"].append(fname)
-                    cols["stripe_idx"].append(s_idx)
-                    cols["column_name"].append(cname)
-                    cols["kind"].append(kinds[c_idx])
-                    cols["n_values"].append(stats.get("n_values"))
-                    cols["has_null"].append(stats.get("has_null"))
-                    cols["min_val"].append(None if mn is None else str(mn))
-                    cols["max_val"].append(None if mx is None else str(mx))
-                    cols["n_rows_stripe"].append(st["numberOfRows"])
-                    cols["stripe_offset"].append(st["offset"])
-                    cols["index_length"].append(st["indexLength"])
-                    cols["n_cols"].append(len(names))
-                    cols["compression"].append(tail["compression"])
-                    cols["row_index_stride"].append(tail["row_index_stride"])
-                    cols["writer_version"].append(tail["writer_version"])
             arrow_schema = pa.schema([
                 ("file", pa.string()), ("stripe_idx", pa.int32()),
                 ("column_name", pa.string()), ("kind", pa.string()),
@@ -154,6 +112,29 @@ def _build_datasource_class():
                 ("row_index_stride", pa.int32()),
                 ("writer_version", pa.int32()),
             ])  # fmt: skip
+            path = partition.value
+            tail = ft.parse_tail_of_file(path, include_stripe_stats=True)
+            columns = tail["columns"]
+            stripe_stats = tail.get("stripe_stats")
+            cols: dict[str, list] = {name: [] for name in arrow_schema.names}
+            for s_idx, st in enumerate(tail.stripe_info):
+                per_col = stripe_stats[s_idx] if stripe_stats else []
+                for c_idx, c in enumerate(columns):
+                    # stripe_stats index 0 is the root struct
+                    stats = per_col[c_idx + 1] if len(per_col) > c_idx + 1 else {}
+                    typed = stats.get("typed") or {}
+                    mn, mx = typed.get("min"), typed.get("max")
+                    row = (
+                        os.path.basename(path), s_idx, c["name"], c["kind"],
+                        stats.get("n_values"), stats.get("has_null"),
+                        None if mn is None else str(mn),
+                        None if mx is None else str(mx),
+                        st["numberOfRows"], st["offset"], st["indexLength"],
+                        len(columns), tail["compression"],
+                        tail["row_index_stride"], tail["writer_version"],
+                    )
+                    for col, v in zip(cols.values(), row):
+                        col.append(v)
             yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
 
     class OrcMetaDataSource(DataSource):
@@ -671,8 +652,7 @@ def _build_orc_native_class():
                 "orc_native requires .option('path', <orc dir>)"
             )
         files = orc_files(path)
-        if _use_side_file(options):
-            files = [_bounded_view(f) for f in files]
+        bounds = _bounds(files, options)
         # evolved lakes (C1): the READER schema is ELECTED — the file
         # whose schema is a widening-supertype of every other file's
         # (r11 verdict #2: no caller hint; a lake whose oldest file
@@ -703,12 +683,15 @@ def _build_orc_native_class():
         h = hashlib.sha256()
         for f in files:
             st = os.stat(f)
-            h.update(f"{f}\x00{st.st_mtime_ns}\x00{st.st_size}\x00".encode())
+            h.update(f"{f}\x00{st.st_mtime_ns}\x00{st.st_size}\x00{bounds[f]}\x00".encode())
         fp = h.hexdigest()
         cached = _ELECTION_CACHE.get((path, force))
         if cached is not None and cached[0] == fp:
             return cached[1]
-        elected = elect_reader_path(files, force_positional=force)
+        metas = None  # unbounded files: the election parses their tails
+        if any(b is not None for b in bounds.values()):
+            metas = {f: parse_tail_of_file(f, max_file_length=b) for f, b in bounds.items()}
+        elected = elect_reader_path(files, metas, force_positional=force)
         _ELECTION_CACHE[(path, force)] = (fp, elected)
         return elected
 
@@ -721,18 +704,23 @@ def _build_orc_native_class():
             "1", "true", "yes",
         )
 
-    def _use_side_file(options) -> bool:
-        """`.option("use_side_file", "true")`: readable-while-writing —
-        each file with a `<name>.flush_length` side file is read AS IF
-        it ended at that committed length (the reference's
-        `OrcConf.MAX_FILE_LENGTH:118-121` / `_flush_length` protocol,
-        honored at `ReaderImpl.extractFileTail:515`), so a lake that
-        contains a GROWING appender file (NativeOrcAppender, or any
-        writer publishing intermediate footers) scans its durable
-        prefix and never the torn bytes past it."""
-        return str(options.get("use_side_file", "")).lower() in (
-            "1", "true", "yes",
-        )
+    def _bounds(files, options) -> dict:
+        """Per file, the byte bound it is read under: None (the whole
+        file), or with `.option("use_side_file", "true")` the
+        committed length its `<name>.flush_length` side file holds.
+        The file is read in place AS IF it ended there (the
+        reference's `OrcConf.MAX_FILE_LENGTH:118-121`, honored at
+        `ReaderImpl.extractFileTail:515`), so a GROWING appender file
+        scans its durable prefix, never the torn bytes past it."""
+        import os
+
+        use = str(options.get("use_side_file", "")).lower() in ("1", "true", "yes")
+        bounds = dict.fromkeys(files)
+        for f in files if use else ():
+            if os.path.exists(f + ".flush_length"):
+                with open(f + ".flush_length") as fh:
+                    bounds[f] = int(fh.read().strip())
+        return bounds
 
     class OrcNativeReader(DataSourceReader):
         def __init__(self, options: dict, first=None, meta=None):
@@ -746,7 +734,7 @@ def _build_orc_native_class():
                 self._columns = _default_columns(meta)
             self._audit_dir = options.get("audit_dir")
             self._force_positional = _force_positional(options)
-            self._use_side = _use_side_file(options)
+            self._options = options
             # orc.tolerate.missing.schema parity (OrcConf.java:85-89,
             # default true): strict mode refuses best-effort positional
             # reconciliation of pre-HIVE-4243 files at scan time
@@ -773,12 +761,11 @@ def _build_orc_native_class():
                 self._tree = ("and", *leaves)
 
         def partitions(self):
+            # each task gets its file and the bound it is read under,
+            # read DRIVER-side once, so every task of a load sees one
+            # committed prefix
             files = orc_files(self._path)
-            if self._use_side:
-                # bounded views are built DRIVER-side (partition
-                # planning), so tasks scan plain complete files
-                files = [_bounded_view(f) for f in files]
-            return [InputPartition(f) for f in files]
+            return [InputPartition(fb) for fb in _bounds(files, self._options).items()]
 
         def read(self, partition):
             import os
@@ -787,7 +774,7 @@ def _build_orc_native_class():
                 stream_decode as m,
             )
 
-            path = partition.value
+            path, bound = partition.value
             audit = {"file": os.path.basename(path)}
             # the plan's batches carry the reader schema: arrow_schema
             # of the elected reader meta and the requested columns
@@ -796,6 +783,7 @@ def _build_orc_native_class():
                 reader_meta=self._reader_meta,
                 force_positional=self._force_positional,
                 tolerate_missing_schema=self._tolerate_missing,
+                max_file_length=bound,
             ).execute(audit)
             self._drop_audit(audit)
 
@@ -840,90 +828,6 @@ def _build_orc_native_class():
             return OrcNativeReader(self.options, first=first, meta=meta)
 
     return OrcNativeSource
-
-
-# ---------------------------------------------------------------------------
-# bounded views of growing files (driver-side planning of orc_native)
-# ---------------------------------------------------------------------------
-
-
-def _bounded_view(path: str) -> str:
-    """The committed [0, flush_length) byte view of a growing file, as
-    a real file the unmodified scan chain reads (the s23
-    materialize-the-prefix discipline, kept out of the shared decode
-    path by design). Views live in `<tmp>/orc_native_views` as
-    `<tag>-<bound>.orc`, `<tag>` a digest of the file's path, next to
-    a `<tag>.src` that names the file. Cached per (file, bound): a new
-    publish is a new bound, so repeated polls of an unchanged bound
-    cost one stat, and stale bounds of the same file are removed. A
-    file's views go once the file is complete (no side file, or a
-    bound that covers the whole file) or gone; files without a side
-    file pass through untouched."""
-    import hashlib
-    import os
-    import tempfile
-
-    views = os.path.join(tempfile.gettempdir(), "orc_native_views")
-    tag = hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:16]
-    _drop_views_of_gone_files(views)
-    side = path + ".flush_length"
-    bound = None
-    if os.path.exists(side):
-        with open(side) as fh:
-            bound = int(fh.read().strip())
-    if bound is None or not os.path.exists(path) or bound >= os.path.getsize(path):
-        _drop_views(views, tag)
-        return path
-    view = os.path.join(views, f"{tag}-{bound}.orc")
-    if not os.path.exists(view):
-        _drop_views(views, tag)
-        os.makedirs(views, exist_ok=True)
-        tmp = view + ".tmp"
-        with open(path, "rb") as src, open(tmp, "wb") as dst:
-            remaining = bound
-            while remaining > 0:
-                chunk = src.read(min(1 << 20, remaining))
-                if not chunk:
-                    break
-                dst.write(chunk)
-                remaining -= len(chunk)
-        with open(os.path.join(views, f"{tag}.src"), "w") as fh:
-            fh.write(os.path.abspath(path))
-        os.replace(tmp, view)
-    return view
-
-
-def _drop_views(views: str, tag: str) -> None:
-    """Remove every view of one file (and its `.src` note)."""
-    import os
-
-    try:
-        names = os.listdir(views)
-    except FileNotFoundError:
-        return
-    for name in names:
-        if name.startswith(tag):
-            try:
-                os.remove(os.path.join(views, name))
-            except OSError:
-                pass
-
-
-def _drop_views_of_gone_files(views: str) -> None:
-    import os
-
-    try:
-        notes = [n for n in os.listdir(views) if n.endswith(".src")]
-    except FileNotFoundError:
-        return
-    for note in notes:
-        try:
-            with open(os.path.join(views, note)) as fh:
-                src = fh.read()
-        except OSError:
-            continue
-        if not os.path.exists(src):
-            _drop_views(views, note[: -len(".src")])
 
 
 def register_orc_native(spark) -> None:

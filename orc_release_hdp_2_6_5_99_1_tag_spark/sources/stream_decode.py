@@ -88,8 +88,10 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import (
 )
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
     _INDEX_AREA,
+    FileTail,
     _decompress_chunk,
     get_index_position,
+    open_tail,
     parse_indexes,
     parse_stripe_footers,
     parse_tail_of_file,
@@ -108,17 +110,18 @@ class RangeReader:
     """Serves reads ONLY from the planned byte ranges of one stripe
     (the executor-side analog of the reference's zero-copy DiskRange
     list, RecordReaderUtils.readDiskRanges). Each planned range is
-    fetched with ONE seek+read — the object-store GET shape — and
+    fetched with ONE ranged read through the file's FileTail (the
+    object-store GET shape), checked against its byte bound.
     `bytes_fetched` is the honest IO accounting the tests compare to
-    `bytes_planned`."""
+    `bytes_planned`; `chunks_inflated` counts decompressed chunks."""
 
-    def __init__(self, path: str, base: int, ranges: list[tuple[int, int]]):
+    def __init__(self, tail: FileTail, base: int, ranges: list[tuple[int, int]]):
         self._ranges: list[tuple[int, int, bytes]] = []
         self.bytes_fetched = 0
-        with open(path, "rb") as fh:
+        self.chunks_inflated = 0
+        with tail.opened():
             for a, b in sorted(ranges):
-                fh.seek(base + a)
-                self._ranges.append((a, b, fh.read(b - a)))
+                self._ranges.append((a, b, tail.read(base + a, b - a)))
                 self.bytes_fetched += b - a
 
     def covering(self, off: int) -> tuple[int, bytes] | None:
@@ -143,15 +146,18 @@ _PAD = 8  # zero bytes past a segment's end: the bit gather reads ahead
 class _Seg:
     """Decompressed bytes of one contiguous planned stretch of a
     stream. `buf` carries _PAD trailing zero bytes; every read must end
-    at or before `end`, else the plan did not cover it."""
+    at or before `end`, else the plan did not cover it. `whole`: the
+    stretch runs to the end of its planned range (else it stops where
+    the kept run that loaded it stops)."""
 
-    __slots__ = ("buf", "arr", "end", "where")
+    __slots__ = ("buf", "arr", "end", "where", "whole")
 
-    def __init__(self, padded: bytes, where: str):
+    def __init__(self, padded: bytes, where: str, whole: bool = True):
         self.buf = padded
         self.end = len(padded) - _PAD
         self.arr = np.frombuffer(padded, np.uint8)
         self.where = where
+        self.whole = whole
 
     def check(self, stop: int) -> None:
         if stop > self.end:
@@ -163,11 +169,15 @@ class _Seg:
 
 class _Stream:
     """One ORC stream of a stripe (InStream.java framing). A seek
-    position resolves into a `_Seg`: compressed, every chunk that lies
-    wholly inside the planned range holding the position, decompressed
-    once and joined; uncompressed, the planned range's bytes. Positions
-    consume 1 slot uncompressed (byte offset) or 2 compressed (chunk
-    header offset, offset into the decompressed chunk)."""
+    position resolves into a `_Seg`: compressed, the chunks from the
+    position's own on that lie wholly inside the planned range holding
+    it, decompressed once and joined — up to the range's end, or, given
+    `stop` (the position of the first group past the kept run), only
+    until they cover that position plus `slack` bytes, the most the
+    reader's last run can reach past it; uncompressed, the planned
+    range's bytes. Positions consume 1 slot uncompressed (byte offset)
+    or 2 compressed (chunk header offset, offset into the decompressed
+    chunk)."""
 
     def __init__(self, rr: RangeReader, start: int, length: int, compression: str):
         self._rr = rr
@@ -177,7 +187,7 @@ class _Stream:
         self._segs: dict[int, tuple[_Seg, int]] = {}  # offset -> (seg, base)
         self.origin = (0,) if compression == "NONE" else (0, 0)
 
-    def seek(self, provider) -> tuple[_Seg, int]:
+    def seek(self, provider, stop=None, slack: int = 0) -> tuple[_Seg, int]:
         if self._comp == "NONE":
             pos = next(provider)
             r = self._rr.covering(self._start + pos)
@@ -190,9 +200,14 @@ class _Stream:
         # a position AT (or past) the stream's end — zero-length
         # streams (all-null column) and row groups whose column ran dry
         # in an earlier group — has no chunk; it reads zero values
-        if header not in self._segs:
-            self._load_chunks(header)
-        seg, base = self._segs[header]
+        if stop is not None:
+            stop = (stop[0], stop[1] + slack)
+        # a later run reuses only a stretch that runs to its range's end
+        hit = self._segs.get(header)
+        if hit is None or not hit[0].whole:
+            self._load_chunks(header, stop)
+            hit = self._segs[header]
+        seg, base = hit
         return seg, base + sub
 
     def _where(self) -> str:
@@ -208,15 +223,22 @@ class _Stream:
             data = buf[self._start + lo - a : self._start + self._length - a]
         self._segs[lo] = (_Seg(data + bytes(_PAD), self._where()), 0)
 
-    def _load_chunks(self, header: int) -> None:
+    def _load_chunks(self, header: int, stop) -> None:
         r = self._rr.covering(self._start + header)
         parts: list[bytes] = []
         bases: list[tuple[int, int]] = []
         total = 0
         off = header
+        need = None  # decompressed bytes that cover `stop`, once known
+        whole = True
         if r is not None:
             a, buf = r
             while off + 3 <= self._length:
+                if stop is not None and off == stop[0]:
+                    need = total + stop[1]
+                if need is not None and total >= need:
+                    whole = False
+                    break
                 i = self._start + off - a
                 if i + 3 > len(buf):
                     break
@@ -225,15 +247,17 @@ class _Stream:
                 if i + 3 + clen > len(buf):
                     break
                 raw = buf[i + 3 : i + 3 + clen]
-                chunk = raw if word & 1 else _decompress_chunk(
-                    raw, _COMP_CODE[self._comp]
-                )
+                if word & 1:
+                    chunk = raw
+                else:
+                    chunk = _decompress_chunk(raw, _COMP_CODE[self._comp])
+                    self._rr.chunks_inflated += 1
                 bases.append((off, total))
                 parts.append(chunk)
                 total += len(chunk)
                 off += 3 + clen
         parts.append(bytes(_PAD))
-        seg = _Seg(b"".join(parts), self._where())
+        seg = _Seg(b"".join(parts), self._where(), whole)
         self._segs[header] = (seg, 0)
         for off, base in bases:
             self._segs.setdefault(off, (seg, base))
@@ -630,20 +654,33 @@ def _byte_rle(seg: _Seg, pos: int, need: int) -> tuple[np.ndarray, int]:
     return seg.arr[idx], pos
 
 
+# the most bytes one run of each kernel spans: an RLEv2 PATCHED_BASE run
+# of 512 64-bit values with its 4-byte header, 8-byte base and 31 64-bit
+# patch entries; an RLEv1 literal run of 128 ten-byte varints; a
+# byte-RLE literal run of 128 bytes
+_MAX_RUN_BYTES = {
+    _rle_v2: 4 + 8 + 512 * 8 + 31 * 8,
+    _rle_v1: 1 + 128 * 10,
+    _byte_rle: 1 + 128,
+}
+
 # ---------------------------------------------------------------------------
 # stream readers: a seek, then reads of whole arrays
 # ---------------------------------------------------------------------------
 
 
 class _Bytes:
-    """A stream read as raw bytes from its seek position on."""
+    """A stream read as raw bytes from its seek position on. A kept
+    run's reads end exactly where the next group's start (`slack` 0)."""
+
+    slack = 0
 
     def __init__(self, stream: _Stream):
         self._stream = stream
         self.seg, self.pos = _EMPTY_SEG, 0
 
-    def seek(self, provider) -> None:
-        self.seg, self.pos = self._stream.seek(provider)
+    def seek(self, provider, stop=None) -> None:
+        self.seg, self.pos = self._stream.seek(provider, stop, self.slack)
 
     def rewind(self) -> None:
         """Seek to the stream's first byte (stripe dictionaries)."""
@@ -664,13 +701,16 @@ class _Ints(_Bytes):
 
     def __init__(self, stream: _Stream, kernel: Callable, *args):
         super().__init__(stream)
+        # a run's last value may sit in a run that starts at the next
+        # group's position and spans this much past it
+        self.slack = _MAX_RUN_BYTES[kernel]
         self._kernel = kernel
         self._args = args
         self._none = kernel(_EMPTY_SEG, 0, 0, *args)[0]  # typed empty
         self._left = self._none
 
-    def seek(self, provider) -> None:
-        super().seek(provider)
+    def seek(self, provider, stop=None) -> None:
+        super().seek(provider, stop)
         self._left = self._none
         skip = next(provider)
         if skip:
@@ -701,8 +741,8 @@ class _Bits:
         self._bytes = _Ints(stream, _byte_rle)
         self._left = np.zeros(0, np.uint8)
 
-    def seek(self, provider) -> None:
-        self._bytes.seek(provider)
+    def seek(self, provider, stop=None) -> None:
+        self._bytes.seek(provider, stop)
         self._left = np.zeros(0, np.uint8)
         bits = next(provider)
         if bits:
@@ -836,12 +876,12 @@ class _Column:
         return reader
 
     def seek_group(self, ctx: _DecodeContext) -> None:
-        segs = ctx.segs(self.cid, self.kind, self.encoding)
+        segs, stops = ctx.segs(self.cid, self.kind, self.encoding)
         if self._present is not None:
-            self._present.seek(iter(segs["PRESENT"]))
+            self._present.seek(iter(segs["PRESENT"]), stops.get("PRESENT"))
         for kind, reader in self._seeks.items():
             if segs.get(kind):
-                reader.seek(iter(segs[kind]))
+                reader.seek(iter(segs[kind]), stops.get(kind))
         for child in self._children:
             child.seek_group(ctx)
 
@@ -1143,7 +1183,8 @@ class _DecodeContext:
     """Per-stripe seek context: computes each column's per-row-group
     position slices (the getIndexPosition slot layout) on demand, so
     composite decoders can seek their whole subtree for group
-    `self.group`."""
+    `self.group`, the first of a kept run; `self.stop` is the first
+    group past the run (None when it runs to the stripe's end)."""
 
     def __init__(self, st: dict, row_index: dict, is_compressed: bool):
         self.st = st
@@ -1151,9 +1192,12 @@ class _DecodeContext:
         self.is_compressed = is_compressed
         self.directory = _stream_directory(st)
         self.group = 0
+        self.stop: int | None = None
 
-    def segs(self, cid: int, kind: str, encoding: str) -> dict[str, list[int]]:
-        entry = self.row_index[cid][self.group]["positions"]
+    def segs(self, cid: int, kind: str, encoding: str) -> tuple[dict, dict]:
+        """Per stream kind, the position slices of groups `self.group`
+        and `self.stop` (the latter empty without a stop)."""
+        entries = self.row_index[cid]
         streams = self.directory.get(cid, {})
         has_nulls = "PRESENT" in streams
         slots = sorted(
@@ -1170,10 +1214,13 @@ class _DecodeContext:
             )
         )
         segs: dict[str, list[int]] = {}
+        stops: dict[str, list[int]] = {}
         for i, (slot, sk) in enumerate(slots):
-            end = slots[i + 1][0] if i + 1 < len(slots) else len(entry)
-            segs[sk] = entry[slot:end]
-        return segs
+            end = slots[i + 1][0] if i + 1 < len(slots) else None
+            segs[sk] = entries[self.group]["positions"][slot:end]
+            if self.stop is not None:
+                stops[sk] = entries[self.stop]["positions"][slot:end]
+        return segs, stops
 
 
 def _stream_directory(stripe: dict) -> dict[int, dict[str, tuple[int, int]]]:
@@ -1190,7 +1237,8 @@ def _stream_directory(stripe: dict) -> dict[int, dict[str, tuple[int, int]]]:
 
 
 def _kept_runs(keep: list[bool], stride: int, rows: int):
-    """(first group, row count) of each run of consecutive kept groups."""
+    """(first group, the first group past it or None at the stripe's
+    end, row count) of each run of consecutive kept groups."""
     g = 0
     while g < len(keep):
         if not keep[g]:
@@ -1199,7 +1247,7 @@ def _kept_runs(keep: list[bool], stride: int, rows: int):
         first = g
         while g < len(keep) and keep[g]:
             g += 1
-        yield first, min(g * stride, rows) - first * stride
+        yield first, g if g < len(keep) else None, min(g * stride, rows) - first * stride
 
 
 def _conform(arr: pa.Array, typ: pa.DataType) -> pa.Array:
@@ -1325,7 +1373,7 @@ class FileScanPlan:
         st = self.stripes[stripe_idx]
         p = self.ranges[stripe_idx]
         keep = [d["keep"] for d in self.picks[stripe_idx]]
-        rr = RangeReader(self.path, st["offset"], p["ranges"])
+        rr = RangeReader(self.meta, st["offset"], p["ranges"])
         # row indexes for the whole subtree closure (nested columns seek
         # their element/field/key/value streams by their own entries)
         row_index = {
@@ -1344,8 +1392,8 @@ class FileScanPlan:
         }
         parts: dict[str, list[pa.Array]] = {c: [] for c in decoders}
         n_rows = 0
-        for g, n in _kept_runs(keep, meta["row_index_stride"], st["numberOfRows"]):
-            ctx.group = g
+        for g, stop, n in _kept_runs(keep, meta["row_index_stride"], st["numberOfRows"]):
+            ctx.group, ctx.stop = g, stop
             for c, dec in decoders.items():
                 dec.seek_group(ctx)
                 parts[c].append(dec.read(n))
@@ -1363,15 +1411,17 @@ class FileScanPlan:
             "row_groups_decoded": sum(keep),
             "row_groups_total": len(keep),
             "bytes_fetched": rr.bytes_fetched,
+            "chunks_inflated": rr.chunks_inflated,
             "bytes_total_data": p["bytes_total_data"],
         }
 
     def execute(self, audit: dict | None = None):
         """Run the plan: yield one `pa.RecordBatch` of `schema` per
-        stripe with a kept row group. `audit`, when given, is filled
-        with the per-file accounting (file_kept, stripes_decoded,
-        groups_decoded/total, bytes_fetched, and the evolution_*
-        markers when evolution applied)."""
+        stripe with a kept row group, every stripe read through one
+        open handle of the file. `audit`, when given, is filled with
+        the per-file accounting (file_kept, stripes_decoded,
+        groups_decoded/total, bytes_fetched, chunks_inflated, and the
+        evolution_* markers when evolution applied)."""
         if audit is None:
             audit = {}
         if self.positional_levels:
@@ -1382,20 +1432,22 @@ class FileScanPlan:
             audit["evolution_converted"] = sorted(self.converters)
         audit.setdefault("file_kept", True)
         for k in ("stripes_decoded", "groups_decoded", "groups_total",
-                  "bytes_fetched"):
+                  "bytes_fetched", "chunks_inflated"):
             audit.setdefault(k, 0)
         if not self.file_kept:
             audit["file_kept"] = False
             return
         audit["groups_total"] = sum(len(per) for per in self.picks)
-        for si, per_stripe in enumerate(self.picks):
-            if not any(d["keep"] for d in per_stripe):
-                continue
-            res = self.decode(si)
-            audit["stripes_decoded"] += 1
-            audit["groups_decoded"] += res["row_groups_decoded"]
-            audit["bytes_fetched"] += res["bytes_fetched"]
-            yield self._output(res["batch"])
+        with self.meta.opened():
+            for si, per_stripe in enumerate(self.picks):
+                if not any(d["keep"] for d in per_stripe):
+                    continue
+                res = self.decode(si)
+                audit["stripes_decoded"] += 1
+                audit["groups_decoded"] += res["row_groups_decoded"]
+                audit["bytes_fetched"] += res["bytes_fetched"]
+                audit["chunks_inflated"] += res["chunks_inflated"]
+                yield self._output(res["batch"])
 
     def _output(self, batch: pa.RecordBatch) -> pa.RecordBatch:
         """A file-namespace batch under the reader's output names and
@@ -1438,24 +1490,17 @@ def decode_stripe(
     from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
         pick_row_groups,
     )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        _included_ids,
-        _plan_ranges,
-    )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import _plan_ranges
 
-    meta = parse_tail_of_file(path)
-    if not meta["row_index_stride"]:
-        raise ValueError(f"{path}: no row index; cannot plan a partial read")
-    if picks is None:
-        picks = pick_row_groups(path, tree)
-    stripes = parse_stripe_footers(path)
-    included = _included_ids(meta, columns)
-    row_index = parse_indexes(path, stripes, included)[0]
-    if plan is None:
-        plan = _plan_ranges(meta, stripes, included, picks, row_index)
-    res = FileScanPlan(
-        path, meta, columns, included, stripes, picks, plan, row_index
-    ).decode(stripe_idx)
+    full = plan_file_scan(path, None, columns)
+    if picks is None and tree is not None:
+        picks = pick_row_groups(full.meta, tree)
+    if picks is not None:
+        full.picks = picks
+        full.ranges = _plan_ranges(full.meta, full.stripes, full.included, picks, full.row_index)
+    if plan is not None:
+        full.ranges = plan
+    res = full.decode(stripe_idx)
     res["columns"] = to_pylists(res.pop("batch"))
     return res
 
@@ -1465,7 +1510,8 @@ def keep_all_picks(path: str) -> list[list[dict]]:
     row group per stripe, from the root column's row index) — the
     no-predicate scan's picks, shared by decode callers that have no
     SArg (golden-corpus sweep, orc_native full scans)."""
-    return _keep_all(parse_indexes(path, parse_stripe_footers(path), (0,))[0][0])
+    with open_tail(path) as tail:
+        return _keep_all(parse_indexes(tail, parse_stripe_footers(tail), (0,))[0][0])
 
 
 def _keep_all(row_index: list[list[dict]]) -> list[list[dict]]:
@@ -1581,13 +1627,18 @@ def _as_pylists(batches):
 def plan_file_scan(path: str, tree: Any, columns: list[str],
                    reader_meta: dict | None = None,
                    force_positional: bool = False,
-                   tolerate_missing_schema: bool = True) -> FileScanPlan:
+                   tolerate_missing_schema: bool = True,
+                   max_file_length: int | None = None) -> FileScanPlan:
     """Build one file's FileScanPlan, reading its metadata exactly
-    once: the tail, the stripe footers, and one pass over the index
-    region (`footer_tail.parse_indexes`) for the seek positions of
-    every included column, the row-group statistics of the predicate's
+    once, through one open handle: the tail (`footer_tail.FileTail`,
+    which the plan keeps as `meta` and reads its data through), the
+    stripe footers, and one pass over the index region
+    (`footer_tail.parse_indexes`) for the seek positions of every
+    included column, the row-group statistics of the predicate's
     columns and the bloom index of the columns an equality-class leaf
-    names. Evolution semantics, per the reference:
+    names. `max_file_length` plans the file as if it ended at that
+    byte (see `footer_tail.parse_tail_of_file`). Evolution semantics,
+    per the reference:
 
     - missing columns read as all-NULL for that file;
     - a predicate that references a missing column — or one that this
@@ -1611,6 +1662,17 @@ def plan_file_scan(path: str, tree: Any, columns: list[str],
     - without `reader_meta`, a present top with a missing FIELD stays
       a loud error (the legacy contract — callers that never elected
       a reader schema must not get silently reshaped structs)."""
+    with open_tail(path, max_file_length=max_file_length) as meta:
+        return _plan_file_scan(
+            meta, tree, columns, reader_meta, force_positional,
+            tolerate_missing_schema,
+        )
+
+
+def _plan_file_scan(meta: FileTail, tree: Any, columns: list[str],
+                    reader_meta: dict | None, force_positional: bool,
+                    tolerate_missing_schema: bool) -> FileScanPlan:
+    """plan_file_scan over the file's FileTail, held open."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
         _bloom_ids,
         _pick_groups,
@@ -1628,7 +1690,7 @@ def plan_file_scan(path: str, tree: Any, columns: list[str],
         output_columns,
     )
 
-    meta = parse_tail_of_file(path)
+    path = meta.path
     if not meta["row_index_stride"]:
         # never a silent full (or empty) scan behind the caller's back
         raise ValueError(f"{path}: no row index; cannot plan a partial read")
@@ -1733,13 +1795,13 @@ def plan_file_scan(path: str, tree: Any, columns: list[str],
         plan.truth, plan.file_kept = level1["truth"], level1["keep"]
         if not plan.file_kept:
             return plan  # skipped on footer stats: no index bytes read
-    plan.stripes = parse_stripe_footers(path)
+    plan.stripes = parse_stripe_footers(meta)
     if tree is None:
-        plan.row_index = parse_indexes(path, plan.stripes, included)[0]
+        plan.row_index = parse_indexes(meta, plan.stripes, included)[0]
         plan.picks = _keep_all(plan.row_index[min(included)])
     else:
         plan.row_index, blooms = parse_indexes(
-            path, plan.stripes, included,
+            meta, plan.stripes, included,
             stats=_predicate_ids(meta, tree).values(),
             blooms=_bloom_ids(meta, tree),
         )

@@ -93,7 +93,7 @@ def orc_seek_explain(path: str, row: int, columns: list[str] | None = None) -> d
     is_compressed = meta["compression"] != "NONE"
     columns = columns or list(ids)
     first = 0
-    for si, st in enumerate(parse_stripe_footers(path)):
+    for si, st in enumerate(parse_stripe_footers(meta)):
         if row < first + st["numberOfRows"]:
             in_stripe = row - first
             group = in_stripe // stride
@@ -106,7 +106,7 @@ def orc_seek_explain(path: str, row: int, columns: list[str] | None = None) -> d
                 "streams": {},
             }
             # positions only, of this stripe only: one index read
-            row_index = parse_indexes(path, [st], [ids[c] for c in columns])[0]
+            row_index = parse_indexes(meta, [st], [ids[c] for c in columns])[0]
             for cname in columns:
                 col_id = ids[cname]
                 positions = row_index[col_id][0][group]["positions"]
@@ -283,7 +283,7 @@ def _included_ids(
 
 
 def plan_read_ranges(
-    path: str, tree, columns: list[str] | None = None, picks=None,
+    src, tree, columns: list[str] | None = None, picks=None,
     partial: bool = False,
 ) -> list[dict]:
     """Partial-read IO plan: the exact byte ranges a reader must fetch
@@ -300,30 +300,32 @@ def plan_read_ranges(
     Returns per stripe {stripe, stripe_offset, ranges: [(start, end)]
     relative to the stripe start, bytes_planned, bytes_total_data} —
     bytes_planned / bytes_total_data is the fraction of the data
-    section a pruned scan actually touches."""
+    section a pruned scan actually touches. `src` is a path or its
+    `footer_tail.FileTail`; the tail is parsed once."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
         _tree_columns,
         pick_row_groups,
     )
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+        open_tail,
         parse_indexes,
         parse_stripe_footers,
-        parse_tail_of_file,
     )
 
-    meta = parse_tail_of_file(path)
-    if columns is None:
-        columns = sorted(_tree_columns(tree))
-    # a nested column's data lives in its SUBTREE's streams (list
-    # element / struct field / map key+value column ids), so the plan
-    # includes the whole closure — the reference's boolean[] included
-    # covers subtree ids the same way (SchemaEvolution.getFileIncluded)
-    included = _included_ids(meta, columns, partial=partial)
-    if picks is None:  # callers that already decided pass them through,
-        # so plan and decode are guaranteed to agree (stream_decode)
-        picks = pick_row_groups(path, tree)
-    stripes = parse_stripe_footers(path)
-    row_index = parse_indexes(path, stripes, included)[0]
+    with open_tail(src) as meta:
+        if columns is None:
+            columns = sorted(_tree_columns(tree))
+        # a nested column's data lives in its SUBTREE's streams (list
+        # element / struct field / map key+value column ids), so the
+        # plan includes the whole closure — the reference's boolean[]
+        # included covers subtree ids the same way
+        # (SchemaEvolution.getFileIncluded)
+        included = _included_ids(meta, columns, partial=partial)
+        if picks is None:  # callers that already decided pass them
+            # through, so plan and decode are guaranteed to agree
+            picks = pick_row_groups(meta, tree)
+        stripes = parse_stripe_footers(meta)
+        row_index = parse_indexes(meta, stripes, included)[0]
     return _plan_ranges(meta, stripes, included, picks, row_index)
 
 
@@ -399,7 +401,7 @@ def _plan_ranges(
     return out
 
 
-def orc_memory(path: str, columns: list[str] | None = None) -> dict:
+def orc_memory(src, columns: list[str] | None = None) -> dict:
     """Reader memory estimate for one file — the `orc-memory` CLI's
     role (reference analog `tools/src/FileMemory.cc`, not consulted;
     semantics defined here from the reader's actual buffer model and
@@ -413,19 +415,19 @@ def orc_memory(path: str, columns: list[str] | None = None) -> dict:
       lifetime.
 
     Returns {"total", "data", "decompression", "tail", "stripe"} with
-    `stripe` = the index of the memory-worst stripe. Metadata reads
-    only — no data bytes are touched."""
+    `stripe` = the index of the memory-worst stripe. `src` is a path or
+    its `footer_tail.FileTail`, whose byte bound ends the tail.
+    Metadata reads only — no data bytes are touched."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+        open_tail,
         parse_stripe_footers,
-        parse_tail_of_file,
     )
-    import os
 
-    meta = parse_tail_of_file(path)
+    with open_tail(src) as meta:
+        sts = parse_stripe_footers(meta)
     included = _included_ids(meta, columns)
     is_compressed = meta["compression"] != "NONE"
     buf = meta["compression_block_size"]
-    sts = parse_stripe_footers(path)
     # the memory-worst stripe maximizes data + buffers — stream COUNT
     # varies per stripe (PRESENT streams appear only where nulls do,
     # dictionary stripes add LENGTH/DICTIONARY_DATA), so picking by
@@ -445,7 +447,7 @@ def orc_memory(path: str, columns: list[str] | None = None) -> dict:
     decomp = 2 * buf * worst_streams if is_compressed else 0
     # tail: everything after the last stripe's streams (stripe footer,
     # file footer, metadata, postscript) stays resident
-    size = os.path.getsize(path)
+    size = meta.length
     if sts:
         last = sts[-1]
         streams_end = (

@@ -274,8 +274,11 @@ def staged(
     `build(path)` unless it is current; returns its path.
 
     Current means the path exists AND its marker `<path>._done` holds
-    the fingerprint (path, mtime_ns and size of each `sources` table's
-    parquet) followed by `spec`, the build's own parameters. Otherwise
+    the fingerprint: the artifact's absolute path (a copied scratch
+    root rebuilds, since artifacts such as a stream sink's
+    `_spark_metadata` name absolute paths), then path, mtime_ns and
+    size of each `sources` table's parquet, then `spec`, the build's
+    own parameters. Otherwise
     the marker, the path and each `clear` sibling (a stream's
     checkpoint; relative to the scratch dir like `rel`) are removed,
     the artifact is built, and the marker is written last: an
@@ -286,7 +289,9 @@ def staged(
     path = os.path.join(base, rel)
     marker = path + "._done"
     stats = ((p, os.stat(p)) for p in (os.path.join(sf_dir, f"{n}.parquet") for n in sources))
-    fp = ";".join(f"{p}:{st.st_mtime_ns}:{st.st_size}" for p, st in stats) + spec
+    fp = ";".join(
+        [os.path.abspath(path)] + [f"{p}:{st.st_mtime_ns}:{st.st_size}" for p, st in stats]
+    ) + spec
     try:
         with open(marker) as fh:
             if fh.read() == fp and os.path.exists(path):

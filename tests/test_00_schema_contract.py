@@ -427,13 +427,18 @@ _STAGED_ARTIFACTS = {
 
 
 @pytest.mark.parametrize("case", sorted(_STAGED_ARTIFACTS))
-def test_deleted_artifact_is_rebuilt(spark, tmp_path, case):
+def test_deleted_artifact_is_rebuilt(spark, tmp_path, monkeypatch, case):
     """A marker vouches only for an artifact that still exists: delete
     the artifact but keep its marker, and the next call must rebuild it
     and serve the same rows (trusting the marker alone crashed s22 on
-    `files[0]` and r1 on a missing sink path)."""
+    `files[0]` and r1 on a missing sink path). A marker also vouches
+    only for its own path: copy the scratch root elsewhere (a copied
+    checkout), drop the original, and the copy's artifacts rebuild
+    rather than serve a sink whose `_spark_metadata` names the old
+    absolute paths."""
     import shutil
 
+    from orc_release_hdp_2_6_5_99_1_tag_spark import tables
     from orc_release_hdp_2_6_5_99_1_tag_spark.tables import scratch_dir
 
     rel, rows = _STAGED_ARTIFACTS[case]
@@ -441,6 +446,8 @@ def test_deleted_artifact_is_rebuilt(spark, tmp_path, case):
     os.makedirs(sf)
     for t in ("nation", "lineitem", "events"):
         os.symlink(os.path.join(SF_DIR, f"{t}.parquet"), os.path.join(sf, f"{t}.parquet"))
+    old_root = str(tmp_path / "scratch_a")
+    monkeypatch.setattr(tables, "_SCRATCH_ROOT", old_root)
     try:
         before = rows(spark, sf)
         assert before, f"{case}: no rows to compare"
@@ -448,8 +455,18 @@ def test_deleted_artifact_is_rebuilt(spark, tmp_path, case):
         shutil.rmtree(path)
         assert rows(spark, sf) == before, f"{case}: rebuilt artifact serves different rows"
         assert os.path.isdir(path), f"{case}: artifact was not rebuilt"
+
+        new_root = str(tmp_path / "scratch_b")
+        shutil.copytree(old_root, new_root, symlinks=True)
+        shutil.rmtree(old_root)
+        monkeypatch.setattr(tables, "_SCRATCH_ROOT", new_root)
+        assert rows(spark, sf) == before, f"{case}: moved scratch root serves different rows"
+        moved = os.path.join(scratch_dir(sf), rel)
+        with open(moved + "._done") as fh:
+            assert fh.read().startswith(os.path.abspath(moved) + ";"), case
     finally:
-        shutil.rmtree(scratch_dir(sf), ignore_errors=True)
+        shutil.rmtree(old_root, ignore_errors=True)
+        shutil.rmtree(str(tmp_path / "scratch_b"), ignore_errors=True)
 
 
 def test_explicit_ddl_matches_inference(spark):

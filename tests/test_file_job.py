@@ -237,6 +237,40 @@ def test_package_reads_orc_without_pyarrow_orc():
     assert offenders == {}, f"pyarrow.orc imported in the package: {offenders}"
 
 
+def _tail_locators(path: str) -> list[tuple[int, str]]:
+    """(line, source) of each call in `path` that finds a file's end on
+    its own: `getsize`, or a `seek` from the end (whence 2)."""
+    with open(path) as fh:
+        src = fh.read()
+    found = []
+    for node in ast.walk(ast.parse(src)):
+        if not isinstance(node, ast.Call):
+            continue
+        fn = node.func
+        name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", "")
+        whence = node.args[1] if len(node.args) > 1 else None
+        from_end = isinstance(whence, ast.Constant) and whence.value == 2 or (
+            isinstance(whence, ast.Attribute) and whence.attr == "SEEK_END"
+        )
+        if name == "getsize" or name == "seek" and from_end:
+            found.append((node.lineno, ast.get_source_segment(src, node)))
+    return found
+
+
+def test_only_footer_tail_locates_a_tail():
+    """Every reader of an ORC file's metadata or data goes through the
+    tail `footer_tail` parses (and the byte bound it carries): no other
+    module in `sources/` finds the end of a file itself."""
+    offenders = {
+        name: found
+        for name in sorted(os.listdir(_SOURCES))
+        if name.endswith(".py") and name != "footer_tail.py"
+        and (found := _tail_locators(os.path.join(_SOURCES, name)))
+    }
+    assert offenders == {}, f"tail located outside footer_tail: {offenders}"
+    assert _tail_locators(os.path.join(_SOURCES, "footer_tail.py"))
+
+
 def test_per_file_job_lives_in_one_module():
     offenders = {}
     for name in sorted(os.listdir(_SOURCES)):

@@ -986,58 +986,52 @@ def test_orc_native_datasource_reads_growing_appender_file(spark, tmp_path):
     )
 
 
-def test_bounded_views_removed_once_file_complete(tmp_path, monkeypatch):
-    """`pyds._bounded_view` copies a growing file's committed prefix
-    into `<tmp>/orc_native_views`. The copies of one file go once that
-    file is complete: an appender publishes twice with a read between,
-    closes, and the final read leaves no view behind. A view whose
-    file is gone goes at the next planning call."""
+def test_side_file_read_is_bounded_in_place(tmp_path, monkeypatch):
+    """An `orc_native` read with `use_side_file` plans a growing file
+    under the committed length its side file holds and reads it in
+    place: the rows are exactly the committed prefix's, the partition
+    carries the bound, and nothing is written under the temp dir (no
+    prefix copy). Driven through the DataSource's own reader, on the
+    driver."""
     import tempfile
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import (
         NativeOrcAppender,
     )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import _bounded_view
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.pyds import (
+        _build_orc_native_class,
+    )
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
-    (tmp_path / "tmp").mkdir()
-    views = tmp_path / "tmp" / "orc_native_views"
-
-    def read(path):
-        view = _bounded_view(path)
-        return view, _native_columns(view, ["k"]).get("k", [])
-
-    path = str(tmp_path / "g.orc")
-    side = path + ".flush_length"
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    d = tmp_path / "lake"
+    d.mkdir()
+    path = str(d / "g.orc")
     ap = NativeOrcAppender(path, "k bigint", row_index_stride=100)
     ap.add_stripe({"k": list(range(300))})
-    with open(side, "w") as fh:
+    with open(path + ".flush_length", "w") as fh:
         fh.write(str(ap.publish()))
     torn = [(v * 7919) % 100_003 for v in range(20_000)]
     ap.add_stripe({"k": torn})  # growth past the committed tail
-    view, got = read(path)
-    assert view != path and got == list(range(300))
-    assert len(list(views.iterdir())) == 2  # the view and its .src note
-    with open(side, "w") as fh:
-        fh.write(str(ap.publish()))
-    ap.close()
-    view, got = read(path)  # the bound now covers the whole file
-    assert view == path and got == list(range(300)) + torn
-    assert list(views.iterdir()) == []
 
-    # a view whose file disappears goes at the next call for any file
-    gone = str(tmp_path / "gone.orc")
-    ap = NativeOrcAppender(gone, "k bigint")
-    ap.add_stripe({"k": [1, 2]})
-    with open(gone + ".flush_length", "w") as fh:
+    def read(**options):
+        source = _build_orc_native_class()({"path": str(d), **options})
+        reader = source.reader(source.schema())
+        parts = reader.partitions()
+        rows = [v for p in parts for b in reader.read(p) for v in b.column("k").to_pylist()]
+        return [p.value for p in parts], rows
+
+    parts, rows = read(use_side_file="true")
+    committed = int(open(path + ".flush_length").read())
+    assert parts == [(path, committed)]
+    assert rows == list(range(300))
+    with open(path + ".flush_length", "w") as fh:
         fh.write(str(ap.publish()))
-    ap.add_stripe({"k": torn})
-    assert _bounded_view(gone) != gone
     ap.close()
-    os.remove(gone)
-    os.remove(gone + ".flush_length")
-    assert _bounded_view(path) == path
-    assert list(views.iterdir()) == []
+    assert read(use_side_file="true")[1] == list(range(300)) + torn
+    assert read()[0] == [(path, None)]
+    assert list(tmp.iterdir()) == []
 
 
 # ---------------------------------------------------------------------------
@@ -1163,3 +1157,37 @@ def test_v011_write_mode_three_readers(tmp_path, spark):
     assert df.count() == n
     assert df.filter("u = 'uniq4321'").collect()[0]["k"] == 4_321
     assert df.agg({"d": "sum"}).collect()[0][0] == sum(cols["d"])
+
+
+def test_unbloomed_columns_hash_nothing(tmp_path, monkeypatch):
+    """The writer computes bloom hashes only for `bloom_filter_columns`:
+    a file without blooms hashes no value, and one bloom column hashes
+    its own values once."""
+    import datetime as dt
+    import decimal
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import orc_encode as enc
+
+    hashed: list[int] = []
+    for name in ("wang_hashes", "murmur3_hashes"):
+        real = getattr(enc, name)
+
+        def spy(values, _real=real):
+            hashed.append(len(values))
+            return _real(values)
+
+        monkeypatch.setattr(enc, name, spy)
+    n = 3000
+    cols = {
+        "k": list(range(n)),
+        "f": [i / 3 for i in range(n)],
+        "s": [f"s{i % 17}" for i in range(n)],
+        "d": [decimal.Decimal(i).scaleb(-2) for i in range(n)],
+        "ts": [dt.datetime(2020, 1, 1) + dt.timedelta(seconds=i) for i in range(n)],
+    }
+    schema = "k bigint, f double, s string, d decimal(10,2), ts timestamp"
+    enc.write_orc_native(str(tmp_path / "plain.orc"), cols, schema, row_index_stride=1000)
+    assert hashed == []
+    enc.write_orc_native(str(tmp_path / "bloom.orc"), cols, schema, row_index_stride=1000,
+                         bloom_filter_columns=("d",))
+    assert hashed == [n]

@@ -70,13 +70,28 @@ def _plan_file_scan(spark, d, path):
     plan_file_scan(path, None, ["k"])
 
 
-@pytest.mark.parametrize("read", [_orc_meta, _orc_meta_source, _plan_file_scan])
+def _stripe_footers(spark, d, path):
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import parse_stripe_footers
+
+    parse_stripe_footers(path)
+
+
+def _row_index(spark, d, path):
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import parse_row_index
+
+    parse_row_index(path, 1)
+
+
+@pytest.mark.parametrize(
+    "read", [_orc_meta, _orc_meta_source, _plan_file_scan, _stripe_footers, _row_index]
+)
 @pytest.mark.parametrize("make", [_torn, _bad_magic])
 def test_tail_readers_reject_a_file_without_orc_magic(spark, tmp_path, make, read):
     """ReaderImpl.ensureOrcFooter: a postscript whose magic is not ORC
     is not an ORC file, however its bytes happen to parse. orc_meta,
-    the orc_meta DataSource and the planned scan all refuse it rather
-    than report a 0-row (or 3,000-row) file."""
+    the orc_meta DataSource, the planned scan, and the stripe-footer
+    and row-index reads all refuse it rather than report a 0-row (or
+    3,000-row) file: each reads through the one checked tail parse."""
     d = str(tmp_path / "bad")
     os.makedirs(d)
     path = make(d)

@@ -581,20 +581,18 @@ def test_rlev1_decode_v011_golden_vs_reference_dump():
                 assert norm(v) == norm_exp(ev), (c, v, ev)
 
 
-def test_scan_file_reads_metadata_once(typed_file, monkeypatch):
-    """One scan_file plans its file once: the tail and the stripe
-    footers are parsed once, and each included column's row index at
-    most once (the predicate column's included), however many stripes
-    and columns the scan decodes. The index region is read in one
-    pass (`footer_tail._index_streams`: one open, one postscript)."""
+def _count_calls(monkeypatch, names):
+    """Counter of calls to each `footer_tail` function in `names`, in
+    every engine module that bound it by name; an `_index_streams`
+    call also counts, per column id whose wanted kinds include
+    ROW_INDEX, one row-index read under ("rows", cid)."""
     import sys
     from collections import Counter
 
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources import footer_tail as ft
 
     calls: Counter = Counter()
-    index_reads: Counter = Counter()
-    for name in ("parse_tail_of_file", "parse_stripe_footers", "_index_streams"):
+    for name in names:
         real = getattr(ft, name)
 
         def counting(*a, _real=real, _name=name, **k):
@@ -602,10 +600,9 @@ def test_scan_file_reads_metadata_once(typed_file, monkeypatch):
             if _name == "_index_streams":
                 for cid, kinds in a[1].items():
                     if "ROW_INDEX" in kinds:
-                        index_reads[cid] += 1
+                        calls["rows", cid] += 1
             return _real(*a, **k)
 
-        # every engine module that bound the function by name
         for mod in list(sys.modules.values()):
             if (
                 getattr(mod, "__name__", "").startswith(
@@ -614,14 +611,160 @@ def test_scan_file_reads_metadata_once(typed_file, monkeypatch):
                 and vars(mod).get(name) is real
             ):
                 monkeypatch.setattr(mod, name, counting)
+    return calls
+
+
+def _count_opens(monkeypatch, path):
+    """Counter whose "opens" counts every open() of `path`."""
+    import builtins
+    from collections import Counter
+
+    opens: Counter = Counter()
+    real = builtins.open
+
+    def counting(file, *a, **k):
+        if file == path:
+            opens["opens"] += 1
+        return real(file, *a, **k)
+
+    monkeypatch.setattr(builtins, "open", counting)
+    return opens
+
+
+def test_scan_file_reads_metadata_once(typed_file, tmp_path, monkeypatch):
+    """One scan_file plans its file once, through one open: the tail
+    is located once (one postscript parse), the stripe footers are
+    parsed once, and each included column's row index is read at most
+    once (the predicate column's included), however many stripes and
+    columns the scan decodes. The index region is read in one pass
+    (`footer_tail._index_streams`). Executing the plan opens the file
+    once more, for all its stripes: a full scan of a 10-stripe file
+    opens it twice."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import write_orc_native
+
+    calls = _count_calls(
+        monkeypatch, ("parse_stripe_footers", "_index_streams", "_parse_postscript")
+    )
+    opens = _count_opens(monkeypatch, typed_file)
     tree = ("between", "id", [1000, 2999])
-    rows = sum(r["n_rows"] for r in sd.scan_file(typed_file, tree, ALL_COLS))
-    assert rows == 2000
-    assert calls["parse_tail_of_file"] == 1
+    plan = sd.plan_file_scan(typed_file, tree, ALL_COLS)
+    assert opens["opens"] == 1
+    assert calls["_parse_postscript"] == 1
     assert calls["parse_stripe_footers"] == 1
     assert calls["_index_streams"] == 1
+    index_reads = {k[1]: v for k, v in calls.items() if k[0] == "rows"}
     assert index_reads and max(index_reads.values()) == 1
     assert len(index_reads) == len(ALL_COLS)
+    assert sum(b.num_rows for b in plan.execute()) == 2000
+    assert opens["opens"] == 2
+    assert calls["_parse_postscript"] == 1
+    calls.clear()
+    opens.clear()
+    rows = sum(r["n_rows"] for r in sd.scan_file(typed_file, tree, ALL_COLS))
+    assert rows == 2000
+    assert opens["opens"] == 2 and calls["_parse_postscript"] == 1
+
+    ten = str(tmp_path / "ten.orc")
+    n = 10_000
+    write_orc_native(ten, {"k": list(range(n)), "s": [f"v{i % 97}" for i in range(n)]},
+                     "k bigint, s string", stripe_rows=1_000, row_index_stride=250)
+    assert sd.parse_tail_of_file(ten)["n_stripes"] == 10
+    opens = _count_opens(monkeypatch, ten)
+    got = [v for r in sd.scan_file(ten, None, ["k", "s"]) for v in r["columns"]["k"]]
+    assert got == list(range(n))
+    assert opens["opens"] == 2
+
+
+def _keep_pattern_file(tmp_path, kind: str) -> str:
+    """A 12,000-row file of every column family (integers with nulls
+    and PATCHED_BASE bait, doubles, booleans, dictionary and direct
+    strings, decimals), row index stride 1000: written natively (one
+    chunk per row group), by pyarrow (64 KiB chunks) or by pyarrow
+    with 4 KiB chunks, whose kept runs start and stop mid-chunk."""
+    import decimal
+
+    import pyarrow as pa
+
+    n = 12_000
+    cols = {
+        "k": list(range(n)),
+        "q": [None if i % 11 == 3 else (i * 7919) % 50 for i in range(n)],
+        "p": [i * 2**40 if i % 37 == 0 else i % 9 for i in range(n)],
+        "f": [i / 7 for i in range(n)],
+        "b": [i % 3 == 0 for i in range(n)],
+        "s": [("A", "N", "R")[i % 3] for i in range(n)],
+        "t": [None if i % 13 == 5 else f"u{(i * 104729) % 100_003}" for i in range(n)],
+        "d": [decimal.Decimal(i * 37 % 100_000).scaleb(-2) for i in range(n)],
+    }
+    schema = "k bigint, q int, p bigint, f double, b boolean, s string, t string, d decimal(10,2)"
+    path = str(tmp_path / f"{kind}.orc")
+    if kind == "native":
+        from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import write_orc_native
+
+        write_orc_native(path, cols, schema, stripe_rows=6_000, row_index_stride=1000)
+    else:
+        types = {"k": pa.int64(), "q": pa.int32(), "p": pa.int64(), "f": pa.float64(),
+                 "b": pa.bool_(), "s": pa.string(), "t": pa.string(), "d": pa.decimal128(10, 2)}
+        table = pa.table({c: pa.array(v, types[c]) for c, v in cols.items()})
+        pa_orc.write_table(
+            table, path, compression="zlib", row_index_stride=1000,
+            compression_block_size=4096 if kind == "pyarrow_4k" else 65536,
+            dictionary_key_size_threshold=0.5,
+        )
+    return path
+
+
+@pytest.mark.parametrize("kind", ["native", "pyarrow", "pyarrow_4k"])
+def test_random_keep_patterns_decode_the_kept_groups(tmp_path, kind):
+    """A kept run decompresses only up to where it stops, so any keep
+    pattern must still decode exactly the kept groups' rows: random
+    patterns per stripe against the keep-everything decode."""
+    import random
+
+    path = _keep_pattern_file(tmp_path, kind)
+    cols = ["k", "q", "p", "f", "b", "s", "t", "d"]
+    stride = sd.parse_tail_of_file(path)["row_index_stride"]
+    full = sd.keep_all_picks(path)
+    rng = random.Random(17)
+    for si, per in enumerate(full):
+        whole = sd.decode_stripe(path, si, None, cols, picks=full)["columns"]
+        for _ in range(12):
+            keep = [rng.random() < 0.4 for _ in per]
+            picks = [[dict(d, keep=False) for d in p] for p in full]
+            picks[si] = [dict(d, keep=k) for d, k in zip(per, keep)]
+            got = sd.decode_stripe(path, si, None, cols, picks=picks)["columns"]
+            rows = [i for i in range(len(whole["k"])) if keep[i // stride]]
+            assert got == {c: [whole[c][i] for i in rows] for c in cols}, (si, keep)
+
+
+def test_kept_run_decompresses_only_the_chunks_it_reaches(tmp_path):
+    """The native writer cuts one chunk per row group: keeping 2 of
+    100 groups inflates the two groups' chunks, not every chunk up to
+    the end of the planned range — which holds most of the stripe,
+    since each kept group's range carries 2 × (3 + 256 KiB) of slop.
+    `k` (DELTA runs) and `t`'s LENGTH compress to nothing and are
+    stored uncompressed; `t`'s DATA holds one compressed chunk per
+    group, and a byte stream's reads end at the next group's start."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import write_orc_native
+
+    path = str(tmp_path / "hundred.orc")
+    n = 100_000
+    cols = {"k": list(range(n)), "t": [f"value-{i:06d}" for i in range(n)]}
+    write_orc_native(path, cols, "k bigint, t string", row_index_stride=1000)
+    tree = ("between", "k", [40_000, 41_999])
+    audit: dict = {}
+    got = {c: [] for c in cols}
+    for r in sd.scan_file(path, tree, list(cols), audit=audit):
+        for c in cols:
+            got[c] += r["columns"][c]
+    assert got == {c: v[40_000:42_000] for c, v in cols.items()}
+    assert audit["groups_decoded"] == 2
+    assert audit["chunks_inflated"] == 2
+    everything: dict = {}
+    list(sd.scan_file(path, None, list(cols), audit=everything))
+    assert everything["chunks_inflated"] == 100
+    planned = plan_read_ranges(path, tree, columns=list(cols))[0]
+    assert planned["bytes_planned"] > planned["bytes_total_data"] / 2
 
 
 def _positions_by_loop(raw: bytes) -> list[list[int]]:
