@@ -334,32 +334,64 @@ def stats_to_domain(col_kind: str, s: dict) -> dict:
     return out
 
 
-def explain_file_pruning(path: str, tree: Any) -> list[dict]:
-    """Tool-side pruning explanation: parse a real ORC file's
-    per-stripe statistics (ranged metadata reads only) and report each
-    stripe's TruthValue + keep/skip decision for the predicate tree —
-    what the reference computes inside pickRowGroups, surfaced the way
-    `orc-tools scan` users need it. Column stats come from the
-    Metadata section (StripeStatistics) via footer_tail."""
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-        parse_tail_of_file,
-    )
+#: the statistics of a column a unit carries none for (legal per the
+#: proto; minimal writers): indistinguishable values evaluate
+#: YES_NO_NULL and KEEP, never read as "all-null" and skip
+_NO_STATS = {
+    "min": UNKNOWN_VALUE, "max": UNKNOWN_VALUE, "has_null": None, "n_values": None,
+}  # fmt: skip
 
-    meta = parse_tail_of_file(path, include_stripe_stats=True)
-    names = [c["name"] for c in meta["columns"]]
-    ids = {c["name"]: c["col_id"] for c in meta["columns"]}
-    kinds = {c["name"]: c["kind"] for c in meta["columns"]}
+
+def verdicts(
+    meta: dict, tree: Any, units: list, blooms: list[dict] | None = None
+) -> list[dict]:
+    """The one SArg verdict kernel of every pruning level — the
+    reference applies the same SearchArgument to file, stripe and
+    row-group statistics (`site/_docs/indexes.md`, pickRowGroups'
+    TruthValue logic). `meta` is the file's tail parse; each unit is a
+    {column id: ColumnStatistics} dict: the Footer's statistics, one
+    stripe's Metadata StripeStatistics, or one row group's ROW_INDEX
+    entries. `blooms`, when given, holds per unit {column id: bloom},
+    refining the equality-class leaves.
+
+    Leaf ids (dotted leaves resolve to their nested id), their kinds
+    and the ORC-135 flag are resolved once per call; a column a unit
+    has no statistics for is unknown and keeps. Returns
+    [{truth, keep}] per unit."""
+    ids = _predicate_ids(meta, tree)
+    kinds = {c: meta["types"][cid]["kind"] for c, cid in ids.items()}
     # ORC_135 (writerVersion 6) = utc timestamp stats; older writers
     # disable timestamp PPD, read straight off the file's postscript
     orc135 = meta.get("writer_version", 0) >= 6
     out = []
-    for i, per_col in enumerate(meta.get("stripe_stats", [])):
-        stats_by_col = {
-            name: stats_to_domain(kinds[name], per_col[ids[name]]) for name in names
-        }
-        tv = evaluate_tree(tree, stats_by_col, col_types=kinds, writer_has_orc135=orc135)
-        out.append({"stripe": i, "truth": tv, "keep": keeps_unit(tv)})
+    for i, unit in enumerate(units):
+        stats = {}
+        for c, cid in ids.items():
+            s = unit.get(cid)
+            no_stats = s is None or s.get("n_values") is None
+            stats[c] = _NO_STATS if no_stats else stats_to_domain(kinds[c], s)
+        unit_blooms = None
+        if blooms:
+            unit_blooms = {c: blooms[i][cid] for c, cid in ids.items() if cid in blooms[i]}
+        tv = evaluate_tree(
+            tree, stats, unit_blooms or None, col_types=kinds, writer_has_orc135=orc135
+        )
+        out.append({"truth": tv, "keep": keeps_unit(tv)})
     return out
+
+
+def explain_file_pruning(src, tree: Any) -> list[dict]:
+    """Tool-side pruning explanation: each stripe's TruthValue +
+    keep/skip decision for the predicate tree from the Metadata
+    section's per-stripe statistics (StripeStatistics, ranged metadata
+    reads only) — what the reference computes inside pickRowGroups,
+    surfaced the way `orc-tools scan` users need it. `src` is a path or
+    a FileTail opened with `include_stripe_stats`."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import open_tail
+
+    with open_tail(src, include_stripe_stats=True) as meta:
+        units = [dict(enumerate(per)) for per in meta.get("stripe_stats", [])]
+    return [{"stripe": i, **v} for i, v in enumerate(verdicts(meta, tree, units))]
 
 
 def _leaves(tree: Any):
@@ -428,32 +460,21 @@ def _pick_groups(
     """pickRowGroups over already-parsed index streams: `row_index` and
     `blooms` map column id -> per-stripe entries (footer_tail /
     bloom parses) and must cover every predicate column (blooms may be
-    empty — bloom refinement off)."""
-    ids = _predicate_ids(meta, tree)
-    kinds = {c["name"]: c["kind"] for c in meta["columns"]}
-    kinds.update({c: meta["types"][cid]["kind"] for c, cid in ids.items()})
-    orc135 = meta.get("writer_version", 0) >= 6  # see explain_file_pruning
-    cols = list(ids)
-    n_stripes = len(row_index[ids[cols[0]]])
-    out: list[list[dict]] = []
-    for si in range(n_stripes):
-        n_rg = len(row_index[ids[cols[0]]][si])
-        decisions = []
-        for g in range(n_rg):
-            stats_by_col = {}
-            rg_blooms = {}
-            for c in cols:
-                e = row_index[ids[c]][si][g]
-                stats_by_col[c] = stats_to_domain(kinds[c], e)
-                per_stripe = blooms.get(ids[c], [])
-                if per_stripe and si < len(per_stripe) and g < len(per_stripe[si]):
-                    rg_blooms[c] = per_stripe[si][g]
-            tv = evaluate_tree(
-                tree, stats_by_col, rg_blooms or None, col_types=kinds,
-                writer_has_orc135=orc135,
-            )
-            decisions.append({"row_group": g, "truth": tv, "keep": keeps_unit(tv)})
-        out.append(decisions)
+    empty — bloom refinement off). One verdict unit per row group."""
+    cids = sorted(set(_predicate_ids(meta, tree).values()))
+    bloomed = [c for c in cids if c in blooms]
+    where, units, unit_blooms = [], [], []
+    for si, per_column in enumerate(zip(*(row_index[c] for c in cids))):
+        for g, entries in enumerate(zip(*per_column)):
+            where.append((si, g))
+            units.append(dict(zip(cids, entries)))
+            if bloomed:
+                unit_blooms.append(
+                    {c: blooms[c][si][g] for c in bloomed if g < len(blooms[c][si])}
+                )
+    out: list[list[dict]] = [[] for _ in row_index[cids[0]]]
+    for (si, g), v in zip(where, verdicts(meta, tree, units, unit_blooms)):
+        out[si].append({"row_group": g, **v})
     return out
 
 

@@ -283,24 +283,28 @@ def _file_rowgroups(path: str, columns: list[str]):
     start_row / rows_in_group come from stripe geometry (stripe row
     offsets + the footer's rowIndexStride), NOT from the entry's
     n_values — numberOfValues counts non-null values, so geometry is
-    the only null-safe way to place a group in the file's row space."""
-    tail = ft.parse_tail_of_file(path)
-    ids = {c["name"]: c["col_id"] for c in tail["columns"]}
-    stride = tail["row_index_stride"]
-    if not stride:
-        # orc.create.index=false / stride 0: no row-group geometry
-        # exists — zero silent rows or garbage start_row arithmetic
-        # would both be wrong answers
-        raise ValueError(
-            f"{path}: rowIndexStride=0 (written without row "
-            f"indexes); row-group statistics are undefined"
-        )
-    stripes = ft.parse_stripe_footers(tail)
+    the only null-safe way to place a group in the file's row space.
+    Every requested column's index is read in one pass over each
+    stripe's index region."""
+    with ft.open_tail(path) as tail:
+        ids = {c["name"]: c["col_id"] for c in tail["columns"]}
+        stride = tail["row_index_stride"]
+        if not stride:
+            # orc.create.index=false / stride 0: no row-group geometry
+            # exists — zero silent rows or garbage start_row arithmetic
+            # would both be wrong answers
+            raise ValueError(
+                f"{path}: rowIndexStride=0 (written without row "
+                f"indexes); row-group statistics are undefined"
+            )
+        for cname in columns:
+            if cname not in ids:
+                raise KeyError(f"column {cname!r} not in {path}: {sorted(ids)}")
+        stripes = ft.parse_stripe_footers(tail)
+        row_index = ft.parse_indexes(tail, stripes, (), stats=[ids[c] for c in columns])[0]
     rows = []
     for cname in columns:
-        if cname not in ids:
-            raise KeyError(f"column {cname!r} not in {path}: {sorted(ids)}")
-        per_stripe = ft.parse_row_index(tail, ids[cname], stripes)
+        per_stripe = row_index[ids[cname]]
         if any(not entries for entries in per_stripe):
             raise ValueError(
                 f"{path}: column {cname!r} has a stripe with no "

@@ -717,9 +717,11 @@ def parse_stripe_footers(src: str | FileTail) -> list[dict]:
     i.e. the *output* of the reference's dictionary-cutover decision
     (`WriterImpl.checkDictionaryEncoding`, threshold
     `orc.dictionary.key.threshold`, `OrcConf.java:93-105`) that the
-    A6 advisor predicts from the distinct ratio. Per stripe:
-    {offset, numberOfRows, encodings} where encodings is indexed by
-    column id (0 = the root struct).
+    A6 advisor predicts from the distinct ratio. Per stripe: its
+    `FileTail.stripe_info` entry (offset, indexLength, dataLength,
+    footerLength, numberOfRows) extended with `writerTimezone`,
+    `encodings` (indexed by column id, 0 = the root struct), `streams`
+    (the footer's stream list) and `directory` (see _stream_directory).
 
     `src` is a FileTail, or a path whose tail is parsed here. The
     stripes are the tail's, and each footer read is checked against
@@ -735,20 +737,18 @@ def parse_stripe_footers(src: str | FileTail) -> list[dict]:
             for f, _w, v in _fields(sf):
                 if f == 3:  # StripeFooter.writerTimezone
                     tz = v.decode("utf-8")
+            streams = [_parse_stream(v) for f, _w, v in _fields(sf) if f == 1]
             out.append(
                 {
-                    "offset": st["offset"],
-                    "indexLength": st["indexLength"],
-                    "numberOfRows": st["numberOfRows"],
+                    **st,
                     "writerTimezone": tz,
                     "encodings": [
                         _parse_column_encoding(v)
                         for f, _w, v in _fields(sf)
                         if f == 2
                     ],
-                    "streams": [
-                        _parse_stream(v) for f, _w, v in _fields(sf) if f == 1
-                    ],
+                    "streams": streams,
+                    "directory": _stream_directory(streams),
                 }
             )
     return out
@@ -777,6 +777,19 @@ def _parse_stream(buf: bytes) -> dict:
 _BLOOM_KINDS = ("BLOOM_FILTER", "BLOOM_FILTER_UTF8")
 # the index region of a stripe: these streams precede its data streams
 _INDEX_AREA = ("ROW_INDEX",) + _BLOOM_KINDS
+
+
+def _stream_directory(streams: list[dict]) -> dict[int, dict[str, tuple[int, int]]]:
+    """Per column id: data stream kind -> (stripe-relative start,
+    length), cumulative over the stripe's stream list (index region
+    included, so starts are offsets into the stripe)."""
+    out: dict[int, dict[str, tuple[int, int]]] = {}
+    offset = 0
+    for s in streams:
+        if s["kind"] not in _INDEX_AREA:
+            out.setdefault(s["column"], {})[s["kind"]] = (offset, s["length"])
+        offset += s["length"]
+    return out
 
 
 def _index_streams(
@@ -943,3 +956,27 @@ def get_index_position(
             else base + _RUN_LENGTH_INT_POSITIONS + comp
         )
     raise ValueError(f"unknown type for index positions: {column_type!r}")
+
+
+# the streams whose seek state a RowIndexEntry records, per row group
+_POSITIONED = ("PRESENT", "DATA", "LENGTH", "SECONDARY")
+
+
+def position_slots(
+    kinds, encoding: str, column_type: str, is_compressed: bool
+) -> dict[str, slice]:
+    """Per stream kind of one column in one stripe (`kinds`, e.g. its
+    `directory` entry), that stream's slice of a RowIndexEntry's
+    `positions` — the get_index_position layout, which the reader's
+    PositionProviders consume in stream order. A dictionary column's
+    LENGTH (and DICTIONARY_DATA) is stripe-level and has no slice; such
+    streams are read whole. The only caller of get_index_position."""
+    has_nulls = "PRESENT" in kinds
+    dictionary = encoding in ("DICTIONARY", "DICTIONARY_V2")
+    starts = sorted(
+        (get_index_position(encoding, column_type, k, is_compressed, has_nulls), k)
+        for k in kinds
+        if k in _POSITIONED and not (k == "LENGTH" and dictionary)
+    )
+    ends = [slot for slot, _k in starts[1:]] + [None]
+    return {k: slice(slot, end) for (slot, k), end in zip(starts, ends)}

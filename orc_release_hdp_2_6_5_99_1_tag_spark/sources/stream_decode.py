@@ -87,14 +87,13 @@ from orc_release_hdp_2_6_5_99_1_tag_spark.sources.file_job import (
     map_files,
 )
 from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-    _INDEX_AREA,
     FileTail,
     _decompress_chunk,
-    get_index_position,
     open_tail,
     parse_indexes,
     parse_stripe_footers,
     parse_tail_of_file,
+    position_slots,
     varint_array,
 )
 
@@ -819,7 +818,7 @@ class _StripeIO:
         self.rr = rr
         self.compression = compression
         self.included = included
-        self.directory = _stream_directory(st)
+        self.directory = st["directory"]
 
     def stream(self, cid: int, kind: str) -> _Stream:
         # an all-null column may omit its value streams entirely (e.g.
@@ -1180,17 +1179,16 @@ _DECODERS = {
 
 
 class _DecodeContext:
-    """Per-stripe seek context: computes each column's per-row-group
-    position slices (the getIndexPosition slot layout) on demand, so
-    composite decoders can seek their whole subtree for group
-    `self.group`, the first of a kept run; `self.stop` is the first
-    group past the run (None when it runs to the stripe's end)."""
+    """Per-stripe seek context: hands each column its per-row-group
+    position slices (`footer_tail.position_slots`), so composite
+    decoders can seek their whole subtree for group `self.group`, the
+    first of a kept run; `self.stop` is the first group past the run
+    (None when it runs to the stripe's end)."""
 
     def __init__(self, st: dict, row_index: dict, is_compressed: bool):
         self.st = st
         self.row_index = row_index
         self.is_compressed = is_compressed
-        self.directory = _stream_directory(st)
         self.group = 0
         self.stop: int | None = None
 
@@ -1198,42 +1196,14 @@ class _DecodeContext:
         """Per stream kind, the position slices of groups `self.group`
         and `self.stop` (the latter empty without a stop)."""
         entries = self.row_index[cid]
-        streams = self.directory.get(cid, {})
-        has_nulls = "PRESENT" in streams
-        slots = sorted(
-            (
-                get_index_position(
-                    encoding, kind, sk, self.is_compressed, has_nulls
-                ),
-                sk,
-            )
-            for sk in streams
-            if sk in ("PRESENT", "DATA", "LENGTH", "SECONDARY")
-            and not (
-                sk == "LENGTH" and encoding in ("DICTIONARY", "DICTIONARY_V2")
-            )
+        slots = position_slots(
+            self.st["directory"].get(cid, {}), encoding, kind, self.is_compressed
         )
-        segs: dict[str, list[int]] = {}
-        stops: dict[str, list[int]] = {}
-        for i, (slot, sk) in enumerate(slots):
-            end = slots[i + 1][0] if i + 1 < len(slots) else None
-            segs[sk] = entries[self.group]["positions"][slot:end]
-            if self.stop is not None:
-                stops[sk] = entries[self.stop]["positions"][slot:end]
+        segs = {sk: entries[self.group]["positions"][sl] for sk, sl in slots.items()}
+        stops = {}
+        if self.stop is not None:
+            stops = {sk: entries[self.stop]["positions"][sl] for sk, sl in slots.items()}
         return segs, stops
-
-
-def _stream_directory(stripe: dict) -> dict[int, dict[str, tuple[int, int]]]:
-    """Per column id: stream kind -> (stripe-relative start, length),
-    cumulative over the stripe's stream list (index region included,
-    matching plan_read_ranges' offsets)."""
-    out: dict[int, dict[str, tuple[int, int]]] = {}
-    offset = 0
-    for s in stripe["streams"]:
-        if s["kind"] not in _INDEX_AREA:
-            out.setdefault(s["column"], {})[s["kind"]] = (offset, s["length"])
-        offset += s["length"]
-    return out
 
 
 def _kept_runs(keep: list[bool], stride: int, rows: int):
@@ -1535,46 +1505,12 @@ def file_prunes(path: str, tree: Any) -> dict:
 
 
 def _file_prunes_from_meta(meta: dict, tree: Any) -> dict:
-    from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
-        UNKNOWN_VALUE,
-        _tree_columns,
-        evaluate_tree,
-        keeps_unit,
-        stats_to_domain,
-    )
-    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import (
-        _resolve_dotted,
-    )
+    """file_prunes over a parsed tail: one verdict unit, the Footer's
+    per-id statistics (nested fields included, so dotted leaves prune
+    whole files exactly like top-level ones)."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import verdicts
 
-    kinds = {c["name"]: c["kind"] for c in meta["columns"]}
-    entries = {c["name"]: c for c in meta["columns"]}
-    # dotted SArg leaves ("st.a"): Footer.statistics is per column id
-    # INCLUDING nested fields, so nested predicates prune whole files
-    # exactly like top-level ones
-    fs = meta.get("footer_stats") or []
-    for name in _tree_columns(tree):
-        if "." not in name or name in kinds:
-            continue  # top-level (incl. literal-dot names): covered above
-        cid = _resolve_dotted(meta, name)[-1]
-        kinds[name] = meta["types"][cid]["kind"]
-        entries[name] = fs[cid] if cid < len(fs) else {}
-    # a column the footer carries NO statistics for (legal per the
-    # proto; minimal writers) — indistinguishable stats must evaluate
-    # YES_NO_NULL and KEEP, never read as "all-null" and skip
-    unknown = {
-        "min": UNKNOWN_VALUE, "max": UNKNOWN_VALUE,
-        "has_null": None, "n_values": None,
-    }  # fmt: skip
-    stats = {
-        name: dict(unknown) if e.get("n_values") is None
-        else stats_to_domain(kinds[name], e)
-        for name, e in entries.items()
-    }
-    tv = evaluate_tree(
-        tree, stats, col_types=kinds,
-        writer_has_orc135=meta.get("writer_version", 0) >= 6,
-    )
-    return {"truth": tv, "keep": keeps_unit(tv)}
+    return verdicts(meta, tree, [dict(enumerate(meta.get("footer_stats") or []))])[0]
 
 
 def scan_file(path: str, tree: Any, columns: list[str],
@@ -1588,13 +1524,19 @@ def scan_file(path: str, tree: Any, columns: list[str],
     file does not have. `audit`, when given, is filled with
     the per-file accounting (file_kept, stripes_decoded,
     groups_decoded/total, bytes_fetched)."""
-    plan = plan_file_scan(path, tree, columns)
+    plan = _strict(plan_file_scan(path, tree, columns), tree, columns)
+    yield from _as_pylists(plan.execute(audit))
+
+
+def _strict(plan: FileScanPlan, tree: Any, columns: list[str]) -> FileScanPlan:
+    """`plan`, which must read every requested and predicate column
+    from the file itself: a missing one raises KeyError."""
     if plan.missing or plan.keep_all_reason:
         raise KeyError(
-            f"{path}: unknown column in {columns} / {tree!r}; file has "
+            f"{plan.path}: unknown column in {columns} / {tree!r}; file has "
             f"{[c['name'] for c in plan.meta['columns']]}"
         )
-    yield from _as_pylists(plan.execute(audit))
+    return plan
 
 
 def scan_file_evolved(path: str, tree: Any, columns: list[str],

@@ -1,17 +1,23 @@
 """CLI-tool equivalents (SURVEY S11/S12: `orc-tools data/scan`,
-C++ `orc-contents`): row dumps as JSON lines and a scan benchmark —
-DataFrame-level, driver-loop-free.
+C++ `orc-contents`) and the native tier's metadata planning.
+
+- Tools: row dumps as JSON lines and a scan benchmark (DataFrame-level,
+  driver-loop-free); `orc_scan_explain` (one file's FileScanPlan over
+  the predicate's columns), `orc_seek_explain`, `orc_memory` and
+  `orc_writer_timezones`, all from metadata alone.
+- Column resolution: (dotted) column paths to column-id chains and
+  include-tree closures (`_resolve_partial`, `_included_ids`,
+  `output_columns`), shared by the planner, the decoder and schema
+  evolution.
+- IO planning: `plan_read_ranges` / `_plan_ranges` turn row-group
+  keep bits into merged byte ranges per stripe, through each stream's
+  position slots (`footer_tail.position_slots`).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-
-from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-    _INDEX_AREA,
-    get_index_position,
-)
 
 
 def orc_data(spark: SparkSession, path: str, limit: int | None = None) -> DataFrame:
@@ -32,31 +38,43 @@ def orc_scan(spark: SparkSession, path: str) -> DataFrame:
 
 def orc_scan_explain(path: str, tree) -> dict:
     """`orc-tools scan --explain`-style pruning report from metadata
-    alone (no JVM, no data pages): per-stripe TruthValue/keep from the
-    Metadata section, per-row-group decisions (ROW_INDEX min/max +
-    bloom probes) from the index regions — the decisions the
-    reference's pickRowGroups would make for this predicate tree.
-    Tree grammar is `functions.truth.evaluate_tree`'s."""
+    alone (no JVM, no data pages): the file's FileScanPlan over the
+    predicate's columns — one open, one tail parse — plus per-stripe
+    TruthValue/keep from the Metadata section: the file-level verdict
+    (footer statistics), per-row-group decisions (ROW_INDEX min/max +
+    bloom probes) and the bytes the plan reads, the decisions the
+    reference's pickRowGroups would make for this predicate tree. A
+    file skipped on its footer statistics plans no row group. Tree
+    grammar is `functions.truth.evaluate_tree`'s; an unknown
+    predicate column raises, as in `stream_decode.scan_file`."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import (
+        _tree_columns,
         explain_file_pruning,
-        pick_row_groups,
+    )
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import open_tail
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import (
+        _plan_file_scan,
+        _strict,
     )
 
-    stripes = explain_file_pruning(path, tree)
-    row_groups = pick_row_groups(path, tree)
-    io_plan = plan_read_ranges(path, tree, picks=row_groups)
+    columns = sorted(_tree_columns(tree))
+    with open_tail(path, include_stripe_stats=True) as meta:
+        plan = _strict(_plan_file_scan(meta, tree, columns, None, False, True), tree, columns)
+        stripes = explain_file_pruning(meta, tree)
     return {
         "stripes": stripes,
-        "row_groups": row_groups,
+        "truth": plan.truth,
+        "keep": plan.file_kept,
+        "row_groups": plan.picks,
         "n_stripes_kept": sum(1 for s in stripes if s["keep"]),
         "n_row_groups_kept": sum(
-            1 for per_stripe in row_groups for d in per_stripe if d["keep"]
+            1 for per_stripe in plan.picks for d in per_stripe if d["keep"]
         ),
-        "n_row_groups": sum(len(per_stripe) for per_stripe in row_groups),
+        "n_row_groups": sum(len(per_stripe) for per_stripe in plan.picks),
         # the IO consequence of the decisions above (predicate columns
         # only — a real scan adds its projection columns)
-        "bytes_planned": sum(p["bytes_planned"] for p in io_plan),
-        "bytes_total_data": sum(p["bytes_total_data"] for p in io_plan),
+        "bytes_planned": sum(p["bytes_planned"] for p in plan.ranges),
+        "bytes_total_data": sum(p["bytes_total_data"] for p in plan.ranges),
     }
 
 
@@ -72,80 +90,55 @@ def orc_seek_explain(path: str, row: int, columns: list[str] | None = None) -> d
     offset / RLE run state, consumed in stream order) a reader needs
     to start decoding at that row group without touching earlier
     bytes, with each stream's slot range labeled via the reference's
-    position layout (`RecordReaderUtils.getIndexPosition`; dictionary
+    position layout (`footer_tail.position_slots`; dictionary
     columns' LENGTH/DICTIONARY_DATA are stripe-level and carry no
     per-group slots). Ranged metadata reads only."""
     from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
-        get_index_position,
+        open_tail,
         parse_indexes,
         parse_stripe_footers,
-        parse_tail_of_file,
+        position_slots,
     )
 
-    meta = parse_tail_of_file(path)
-    stride = meta.get("row_index_stride") or 0
-    if stride <= 0:
-        raise ValueError(f"{path}: no row index (rowIndexStride=0); cannot seek")
-    if not 0 <= row < meta["n_rows"]:
-        raise IndexError(f"row {row} out of range [0, {meta['n_rows']})")
-    ids = {c["name"]: c["col_id"] for c in meta["columns"]}
-    kinds = {c["name"]: c["kind"] for c in meta["columns"]}
-    is_compressed = meta["compression"] != "NONE"
-    columns = columns or list(ids)
-    first = 0
-    for si, st in enumerate(parse_stripe_footers(meta)):
-        if row < first + st["numberOfRows"]:
-            in_stripe = row - first
-            group = in_stripe // stride
-            out = {
-                "stripe": si,
-                "row_group": group,
-                "row_in_group": in_stripe - group * stride,
-                "row_index_stride": stride,
-                "positions": {},
-                "streams": {},
-            }
-            # positions only, of this stripe only: one index read
-            row_index = parse_indexes(meta, [st], [ids[c] for c in columns])[0]
-            for cname in columns:
-                col_id = ids[cname]
-                positions = row_index[col_id][0][group]["positions"]
-                out["positions"][cname] = positions
-                # label each stream's slot range the way the reader's
-                # PositionProviders consume them (getIndexPosition)
-                col_streams = [
-                    s["kind"] for s in st["streams"]
-                    if s["column"] == col_id
-                    and s["kind"] in ("PRESENT", "DATA", "LENGTH", "SECONDARY")
-                ]
-                has_nulls = "PRESENT" in col_streams
-                enc_kind = st["encodings"][col_id]["kind"] if col_id < len(
-                    st["encodings"]
-                ) else "DIRECT"
-                if enc_kind in ("DICTIONARY", "DICTIONARY_V2"):
-                    # the dictionary blob + its LENGTH stream are
-                    # stripe-level; only PRESENT/DATA record per-group
-                    # seek positions
-                    col_streams = [
-                        sk for sk in col_streams if sk in ("PRESENT", "DATA")
-                    ]
-                starts = sorted(
-                    (
-                        get_index_position(
-                            enc_kind, kinds[cname], sk, is_compressed, has_nulls
-                        ),
-                        sk,
-                    )
-                    for sk in col_streams
-                )
-                segs = {}
-                for i, (slot, sk) in enumerate(starts):
-                    end = starts[i + 1][0] if i + 1 < len(starts) else len(positions)
-                    segs[sk] = positions[slot:end]
-                out["streams"][cname] = segs
-            return out
-        first += st["numberOfRows"]
-    raise AssertionError("stripe row counts do not cover the footer's n_rows")
+    with open_tail(path) as meta:
+        stride = meta.get("row_index_stride") or 0
+        if stride <= 0:
+            raise ValueError(f"{path}: no row index (rowIndexStride=0); cannot seek")
+        if not 0 <= row < meta["n_rows"]:
+            raise IndexError(f"row {row} out of range [0, {meta['n_rows']})")
+        ids = {c["name"]: c["col_id"] for c in meta["columns"]}
+        columns = columns or list(ids)
+        first = 0
+        for si, st in enumerate(parse_stripe_footers(meta)):
+            if row < first + st["numberOfRows"]:
+                break
+            first += st["numberOfRows"]
+        else:
+            raise AssertionError("stripe row counts do not cover the footer's n_rows")
+        in_stripe = row - first
+        group = in_stripe // stride
+        # positions only, of this stripe only: one index read
+        row_index = parse_indexes(meta, [st], [ids[c] for c in columns])[0]
+    out = {
+        "stripe": si,
+        "row_group": group,
+        "row_in_group": in_stripe - group * stride,
+        "row_index_stride": stride,
+        "positions": {},
+        "streams": {},
+    }
+    encodings = st["encodings"]
+    for cname in columns:
+        col_id = ids[cname]
+        positions = row_index[col_id][0][group]["positions"]
+        out["positions"][cname] = positions
+        enc = encodings[col_id]["kind"] if col_id < len(encodings) else "DIRECT"
+        slots = position_slots(
+            st["directory"].get(col_id, {}), enc, meta["types"][col_id]["kind"],
+            meta["compression"] != "NONE",
+        )
+        out["streams"][cname] = {sk: positions[sl] for sk, sl in slots.items()}
+    return out
 
 
 _HEADER_SIZE = 3                      # OutStream.HEADER_SIZE
@@ -335,52 +328,41 @@ def _plan_ranges(
 ) -> list[dict]:
     """plan_read_ranges over an already-parsed file: `stripes` from
     parse_stripe_footers, `row_index` mapping every `included` column
-    id to its row index entries (positions suffice)."""
+    id to its row index entries (positions suffice). Positions only
+    grow within a stream, so a run of kept groups g..h-1
+    (`stream_decode._kept_runs`) needs exactly the union of its
+    groups' ranges: [pos_g, pos_h + slop)."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import position_slots
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.stream_decode import _kept_runs
+
     types = meta["types"]
     is_compressed = meta["compression"] != "NONE"
     buf = meta["compression_block_size"]
     slop = (
         2 * (_HEADER_SIZE + buf) if is_compressed else _WORST_UNCOMPRESSED_SLOP
     )
+    stride = meta["row_index_stride"]
     out = []
     for si, st in enumerate(stripes):
-        keep = [d["keep"] for d in picks[si]]
-        present_cols = {
-            s["column"] for s in st["streams"] if s["kind"] == "PRESENT"
-        }
+        runs = list(_kept_runs([d["keep"] for d in picks[si]], stride, st["numberOfRows"]))
         ranges: list[tuple[int, int]] = []
-        offset = 0
-        total_data = 0
-        for s in st["streams"]:
-            length, col, kind = s["length"], s["column"], s["kind"]
-            if kind not in _INDEX_AREA:
-                total_data += length
-                if col in included:
-                    enc = st["encodings"][col]["kind"]
-                    is_dict_stream = kind == "DICTIONARY_DATA" or (
-                        kind == "LENGTH" and enc in ("DICTIONARY", "DICTIONARY_V2")
-                    )
-                    if is_dict_stream:
-                        ranges.append((offset, offset + length))
-                    else:
-                        entries = row_index[col][si]
-                        posn = get_index_position(
-                            enc, types[col]["kind"], kind, is_compressed,
-                            col in present_cols,
-                        )
-                        for g, keep_g in enumerate(keep):
-                            if not keep_g:
-                                continue
-                            start = entries[g]["positions"][posn]
-                            if g + 1 < len(entries):
-                                end = min(
-                                    length,
-                                    entries[g + 1]["positions"][posn] + slop,
-                                )
-                            else:
-                                end = length
-                            ranges.append((offset + start, offset + end))
-            offset += length
+        for col, streams in st["directory"].items():
+            if col not in included:
+                continue
+            slots = position_slots(
+                streams, st["encodings"][col]["kind"], types[col]["kind"], is_compressed
+            )
+            entries = row_index[col][si]
+            for kind, (offset, length) in streams.items():
+                if kind not in slots:  # stripe-level: the dictionary, loaded whole
+                    ranges.append((offset, offset + length))
+                    continue
+                posn = slots[kind].start
+                for g, stop, _n in runs:
+                    end = length
+                    if stop is not None:
+                        end = min(length, entries[stop]["positions"][posn] + slop)
+                    ranges.append((offset + entries[g]["positions"][posn], offset + end))
         # addOrMerge: coalesce overlapping/adjacent ranges
         ranges.sort()
         merged: list[list[int]] = []
@@ -395,7 +377,10 @@ def _plan_ranges(
                 "stripe_offset": st["offset"],
                 "ranges": [tuple(r) for r in merged],
                 "bytes_planned": sum(b - a for a, b in merged),
-                "bytes_total_data": total_data,
+                "bytes_total_data": sum(
+                    length for streams in st["directory"].values()
+                    for _start, length in streams.values()
+                ),
             }
         )
     return out
@@ -435,10 +420,10 @@ def orc_memory(src, columns: list[str] | None = None) -> dict:
     worst_total = worst_idx = worst_data = worst_streams = 0
     for si, st in enumerate(sts):
         sel = [
-            s for s in st["streams"]
-            if s["kind"] not in _INDEX_AREA and s["column"] in included
+            length for cid in included
+            for _start, length in st["directory"].get(cid, {}).values()
         ]
-        data = sum(s["length"] for s in sel)
+        data = sum(sel)
         total = data + (2 * buf * len(sel) if is_compressed else 0)
         if total > worst_total:
             worst_total, worst_idx = total, si
@@ -450,11 +435,7 @@ def orc_memory(src, columns: list[str] | None = None) -> dict:
     size = meta.length
     if sts:
         last = sts[-1]
-        streams_end = (
-            last["offset"]
-            + sum(s["length"] for s in last["streams"])
-        )
-        tail = size - streams_end
+        tail = size - (last["offset"] + last["indexLength"] + last["dataLength"])
     else:
         tail = size
     return {

@@ -271,6 +271,42 @@ def test_only_footer_tail_locates_a_tail():
     assert _tail_locators(os.path.join(_SOURCES, "footer_tail.py"))
 
 
+def _callers(name: str) -> dict[str, set[str | None]]:
+    """Per package file that calls `name` (by bare name or as an
+    attribute): the functions whose bodies hold those calls."""
+    package = os.path.dirname(_SOURCES)
+    out: dict[str, set[str | None]] = {}
+    for root, _dirs, files in os.walk(package):
+        for f in sorted(f for f in files if f.endswith(".py")):
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            owner: dict[ast.AST, str] = {}
+            for fn in ast.walk(tree):
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    for node in ast.walk(fn):
+                        owner[node] = fn.name  # inner defs are walked later
+            for node in ast.walk(tree):
+                fn = getattr(node, "func", None) if isinstance(node, ast.Call) else None
+                if fn is not None and getattr(fn, "attr", getattr(fn, "id", "")) == name:
+                    out.setdefault(os.path.relpath(path, package), set()).add(owner.get(node))
+    return out
+
+
+def test_one_verdict_kernel_and_one_slot_helper():
+    """Every pruning level (file, stripe, row group) evaluates a SArg
+    through `truth.verdicts`, and every position slot comes from
+    `footer_tail.position_slots`: `evaluate_tree` is called only by the
+    kernel and its own recursion, `get_index_position` only by the slot
+    helper."""
+    assert _callers("evaluate_tree") == {
+        os.path.join("functions", "truth.py"): {"verdicts", "evaluate_tree"}
+    }
+    assert _callers("get_index_position") == {
+        os.path.join("sources", "footer_tail.py"): {"position_slots"}
+    }
+
+
 def test_per_file_job_lives_in_one_module():
     offenders = {}
     for name in sorted(os.listdir(_SOURCES)):

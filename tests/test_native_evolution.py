@@ -1525,6 +1525,40 @@ def test_explain_equals_scan(request, lake, tree, cols, force):
         assert reasons["a_gen2.orc"] is None
 
 
+@pytest.mark.parametrize("lake,tree,cols,force", _EXPLAIN_CASES)
+def test_scan_explain_is_the_plan_of_the_predicate_columns(request, lake, tree, cols, force):
+    """`orc_scan_explain` reports each file's own scan plan over the
+    predicate's columns: its file verdict, row groups and bytes are
+    the plan's. A file that cannot prune on the predicate raises, as
+    `scan_file` does."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.functions.truth import _tree_columns
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import orc_scan_explain
+
+    pred = sorted(_tree_columns(tree))
+    explained = 0
+    for path in request.getfixturevalue(lake)["files"]:
+        try:
+            plan = sd.plan_file_scan(path, tree, pred)
+        except (KeyError, ValueError) as e:  # the predicate does not resolve here
+            with pytest.raises(type(e)):
+                orc_scan_explain(path, tree)
+            continue
+        if plan.keep_all_reason:
+            with pytest.raises(KeyError):
+                orc_scan_explain(path, tree)
+            continue
+        rep = orc_scan_explain(path, tree)
+        summary = plan.summary()
+        assert (rep["truth"], rep["keep"]) == (summary["truth"], summary["keep"])
+        assert rep["row_groups"] == plan.picks
+        assert rep["n_row_groups_kept"] == summary.get("groups_kept", 0)
+        assert (rep["bytes_planned"], rep["bytes_total_data"]) == (
+            summary.get("bytes_planned", 0), summary.get("bytes_total_data", 0)
+        )
+        explained += 1
+    assert explained
+
+
 # ---------------------------------------------------------------------------
 # declared Spark schema: pinned per lake fixture, for both native readers
 # ---------------------------------------------------------------------------

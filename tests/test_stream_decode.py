@@ -737,6 +737,92 @@ def test_random_keep_patterns_decode_the_kept_groups(tmp_path, kind):
             assert got == {c: [whole[c][i] for i in rows] for c in cols}, (si, keep)
 
 
+def _ranges_per_group(meta, stripes, included, picks, row_index):
+    """Reference IO plan: per kept group, each positioned stream's
+    [pos_g, pos_{g+1} + slop) with its slot found through
+    get_index_position, dictionary streams whole, ranges merged."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources import tools
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_tail import (
+        _INDEX_AREA,
+        get_index_position,
+    )
+
+    is_compressed = meta["compression"] != "NONE"
+    slop = (
+        2 * (tools._HEADER_SIZE + meta["compression_block_size"]) if is_compressed
+        else tools._WORST_UNCOMPRESSED_SLOP
+    )
+    out = []
+    for si, st in enumerate(stripes):
+        keep = [d["keep"] for d in picks[si]]
+        nulls = {s["column"] for s in st["streams"] if s["kind"] == "PRESENT"}
+        ranges, offset = [], 0
+        for s in st["streams"]:
+            length, col, kind = s["length"], s["column"], s["kind"]
+            if kind not in _INDEX_AREA and col in included:
+                enc = st["encodings"][col]["kind"]
+                if kind == "DICTIONARY_DATA" or (
+                    kind == "LENGTH" and enc in ("DICTIONARY", "DICTIONARY_V2")
+                ):
+                    ranges.append((offset, offset + length))
+                else:
+                    entries = row_index[col][si]
+                    posn = get_index_position(
+                        enc, meta["types"][col]["kind"], kind, is_compressed, col in nulls
+                    )
+                    for g in (g for g, k in enumerate(keep) if k):
+                        end = length
+                        if g + 1 < len(entries):
+                            end = min(length, entries[g + 1]["positions"][posn] + slop)
+                        ranges.append((offset + entries[g]["positions"][posn], offset + end))
+            offset += length
+        merged = []
+        for a, b in sorted(ranges):
+            if merged and a <= merged[-1][1]:
+                merged[-1][1] = max(merged[-1][1], b)
+            else:
+                merged.append([a, b])
+        out.append([tuple(r) for r in merged])
+    return out
+
+
+@pytest.mark.parametrize("kind", ["native", "pyarrow", "pyarrow_4k"])
+def test_run_ranges_equal_per_group_ranges(tmp_path, kind):
+    """The IO plan walks kept runs, not kept groups: positions only
+    grow within a stream, so for any keep pattern the merged ranges
+    equal those of the per-group formula."""
+    import random
+
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import _plan_ranges
+
+    path = _keep_pattern_file(tmp_path, kind)
+    plan = sd.plan_file_scan(path, None, ["k", "q", "p", "f", "b", "s", "t", "d"])
+    rng = random.Random(29)
+    for share in (0.0, 0.1, 0.4, 0.7, 1.0) * 4:
+        picks = [[dict(d, keep=rng.random() < share) for d in per] for per in plan.picks]
+        args = (plan.meta, plan.stripes, plan.included, picks, plan.row_index)
+        assert [p["ranges"] for p in _plan_ranges(*args)] == _ranges_per_group(*args)
+
+
+def test_rowgroup_stats_reads_the_index_once(typed_file, monkeypatch):
+    """`rowgroup_stats`' per-file job reads every requested column's
+    row index in one pass over the index region, through one open."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.footer_stats import (
+        _file_rowgroups,
+    )
+
+    cols = ["id", "with_nulls", "dict_str", "d"]
+    calls = _count_calls(monkeypatch, ("_index_streams", "_parse_postscript"))
+    opens = _count_opens(monkeypatch, typed_file)
+    rows = next(_file_rowgroups(typed_file, cols))
+    assert calls["_index_streams"] == 1 and calls["_parse_postscript"] == 1
+    assert opens["opens"] == 1
+    index_reads = {k[1]: v for k, v in calls.items() if k[0] == "rows"}
+    assert len(index_reads) == len(cols) and set(index_reads.values()) == {1}
+    assert rows == [r for c in cols for r in next(_file_rowgroups(typed_file, [c]))]
+    assert {r["column_name"] for r in rows} == set(cols) and len(rows) == 4 * 5
+
+
 def test_kept_run_decompresses_only_the_chunks_it_reaches(tmp_path):
     """The native writer cuts one chunk per row group: keeping 2 of
     100 groups inflates the two groups' chunks, not every chunk up to
@@ -1173,6 +1259,35 @@ def test_nested_sarg_leaf_prunes_groups_and_files(spark, tmp_path):
     assert [r.asDict(recursive=True) for r in got] == [
         r.asDict(recursive=True) for r in want
     ]
+
+
+def test_scan_explain_of_a_dotted_leaf_is_the_plan(tmp_path, monkeypatch):
+    """`orc_scan_explain` is the file's scan plan over the predicate's
+    columns, read through one open: a leaf on a struct field ("st.a")
+    resolves to its nested id at the stripe level too, and the row
+    groups and bytes it reports are the plan's."""
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.orc_encode import write_orc_native
+    from orc_release_hdp_2_6_5_99_1_tag_spark.sources.tools import orc_scan_explain
+
+    path = str(tmp_path / "dotted.orc")
+    n = 5000
+    write_orc_native(
+        path, {"id": list(range(n)), "st": [{"a": i, "b": f"x{i % 17}"} for i in range(n)]},
+        "id bigint, st struct<a:bigint,b:string>", stripe_rows=1000, row_index_stride=250,
+    )
+    tree = ("less_than", "st.a", 1500)
+    opens = _count_opens(monkeypatch, path)
+    rep = orc_scan_explain(path, tree)
+    assert opens["opens"] == 1
+    summary = sd.plan_file_scan(path, tree, ["st.a"]).summary()
+    assert [s["keep"] for s in rep["stripes"]] == [True, True, False, False, False]
+    assert summary["stripes_kept"] == rep["n_stripes_kept"] == 2
+    assert rep["n_row_groups_kept"] == summary["groups_kept"] == 6
+    assert rep["row_groups"] == sd.plan_file_scan(path, tree, ["st.a"]).picks
+    assert (rep["bytes_planned"], rep["bytes_total_data"]) == (
+        summary["bytes_planned"], summary["bytes_total_data"]
+    )
+    assert rep["keep"] is summary["keep"] is True
 
 
 def test_scan_file_evolved_mixed_lake(spark, tmp_path):
